@@ -9,13 +9,17 @@ executors; no driver-side collect skewing the measurement). Best of two runs
 per query — the first run at process start pays JVM/codegen warmup that a
 long-lived service never sees.
 
-Besides wall-clock, each query also records executor TASK-TIME (the sum
-of executorRunTime over the run's stages, from Spark's AppStatusStore —
-the local-mode analogue of BigQuery slot-seconds, the reference's only
-published cost unit). Task-time is scheduler-noise-robust: wall-clock on
-a shared box swings ±15% with CPU contention while task-time tracks the
-actual work, so cross-round comparisons (tools/bench_trend.py) should
-prefer ``queries_task_sec`` and treat wall-clock as the headline only.
+Besides wall-clock, each query also records executor TASK-TIME and
+CPU-TIME (executorRunTime / executorCpuTime summed over the stages of the
+Spark jobs the run launched, read by ``orchestrator.metrics.spark_cost``
+— the local-mode analogue of BigQuery slot-seconds, the reference's only
+published cost unit). Task-time includes per-task wait (I/O, scheduling —
+dominant for tiny partitions at small SF); cpu-time is the pure compute
+that scales with data volume. Task-time is scheduler-noise-robust:
+wall-clock on a shared box swings ±15% with CPU contention while
+task-time tracks the actual work, so cross-round comparisons
+(tools/bench_trend.py) should prefer ``queries_task_sec`` and treat
+wall-clock as the headline only.
 
 The same payload is also written to ``BENCH_FULL_latest.json`` next to
 this script (override with $SPARK_GRAFT_BENCH_OUT; empty disables): the
@@ -35,6 +39,7 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from etl_gardener_spark.orchestrator.metrics import spark_cost
 from etl_gardener_spark.plans import queries as Q
 from etl_gardener_spark.session import get_spark
 
@@ -49,51 +54,6 @@ RUNS = int(os.environ.get("SPARK_GRAFT_BENCH_RUNS", "2"))
 # medians should be read next to the two canary factors.
 CANARY = "q1_pricing_summary"
 CANARY_RUNS = 3
-
-
-def _max_stage_id(spark) -> int:
-    """Largest stage id the status store has seen (-1 when empty)."""
-    return max((e[0] for e in _stage_entries(spark)), default=-1)
-
-
-def _stage_entries(spark) -> list[tuple[int, int, int, int]]:
-    """(stageId, attemptId, executorRunTime_ms, executorCpuTime_ms) for
-    every stage attempt in the AppStatusStore. Stage ids are
-    monotonically increasing, so a query run's task-time is the sum over
-    ids minted after the run started — immune to the store evicting OLD
-    stages mid-bench (spark.ui.retainedStages), which would corrupt a
-    cumulative-total delta."""
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    ss = spark._jsparkSession.sparkContext().statusStore()
-    empty = jvm.java.util.ArrayList()
-    quantiles = sc._gateway.new_array(jvm.double, 0)
-    lst = ss.stageList(empty, False, False, quantiles, empty)
-    out = []
-    for i in range(lst.size()):
-        s = lst.apply(i)
-        out.append(
-            (
-                s.stageId(),
-                s.attemptId(),
-                s.executorRunTime(),
-                s.executorCpuTime() // 1_000_000,
-            )
-        )
-    return out
-
-
-def _task_time_since(spark, min_stage_id: int) -> tuple[float, float]:
-    """(task_seconds, cpu_seconds) accumulated by stages with id >
-    min_stage_id. Task-seconds (executorRunTime) is the slot-seconds
-    analogue but includes per-task wait (I/O, scheduling — dominant for
-    tiny partitions at small SF); cpu-seconds (executorCpuTime) is the
-    pure compute, the number that actually scales with data volume."""
-    entries = [e for e in _stage_entries(spark) if e[0] > min_stage_id]
-    return (
-        sum(rt for _s, _a, rt, _c in entries) / 1000.0,
-        sum(c for _s, _a, _rt, c in entries) / 1000.0,
-    )
 
 
 def main() -> None:
@@ -111,12 +71,11 @@ def main() -> None:
     if CANARY in Q.REGISTRY:
         best = None
         for _ in range(CANARY_RUNS):
-            mark = _max_stage_id(spark)
-            Q.REGISTRY[CANARY].fn(spark, sf_dir).write.mode(
-                "overwrite"
-            ).format("noop").save()
-            task, _cpu = _task_time_since(spark, mark)
-            best = task if best is None else min(best, task)
+            with spark_cost(spark) as cost:
+                Q.REGISTRY[CANARY].fn(spark, sf_dir).write.mode(
+                    "overwrite"
+                ).format("noop").save()
+            best = cost.task_s if best is None else min(best, cost.task_s)
         canary_task = round(best, 3)
 
     timings: dict[str, float] = {}
@@ -127,15 +86,14 @@ def main() -> None:
         best_task = None
         best_cpu = None
         for _ in range(RUNS):
-            mark = _max_stage_id(spark)
-            t0 = time.monotonic()
-            df = qd.fn(spark, sf_dir)
-            df.write.mode("overwrite").format("noop").save()
-            dt = time.monotonic() - t0
-            task, cpu = _task_time_since(spark, mark)
+            with spark_cost(spark) as cost:
+                t0 = time.monotonic()
+                df = qd.fn(spark, sf_dir)
+                df.write.mode("overwrite").format("noop").save()
+                dt = time.monotonic() - t0
             best = dt if best is None else min(best, dt)
-            best_task = task if best_task is None else min(best_task, task)
-            best_cpu = cpu if best_cpu is None else min(best_cpu, cpu)
+            best_task = cost.task_s if best_task is None else min(best_task, cost.task_s)
+            best_cpu = cost.cpu_s if best_cpu is None else min(best_cpu, cost.cpu_s)
         timings[name] = round(best, 3)
         task_secs[name] = round(best_task, 3)
         cpu_secs[name] = round(best_cpu, 3)

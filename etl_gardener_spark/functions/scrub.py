@@ -46,13 +46,6 @@ def redact(col: Column | str, kinds: tuple[str, ...] = tuple(PATTERNS)) -> Colum
     return out
 
 
-def pii_count(col: Column | str, kind: str) -> Column:
-    """Occurrences of one PII kind (pre-redaction text). BIGINT to match
-    DuckDB's ``len(regexp_extract_all(...))``."""
-    pat, _ = PATTERNS[kind]
-    return F.regexp_count(_c(col), F.lit(pat)).cast("long")
-
-
 def pii_counts(col: Column | str) -> list[Column]:
     """One aliased count column per registered kind (``n_url``,
     ``n_email``, ...). Counts are measured on the ORIGINAL text but after

@@ -180,14 +180,6 @@ def shingles(col: Column | str, n: int = 3) -> Column:
     return shingles_of(ws_tokens(col), n)
 
 
-def shingle_fingerprint(col: Column | str, n: int = 3) -> Column:
-    """Rolling-hash-style content fingerprint: the minimum md5 over the
-    document's word n-gram shingles. Two documents sharing their
-    lexicographically-smallest shingle hash are near-dup candidates — the
-    1-hash special case of the MinHash signature in operators/neardup.py."""
-    return F.array_min(F.transform(shingles(col, n), F.md5))
-
-
 # ---------------------------------------------------------------------------
 # Staged-token variants: take an already-materialized token-array column.
 # Hot paths should tokenize ONCE per row into an attribute and derive every

@@ -7,10 +7,11 @@ Reference: ops/actions.go — the chain wiring (:68-91):
     Deduplicating  → Copying        via Dedup      (:173-202)
     Copying        → Deleting       via CopyToRaw  (:315-349)
     Deleting       → Joining        via DeleteTmp  (:352-368)
-    Joining        → Complete       via Join, gated on the annotation2 job
-                                    for the same date being Complete or
-                                    absent (:31-54); jobs with no join
-                                    dataset short-circuit (:371-374)
+    Joining        → Complete       via Join, gated on the annotation2 jobs
+                                    dated d-1 and d being Complete or
+                                    absent (:31-54 gates on day d only);
+                                    jobs with no join dataset
+                                    short-circuit (:371-374)
 
 Error classification (:97-138, 204-247): transient conditions map to the
 Retry outcome (RetryError); schema-mismatch load warnings ("No such field:")
@@ -22,6 +23,7 @@ string (rows, files, elapsed — ops/actions.go:150-170, 290-309).
 
 from __future__ import annotations
 
+from datetime import timedelta
 from typing import Callable
 
 from pyspark.sql import SparkSession
@@ -52,6 +54,22 @@ def classify(exc: Exception) -> Exception:
     if any(m in msg for m in _TRANSIENT_MARKERS):
         return RetryError(msg[:500])
     return exc
+
+
+def run_costed(
+    spark: SparkSession, job: J.Job, query: str, fn: Callable[[], OpStats]
+) -> OpStats:
+    """Run a query-shaped op, classifying its errors, and record its
+    slot-seconds analogue (the executor task time of exactly the Spark jobs
+    it launched) in the reference's query_cost_seconds histogram
+    (ops/actions.go:150-170)."""
+    try:
+        with metrics.spark_cost(spark) as cost:
+            st = fn()
+    except Exception as e:  # noqa: BLE001 — classified below
+        raise classify(e) from e
+    metrics.QUERY_COST.observe(job.datatype, query, value=cost.task_s)
+    return st
 
 
 class StandardActions:
@@ -107,21 +125,8 @@ class StandardActions:
         )
         return self._detail(st)
 
-    def _run_query_op(self, job: J.Job, query: str, fn) -> OpStats:
-        """Run a query-shaped table op and record its slot-seconds
-        analogue (executor task-time delta) in the reference's
-        query_cost_seconds histogram (ops/actions.go:150-170)."""
-        t0 = metrics.spark_task_seconds(self.spark)
-        try:
-            st = fn()
-        except Exception as e:  # noqa: BLE001
-            raise classify(e) from e
-        cost = metrics.spark_task_seconds(self.spark) - t0
-        metrics.QUERY_COST.observe(job.datatype, query, value=max(cost, 0.0))
-        return st
-
     def dedup(self, job: J.Job) -> str:
-        st = self._run_query_op(job, "dedup", self._ops(job).dedup)
+        st = run_costed(self.spark, job, "dedup", self._ops(job).dedup)
         return self._detail(st)
 
     def copy(self, job: J.Job) -> str:
@@ -138,25 +143,30 @@ class StandardActions:
     def join(self, job: J.Job) -> str:
         if not job.datasets.join:
             return "join skipped: no join dataset"  # actions.go:371-374
-        st = self._run_query_op(job, "join", self._ops(job).join)
+        st = run_costed(self.spark, job, "join", self._ops(job).join)
         return self._detail(st)
 
     def join_ready(self, job: J.Job) -> bool:
-        """Join-dependency gate (ops/actions.go:31-54): the annotation2 job
-        for the same (bucket, experiment, date) must be Complete — or not
-        tracked at all (absent = nothing to wait for)."""
+        """Join-dependency gate (ops/actions.go:31-54): the annotation2 jobs
+        for the same (bucket, experiment) dated d-1 and d must each be
+        Complete — or not tracked at all (absent = nothing to wait for).
+        The reference waits for day d only; both days gate here because the
+        join reads annotations dated d-1..d (TableOps.join)."""
         if not job.datasets.join:
             return True
         if job.datatype == "annotation2":
             return True
-        ann_key = J.Job(
-            bucket=job.bucket,
-            experiment=job.experiment,
-            datatype="annotation2",
-            date=job.date,
-        ).key()
-        st = self.tracker.get_status(ann_key)
-        return st is None or st.state == J.COMPLETE
+        for day in (job.date - timedelta(days=1), job.date):
+            ann_key = J.Job(
+                bucket=job.bucket,
+                experiment=job.experiment,
+                datatype="annotation2",
+                date=day,
+            ).key()
+            st = self.tracker.get_status(ann_key)
+            if st is not None and st.state != J.COMPLETE:
+                return False
+        return True
 
     # -- wiring (ops/actions.go:68-91) --------------------------------------
 

@@ -76,8 +76,7 @@ from etl_gardener_spark.functions.text import quality_score, token_count
 from etl_gardener_spark.operators.neardup import minhash_lsh_pairs
 from etl_gardener_spark.operators.packing import pack_sequences
 from etl_gardener_spark.orchestrator import job as J
-from etl_gardener_spark.orchestrator import metrics
-from etl_gardener_spark.orchestrator.actions import classify
+from etl_gardener_spark.orchestrator.actions import classify, run_costed
 from etl_gardener_spark.orchestrator.monitor import Action, Monitor
 from etl_gardener_spark.table_ops import OpStats
 from etl_gardener_spark.warehouse import DATE_COL, Warehouse
@@ -526,14 +525,8 @@ class CurationActions:
                         self.spark, PACKED_TIER, job.experiment, job.datatype, job.date
                     )
                 return f"{stage} skipped: empty partition"
-            t0 = metrics.spark_task_seconds(self.spark)
-            try:
-                st = body(self, job, spec)
-            except Exception as e:  # noqa: BLE001 — classified below
-                raise classify(e) from e
-            cost = metrics.spark_task_seconds(self.spark) - t0
-            metrics.QUERY_COST.observe(
-                job.datatype, f"curate_{stage}", value=max(cost, 0.0)
+            st = run_costed(
+                self.spark, job, f"curate_{stage}", lambda: body(self, job, spec)
             )
             return self._detail(st)
 

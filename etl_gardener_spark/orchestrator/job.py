@@ -10,7 +10,6 @@ from __future__ import annotations
 import time as _time
 from dataclasses import dataclass, field, replace
 from datetime import date as Date
-from datetime import datetime, timezone
 
 # -- States (tracker/job.go:191-205) ---------------------------------------
 
@@ -198,7 +197,3 @@ def new_status(now: float | None = None) -> Status:
     st = Status()
     st.new_state(INIT, now)
     return st
-
-
-def utc_now() -> datetime:
-    return datetime.now(timezone.utc)

@@ -8,15 +8,21 @@ exposition format is the Prometheus text format v0.0.4 — what
 ``promhttp.Handler`` serves — implemented in ~100 lines because
 prometheus_client isn't available in this environment.
 
-Spark analogue of "slot seconds": executor-CPU-seconds from the
-``QueryExecutionListener``-visible task metrics; recorded by callers via
-``QUERY_COST.observe``.
+Spark analogue of "slot seconds": the executor task time of exactly the
+Spark jobs an operation launched, read by :func:`spark_cost` and recorded
+per query in ``QUERY_COST``.
 """
 
 from __future__ import annotations
 
 import threading
+import uuid
 from bisect import bisect_left
+from contextlib import contextmanager
+from dataclasses import dataclass
+from typing import Iterator
+
+from py4j.protocol import Py4JJavaError
 
 
 class _Labeled:
@@ -174,47 +180,76 @@ BYTES_PER_DATE = Histogram(
 )
 QUERY_COST = Histogram(
     "gardener_query_cost_seconds",
-    "Executor-CPU-seconds per query (slot-seconds analogue).",
+    "Executor task-seconds per query (slot-seconds analogue).",
     [1, 10, 100, 1000, 10000, 1e5, 1e6, 4.64e7], ("datatype", "query")
 )
 
 
-def spark_task_seconds(spark) -> float:
-    """Cumulative executor task time (seconds) from Spark's status store —
-    the slot-seconds analogue (the reference records BigQuery SlotMillis,
-    ops/actions.go:150-170): task time is how long tasks occupied
-    executor slots, which is exactly what a slot-second measures. Driver-
-    side metadata read, no job triggered. Callers record per-query cost
-    as the delta around an action.
+@dataclass
+class SparkCost:
+    """Executor cost of the Spark jobs launched inside one ``spark_cost``
+    block: task time (``executorRunTime``), CPU time (``executorCpuTime``),
+    and how many jobs and distinct stages they ran."""
 
-    Summed from per-stage ``executorRunTime`` (the same source bench.py
-    uses), NOT ``ExecutorSummary.totalDuration``: the executor-level
-    field was measured behaving as executor UPTIME on local-mode
-    sessions — it grew 1 s per idle second with zero jobs running and
-    read ≈ wall (parallelism 1.0) around a job that consumed 51
-    CPU-seconds in 3.9 s of wall — so every delta taken from it was
-    really wall-between-reads, not slot-seconds (r10 remeasurement;
-    SCALE.md "task-seconds metric" note).
+    task_s: float = 0.0
+    cpu_s: float = 0.0
+    jobs: int = 0
+    stages: int = 0
 
-    Caveats, unlike per-job SlotMillis: the counter is session-global,
-    so deltas taken around CONCURRENT ops each include the others'
-    overlapping task time — per-query observations are upper bounds
-    that over-count under concurrency (and are exact when ops run
-    serially). And the sum spans only stages still in the status store;
-    when old stages are evicted (``spark.ui.retainedStages`` cap) the
-    counter can DECREASE, and callers' ``max(delta, 0)`` clamp then
-    records a 0-cost query. On long-lived sessions, accumulate task
-    time via a SparkListener (``onTaskEnd`` durations) instead of this
-    store read. Treat the histogram as a cost-magnitude signal, not an
-    additive ledger.
+
+@contextmanager
+def spark_cost(spark) -> Iterator[SparkCost]:
+    """Measure the Spark work launched inside the block — the slot-seconds
+    analogue (the reference records each job's BigQuery SlotMillis,
+    ops/actions.go:150-170): task time is how long tasks occupied executor
+    slots, which is exactly what a slot-second measures.
+
+    The block runs under a unique SparkContext job tag. The tag is a
+    thread-local property, so only jobs launched by this thread (and by
+    threads that inherit its properties, e.g. ``parallel.run_jobs``) carry
+    it; cost stays exact while other threads run actions concurrently. On a
+    normal exit the listener bus is drained, then task and CPU time are
+    summed over every attempt of every stage of the tagged jobs, each stage
+    counted once. (Per-stage ``executorRunTime``, not
+    ``ExecutorSummary.totalDuration``: on local-mode sessions that field
+    reads executor uptime — SCALE.md "task-seconds metric" note.)
+
+    The read is a driver-side status-store lookup costing O(the block's
+    jobs); it launches no Spark job. The yielded :class:`SparkCost` is
+    filled in on exit (left at zero if the block raises). Jobs evicted
+    from the status store (``spark.ui.retainedJobs``) before the block
+    ends are not counted.
     """
     sc = spark.sparkContext
+    tag = f"gardener-cost-{uuid.uuid4().hex}"
+    cost = SparkCost()
+    sc.addJobTag(tag)
+    try:
+        yield cost
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    try:
+        jsc.listenerBus().waitUntilEmpty()
+    except Py4JJavaError:  # bus still busy after its 10 s wait: read what landed
+        pass
+    store = jsc.statusStore()
+    job_ids = jsc.statusTracker().getJobIdsForTag(tag)
+    stage_ids: set[int] = set()
+    for job_id in job_ids:
+        ids = store.job(job_id).stageIds()
+        stage_ids.update(ids.apply(i) for i in range(ids.size()))
     jvm = sc._jvm
-    store = sc._jsc.sc().statusStore()
-    empty = jvm.java.util.ArrayList()
-    quantiles = sc._gateway.new_array(jvm.double, 0)
-    stages = store.stageList(empty, False, False, quantiles, empty)
-    total_ms = 0
-    for i in range(stages.size()):
-        total_ms += stages.apply(i).executorRunTime()
-    return total_ms / 1000.0
+    any_status = jvm.java.util.ArrayList()
+    no_quantiles = sc._gateway.new_array(jvm.double, 0)
+    task_ms = cpu_ns = 0
+    for stage_id in stage_ids:
+        attempts = store.stageData(stage_id, False, any_status, False, no_quantiles)
+        for i in range(attempts.size()):
+            a = attempts.apply(i)
+            task_ms += a.executorRunTime()
+            cpu_ns += a.executorCpuTime()
+    cost.task_s = task_ms / 1000.0
+    cost.cpu_s = cpu_ns / 1e9
+    cost.jobs = len(job_ids)
+    cost.stages = len(stage_ids)

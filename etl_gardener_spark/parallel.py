@@ -14,14 +14,20 @@ Results are unchanged by construction: every thunk computes the same
 deterministic value it computed sequentially, and results are returned
 in SUBMISSION order, so downstream row assembly sees the same list it
 saw before. Python threads share the SparkSession; DataFrame actions
-are thread-safe, and job descriptions/groups are thread-local (guide
-§1.5), so per-arm labelling still works inside a thunk.
+are thread-safe, and job descriptions/groups/tags are thread-local
+(guide §1.5), so per-arm labelling still works inside a thunk. Each
+thunk runs with a copy of the CALLING thread's local properties, so its
+jobs carry the caller's job tags and count toward the caller's
+``metrics.spark_cost``.
 """
 
 from __future__ import annotations
 
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any, Callable, Sequence
+
+from pyspark.sql import SparkSession
+from pyspark.util import inheritable_thread_target
 
 # "2-3 jobs in flight is plenty" (guide §2.6) for big-data stages; the
 # arms here are chains of tiny local-mode jobs whose cost is dominated
@@ -45,6 +51,10 @@ def run_jobs(thunks: Sequence[Callable[[], Any]]) -> list[Any]:
     thunks = list(thunks)
     if len(thunks) <= 1:
         return [t() for t in thunks]
+    # one properties copy per thunk, taken here in the calling thread: a
+    # thunk that adds or removes a tag then touches only its own copy
+    session = SparkSession.active()
+    thunks = [inheritable_thread_target(session)(t) for t in thunks]
     with ThreadPoolExecutor(
         max_workers=min(len(thunks), _MAX_WORKERS)
     ) as pool:

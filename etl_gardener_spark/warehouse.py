@@ -38,6 +38,8 @@ from datetime import date as Date
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_gardener_spark.parallel import run_jobs
+
 DATE_COL = "date"
 
 
@@ -636,12 +638,9 @@ class Warehouse:
 
         # Days are independent partitions; rewrite several concurrently
         # (Spark job submission is thread-safe — same discipline as the
-        # orchestrator's concurrent backfill days). Bounded pool: each
-        # rewrite is one small job, and FS swaps touch disjoint paths.
-        import concurrent.futures as _cf
-
-        with _cf.ThreadPoolExecutor(max_workers=min(4, len(affected))) as ex:
-            list(ex.map(_rewrite, affected))
+        # orchestrator's concurrent backfill days): each rewrite is one
+        # small job, and FS swaps touch disjoint paths.
+        run_jobs([lambda day=day: _rewrite(day) for day in affected])
         return {
             "dates": [str(d) for d in affected],
             "rows_removed": int(sum(per_day[d][1] for d in affected)),

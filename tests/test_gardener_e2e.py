@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 import os
+import re
 from datetime import date as Date
 
 import pytest
@@ -240,11 +241,23 @@ def test_restart_recovers_mid_pipeline(spark, tmp_path):
         g2.monitor.shutdown()
 
 
+def _query_cost_sum(text: str, query: str) -> float:
+    """Exposed ``gardener_query_cost_seconds_sum`` of one ndt7 query."""
+    m = re.search(
+        r'^gardener_query_cost_seconds_sum\{datatype="ndt7",query="%s"\} (\S+)$'
+        % query,
+        text,
+        re.M,
+    )
+    assert m, query
+    return float(m.group(1))
+
+
 def test_pipeline_records_query_cost_metrics(gardener):
     """The dedup/join query ops must record their slot-seconds analogue
-    (executor task-time delta) and the load its files/bytes histograms —
-    the reference's job-statistics observability (ops/actions.go:150-170,
-    290-309)."""
+    (executor task time of their own Spark jobs) and the load its
+    files/bytes histograms — the reference's job-statistics observability
+    (ops/actions.go:150-170, 290-309)."""
     from etl_gardener_spark.orchestrator import metrics as M
 
     g, landing, _ = gardener
@@ -263,8 +276,9 @@ def test_pipeline_records_query_cost_metrics(gardener):
     assert 'gardener_query_cost_seconds_count{datatype="ndt7",query="dedup"}' in text
     assert 'gardener_query_cost_seconds_count{datatype="ndt7",query="join"}' in text
     assert 'gardener_bytes_count{experiment="ndt",datatype="ndt7"}' in text
-    # task time accumulated: the sum is positive once real work ran
-    assert M.spark_task_seconds(g.spark) > 0
+    # the dedup and join ops recorded real executor task time
+    assert _query_cost_sum(text, "dedup") > 0
+    assert _query_cost_sum(text, "join") > 0
 
 
 # ---------------------------------------------------------------------------
@@ -578,7 +592,8 @@ def test_pipeline_three_concurrent_days_at_bench_scale(spark, tmp_path):
             in text
         )
         assert 'gardener_bytes_count{experiment="ndt",datatype="ndt7"}' in text
-        assert M.spark_task_seconds(spark) > 0
+        assert _query_cost_sum(text, "dedup") > 0
+        assert _query_cost_sum(text, "join") > 0
         print(f"\nbench-scale pipeline wall: {wall:.1f}s for 3 days x {n_rows} rows")
     finally:
         g.monitor.shutdown()

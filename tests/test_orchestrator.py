@@ -10,11 +10,12 @@ from __future__ import annotations
 
 import threading
 from datetime import date as Date
-from datetime import datetime, timezone
+from datetime import datetime, timedelta, timezone
 
 import pytest
 
 from etl_gardener_spark.orchestrator import job as J
+from etl_gardener_spark.orchestrator.actions import StandardActions
 from etl_gardener_spark.orchestrator.api import MSG_NO_JOB, create_app
 from etl_gardener_spark.orchestrator.config import load_config, parse_duration
 from etl_gardener_spark.orchestrator.iterators import (
@@ -388,6 +389,28 @@ def test_monitor_condition_gates_action():
     assert mon.drain(timeout_sec=5.0)
     assert tr.get_status(j.key()).state == J.COMPLETE
     mon.shutdown()
+
+
+def test_join_gate_waits_for_prior_day_annotation():
+    """The join reads annotations dated d-1..d, so a tracked, unfinished
+    annotation2 job for d-1 must hold back the fact day's join, like the
+    same-day one; untracked annotation days gate nothing."""
+    tr = Tracker()
+    actions = StandardActions(None, None, "", None, tr)
+    day = Date(2024, 3, 2)
+    fact = mkjob(day)
+    prev = mkjob(day - timedelta(days=1), "annotation2")
+    same = mkjob(day, "annotation2")
+    assert actions.join_ready(fact)
+    tr.add_job(same)
+    assert not actions.join_ready(fact)
+    tr.set_status(same.key(), J.COMPLETE)
+    assert actions.join_ready(fact)
+    tr.add_job(prev)
+    tr.set_status(prev.key(), J.LOADING)
+    assert not actions.join_ready(fact)
+    tr.set_status(prev.key(), J.COMPLETE)
+    assert actions.join_ready(fact)
 
 
 # -- Jobs API (tracker/handler_test.go) -------------------------------------

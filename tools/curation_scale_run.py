@@ -113,17 +113,16 @@ def main() -> int:
 
         out = {}
         for stage in stages:
-            t0 = time.monotonic()
-            ts0 = metrics.spark_task_seconds(spark)
-            detail = ca._stage_action(stage)(job)
-            wall = time.monotonic() - t0
-            task = metrics.spark_task_seconds(spark) - ts0
+            with metrics.spark_cost(spark) as cost:
+                t0 = time.monotonic()
+                detail = ca._stage_action(stage)(job)
+                wall = time.monotonic() - t0
             out[stage] = {
                 "wall_sec": round(wall, 2),
-                "task_sec": round(task, 2),
+                "task_sec": round(cost.task_s, 2),
                 "detail": detail,
             }
-            print(f"{stage}: wall={wall:.2f}s task={task:.2f}s  {detail}",
+            print(f"{stage}: wall={wall:.2f}s task={cost.task_s:.2f}s  {detail}",
                   flush=True)
         total_wall = sum(v["wall_sec"] for v in out.values())
         total_task = sum(v["task_sec"] for v in out.values())

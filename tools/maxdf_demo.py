@@ -39,8 +39,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from etl_gardener_spark.session import get_spark
 from etl_gardener_spark.operators import neardup as ND
-
-import bench
+from etl_gardener_spark.orchestrator.metrics import spark_cost
 
 BOILER_WORDS = [f"boiler{i:02d}" for i in range(32)]  # 30 interior 3-grams
 UNIQUE_WORDS = 22  # 20 interior 3-grams per doc
@@ -128,16 +127,15 @@ def run_mode(spark, docs_df, max_df):
 
     best = best_task = None
     for _ in range(2):
-        mark = bench._max_stage_id(spark)
-        t0 = time.monotonic()
-        res = ND.containment_pairs(
-            docs_df, "text", "doc_id", n=3, tau_e2=TAU_E2, max_df=max_df
-        )
-        rows = res.collect()
-        dt = time.monotonic() - t0
-        task, _cpu = bench._task_time_since(spark, mark)
+        with spark_cost(spark) as cost:
+            t0 = time.monotonic()
+            res = ND.containment_pairs(
+                docs_df, "text", "doc_id", n=3, tau_e2=TAU_E2, max_df=max_df
+            )
+            rows = res.collect()
+            dt = time.monotonic() - t0
         best = dt if best is None else min(best, dt)
-        best_task = task if best_task is None else min(best_task, task)
+        best_task = cost.task_s if best_task is None else min(best_task, cost.task_s)
     # pre-threshold half-join volume (the quantity max_df caps)
     sh = ND.shingle_hash_sets(docs_df, "text", "doc_id", 3).localCheckpoint()
     ex = sh.select(F.col("doc_id"), F.explode("sh").alias("__h"))

@@ -8,8 +8,10 @@ For each named query (or --top N from a bench JSON) this reports:
               query body (count/collect/localCheckpoint(eager)) lands
               here too.
     exec_s    wall of the final noop write.
-    task_s    executorRunTime summed over stages minted by the run.
+    task_s    executorRunTime summed over the stages of the run's jobs
+              (``orchestrator.metrics.spark_cost``).
     cpu_s     executorCpuTime ditto.
+    stages    distinct stages of the run's jobs.
     jobs      Spark jobs scheduled by the run (actions; each pays
               scheduler+planning latency serially unless overlapped).
 
@@ -26,48 +28,9 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_gardener_spark.orchestrator.metrics import spark_cost
 from etl_gardener_spark.plans import queries as Q
 from etl_gardener_spark.session import get_spark
-
-
-def _store(spark):
-    return spark._jsparkSession.sparkContext().statusStore()
-
-
-def _max_stage_id(spark) -> int:
-    ss = _store(spark)
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    empty = jvm.java.util.ArrayList()
-    quantiles = sc._gateway.new_array(jvm.double, 0)
-    lst = ss.stageList(empty, False, False, quantiles, empty)
-    return max((lst.apply(i).stageId() for i in range(lst.size())), default=-1)
-
-
-def _stats_since(spark, min_stage: int, min_job: int):
-    ss = _store(spark)
-    sc = spark.sparkContext
-    jvm = sc._jvm
-    empty = jvm.java.util.ArrayList()
-    quantiles = sc._gateway.new_array(jvm.double, 0)
-    lst = ss.stageList(empty, False, False, quantiles, empty)
-    task = cpu = 0
-    nstages = 0
-    for i in range(lst.size()):
-        s = lst.apply(i)
-        if s.stageId() > min_stage:
-            task += s.executorRunTime()
-            cpu += s.executorCpuTime() // 1_000_000
-            nstages += 1
-    jl = ss.jobsList(None)
-    njobs = sum(1 for i in range(jl.size()) if jl.apply(i).jobId() > min_job)
-    return task / 1000.0, cpu / 1000.0, nstages, njobs
-
-
-def _max_job_id(spark) -> int:
-    ss = _store(spark)
-    jl = ss.jobsList(None)
-    return max((jl.apply(i).jobId() for i in range(jl.size())), default=-1)
 
 
 def main() -> None:
@@ -98,15 +61,13 @@ def main() -> None:
             continue
         best = None
         for _ in range(args.runs):
-            mark_s = _max_stage_id(spark)
-            mark_j = _max_job_id(spark)
-            t0 = time.monotonic()
-            df = Q.REGISTRY[name].fn(spark, sf_dir)
-            t1 = time.monotonic()
-            df.write.mode("overwrite").format("noop").save()
-            t2 = time.monotonic()
-            task, cpu, nstages, njobs = _stats_since(spark, mark_s, mark_j)
-            row = (t1 - t0, t2 - t1, task, cpu, nstages, njobs)
+            with spark_cost(spark) as cost:
+                t0 = time.monotonic()
+                df = Q.REGISTRY[name].fn(spark, sf_dir)
+                t1 = time.monotonic()
+                df.write.mode("overwrite").format("noop").save()
+                t2 = time.monotonic()
+            row = (t1 - t0, t2 - t1, cost.task_s, cost.cpu_s, cost.stages, cost.jobs)
             if best is None or (row[0] + row[1]) < (best[0] + best[1]):
                 best = row
         b, e, task, cpu, nstages, njobs = best

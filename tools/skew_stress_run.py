@@ -56,13 +56,12 @@ TEMPLATE = " ".join(
 def _measure(spark, fn, reps: int = 1):
     best = None
     for _ in range(reps):
-        t0 = time.monotonic()
-        ts0 = metrics.spark_task_seconds(spark)
-        n = fn()
-        wall = time.monotonic() - t0
-        task = metrics.spark_task_seconds(spark) - ts0
+        with metrics.spark_cost(spark) as cost:
+            t0 = time.monotonic()
+            n = fn()
+            wall = time.monotonic() - t0
         if best is None or wall < best[0]:
-            best = (wall, task, n)
+            best = (wall, cost.task_s, n)
     return {
         "wall_sec": round(best[0], 2),
         "task_sec": round(best[1], 2),
