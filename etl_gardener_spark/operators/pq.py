@@ -990,12 +990,23 @@ def pq_topk_ivf_residual_trained(
     return _rank_adc(adc, k)
 
 
+def _with_vec_out(df: DataFrame, out: str):
+    """Output schema of a per-row vector map: ``df``'s columns with
+    ``out`` (array<double>) replacing a same-named column or appended."""
+    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
+
+    out_field = StructField(out, ArrayType(DoubleType()))
+    fields = [out_field if f.name == out else f for f in df.schema.fields]
+    if out not in df.columns:
+        fields.append(out_field)
+    return StructType(fields)
+
+
 def hadamard_rotate(
     df: DataFrame,
     vec_col: str,
     dim: int,
     out_col: str | None = None,
-    method: str = "npfold",
 ) -> DataFrame:
     """Rotate vectors by the normalized Hadamard matrix H_dim/sqrt(dim)
     (``dim`` must be a power of two): y_i = sum_j (-1)^popcount(i & j)
@@ -1009,168 +1020,36 @@ def hadamard_rotate(
     ([[emb_pq_hadamard_recall_report]] relies on this: the rotated
     exact top-k IS the raw exact top-k).
 
-    Exactness: for power-of-4... rather, for dim a power of two whose
-    sqrt is exact in binary (dim = 4^k, e.g. 64: 1/sqrt(64) = 0.125),
-    the scaling is a float-EXACT multiply, and the inner sum is a
-    left-assoc fold both engines reproduce bit-for-bit (init 0.0 + t0
-    == t0 exactly in IEEE). Oracle mirror: nested list_transform /
-    list_reduce over bit_count(i & j) parity.
+    Exactness: each term ±x_j is an exact sign flip (H entries are
+    ±1), the inner sum is a left-assoc IEEE fold that starts from 0.0
+    and adds the terms in j order, and for dim = 4^k (e.g. 64:
+    1/sqrt(64) = 0.125) the final scale is a float-exact multiply. The
+    oracle mirror (nested list_transform / list_reduce over
+    bit_count(i & j) parity) replays the same fold; tests/test_pq_rrf.py
+    keeps the Catalyst expression-tree transliteration of it as the
+    bit-equality reference (pinned by test_hadamard_npfold_bit_equal).
 
-    Scale shape (``method``): 'npfold' (default) evaluates the SAME
-    left-assoc IEEE fold as the SQL kernel in numpy — exact ±x_j terms
-    (H entries are ±1), np.cumsum's strictly sequential accumulate
-    reproduces the fold addition-by-addition, and the 1/sqrt(dim) scale
-    is float-exact for dim = 4^k — so it is BIT-IDENTICAL to 'sql'
-    (pinned by tests/test_pq_rrf.py::test_hadamard_npfold_bit_equal)
-    at ~10x less task time: the nested-lambda tree runs interpreted
-    (higher-order functions take no codegen), ~1.7 task-s per sf0.1
-    corpus rotation vs ~0.2. 'sql' is the certified oracle-reference
-    expression tree (the DuckDB mirror is its literal transliteration);
-    'fwht' is the O(dim log dim) fast Walsh-Hadamard butterfly — the
-    100 TB path for embedding dims 768-4096 where the quadratic kernel
-    is ~100-4000x more flops. All three compute the SAME transform
-    (Sylvester ordering: H[i,j] = (-1)^popcount(i&j)); fwht differs
-    only in float summation ORDER (pairwise butterfly vs sequential
-    fold), so it is allclose-but-not-bit-equal — keep 'sql'/'npfold'
-    wherever an oracle replays the fold (tests/test_pq_rrf.py pins
-    fwht allclose + identical downstream top-k at dim 64, and the sf
-    ladder records the crossover at dim 512).
-    """
-    if dim & (dim - 1):
-        raise ValueError(f"dim={dim} must be a power of two")
-    if method not in ("sql", "fwht", "npfold"):
-        raise ValueError(
-            f"method must be 'sql', 'fwht' or 'npfold', got {method!r}"
-        )
-    scale = 1.0 / (dim ** 0.5)
-    out = out_col or vec_col
-    if method == "fwht":
-        return _hadamard_rotate_fwht(df, vec_col, dim, out, scale)
-    if method == "npfold":
-        return _hadamard_rotate_npfold(df, vec_col, dim, out, scale)
-    # r10 advisor fix: rotating only the first ``dim`` components would
-    # silently TRUNCATE a longer vector, and a shorter one would fold
-    # NULLs (element_at out-of-bounds) into every output component.
-    # assert exact length executor-side (NULL vectors pass through).
-    size_ok = F.col(vec_col).isNull() | (F.size(vec_col) == dim)
-    x = F.when(
-        F.assert_true(
-            size_ok,
-            F.concat(
-                F.lit(f"hadamard_rotate: vector length != dim={dim}: got "),
-                F.size(vec_col).cast("string"),
-            ),
-        ).isNull(),
-        F.col(vec_col),
-    )
-    rotated = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.aggregate(
-            F.sequence(F.lit(0), F.lit(dim - 1)),
-            F.lit(0.0),
-            lambda acc, j: acc
-            + F.when(
-                F.bit_count(i.cast("long").bitwiseAND(j.cast("long"))) % 2
-                == 0,
-                F.element_at(x, (j + 1).cast("int")).cast("double"),
-            ).otherwise(
-                -F.element_at(x, (j + 1).cast("int")).cast("double")
-            ),
-        )
-        * F.lit(scale),
-    )
-    return df.withColumn(out, rotated)
-
-
-def _hadamard_rotate_fwht(
-    df: DataFrame, vec_col: str, dim: int, out: str, scale: float
-) -> DataFrame:
-    """The O(dim log dim) butterfly: per Arrow batch, log2(dim)
-    vectorized (x+y, x-y) passes over a (rows, dim) float64 matrix —
-    pure per-row map (no shuffle), all other columns pass through.
-    NULL vectors yield NULL outputs (the SQL kernel's all-NULL
-    components collapse to NULL here — callers treat both as
-    unscorable); a non-NULL vector whose length differs from ``dim``
-    raises, matching the SQL kernel's executor-side assert."""
-    import numpy as np
-
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    in_fields = list(df.schema.fields)
-    names = [f.name for f in in_fields]
-    out_field = StructField(out, ArrayType(DoubleType()))
-    if out in names:
-        fields = [out_field if f.name == out else f for f in in_fields]
-    else:
-        fields = in_fields + [out_field]
-    out_schema = StructType(fields)
-    out_names = [f.name for f in fields]
-
-    def gen(batches):
-        for pdf in batches:
-            res: list = [None] * len(pdf)
-            mask = pdf[vec_col].notna()
-            if mask.any():
-                vecs = [list(v) for v in pdf[vec_col][mask]]
-                bad = {len(v) for v in vecs} - {dim}
-                if bad:
-                    raise ValueError(
-                        f"hadamard_rotate: vector length != dim={dim}: "
-                        f"got {sorted(bad)}"
-                    )
-                mat = np.array(vecs, dtype=np.float64)
-                n_rows = mat.shape[0]
-                h = 1
-                while h < dim:
-                    m = mat.reshape(n_rows, dim // (2 * h), 2, h)
-                    x, y = m[:, :, 0, :], m[:, :, 1, :]
-                    mat = np.stack((x + y, x - y), axis=2).reshape(
-                        n_rows, dim
-                    )
-                    h *= 2
-                mat *= scale
-                for r, i in enumerate(np.nonzero(mask.to_numpy())[0]):
-                    res[int(i)] = mat[r].tolist()
-            out_pdf = pdf.copy()
-            out_pdf[out] = res
-            yield out_pdf[out_names]
-
-    return df.mapInPandas(gen, schema=out_schema)
-
-
-def _hadamard_rotate_npfold(
-    df: DataFrame, vec_col: str, dim: int, out: str, scale: float
-) -> DataFrame:
-    """BIT-EXACT numpy twin of the SQL kernel: y_i = (fold_j acc ± x_j)
-    * scale with the identical left-assoc IEEE addition order — each
-    term ±x_j is an exact sign flip (H entries are ±1), np.cumsum is a
-    strictly sequential accumulate (no pairwise re-association), the
-    fold's 0.0 + t0 == t0 start coincides with cumsum's first element,
-    and the final * scale is float-exact for dim = 4^k. Per Arrow
-    batch, rows fold in (rows, dim, dim)-term chunks bounded to ~8 MB.
+    Per Arrow batch the fold runs as ``dim`` vectorized additions into
+    a (rows, dim) accumulator: a pure per-row map (no shuffle), memory
+    O(batch rows * dim) at any dim.
 
     Null semantics mirror the expression tree exactly: a NULL vector —
     or any NULL component, since H has no zero entries so every output
     folds every input — yields an array of ``dim`` NULL components
-    (NOT a NULL array: the transform runs over sequence(0, dim-1));
-    a non-NULL vector of the wrong length raises, matching the SQL
-    kernel's executor-side assert. mapInArrow, not mapInPandas: the
-    Arrow<->pandas conversion renders NULL list components and NaN
-    identically, erasing a distinction the fold's output preserves
-    ([null]*dim vs [nan]*dim); Arrow batches round-trip both exactly."""
+    (NOT a NULL array); a non-NULL vector of the wrong length raises
+    (a shorter one would fold NULLs, a longer one silently truncate).
+    mapInArrow, not mapInPandas: the Arrow<->pandas conversion renders
+    NULL list components and NaN identically, erasing a distinction the
+    fold's output preserves ([null]*dim vs [nan]*dim); Arrow batches
+    round-trip both exactly."""
+    if dim & (dim - 1):
+        raise ValueError(f"dim={dim} must be a power of two")
     import numpy as np
 
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
-    in_fields = list(df.schema.fields)
-    names = [f.name for f in in_fields]
-    out_field = StructField(out, ArrayType(DoubleType()))
-    if out in names:
-        fields = [out_field if f.name == out else f for f in in_fields]
-    else:
-        fields = in_fields + [out_field]
-    out_schema = StructType(fields)
-    out_names = [f.name for f in fields]
+    scale = 1.0 / (dim ** 0.5)
+    out = out_col or vec_col
+    out_schema = _with_vec_out(df, out)
+    out_names = out_schema.names
     all_null = [None] * dim
 
     def gen(batches):
@@ -1182,8 +1061,7 @@ def _hadamard_rotate_npfold(
         while anded.any():
             parity ^= anded & 1
             anded >>= 1
-        sign = np.where(parity == 0, 1.0, -1.0)
-        chunk = max(1, (8 << 20) // (dim * dim * 8))
+        sign = np.where(parity == 0, 1.0, -1.0)  # symmetric: row j = column j
         list_t = pa.list_(pa.float64())
         for batch in batches:
             cols = {n: batch.column(i) for i, n in enumerate(batch.schema.names)}
@@ -1210,12 +1088,14 @@ def _hadamard_rotate_npfold(
                 )
             if clean_vecs:
                 mat = np.array(clean_vecs, dtype=np.float64)
-                for s in range(0, mat.shape[0], chunk):
-                    blk = mat[s : s + chunk]
-                    terms = sign[None, :, :] * blk[:, None, :]
-                    y = np.cumsum(terms, axis=2)[:, :, -1] * scale
-                    for r in range(blk.shape[0]):
-                        res[clean_idx[s + r]] = y[r].tolist()
+                # the accumulator starts at +0.0 like the SQL fold, so an
+                # all-(-0.0) fold ends at +0.0 (0.0 + -0.0 == +0.0)
+                acc = np.zeros_like(mat)
+                for j in range(dim):
+                    acc += mat[:, j, None] * sign[j]
+                y = acc * scale
+                for r, i in enumerate(clean_idx):
+                    res[i] = y[r].tolist()
             out_arr = pa.array(res, type=list_t)
             arrays = [
                 out_arr if n == out else cols[n] for n in out_names
@@ -1290,96 +1170,27 @@ def opq_rotate(
     r_e6: list[list[int]],
     dim: int,
     out_col: str | None = None,
-    method: str = "gemm",
 ) -> DataFrame:
     """Apply a learned micro-grid rotation: y[j] = sum_i x[i]*R[i][j],
     computed ENTIRELY in exact int64 micros — x quantized to the 1e-6
     grid, int64 products, exact sums (order-independent, so there is no
     fold-order hazard anywhere), one half-up re-quantization — then
-    scaled back to double. NULL vectors pass through as NULL; length is
-    the CALLER's contract (pq_topk_opq filters len == dim, mirroring
-    its oracle's WHERE).
+    scaled back to double. NULL vectors pass through as NULL; a non-NULL
+    vector whose length differs from ``dim`` raises. Callers filter
+    len == dim first (pq_topk_opq, mirroring its oracle's WHERE).
 
-    ``method``: 'gemm' (default) computes the same integer math as an
-    Arrow-batched numpy int64 matmul in mapInPandas; 'sql' is the
-    literal expression-tree mirror of the DuckDB oracle's relational
-    kernel. The two are BIT-IDENTICAL (unlike the fwht float path)
-    because every operation is exact int64 — which is why gemm can be
-    the default on a certified path: tests/test_pq_rrf.py pins the
-    equality. 'sql' exists as the readable oracle reference but is NOT
-    the hot path — the nested element_at on a broadcast 64x64 array
-    column falls out of whole-stage codegen (measured 514 s vs <1 s
-    for 20k rows x dim 64). Both are pure per-row maps: no shuffle."""
-    if method not in ("sql", "gemm"):
-        raise ValueError(f"method must be 'sql' or 'gemm', got {method!r}")
-    out = out_col or vec_col
-    if method == "gemm":
-        return _opq_rotate_gemm(df, vec_col, r_e6, dim, out)
-    spark = df.sparkSession
-    rdf = local_df(spark, [(r_e6,)], "__opq_r array<array<long>>")
-    # executor-side length assert (the hadamard_rotate r10-advisor
-    # contract): a shorter vector would fold element_at NULLs into
-    # every output component, a longer one would silently truncate
-    ok = F.col(vec_col).isNull() | (F.size(vec_col) == F.lit(dim))
-    checked = F.when(
-        F.assert_true(
-            ok,
-            F.concat(
-                F.lit(f"opq_rotate: vector length != dim={dim}: got "),
-                F.size(vec_col).cast("string"),
-            ),
-        ).isNull(),
-        F.col(vec_col),
-    )
-    xm = F.transform(
-        checked,
-        lambda v: F.floor(v.cast("double") * F.lit(1e6) + F.lit(0.5)).cast(
-            "long"
-        ),
-    )
-    df2 = df.crossJoin(F.broadcast(rdf)).withColumn("__xm", xm)
-    rotated = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda j: F.floor(
-            F.aggregate(
-                F.sequence(F.lit(0), F.lit(dim - 1)),
-                F.lit(0).cast("long"),
-                lambda acc, i: acc
-                + F.element_at(F.col("__xm"), i + 1)
-                * F.element_at(
-                    F.element_at(F.col("__opq_r"), i + 1), j + 1
-                ),
-            ).cast("double")
-            / F.lit(1e6)
-            + F.lit(0.5)
-        ).cast("long").cast("double")
-        / F.lit(1e6),
-    )
-    return df2.withColumn(
-        out, F.when(F.col(vec_col).isNotNull(), rotated)
-    ).drop("__xm", "__opq_r")
-
-
-def _opq_rotate_gemm(
-    df: DataFrame, vec_col: str, r_e6: list[list[int]], dim: int, out: str
-) -> DataFrame:
-    """numpy int64 twin of the SQL rotation kernel — exact integer
-    matmul + the identical floor-half-up double re-quantization, so the
-    two methods agree bit-for-bit."""
+    An Arrow-batched numpy int64 matmul in mapInPandas: a pure per-row
+    map, no shuffle. Every operation is exact, so it is bit-identical to
+    the DuckDB oracle's relational kernel; tests/test_pq_rrf.py keeps
+    that kernel's Catalyst expression-tree transliteration as the
+    bit-equality reference (it runs interpreted: measured 514 s vs
+    <1 s for 20k rows x dim 64)."""
     import numpy as np
 
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
     r_mat = np.asarray(r_e6, dtype=np.int64)
-    in_fields = list(df.schema.fields)
-    out_field = StructField(out, ArrayType(DoubleType()))
-    names = [f.name for f in in_fields]
-    if out in names:
-        fields = [out_field if f.name == out else f for f in in_fields]
-    else:
-        fields = in_fields + [out_field]
-    out_schema = StructType(fields)
-    out_names = [f.name for f in fields]
+    out = out_col or vec_col
+    out_schema = _with_vec_out(df, out)
+    out_names = out_schema.names
 
     def gen(batches):
         for pdf in batches:
@@ -1387,19 +1198,13 @@ def _opq_rotate_gemm(
             mask = pdf[vec_col].notna()
             if mask.any():
                 vecs = [list(v) for v in pdf[vec_col][mask]]
-                bad = {len(v) for v in vecs} - {len(r_mat)}
+                bad = {len(v) for v in vecs} - {dim}
                 if bad:
                     raise ValueError(
-                        f"opq_rotate: vector length != dim="
-                        f"{len(r_mat)}: got {sorted(bad)}"
+                        f"opq_rotate: vector length != dim={dim}: "
+                        f"got {sorted(bad)}"
                     )
-                xm = np.floor(
-                    np.array(vecs, dtype=np.float64) * 1e6 + 0.5
-                ).astype(np.int64)
-                ym = np.floor(
-                    (xm @ r_mat).astype(np.float64) / 1e6 + 0.5
-                ).astype(np.int64)
-                rot = ym.astype(np.float64) / 1e6
+                rot = _opq_rotate_mat(vecs, r_mat)
                 for r, i in enumerate(np.nonzero(mask.to_numpy())[0]):
                     res[int(i)] = rot[r].tolist()
             out_pdf = pdf.copy()
@@ -1407,6 +1212,20 @@ def _opq_rotate_gemm(
             yield out_pdf[out_names]
 
     return df.mapInPandas(gen, schema=out_schema)
+
+
+def _opq_rotate_mat(vecs, r_mat):
+    """opq_rotate's exact integer-grid math on a (rows, dim) batch:
+    quantize, int64 matmul, half-up re-quantize, back to double."""
+    import numpy as np
+
+    xm = np.floor(np.array(vecs, dtype=np.float64) * 1e6 + 0.5).astype(
+        np.int64
+    )
+    ym = np.floor((xm @ r_mat).astype(np.float64) / 1e6 + 0.5).astype(
+        np.int64
+    )
+    return ym.astype(np.float64) / 1e6
 
 
 def _pq_group_key(svec) -> tuple:
@@ -1557,22 +1376,15 @@ def _opq_rotate_rows(
     rows: list[tuple[int, list[float]]],
     r_e6: list[list[int]],
 ) -> list[tuple[int, list[float]]]:
-    """Driver twin of opq_rotate's exact integer-grid kernel (the gemm
-    math verbatim: quantize, int64 matmul, half-up re-quantize)."""
+    """Driver twin of opq_rotate (the same _opq_rotate_mat math)."""
     import numpy as np
 
     if not rows:
         return rows
-    r_mat = np.asarray(r_e6, dtype=np.int64)
-    sids = [sid for sid, _v in rows]
-    xm = np.floor(
-        np.array([v for _s, v in rows], dtype=np.float64) * 1e6 + 0.5
-    ).astype(np.int64)
-    ym = np.floor((xm @ r_mat).astype(np.float64) / 1e6 + 0.5).astype(
-        np.int64
+    rot = _opq_rotate_mat(
+        [v for _s, v in rows], np.asarray(r_e6, dtype=np.int64)
     )
-    rot = ym.astype(np.float64) / 1e6
-    return [(sid, rot[i].tolist()) for i, sid in enumerate(sids)]
+    return [(sid, rot[i].tolist()) for i, (sid, _v) in enumerate(rows)]
 
 
 def opq_fit(
@@ -1695,7 +1507,6 @@ def pq_topk_opq(
     ns_iter: int = 40,
     sample_bound: int = 256,
     r_e6: list[list[int]] | None = None,
-    rotate_method: str = "gemm",
 ) -> DataFrame:
     """ADC top-k under a LEARNED rotation — the full OPQ composition:
     opq_fit's Procrustes rotation (trained on the id-bounded sample),
@@ -1716,10 +1527,8 @@ def pq_topk_opq(
         if r_e6 is None
         else r_e6
     )
-    rc = opq_rotate(
-        corpus, vec_col, rot, dim, method=rotate_method
-    ).localCheckpoint(eager=False)
-    rq = opq_rotate(queries, vec_col, rot, dim, method=rotate_method)
+    rc = opq_rotate(corpus, vec_col, rot, dim).localCheckpoint(eager=False)
+    rq = opq_rotate(queries, vec_col, rot, dim)
     return pq_topk_trained(
         rc, rq, id_col, vec_col, k, m, sub_dim, k_sub, n_iter
     )
@@ -1742,7 +1551,6 @@ def pq_topk_ivfpq_opq(
     ns_iter: int = 40,
     sample_bound: int = 256,
     r_e6: list[list[int]] | None = None,
-    rotate_method: str = "gemm",
 ) -> DataFrame:
     """The full FAISS production stack —
     IndexPreTransform(OPQMatrix, IndexIVFPQ(by_residual=true) with
@@ -1765,10 +1573,8 @@ def pq_topk_ivfpq_opq(
         if r_e6 is None
         else r_e6
     )
-    rc = opq_rotate(
-        corpus, vec_col, rot, dim, method=rotate_method
-    ).localCheckpoint(eager=False)
-    rq = opq_rotate(queries, vec_col, rot, dim, method=rotate_method)
+    rc = opq_rotate(corpus, vec_col, rot, dim).localCheckpoint(eager=False)
+    rq = opq_rotate(queries, vec_col, rot, dim)
     return pq_topk_ivf_residual_trained(
         rc, rq, id_col, vec_col, k, n_centroids, nprobe,
         m, sub_dim, k_sub, n_iter,

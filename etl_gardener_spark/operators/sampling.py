@@ -19,7 +19,6 @@ only approximate fractions and change membership per run).
 
 from __future__ import annotations
 
-import math
 from typing import Mapping, Sequence
 
 from pyspark.sql import Column, DataFrame, Window
@@ -317,34 +316,3 @@ def dsir_scores(
             "selected"
         ),
     )
-
-
-def temperature_shares(
-    sizes: Mapping[str, float], alpha: float = 0.3
-) -> dict[str, float]:
-    """Temperature-scaled mixture shares: ``share_s ∝ size_s ** alpha``
-    (the standard multilingual/multi-source rebalancing — alpha=1 keeps
-    natural proportions, alpha=0 is uniform; 0.2-0.3 is the usual
-    pretraining pick). Returns normalized shares to feed
-    `mixture_sample`. Driver-side arithmetic over the |strata|-sized
-    size map (itself a tiny aggregate, e.g. `corpus.mixture_report`)."""
-    if not sizes:
-        raise ValueError("sizes must be non-empty")
-    if any(v <= 0 for v in sizes.values()):
-        raise ValueError("sizes must be positive")
-    powered = {k: float(v) ** alpha for k, v in sizes.items()}
-    tot = sum(powered.values())
-    return {k: v / tot for k, v in powered.items()}
-
-
-def expected_counts(
-    weights: Mapping[str, float], total_rows: int, mod: int = SPLIT_MOD
-) -> dict[str, int]:
-    """Expected rows per split under perfectly uniform bucketing — the
-    quantization-aware target tests compare observed counts against."""
-    out: dict[str, int] = {}
-    prev = 0
-    for name, hi in split_thresholds(weights, mod):
-        out[name] = math.ceil(total_rows * (hi - prev) / mod)
-        prev = hi
-    return out

@@ -17,8 +17,9 @@ Scale design:
   hyperplanes derived from md5 — no RNG state to ship); candidate search
   touches only same-bucket vectors. Trades recall for a corpus-scan-free
   lookup; recall is tunable via number of planes / probing.
-* **Near-dup pairs**: bucket-join instead of cross-join for the same
-  reason; exact cosine verifies candidates so precision is exact.
+* **Near-dup pairs**: exact all-pairs as a block-pair GEMM — one
+  shuffle keyed on (block_a, block_b), a numpy multiply per block pair,
+  no driver collect and no whole-corpus broadcast.
 """
 
 from __future__ import annotations
@@ -378,183 +379,83 @@ def embedding_near_dup_pairs(
     vec_col: str = "embedding",
     threshold: float = 0.4,
     round_digits: int = 6,
-    use_lsh: bool = False,
-    num_planes: int = 4,
-    dim: int = 64,
-    method: str | None = None,
     num_blocks: int = 4,
-    broadcast_max_bytes: int = 256 << 20,
 ) -> DataFrame:
-    """Pairs of vectors with cosine >= threshold: (id_a, id_b, score).
+    """Pairs of vectors with cosine >= threshold: (id_a, id_b, score),
+    exact all-pairs by a **distributed block-pair GEMM**.
 
-    ``method`` selects the physical strategy (``use_lsh=True`` is kept as
-    an alias for ``method="lsh"``):
-
-    - ``"blocked"`` (default) — **distributed exact block-pair GEMM**.
-      The corpus is split into B blocks by ``id % B``; each unordered
-      block pair (i, j), i <= j, becomes one ``applyInPandas`` group
-      holding block i as side A and block j as side B, and the group runs
-      a single vectorized ``A @ Bᵀ`` numpy multiply (triangular for the
-      diagonal groups). Exact all-pairs semantics with NO driver-side
-      collect and NO whole-corpus broadcast: every executor sees only two
-      blocks at a time (memory O((n/B)·dim) per task), replication factor
-      is ~B/2 per row, and the one shuffle keys on (block_a, block_b) —
-      B ~ sqrt(cluster cores) keeps all cores busy at any corpus size.
-
-    - ``"broadcast"`` — the corpus matrix is collected once and broadcast
-      (like a broadcast-join build side); executors stream Arrow batches
-      through ``batch @ corpusᵀ``. Fastest while the matrix fits in
-      executor memory (64-dim floats: ~4 GB per 8M vectors); the collect
-      makes it unfit for the driver-graded path at 100 TB, so it REFUSES
-      (ValueError) when the estimated matrix exceeds
-      ``broadcast_max_bytes`` (default 256 MB) instead of silently
-      OOMing the driver.
-
-    - ``"lsh"`` — approximate scale path: candidate pairs must share an
-      SRP bucket; corpus² never materializes. Near-certain recall only
-      for cosine ~1 pairs (all sign bits agree); pairs near a low
-      threshold (e.g. 0.4 == 66 degrees) are mostly missed, so this is
-      NOT a drop-in for the exact oracle.
+    The corpus is split into B = ``num_blocks`` blocks by ``id % B``;
+    each unordered block pair (i, j), i <= j, becomes one
+    ``applyInPandas`` group holding block i as side A and block j as
+    side B, and the group runs a single vectorized ``A @ Bᵀ`` numpy
+    multiply (triangular for the diagonal groups). No driver-side
+    collect and no whole-corpus broadcast: every executor sees only two
+    blocks at a time (memory O((n/B)·dim) per task), replication factor
+    is ~B/2 per row, and the one shuffle keys on (block_a, block_b) —
+    B ~ sqrt(cluster cores) keeps all cores busy at any corpus size.
     """
-    if method is None:
-        method = "lsh" if use_lsh else "blocked"
-    if method == "lsh":
-        planes = srp_planes(num_planes, dim)
-        a = df.select(
-            F.col(id_col).alias("id_a"),
-            F.col(vec_col).alias("va"),
-            srp_bucket(F.col(vec_col), planes).alias("bucket"),
-        )
-        b = df.select(
-            F.col(id_col).alias("id_b"),
-            F.col(vec_col).alias("vb"),
-            srp_bucket(F.col(vec_col), planes).alias("bucket"),
-        )
-        pairs = a.join(b, "bucket").filter(F.col("id_a") < F.col("id_b"))
-        return (
-            pairs.select(
-                "id_a",
-                "id_b",
-                F.round(cosine(F.col("va"), F.col("vb")), round_digits).alias(
-                    "score"
-                ),
-            )
-            .filter(F.col("score") >= threshold)
-        )
-
     import numpy as np
 
-    if method == "blocked":
-        spark = df.sparkSession
-        b_n = num_blocks
-        pair_keys = local_df(
-            spark,
-            [(i, j) for i in range(b_n) for j in range(i, b_n)],
-            "ga int, gb int",
-        )
-        v = df.select(
-            F.col(id_col).alias("vid"),
-            F.col(vec_col).alias("vec"),
-            F.pmod(F.col(id_col), F.lit(b_n)).cast("int").alias("blk"),
-        )
-        # Side A carries block ga for every group; side B carries block gb
-        # for off-diagonal groups only (diagonal groups reuse side A
-        # triangularly, so each vector lands exactly once there).
-        lefts = v.join(F.broadcast(pair_keys), v.blk == pair_keys.ga).select(
-            "ga", "gb", F.lit("a").alias("side"), "vid", "vec"
-        )
-        offdiag = pair_keys.filter(F.col("ga") != F.col("gb"))
-        rights = v.join(F.broadcast(offdiag), v.blk == offdiag.gb).select(
-            "ga", "gb", F.lit("b").alias("side"), "vid", "vec"
-        )
-        grouped = lefts.unionByName(rights)
-
-        def _block_pairs(key, pdf):
-            import pandas as pd
-
-            a = pdf[pdf["side"] == "a"]
-            a_ids = a["vid"].to_numpy(dtype=np.int64)
-            a_mat = np.array(list(a["vec"]), dtype=np.float64)
-            if key[0] == key[1]:
-                b_ids, b_mat = a_ids, a_mat
-            else:
-                b = pdf[pdf["side"] == "b"]
-                b_ids = b["vid"].to_numpy(dtype=np.int64)
-                b_mat = np.array(list(b["vec"]), dtype=np.float64)
-            if len(a_ids) == 0 or len(b_ids) == 0:
-                return pd.DataFrame({"id_a": [], "id_b": [], "score": []})
-            a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
-            b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
-            scores = (a_mat @ b_mat.T) / np.outer(a_norms, b_norms)
-            keep = scores >= threshold
-            if key[0] == key[1]:
-                # Triangular dedup within a block; off-diagonal blocks are
-                # disjoint residue classes (ids interleave, lo/hi below
-                # normalizes order), so every qualifying pair is kept.
-                keep &= a_ids[:, None] < b_ids[None, :]
-            ai, bj = np.nonzero(keep)
-            lo = np.minimum(a_ids[ai], b_ids[bj])
-            hi = np.maximum(a_ids[ai], b_ids[bj])
-            return pd.DataFrame(
-                {
-                    "id_a": lo,
-                    "id_b": hi,
-                    "score": np.round(scores[ai, bj], round_digits),
-                }
-            )
-
-        return grouped.groupBy("ga", "gb").applyInPandas(
-            _block_pairs, schema="id_a long, id_b long, score double"
-        )
-
-    # method == "broadcast": corpus matrix shipped like a broadcast-join
-    # build side; replaces a 2M-row cross join of interpreted per-pair
-    # expressions (measured 46s -> <1s at 2k vectors).
-    #
-    # Guard (round-3 verdict item 4): this path drives a FULL-CORPUS
-    # collect, so a caller pointing it at a big table would OOM the
-    # driver silently. Like spark.sql.autoBroadcastJoinThreshold for
-    # join build sides, refuse when the estimated matrix exceeds the
-    # bound and point the caller at the scale-safe "blocked" method.
-    n_vecs = df.count()
-    est_bytes = n_vecs * (dim * 8 + 16)  # float64 matrix + id/norm
-    if est_bytes > broadcast_max_bytes:
-        raise ValueError(
-            f"method='broadcast' would collect ~{est_bytes / 1e6:.0f} MB "
-            f"({n_vecs} vectors x {dim} dims) to the driver, over the "
-            f"broadcast_max_bytes bound of {broadcast_max_bytes / 1e6:.0f} "
-            "MB. Use method='blocked' (distributed exact block-pair GEMM) "
-            "for corpora that don't fit a broadcast build side, or raise "
-            "broadcast_max_bytes explicitly."
-        )
-    rows = df.select(id_col, vec_col).collect()
-    ids = np.array([r[0] for r in rows], dtype=np.int64)
-    mat = np.array([r[1] for r in rows], dtype=np.float64)
-    norms = np.sqrt((mat * mat).sum(axis=1))
     spark = df.sparkSession
-    bc = spark.sparkContext.broadcast((ids, mat, norms))
+    b_n = num_blocks
+    pair_keys = local_df(
+        spark,
+        [(i, j) for i in range(b_n) for j in range(i, b_n)],
+        "ga int, gb int",
+    )
+    v = df.select(
+        F.col(id_col).alias("vid"),
+        F.col(vec_col).alias("vec"),
+        F.pmod(F.col(id_col), F.lit(b_n)).cast("int").alias("blk"),
+    )
+    # Side A carries block ga for every group; side B carries block gb
+    # for off-diagonal groups only (diagonal groups reuse side A
+    # triangularly, so each vector lands exactly once there).
+    lefts = v.join(F.broadcast(pair_keys), v.blk == pair_keys.ga).select(
+        "ga", "gb", F.lit("a").alias("side"), "vid", "vec"
+    )
+    offdiag = pair_keys.filter(F.col("ga") != F.col("gb"))
+    rights = v.join(F.broadcast(offdiag), v.blk == offdiag.gb).select(
+        "ga", "gb", F.lit("b").alias("side"), "vid", "vec"
+    )
+    grouped = lefts.unionByName(rights)
 
-    def _pairs(batches):
+    def _block_pairs(key, pdf):
         import pandas as pd
 
-        c_ids, c_mat, c_norms = bc.value
-        for pdf in batches:
-            b_ids = pdf[id_col].to_numpy(dtype=np.int64)
-            b_mat = np.array(list(pdf[vec_col]), dtype=np.float64)
-            b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
-            scores = (b_mat @ c_mat.T) / np.outer(b_norms, c_norms)
-            keep = (scores >= threshold) & (b_ids[:, None] < c_ids[None, :])
-            ai, bj = np.nonzero(keep)
-            yield pd.DataFrame(
-                {
-                    "id_a": b_ids[ai],
-                    "id_b": c_ids[bj],
-                    "score": np.round(scores[ai, bj], round_digits),
-                }
-            )
+        a = pdf[pdf["side"] == "a"]
+        a_ids = a["vid"].to_numpy(dtype=np.int64)
+        a_mat = np.array(list(a["vec"]), dtype=np.float64)
+        if key[0] == key[1]:
+            b_ids, b_mat = a_ids, a_mat
+        else:
+            b = pdf[pdf["side"] == "b"]
+            b_ids = b["vid"].to_numpy(dtype=np.int64)
+            b_mat = np.array(list(b["vec"]), dtype=np.float64)
+        if len(a_ids) == 0 or len(b_ids) == 0:
+            return pd.DataFrame({"id_a": [], "id_b": [], "score": []})
+        a_norms = np.sqrt((a_mat * a_mat).sum(axis=1))
+        b_norms = np.sqrt((b_mat * b_mat).sum(axis=1))
+        scores = (a_mat @ b_mat.T) / np.outer(a_norms, b_norms)
+        keep = scores >= threshold
+        if key[0] == key[1]:
+            # Triangular dedup within a block; off-diagonal blocks are
+            # disjoint residue classes (ids interleave, lo/hi below
+            # normalizes order), so every qualifying pair is kept.
+            keep &= a_ids[:, None] < b_ids[None, :]
+        ai, bj = np.nonzero(keep)
+        lo = np.minimum(a_ids[ai], b_ids[bj])
+        hi = np.maximum(a_ids[ai], b_ids[bj])
+        return pd.DataFrame(
+            {
+                "id_a": lo,
+                "id_b": hi,
+                "score": np.round(scores[ai, bj], round_digits),
+            }
+        )
 
-    return df.select(id_col, vec_col).mapInPandas(
-        _pairs, schema="id_a long, id_b long, score double"
+    return grouped.groupBy("ga", "gb").applyInPandas(
+        _block_pairs, schema="id_a long, id_b long, score double"
     )
 
 

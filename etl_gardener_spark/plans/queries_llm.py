@@ -2426,14 +2426,14 @@ def emb_ann_topk_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def emb_near_dup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Embedding near-duplicate pairs (cosine >= 0.4), exact all-pairs via
-    the distributed block-pair GEMM (method="blocked"): one shuffle keyed
-    on (block_a, block_b), per-group vectorized numpy multiply, NO driver
+    the distributed block-pair GEMM: one shuffle keyed on
+    (block_a, block_b), per-group vectorized numpy multiply, NO driver
     collect and NO whole-corpus broadcast — each task holds two corpus
-    blocks. LSH can't serve this query's exact oracle (qualifying pairs
-    sit near cosine 0.4 == 66 degrees, where SRP bucket recall is poor);
-    the approximate variant remains ``method="lsh"``."""
+    blocks. SRP-LSH bucketing can't serve this query's exact oracle
+    (qualifying pairs sit near cosine 0.4 == 66 degrees, where bucket
+    recall is poor)."""
     e = load_table(spark, sf_dir, "embeddings")
-    return SIM.embedding_near_dup_pairs(e, threshold=0.4, method="blocked")
+    return SIM.embedding_near_dup_pairs(e, threshold=0.4)
 
 
 _PQ_M, _PQ_SUB, _PQ_KSUB = 4, 16, 16
@@ -5686,7 +5686,7 @@ def emb_split_leakage(spark: SparkSession, sf_dir: str) -> DataFrame:
     block join; split labels are the standard narrow projection joined
     twice (broadcast)."""
     e = load_table(spark, sf_dir, "embeddings")
-    pairs = SIM.embedding_near_dup_pairs(e, threshold=0.4, method="blocked")
+    pairs = SIM.embedding_near_dup_pairs(e, threshold=0.4)
     s = SP.hash_split(
         e.select("vec_id"), "vec_id",
         {"train": 0.96, "val": 0.02, "test": 0.02},
@@ -7515,10 +7515,12 @@ _HAD_DIM = 64
 
 
 def _hadamard_rot_cte(base: str = "embeddings", dim: int = _HAD_DIM) -> str:
-    """The normalized Hadamard rotation as a SQL relation: the exact
-    mirror of pq.hadamard_rotate (same left-assoc fold — DuckDB's
-    list_reduce starts at t0, Spark's aggregate at 0.0 + t0, IEEE-equal
-    — and the float-exact 1/sqrt(dim) multiply for dim = 4^k)."""
+    """The normalized Hadamard rotation as a SQL relation: the mirror of
+    pq.hadamard_rotate (same left-assoc fold and the float-exact
+    1/sqrt(dim) multiply for dim = 4^k). DuckDB's list_reduce starts at
+    t0 where pq.hadamard_rotate starts at 0.0 + t0; the two differ only
+    in the sign of an all-zero fold (-0.0 vs 0.0), which the downstream
+    squared-difference distances do not see."""
     scale = 1.0 / (dim ** 0.5)
     return f"""rot AS (SELECT vec_id,
       list_transform(range(0, {dim}), i ->

@@ -366,70 +366,35 @@ def test_incremental_semantic_dedup_statuses(spark):
     assert out[21] == (None, "unique")
 
 
-def test_embedding_near_dup_pairs_blocked_equals_broadcast(vecs):
-    """The distributed block-pair GEMM (default) must produce exactly the
-    broadcast path's pairs and scores — same exact semantics, different
-    physical strategy. num_blocks exceeding the corpus exercises empty
-    blocks; interleaved residue blocks exercise the off-diagonal id
-    ordering."""
-    def run(**kw):
-        return {
+def test_embedding_near_dup_pairs_blocked_equals_all_pairs_reference(vecs):
+    """The block-pair GEMM must produce exactly the pairs and scores of
+    an all-pairs numpy reference over the collected fixture (same cosine
+    arithmetic, one full matrix instead of block pairs). num_blocks
+    exceeding the corpus exercises empty blocks; interleaved residue
+    blocks exercise the off-diagonal id ordering."""
+    import numpy as np
+
+    rows = vecs.select("vec_id", "embedding").collect()
+    ids = np.array([r[0] for r in rows], dtype=np.int64)
+    mat = np.array([r[1] for r in rows], dtype=np.float64)
+    norms = np.sqrt((mat * mat).sum(axis=1))
+    scores = (mat @ mat.T) / np.outer(norms, norms)
+    keep = (scores >= 0.9) & (ids[:, None] < ids[None, :])
+    ref = {
+        (int(ids[i]), int(ids[j])): float(np.round(scores[i, j], 6))
+        for i, j in zip(*np.nonzero(keep))
+    }
+    assert ref
+
+    for nb in (1, 2, 3, 7):
+        got = {
             (r.id_a, r.id_b): r.score
             for r in SIM.embedding_near_dup_pairs(
-                vecs, id_col="vec_id", vec_col="embedding", threshold=0.9, **kw
+                vecs, id_col="vec_id", vec_col="embedding", threshold=0.9,
+                num_blocks=nb,
             ).collect()
         }
-
-    broadcast = run(method="broadcast")
-    for nb in (1, 2, 3, 7):
-        assert run(method="blocked", num_blocks=nb) == broadcast, nb
-
-
-def test_embedding_near_dup_pairs_broadcast_guard_trips(vecs):
-    """The broadcast path drives a full-corpus collect; it must REFUSE
-    (not silently OOM the driver) when the estimated matrix exceeds
-    broadcast_max_bytes, pointing callers to the blocked method."""
-    with pytest.raises(ValueError, match="blocked"):
-        SIM.embedding_near_dup_pairs(
-            vecs,
-            id_col="vec_id",
-            vec_col="embedding",
-            threshold=0.9,
-            method="broadcast",
-            broadcast_max_bytes=1,  # 5 vectors already exceed 1 byte
-        )
-    # an explicit raised bound keeps the path usable for small corpora
-    out = SIM.embedding_near_dup_pairs(
-        vecs,
-        id_col="vec_id",
-        vec_col="embedding",
-        threshold=0.9,
-        method="broadcast",
-    ).collect()
-    assert out  # default 256 MB bound admits the 5-vector fixture
-
-
-def test_embedding_near_dup_pairs_lsh_subset_of_exact(vecs):
-    exact = {
-        (r.id_a, r.id_b)
-        for r in SIM.embedding_near_dup_pairs(
-            vecs, id_col="vec_id", vec_col="embedding", threshold=0.9
-        ).collect()
-    }
-    lsh = {
-        (r.id_a, r.id_b)
-        for r in SIM.embedding_near_dup_pairs(
-            vecs,
-            id_col="vec_id",
-            vec_col="embedding",
-            threshold=0.9,
-            use_lsh=True,
-            num_planes=4,
-            dim=4,
-        ).collect()
-    }
-    assert lsh <= exact
-    assert (0, 4) in lsh  # identical vectors always share the SRP bucket
+        assert got == ref, nb
 
 
 from hypothesis import given, settings, strategies as st

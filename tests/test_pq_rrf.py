@@ -27,6 +27,68 @@ def _sub_de6(a, b, s):
     return math.floor(d * 1e6 + 0.5)
 
 
+def _hadamard_rotate_sql(df, vec_col, dim):
+    """Bit-equality reference for PQ.hadamard_rotate: the Catalyst
+    expression-tree transliteration of the DuckDB oracle's nested
+    list_transform / list_reduce — per output i, a left-assoc aggregate
+    from 0.0 over j of +-x_j by the parity of popcount(i & j), times the
+    1/sqrt(dim) scale."""
+    x = F.col(vec_col)
+    rotated = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda i: F.aggregate(
+            F.sequence(F.lit(0), F.lit(dim - 1)),
+            F.lit(0.0),
+            lambda acc, j: acc
+            + F.when(
+                F.bit_count(i.cast("long").bitwiseAND(j.cast("long"))) % 2
+                == 0,
+                F.element_at(x, (j + 1).cast("int")).cast("double"),
+            ).otherwise(
+                -F.element_at(x, (j + 1).cast("int")).cast("double")
+            ),
+        )
+        * F.lit(1.0 / (dim ** 0.5)),
+    )
+    return df.withColumn(vec_col, rotated)
+
+
+def _opq_rotate_sql(df, vec_col, r_e6, dim):
+    """Bit-equality reference for PQ.opq_rotate: the expression-tree
+    mirror of the DuckDB oracle's relational kernel — x quantized to the
+    1e-6 grid, an exact int64 aggregate over i of x[i] * R[i][j], one
+    half-up re-quantization, back to double; NULL vectors stay NULL."""
+    spark = df.sparkSession
+    rdf = spark.createDataFrame([(r_e6,)], "__opq_r array<array<long>>")
+    xm = F.transform(
+        F.col(vec_col),
+        lambda v: F.floor(v.cast("double") * F.lit(1e6) + F.lit(0.5)).cast(
+            "long"
+        ),
+    )
+    df2 = df.crossJoin(F.broadcast(rdf)).withColumn("__xm", xm)
+    rotated = F.transform(
+        F.sequence(F.lit(0), F.lit(dim - 1)),
+        lambda j: F.floor(
+            F.aggregate(
+                F.sequence(F.lit(0), F.lit(dim - 1)),
+                F.lit(0).cast("long"),
+                lambda acc, i: acc
+                + F.element_at(F.col("__xm"), i + 1)
+                * F.element_at(
+                    F.element_at(F.col("__opq_r"), i + 1), j + 1
+                ),
+            ).cast("double")
+            / F.lit(1e6)
+            + F.lit(0.5)
+        ).cast("long").cast("double")
+        / F.lit(1e6),
+    )
+    return df2.withColumn(
+        vec_col, F.when(F.col(vec_col).isNotNull(), rotated)
+    ).drop("__xm", "__opq_r")
+
+
 def test_pq_encode_matches_python_reference_and_seeds_self_code(spark):
     rows = _vecs(40)
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
@@ -271,7 +333,8 @@ def test_hadamard_rotate_orthogonal_and_reference(spark):
     """hadamard_rotate: (a) H4 matches the hand-computed reference, (b)
     the rotation preserves exact pairwise squared-L2 distances (up to
     float rounding) — the property the recall report's shared raw-GT
-    rests on, (c) non-power-of-two dims are refused."""
+    rests on, (c) non-power-of-two dims are refused, (d) at dim 512 a
+    +-1 vector rotates to exactly H @ x by hand."""
     import math
 
     import pytest as _pytest
@@ -299,6 +362,24 @@ def test_hadamard_rotate_orthogonal_and_reference(spark):
 
     with _pytest.raises(ValueError):
         PQ.hadamard_rotate(df, "embedding", 12)
+
+    # dim 512: +-1 inputs make every partial sum integer-valued, so the
+    # kernel == H @ x exactly (scale 1/sqrt(512) applied to both sides)
+    import numpy as np
+
+    d2 = 512
+    sgn = [1.0 if (i * 7 + 3) % 5 < 3 else -1.0 for i in range(d2)]
+    big = spark.createDataFrame(
+        [(0, sgn)], "vec_id long, embedding array<double>"
+    )
+    out = PQ.hadamard_rotate(big, "embedding", d2).collect()[0]["embedding"]
+    v = np.array(sgn)
+    i = np.arange(d2)
+    ref = np.array([
+        ((-1.0) ** np.array([bin(ii & jj).count("1") for jj in i]) * v).sum()
+        for ii in i
+    ]) * (1.0 / math.sqrt(d2))  # multiply-by-reciprocal, as the kernel does
+    assert np.array_equal(np.array(out), ref)
 
 
 def test_hadamard_rotate_rejects_length_mismatch(spark):
@@ -328,113 +409,26 @@ def test_hadamard_rotate_rejects_length_mismatch(spark):
     assert got[0]["embedding"] == [None] * 4
 
 
-def test_hadamard_fwht_parity_with_sql_kernel(spark):
-    """r10 verdict item 3: hadamard_rotate(method='fwht') — the
-    O(dim log dim) numpy butterfly — computes the same transform as the
-    certified O(dim^2) SQL kernel up to float summation order: allclose
-    at dim 64 on real-ish vectors, IDENTICAL downstream PQ top-k, NULL
-    pass-through, and exact equality on a +-1 vector where both sums
-    are integer-valued (dim 512 exercises 9 butterfly passes)."""
-    import math
-
-    import numpy as np
-    import pytest
-
-    from etl_gardener_spark.operators import pq as PQ
-
-    rng = random.Random(11)
-    n, dim = 60, 64
-    rows = [(i, [rng.uniform(-1, 1) for _ in range(dim)]) for i in range(n)]
-    df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-
-    got_sql = {
-        r["vec_id"]: r["embedding"]
-        for r in PQ.hadamard_rotate(df, "embedding", dim).collect()
-    }
-    got_fwht = {
-        r["vec_id"]: r["embedding"]
-        for r in PQ.hadamard_rotate(
-            df, "embedding", dim, method="fwht"
-        ).collect()
-    }
-    assert set(got_sql) == set(got_fwht)
-    for k in got_sql:
-        assert np.allclose(got_sql[k], got_fwht[k], atol=1e-9), k
-    # orthogonality survives the fast path: norms preserved
-    for k, v in got_fwht.items():
-        raw = math.sqrt(sum(x * x for x in dict(rows)[k]))
-        rot = math.sqrt(sum(x * x for x in v))
-        assert abs(raw - rot) < 1e-9
-
-    # identical downstream PQ top-k from either rotation
-    kw = dict(m=4, sub_dim=16, k_sub=4)
-    sql_rot = PQ.hadamard_rotate(df, "embedding", dim)
-    fw_rot = PQ.hadamard_rotate(df, "embedding", dim, method="fwht")
-    a = {
-        tuple(r)
-        for r in PQ.pq_topk(
-            sql_rot, sql_rot.filter(F.col("vec_id") < 5), k=3, **kw
-        ).select("query_id", "neighbor_id").collect()
-    }
-    b = {
-        tuple(r)
-        for r in PQ.pq_topk(
-            fw_rot, fw_rot.filter(F.col("vec_id") < 5), k=3, **kw
-        ).select("query_id", "neighbor_id").collect()
-    }
-    assert a == b and a
-
-    # NULL pass-through + length mismatch raises on the fast path too
-    null_df = spark.createDataFrame(
-        [(1, None), (2, [1.0] * dim)], "vec_id long, embedding array<double>"
-    )
-    got = {
-        r["vec_id"]: r["embedding"]
-        for r in PQ.hadamard_rotate(
-            null_df, "embedding", dim, method="fwht"
-        ).collect()
-    }
-    assert got[1] is None and got[2] is not None
-    bad = spark.createDataFrame(
-        [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
-    )
-    with pytest.raises(Exception, match="vector length"):
-        PQ.hadamard_rotate(bad, "embedding", dim, method="fwht").collect()
-    with pytest.raises(ValueError, match="method"):
-        PQ.hadamard_rotate(df, "embedding", dim, method="nope")
-
-    # dim 512: +-1 inputs make every butterfly sum integer-valued, so
-    # fast == H @ x exactly (scale 1/sqrt(512) applied to both sides)
-    d2 = 512
-    sgn = [1.0 if (i * 7 + 3) % 5 < 3 else -1.0 for i in range(d2)]
-    big = spark.createDataFrame(
-        [(0, sgn)], "vec_id long, embedding array<double>"
-    )
-    out = PQ.hadamard_rotate(
-        big, "embedding", d2, method="fwht"
-    ).collect()[0]["embedding"]
-    v = np.array(sgn)
-    i = np.arange(d2)
-    ref = np.array([
-        ((-1.0) ** np.array([bin(ii & jj).count("1") for jj in i]) * v).sum()
-        for ii in i
-    ]) * (1.0 / math.sqrt(d2))  # multiply-by-reciprocal, as the kernel does
-    assert np.array_equal(np.array(out), ref)
-
-
 def test_hadamard_npfold_bit_equal(spark):
-    """hadamard_rotate(method='npfold') — the numpy cumsum fold that is
-    now the default — is BIT-IDENTICAL to the certified SQL expression
-    tree: exact float equality on random vectors (not allclose — the
-    cumsum accumulate reproduces the left-assoc IEEE fold addition by
-    addition), [None]*dim for a NULL vector AND for a vector carrying a
-    NULL component (H has no zero entries, so one NULL poisons every
-    output fold), NaN propagation, and the length assert."""
+    """hadamard_rotate — the numpy fold over a (rows, dim) accumulator —
+    is BIT-IDENTICAL to the SQL expression-tree reference: exact float
+    equality on random vectors (not allclose — the fold adds the same
+    terms in the same order from the same 0.0 start), +0.0 for an
+    all-(-0.0) vector, [None]*dim for a NULL vector AND for a vector
+    carrying a NULL component (H has no zero entries, so one NULL
+    poisons every output fold), NaN propagation, and the length
+    assert."""
     import math
 
     import pytest
 
     from etl_gardener_spark.operators import pq as PQ
+
+    def bits(rotated):
+        return {
+            r["vec_id"]: [repr(x) for x in r["embedding"]]
+            for r in rotated.collect()
+        }
 
     rng = random.Random(23)
     dim = 64
@@ -443,53 +437,45 @@ def test_hadamard_npfold_bit_equal(spark):
         for i in range(40)
     ]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    got_sql = {
-        r["vec_id"]: r["embedding"]
-        for r in PQ.hadamard_rotate(df, "embedding", dim, method="sql").collect()
-    }
-    got_np = {
-        r["vec_id"]: r["embedding"]
-        for r in PQ.hadamard_rotate(
-            df, "embedding", dim, method="npfold"
-        ).collect()
-    }
-    assert set(got_sql) == set(got_np)
-    for k in got_sql:
-        # exact equality, component-wise — repr captures the full bits
-        assert [repr(x) for x in got_sql[k]] == [repr(x) for x in got_np[k]], k
+    got_np = bits(PQ.hadamard_rotate(df, "embedding", dim))
+    assert got_np == bits(_hadamard_rotate_sql(df, "embedding", dim))
+    assert len(got_np) == 40
 
-    # NULL vector, NULL component, and NaN component mirror the SQL tree
+    # NULL vector, NULL component, NaN component and signed zeros
+    # mirror the SQL tree
     special = spark.createDataFrame(
         [
             (1, None),
             (2, [1.0] * 31 + [None] + [1.0] * 32),
             (3, [1.0] * 63 + [float("nan")]),
+            (4, [-0.0] * dim),
         ],
         "vec_id long, embedding array<double>",
     )
-    for method in ("sql", "npfold"):
-        got = {
-            r["vec_id"]: r["embedding"]
-            for r in PQ.hadamard_rotate(
-                special, "embedding", dim, method=method
-            ).collect()
-        }
-        assert got[1] == [None] * dim, method
-        assert got[2] == [None] * dim, method
-        assert all(x is not None and math.isnan(x) for x in got[3]), method
+    got = {
+        r["vec_id"]: r["embedding"]
+        for r in PQ.hadamard_rotate(special, "embedding", dim).collect()
+    }
+    assert got[1] == [None] * dim
+    assert got[2] == [None] * dim
+    assert all(x is not None and math.isnan(x) for x in got[3])
+    assert repr(got[4][0]) == "0.0"
+    assert bits(PQ.hadamard_rotate(special, "embedding", dim)) == bits(
+        _hadamard_rotate_sql(special, "embedding", dim)
+    )
 
     bad = spark.createDataFrame(
         [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
     )
     with pytest.raises(Exception, match="vector length"):
-        PQ.hadamard_rotate(bad, "embedding", dim, method="npfold").collect()
+        PQ.hadamard_rotate(bad, "embedding", dim).collect()
 
 
 def test_opq_fit_rotation_and_method_parity(spark):
     """r10 verdict item 4 (OPQ proper): opq_fit learns an ORTHOGONAL
     rotation (integer-micro Newton-Schulz polar of the Procrustes
-    scatter), opq_rotate's 'sql' and 'gemm' kernels agree BIT-FOR-BIT
-    (every op exact int64 — unlike the fwht float path), the learned
+    scatter), opq_rotate agrees BIT-FOR-BIT with the SQL expression-tree
+    reference (every op exact int64), the learned
     rotation lowers the PQ quantization objective vs no rotation on a
     correlated corpus, and the degenerate cases (empty corpus, NULL
     vectors, over-bound samples) behave."""
@@ -520,13 +506,11 @@ def test_opq_fit_rotation_and_method_parity(spark):
 
     a = {
         r["vec_id"]: tuple(r["embedding"])
-        for r in PQ.opq_rotate(df, "embedding", r_e6, dim,
-                               method="sql").collect()
+        for r in _opq_rotate_sql(df, "embedding", r_e6, dim).collect()
     }
     b = {
         r["vec_id"]: tuple(r["embedding"])
-        for r in PQ.opq_rotate(df, "embedding", r_e6, dim,
-                               method="gemm").collect()
+        for r in PQ.opq_rotate(df, "embedding", r_e6, dim).collect()
     }
     assert a == b and len(a) == n
 
@@ -538,19 +522,15 @@ def test_opq_fit_rotation_and_method_parity(spark):
     rot = PQ.opq_rotate(df, "embedding", r_e6, dim).localCheckpoint()
     assert mse(rot) < mse(df)  # the OPQ objective actually improves
 
-    # NULL pass-through on both kernels
+    # NULL pass-through
     nd = spark.createDataFrame(
         [(1, None), (2, [1.0] * dim)], "vec_id long, embedding array<double>"
     )
-    for m in ("sql", "gemm"):
-        got = {
-            r["vec_id"]: r["embedding"]
-            for r in PQ.opq_rotate(nd, "embedding", r_e6, dim,
-                                   method=m).collect()
-        }
-        assert got[1] is None and got[2] is not None, m
-    with pytest.raises(ValueError, match="method"):
-        PQ.opq_rotate(df, "embedding", r_e6, dim, method="nope")
+    got = {
+        r["vec_id"]: r["embedding"]
+        for r in PQ.opq_rotate(nd, "embedding", r_e6, dim).collect()
+    }
+    assert got[1] is None and got[2] is not None
 
     # empty corpus: identity rotation, empty search — the fuzz seed-0
     # shape, and the oracle's fro = 0 CASE twin
@@ -573,9 +553,9 @@ def test_opq_fit_rotation_and_method_parity(spark):
 
 
 def test_opq_rotate_rejects_length_mismatch(spark):
-    """Both opq_rotate kernels refuse mis-sized vectors instead of
-    folding NULLs (sql) or raising an obscure numpy shape error (gemm)
-    — the hadamard_rotate r10-advisor contract carried over."""
+    """opq_rotate refuses mis-sized vectors instead of raising an
+    obscure numpy shape error — the hadamard_rotate r10-advisor
+    contract carried over."""
     import pytest
 
     from etl_gardener_spark.operators import pq as PQ
@@ -584,9 +564,8 @@ def test_opq_rotate_rejects_length_mismatch(spark):
     bad = spark.createDataFrame(
         [(1, [1.0, 2.0])], "vec_id long, embedding array<double>"
     )
-    for m in ("sql", "gemm"):
-        with pytest.raises(Exception, match="vector length"):
-            PQ.opq_rotate(bad, "embedding", r, 8, method=m).collect()
+    with pytest.raises(Exception, match="vector length"):
+        PQ.opq_rotate(bad, "embedding", r, 8).collect()
 
 
 def test_pq_fit_local_matches_spark(spark):

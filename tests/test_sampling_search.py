@@ -126,21 +126,19 @@ def test_mixture_sample_excludes_unspecified_strata_and_is_stable(spark):
         SP.mixture_sample(df, "source", {"a": -1.0}, "doc_id")
 
 
-def test_temperature_shares():
-    nat = {"big": 8000.0, "small": 1000.0}
-    t1 = SP.temperature_shares(nat, alpha=1.0)
-    assert abs(t1["big"] - 8 / 9) < 1e-12
-    t0 = SP.temperature_shares(nat, alpha=0.0)
-    assert abs(t0["big"] - 0.5) < 1e-12
-    t = SP.temperature_shares(nat, alpha=0.3)
-    assert 0.5 < t["big"] < 8 / 9  # between uniform and natural
-    assert abs(sum(t.values()) - 1.0) < 1e-12
-    with pytest.raises(ValueError):
-        SP.temperature_shares({})
+def expected_counts(weights, total_rows, mod=SP.SPLIT_MOD):
+    """Expected rows per split under perfectly uniform bucketing, from
+    the quantized split thresholds."""
+    out = {}
+    prev = 0
+    for name, hi in SP.split_thresholds(weights, mod):
+        out[name] = math.ceil(total_rows * (hi - prev) / mod)
+        prev = hi
+    return out
 
 
 def test_expected_counts_quantization():
-    got = SP.expected_counts({"train": 0.96, "val": 0.02, "test": 0.02}, 100)
+    got = expected_counts({"train": 0.96, "val": 0.02, "test": 0.02}, 100)
     assert got == {"train": 96, "val": 2, "test": 2}
 
 
