@@ -240,7 +240,9 @@ def pq_topk(
     """
     cb = _codebook_df(corpus, id_col, vec_col, k_sub)
     if codes is None:
-        codes = exploded_codes(corpus, id_col, vec_col, m, sub_dim, k_sub)
+        codes = exploded_codes(
+            corpus, id_col, vec_col, m, sub_dim, k_sub, codebook=cb
+        )
     table = _query_dist_table(queries, cb, id_col, vec_col, m, sub_dim)
     cand = (
         codes.join(F.broadcast(table), ["s", "code"])
@@ -309,8 +311,11 @@ def pq_topk_ivf(
         # a persisted index's cell relation (index_store.load_ann_index,
         # or ivf_build_cells output) — extra columns like c_vec dropped
         cells = cells.select("neighbor_id", "cell")
+    cb = _codebook_df(corpus, id_col, vec_col, k_sub)
     if codes is None:
-        codes = exploded_codes(corpus, id_col, vec_col, m, sub_dim, k_sub)
+        codes = exploded_codes(
+            corpus, id_col, vec_col, m, sub_dim, k_sub, codebook=cb
+        )
     codes = codes.join(cells, "neighbor_id")
 
     qscored = (
@@ -337,7 +342,6 @@ def pq_topk_ivf(
         .select("query_id", "cell")
     )
 
-    cb = _codebook_df(corpus, id_col, vec_col, k_sub)
     table = _query_dist_table(queries, cb, id_col, vec_col, m, sub_dim)
     cand = (
         codes.join(F.broadcast(probes), "cell")
@@ -761,7 +765,7 @@ def pq_fit(
         # the k_sub identical copies the broadcast join replicates), so
         # the update below needs no join-back shuffle of the melted
         # corpus — one exchange per Lloyd iteration instead of two
-        # (the kmeans_fit fusion, guide §2.4); (id, s) is unique in subs,
+        # (guide §2.4); (id, s) is unique in subs,
         # so first(svec) is the row's own slice, not a choice.
         assigned = scored.groupBy(id_col, "s").agg(
             F.min_by(
@@ -775,7 +779,7 @@ def pq_fit(
         )
         # the updated codebook is O(m·k_sub·sub_dim) values — collect the
         # per-(s, cid, pos) integer-micro means and re-embed them as a
-        # local relation (the kmeans_fit pattern): a lazy localCheckpoint
+        # local relation: a lazy localCheckpoint
         # of an AQE plan still force-runs every intermediate stage
         # serially via toRdd, and each later consumer pays a
         # broadcast-build job, while a LocalTableScan broadcasts without

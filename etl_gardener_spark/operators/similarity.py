@@ -24,6 +24,10 @@ Scale design:
 
 from __future__ import annotations
 
+import math
+from decimal import ROUND_HALF_UP, Context, Decimal
+
+import numpy as np
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -394,7 +398,6 @@ def embedding_near_dup_pairs(
     is ~B/2 per row, and the one shuffle keys on (block_a, block_b) —
     B ~ sqrt(cluster cores) keeps all cores busy at any corpus size.
     """
-    import numpy as np
 
     spark = df.sparkSession
     b_n = num_blocks
@@ -688,25 +691,8 @@ def kmeans_assign(
     midpoint score — the repr-midpoint divergence class documented in
     functions/exact.py; the ordering key stays the scaled integer (no
     /10^d: injective for |cos| <= 2, one fewer op)."""
-    scored = _assign_scored(df, cents_df, id_col, vec_col, round_digits)
-    ordk = F.struct((-F.col("__s")).alias("s"), F.col("cid").alias("c"))
-    return scored.groupBy(id_col).agg(F.min_by(F.col("cid"), ordk).alias("cid"))
-
-
-def _assign_scored(
-    df: DataFrame,
-    cents_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    round_digits: int = 6,
-) -> DataFrame:
-    """The (id, __v, cid, __s) pair-score relation kmeans_assign
-    aggregates — factored out so kmeans_fit's Lloyd update can carry the
-    vector THROUGH the argmin aggregate (F.first over the k identical
-    copies the broadcast nested-loop replicates) instead of paying a
-    join-back shuffle of the corpus per iteration."""
     kscale = F.lit(float(10**round_digits))
-    return (
+    scored = (
         df.select(
             F.col(id_col),
             F.col(vec_col).alias("__v"),
@@ -721,7 +707,6 @@ def _assign_scored(
         )
         .select(
             id_col,
-            "__v",
             "cid",
             # COALESCE(-2.0): a zero-norm vector or zero centroid scores
             # NULL; -2 sits below any true cosine so the argmax is
@@ -740,6 +725,8 @@ def _assign_scored(
             ).alias("__s"),
         )
     )
+    ordk = F.struct((-F.col("__s")).alias("s"), F.col("cid").alias("c"))
+    return scored.groupBy(id_col).agg(F.min_by(F.col("cid"), ordk).alias("cid"))
 
 
 def kmeans_assign_gemm(
@@ -778,7 +765,6 @@ def kmeans_assign_gemm(
     which could flip the winner on a 6-dp midpoint score.
     tests/test_localrel_autotune.py asserts auto(=GEMM) ==
     pinned(=fold) end-to-end."""
-    import numpy as np
 
     kscale = float(10**round_digits)
 
@@ -834,22 +820,25 @@ def kmeans(
     round_digits: int = 6,
     assign: str = "fold",
 ) -> DataFrame:
-    """Distributed Lloyd k-means over an embedding column: (id, cluster).
+    """Lloyd k-means over an embedding column: (id, cluster).
 
     Deterministic by construction: seeds are the first ``k`` vectors by id
     (no RNG — same policy as the IVF coarse quantizer), assignment is
     rounded-cosine argmax with min-cid tie-break, and each update rounds
     the element-wise mean so a rerun (or the SQL oracle) reproduces the
-    exact assignment. Per iteration: one broadcast assignment pass over
-    the corpus and one (cid, dim)-keyed aggregation whose output is k x
-    dim rows — the centroid relation stays driver-tiny no matter the
-    corpus size, which is what makes Lloyd scale: the only full-data
-    operations are a map (assign) and a map-side-combined sum (update).
+    exact assignment. The centroids train on the driver from one
+    bounded collect (``kmeans_fit``); only the final assignment is a
+    distributed pass over the corpus.
     """
     out, _cents = kmeans_fit(
         df, id_col, vec_col, k, n_iter, round_digits, assign=assign
     )
     return out
+
+
+# Most (id, vec) rows kmeans_fit collects to train on; above it the fit
+# trains on a deterministic sample of this many rows.
+_FIT_ROWS = 1 << 16
 
 
 def kmeans_fit(
@@ -868,11 +857,20 @@ def kmeans_fit(
     corpus assignments, so later batches can be routed to the same
     clusters without re-training (``incremental_semantic_dedup``).
 
-    ``assign``: 'fold' (default) scores each (vector, centroid) pair
-    with the sequential Catalyst fold — bit-identical to the SQL oracle,
-    the pinned-k replay path; 'gemm' routes every assignment pass
-    through ``kmeans_assign_gemm`` — O(n·k·d) BLAS instead of O(n·k·d)
-    interpreted lambdas, the k∝n path (see its float caveat).
+    The fit runs on the driver. One job collects at most ``_FIT_ROWS``
+    (id, vec) rows in (xxhash64(id), id) order and ``_lloyd_local``
+    iterates on them. At or below the bound those rows are the whole
+    corpus and the seeds come from them. Above it the fit trains on the
+    first ``_FIT_ROWS`` rows in that order, a deterministic sample that
+    does not depend on row order or partitioning, and the seeds still
+    come from the full corpus through one O(k) collect. The final
+    assignment is one distributed pass over the whole corpus.
+
+    ``assign`` picks that final pass only: 'fold' (default) scores each
+    (vector, centroid) pair with the sequential Catalyst fold —
+    bit-identical to the SQL oracle, the pinned-k replay path; 'gemm'
+    runs ``kmeans_assign_gemm`` — BLAS instead of interpreted lambdas,
+    the k∝n path (see its float caveat).
 
     ``seed``: 'id_lt_k' (default) seeds from rows with id < k — the
     original deterministic scheme, but under a filtered training corpus
@@ -884,99 +882,173 @@ def kmeans_fit(
     if seed not in ("id_lt_k", "first_k"):
         raise ValueError(f"seed must be 'id_lt_k' or 'first_k', got {seed!r}")
     assign_fn = kmeans_assign if assign == "fold" else kmeans_assign_gemm
-    spark = df.sparkSession
+    vecs = df.select(F.col(id_col), F.col(vec_col))
+    rows = (
+        vecs.orderBy(F.xxhash64(id_col), id_col).limit(_FIT_ROWS + 1).collect()
+    )
+    seed_src = rows
+    if len(rows) > _FIT_ROWS:
+        rows = rows[:_FIT_ROWS]
+        seed_src = (
+            vecs.filter(F.col(id_col) < k)
+            if seed == "id_lt_k"
+            else vecs.orderBy(id_col).limit(k)
+        ).collect()
     if seed == "id_lt_k":
-        seeds = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .filter(F.col(id_col) < k)
-            .collect()
-        )
         seed_rows = sorted(
-            (int(r[0]), [float(x) for x in r[1]]) for r in seeds
+            (int(i), [float(x) for x in v])
+            for i, v in seed_src
+            if i is not None and i < k
         )
     else:
-        # O(k) driver collect: top-k by id is a bounded take, not a scan
-        seeds = df.select(F.col(id_col), F.col(vec_col)).orderBy(id_col).limit(k).collect()
+        first = sorted(seed_src, key=lambda r: r[0])[:k]
         seed_rows = [
-            (i, [float(x) for x in r[1]])
-            for i, r in enumerate(sorted(seeds, key=lambda r: r[0]))
+            (cid, [float(x) for x in v]) for cid, (_i, v) in enumerate(first)
         ]
-    # explicit schema: empty corpus -> zero seed centroids (see
+    # explicit schema: empty corpus -> zero centroids (see
     # cosine_topk_ivf note)
     cents = local_df(
-        spark,
-        seed_rows,
+        df.sparkSession,
+        _lloyd_local([v for _i, v in rows], seed_rows, n_iter, round_digits),
         "cid long, cvec array<double>",
     )
-
-    vecs = df.select(F.col(id_col), F.col(vec_col))
-    for _ in range(n_iter):
-        # update: element-wise mean per cluster, rebuilt into an array
-        # ordered by dimension; empty clusters drop out (their cid simply
-        # stops attracting points — Lloyd's standard degenerate case).
-        # The rounded per-(cid, pos) means are collected to the driver
-        # and re-embedded as a local relation: the centroid relation is
-        # O(k·dim) — the same driver-size class the gemm assignment path
-        # collects every iteration anyway — and a local relation feeds
-        # the next assignment pass with NO broadcast-build job and no
-        # checkpoint materialization (a lazy localCheckpoint of an AQE
-        # plan still force-runs every intermediate stage serially via
-        # toRdd: measured 7-9 scheduler round-trips per Lloyd iteration
-        # vs 2-3 for this one collect). Values are bit-identical: the
-        # distributed avg+round aggregate is unchanged, and the driver
-        # only reassembles its output rows into pos-ordered arrays —
-        # exactly what the former array_sort(collect_list(struct)) tail
-        # did (pos is unique per cid, so the orders coincide).
-        if assign == "fold":
-            # the vector rides THROUGH the argmin aggregate (F.first over
-            # the k identical copies the broadcast nested-loop makes), so
-            # the update needs no join-back shuffle of the corpus — one
-            # exchange per iteration instead of two (guide §2.4). Ids are
-            # unique (the relation contract throughout this repo), so
-            # first(__v) is the row's own vector, not a choice.
-            ordk = F.struct(
-                (-F.col("__s")).alias("s"), F.col("cid").alias("c")
-            )
-            assigned = (
-                _assign_scored(vecs, cents, id_col, vec_col, round_digits)
-                .groupBy(id_col)
-                .agg(
-                    F.min_by(F.col("cid"), ordk).alias("cid"),
-                    F.first("__v").alias("__v"),
-                )
-            )
-            exploded = assigned.select(
-                "cid", F.posexplode("__v").alias("pos", "val")
-            )
-        else:
-            cur = assign_fn(vecs, cents, id_col, vec_col, round_digits)
-            exploded = vecs.join(cur, id_col).select(
-                "cid", F.posexplode(vec_col).alias("pos", "val")
-            )
-        mrows = (
-            exploded.groupBy("cid", "pos")
-            .agg(F.round(F.avg(F.col("val").cast("double")), round_digits).alias("m"))
-            .collect()
-        )
-        by_cid: dict[int, list[tuple[int, float | None]]] = {}
-        for r in mrows:
-            # m is NULL when every contributing element was NULL — the
-            # old collect_list tail kept it as a NULL array element
-            by_cid.setdefault(int(r[0]), []).append(
-                (int(r[1]), None if r[2] is None else float(r[2]))
-            )
-        cents = local_df(
-            spark,
-            [
-                (cid, [m for _, m in sorted(vals)])
-                for cid, vals in sorted(by_cid.items())
-            ],
-            "cid long, cvec array<double>",
-        )
     final = assign_fn(vecs, cents, id_col, vec_col, round_digits).select(
         F.col(id_col), F.col("cid").alias("cluster_id")
     )
     return final, cents
+
+
+def _lloyd_local(
+    vecs: list,
+    cents: list[tuple[int, list]],
+    n_iter: int,
+    round_digits: int,
+) -> list[tuple[int, list]]:
+    """``n_iter`` Lloyd iterations over collected vectors from the
+    (cid, cvec) seeds, sorted by cid; returns the centroids likewise.
+
+    Assignment is ``kmeans_assign``'s arithmetic: dot and squared norm
+    are sequential float64 folds from +0.0 (bit-identical to the
+    Catalyst fold), the score is FLOOR(COALESCE(dot / (|v| |c|), -2) *
+    10^d + 0.5) where a zero divisor, a NULL vector or component, or a
+    length mismatch gives the -2 sentinel, and the floor converts to a
+    long as Spark's does (saturating; NaN -> 0). The winner is the
+    highest score, ties to the smallest cid. The update is Spark's
+    ROUND(AVG(val), d) per (cid, position) over the non-NULL elements:
+    NULL where a position has none, and a cid whose members have no
+    elements at all drops out. Sums are exact (``math.fsum``), so the
+    centroids do not depend on row order."""
+    n = len(vecs)
+    lens = np.array([0 if v is None else len(v) for v in vecs], dtype=np.int64)
+    width = int(lens.max(initial=0))
+    x = np.zeros((n, width))
+    valid = np.arange(width)[None, :] < lens[:, None]
+    scorable = np.array([v is not None for v in vecs], dtype=bool)
+    for i, v in enumerate(vecs):
+        if v:
+            x[i, : len(v)] = v  # a None component reads as NaN
+            if None in v:
+                scorable[i] = False
+                valid[i, [j for j, e in enumerate(v) if e is None]] = False
+    kscale = float(10**round_digits)
+    sentinel = math.floor(-2.0 * kscale + 0.5)
+    for _ in range(n_iter):
+        if not cents or not n:
+            return []
+        groups = []
+        for length in np.unique(lens[scorable]):
+            ci = [
+                j
+                for j, (_c, cv) in enumerate(cents)
+                if cv is not None and len(cv) == length and None not in cv
+            ]
+            if ci:
+                cm = np.array([cents[j][1] for j in ci])
+                cm = cm.reshape(len(ci), length)
+                groups.append((length, ci, cm, _norms(cm)))
+        cids = np.array([c for c, _v in cents], dtype=np.int64)
+        win = np.empty(n, dtype=np.int64)
+        # row chunks keep each (rows, centroids) block near 8 MiB
+        step = max(1, (1 << 20) // len(cents))
+        for lo in range(0, n, step):
+            hi = min(n, lo + step)
+            score = np.full((hi - lo, len(cents)), sentinel, dtype=np.int64)
+            for length, ci, cm, nc in groups:
+                r = np.flatnonzero(scorable[lo:hi] & (lens[lo:hi] == length))
+                v = x[lo + r, :length]
+                den = _norms(v)[:, None] * nc[None, :]
+                with np.errstate(all="ignore"):
+                    cos = np.where(den == 0, -2.0, _dots(v, cm) / den)
+                    score[np.ix_(r, ci)] = _floor_long(cos * kscale + 0.5)
+            win[lo:hi] = cids[score.argmax(axis=1)]
+        order = np.argsort(win, kind="stable")
+        bounds = np.flatnonzero(np.diff(win[order])) + 1
+        new = []
+        for idx in np.split(order, bounds):
+            top = int(lens[idx].max())
+            if top == 0:
+                continue
+            sub, ok = x[idx, :top], valid[idx, :top]
+            cvec = []
+            for p in range(top):
+                vals = sub[ok[:, p], p].tolist()
+                cvec.append(
+                    _spark_round(_fsum(vals) / len(vals), round_digits)
+                    if vals
+                    else None
+                )
+            new.append((int(win[idx[0]]), cvec))
+        cents = new
+    return cents
+
+
+def _norms(a: np.ndarray) -> np.ndarray:
+    """Row norms: sqrt of the sequential fold of squares from +0.0."""
+    acc = np.zeros(a.shape[0])
+    for j in range(a.shape[1]):
+        acc += a[:, j] * a[:, j]
+    return np.sqrt(acc)
+
+
+def _dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """(rows of a) x (rows of b) dot products, each the sequential fold
+    from +0.0 in dimension order."""
+    acc = np.zeros((a.shape[0], b.shape[0]))
+    for j in range(a.shape[1]):
+        acc += a[:, j : j + 1] * b[None, :, j]
+    return acc
+
+
+def _floor_long(a: np.ndarray) -> np.ndarray:
+    """Spark FLOOR(double): Java's (long) cast of Math.floor, which
+    saturates at the long range and maps NaN to 0."""
+    f = np.floor(a)
+    out = np.zeros(f.shape, dtype=np.int64)
+    fit = (f >= -(2.0**63)) & (f < 2.0**63)
+    out[fit] = f[fit].astype(np.int64)
+    out[f >= 2.0**63] = np.iinfo(np.int64).max
+    out[f < -(2.0**63)] = np.iinfo(np.int64).min
+    return out
+
+
+def _fsum(vals: list[float]) -> float:
+    """Exact sum. fsum refuses +inf with -inf and intermediate overflow;
+    those fall back to an IEEE sum in sorted, order-independent order."""
+    try:
+        return math.fsum(vals)
+    except (ValueError, OverflowError):
+        return sum(sorted(vals))
+
+
+def _spark_round(x: float, digits: int) -> float:
+    """Spark ROUND(double, d): HALF_UP on the shortest decimal repr; a
+    zero result is +0.0, and NaN and infinities pass through."""
+    if not math.isfinite(x):
+        return x
+    q = Decimal(repr(x)).quantize(
+        Decimal(1).scaleb(-digits), ROUND_HALF_UP, Context(prec=400)
+    )
+    return float(q) + 0.0
 
 
 def semdedup_auto_k(
@@ -1063,7 +1135,6 @@ def _cluster_dup_ids(
     elementwise just like int64, and the min-id survivor rule is the
     same lexicographic-vs-numeric ordering the exact-dedup window
     uses)."""
-    import numpy as np
 
     id_type = v.schema[id_col].dataType.simpleString()
 
@@ -1154,7 +1225,6 @@ def incremental_semantic_dedup(
     (untouched clusters are pruned with a semi-join on the batch's
     cluster set) — never O(corpus).
     """
-    import numpy as np
 
     batch_assign = kmeans_assign(
         new_vecs, cents, id_col, vec_col, round_digits

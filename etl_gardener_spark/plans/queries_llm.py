@@ -2077,11 +2077,12 @@ def _kmeans_oracle(k: int = 8, n_iter: int = 2) -> str:
 
 @query("emb_kmeans", _kmeans_oracle(), tags=("llm", "clustering"))
 def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distributed Lloyd k-means (k=8, 2 iterations) over the embedding
-    column — the clustering primitive behind cluster-balanced sampling
-    and semantic dedup of training corpora. Deterministic seeding and
-    rounding make the iterative algorithm bit-reproducible; the oracle
-    unrolls both iterations as CTEs."""
+    """Lloyd k-means (k=8, 2 iterations) over the embedding column — the
+    clustering primitive behind cluster-balanced sampling and semantic
+    dedup of training corpora. The centroids train on the driver from
+    one bounded collect and the final assignment is distributed.
+    Deterministic seeding and rounding make the iterative algorithm
+    bit-reproducible; the oracle unrolls both iterations as CTEs."""
     from etl_gardener_spark.operators.similarity import kmeans
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -2512,8 +2513,8 @@ def emb_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe depth, and this instrument is where that claim is measured
     rather than assumed (r8 verdict item 4). Exact ground truth is
     computed ONCE (checkpoint shared by all eight arms); the trained
-    centroids are fitted ONCE (kmeans_fit checkpoints per iteration)
-    and shared by their four arms. Completes the eval-instrument family
+    centroids are fitted ONCE (one driver-side kmeans_fit) and shared
+    by their four arms. Completes the eval-instrument family
     ([[emb_ann_recall_report]], [[emb_pq_recall_report]],
     [[emb_sq8_recall_report]], [[emb_matryoshka_recall_report]])."""
     e = load_table(spark, sf_dir, "embeddings")

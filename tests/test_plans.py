@@ -8,6 +8,7 @@ query prunes to one day partition, cloud/bq/ops.go:192-207)."""
 from __future__ import annotations
 
 from datetime import date as Date
+from pathlib import Path
 
 import pytest
 from pyspark.sql import functions as F
@@ -641,7 +642,7 @@ def test_output_contract_lint_catches_r5_failure_classes(spark):
     fixed registry."""
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/tools")
+    _sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     import plan_lint as PL
 
     # (a) the pre-fix doc_postings output shape: array<string> postings
@@ -677,7 +678,7 @@ def test_age_based_rotation_prefers_red_and_stale_rows():
     rows never enter the rotating slots, and the queue is exactly 38."""
     import sys as _sys
 
-    _sys.path.insert(0, "/root/repo/tools")
+    _sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
     import rotate_window as RW
 
     from etl_gardener_spark.plans import queries as Q

@@ -26,8 +26,9 @@ import math
 import sys
 from datetime import date, datetime
 from decimal import Decimal
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
 
 import duckdb
 import pyarrow as pa
