@@ -691,8 +691,25 @@ def kmeans_assign(
     midpoint score — the repr-midpoint divergence class documented in
     functions/exact.py; the ordering key stays the scaled integer (no
     /10^d: injective for |cos| <= 2, one fewer op)."""
+    scored = _assign_scored(df, cents_df, id_col, vec_col, round_digits)
+    ordk = F.struct((-F.col("__s")).alias("s"), F.col("cid").alias("c"))
+    return scored.groupBy(id_col).agg(F.min_by(F.col("cid"), ordk).alias("cid"))
+
+
+def _assign_scored(
+    df: DataFrame,
+    cents_df: DataFrame,
+    id_col: str,
+    vec_col: str,
+    round_digits: int = 6,
+) -> DataFrame:
+    """The (id, __v, cid, __s) pair-score relation kmeans_assign
+    aggregates — factored out so the distributed Lloyd update can carry
+    the vector THROUGH the argmin aggregate (F.first over the k identical
+    copies the broadcast nested-loop replicates) instead of paying a
+    join-back shuffle of the corpus per iteration."""
     kscale = F.lit(float(10**round_digits))
-    scored = (
+    return (
         df.select(
             F.col(id_col),
             F.col(vec_col).alias("__v"),
@@ -707,6 +724,7 @@ def kmeans_assign(
         )
         .select(
             id_col,
+            "__v",
             "cid",
             # COALESCE(-2.0): a zero-norm vector or zero centroid scores
             # NULL; -2 sits below any true cosine so the argmax is
@@ -725,8 +743,6 @@ def kmeans_assign(
             ).alias("__s"),
         )
     )
-    ordk = F.struct((-F.col("__s")).alias("s"), F.col("cid").alias("c"))
-    return scored.groupBy(id_col).agg(F.min_by(F.col("cid"), ordk).alias("cid"))
 
 
 def kmeans_assign_gemm(
@@ -826,9 +842,9 @@ def kmeans(
     (no RNG — same policy as the IVF coarse quantizer), assignment is
     rounded-cosine argmax with min-cid tie-break, and each update rounds
     the element-wise mean so a rerun (or the SQL oracle) reproduces the
-    exact assignment. The centroids train on the driver from one
-    bounded collect (``kmeans_fit``); only the final assignment is a
-    distributed pass over the corpus.
+    exact assignment. A corpus within ``kmeans_fit``'s bounds trains on
+    the driver from one collect; a larger one runs the distributed loop.
+    The final assignment is always a distributed pass over the corpus.
     """
     out, _cents = kmeans_fit(
         df, id_col, vec_col, k, n_iter, round_digits, assign=assign
@@ -836,9 +852,12 @@ def kmeans(
     return out
 
 
-# Most (id, vec) rows kmeans_fit collects to train on; above it the fit
-# trains on a deterministic sample of this many rows.
+# kmeans_fit trains on the driver when the corpus holds at most _FIT_ROWS
+# rows and _FIT_VALUES vector components (at 64-d both bounds meet at
+# 65,536 rows, about 130 MB of Python floats); larger corpora run the
+# distributed Lloyd loop.
 _FIT_ROWS = 1 << 16
+_FIT_VALUES = 1 << 22
 
 
 def kmeans_fit(
@@ -857,20 +876,22 @@ def kmeans_fit(
     corpus assignments, so later batches can be routed to the same
     clusters without re-training (``incremental_semantic_dedup``).
 
-    The fit runs on the driver. One job collects at most ``_FIT_ROWS``
-    (id, vec) rows in (xxhash64(id), id) order and ``_lloyd_local``
-    iterates on them. At or below the bound those rows are the whole
-    corpus and the seeds come from them. Above it the fit trains on the
-    first ``_FIT_ROWS`` rows in that order, a deterministic sample that
-    does not depend on row order or partitioning, and the seeds still
-    come from the full corpus through one O(k) collect. The final
-    assignment is one distributed pass over the whole corpus.
+    A corpus within ``_FIT_ROWS`` rows and ``_FIT_VALUES`` components
+    trains on the driver: one job reads the vector sizes (``_fit_rows``),
+    one collects the corpus, and ``_lloyd_local`` iterates with the fold
+    path's exact arithmetic. A larger corpus runs the distributed loop
+    (``_lloyd_distributed``), two jobs per iteration and nothing larger
+    than k x dim means on the driver. Both give the same centroids for
+    ``assign='fold'``. The final assignment is one distributed pass over
+    the whole corpus.
 
-    ``assign`` picks that final pass only: 'fold' (default) scores each
-    (vector, centroid) pair with the sequential Catalyst fold —
-    bit-identical to the SQL oracle, the pinned-k replay path; 'gemm'
-    runs ``kmeans_assign_gemm`` — BLAS instead of interpreted lambdas,
-    the k∝n path (see its float caveat).
+    ``assign``: 'fold' (default) scores each (vector, centroid) pair
+    with the sequential Catalyst fold — bit-identical to the SQL oracle,
+    the pinned-k replay path; 'gemm' runs ``kmeans_assign_gemm`` for the
+    final pass and, above the bounds, for every iteration — O(n·k·d)
+    BLAS instead of O(n·k·d) interpreted lambdas, the k∝n path (see its
+    float caveat). The driver-side iterations always use the fold's
+    arithmetic.
 
     ``seed``: 'id_lt_k' (default) seeds from rows with id < k — the
     original deterministic scheme, but under a filtered training corpus
@@ -883,39 +904,155 @@ def kmeans_fit(
         raise ValueError(f"seed must be 'id_lt_k' or 'first_k', got {seed!r}")
     assign_fn = kmeans_assign if assign == "fold" else kmeans_assign_gemm
     vecs = df.select(F.col(id_col), F.col(vec_col))
-    rows = (
-        vecs.orderBy(F.xxhash64(id_col), id_col).limit(_FIT_ROWS + 1).collect()
-    )
-    seed_src = rows
-    if len(rows) > _FIT_ROWS:
-        rows = rows[:_FIT_ROWS]
-        seed_src = (
-            vecs.filter(F.col(id_col) < k)
-            if seed == "id_lt_k"
-            else vecs.orderBy(id_col).limit(k)
-        ).collect()
-    if seed == "id_lt_k":
-        seed_rows = sorted(
-            (int(i), [float(x) for x in v])
-            for i, v in seed_src
-            if i is not None and i < k
+    rows = _fit_rows(vecs, vec_col)
+    if rows is None:
+        cents = _lloyd_distributed(
+            vecs, id_col, vec_col, k, n_iter, round_digits, assign_fn, seed
         )
     else:
-        first = sorted(seed_src, key=lambda r: r[0])[:k]
-        seed_rows = [
-            (cid, [float(x) for x in v]) for cid, (_i, v) in enumerate(first)
-        ]
-    # explicit schema: empty corpus -> zero centroids (see
-    # cosine_topk_ivf note)
-    cents = local_df(
-        df.sparkSession,
-        _lloyd_local([v for _i, v in rows], seed_rows, n_iter, round_digits),
-        "cid long, cvec array<double>",
-    )
+        # explicit schema: empty corpus -> zero centroids (see
+        # cosine_topk_ivf note)
+        cents = local_df(
+            df.sparkSession,
+            _lloyd_local(
+                [v for _i, v in rows],
+                _seed_rows(rows, k, seed),
+                n_iter,
+                round_digits,
+            ),
+            "cid long, cvec array<double>",
+        )
     final = assign_fn(vecs, cents, id_col, vec_col, round_digits).select(
         F.col(id_col), F.col("cid").alias("cluster_id")
     )
     return final, cents
+
+
+def _fit_rows(vecs: DataFrame, vec_col: str) -> list | None:
+    """Every (id, vec) row of ``vecs`` when it holds at most ``_FIT_ROWS``
+    rows and ``_FIT_VALUES`` vector components, else None.
+
+    The first job reads the sizes of at most ``_FIT_ROWS + 1`` rows.
+    Through ``toArrow`` the limit runs on the executors (each partition
+    keeps its first rows, one task takes the limit from them), so the
+    driver receives at most that many integers however the corpus is
+    partitioned; ``collect`` on a limit would ship every partition's
+    first rows to the driver. Only a corpus within both bounds is then
+    collected."""
+    sizes = (
+        vecs.select(F.size(vec_col)).limit(_FIT_ROWS + 1).toArrow().column(0)
+    ).to_pylist()
+    values = sum(s for s in sizes if s is not None and s > 0)
+    if len(sizes) > _FIT_ROWS or values > _FIT_VALUES:
+        return None
+    return vecs.collect()
+
+
+def _seed_rows(rows: list, k: int, seed: str) -> list[tuple[int, list]]:
+    """The (cid, cvec) seeds from (id, vec) rows, sorted by cid:
+    'id_lt_k' takes the rows with id < k as cid = id, 'first_k' the k
+    smallest ids as cid = 0..k-1 by id rank."""
+    if seed == "id_lt_k":
+        return sorted(
+            (int(i), [float(x) for x in v])
+            for i, v in rows
+            if i is not None and i < k
+        )
+    first = sorted(rows, key=lambda r: r[0])[:k]
+    return [(cid, [float(x) for x in v]) for cid, (_i, v) in enumerate(first)]
+
+
+def _lloyd_distributed(
+    vecs: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    n_iter: int,
+    round_digits: int,
+    assign_fn,
+    seed: str,
+) -> DataFrame:
+    """``n_iter`` Lloyd iterations as Spark jobs over the (id, vec)
+    relation; returns the centroid relation. Seeds are an O(k) collect:
+    the rows with id < k, or the top-k by id (a bounded take, not a
+    scan)."""
+    spark = vecs.sparkSession
+    seed_src = (
+        vecs.filter(F.col(id_col) < k)
+        if seed == "id_lt_k"
+        else vecs.orderBy(id_col).limit(k)
+    )
+    # explicit schema: empty corpus -> zero seed centroids (see
+    # cosine_topk_ivf note)
+    cents = local_df(
+        spark,
+        _seed_rows(seed_src.collect(), k, seed),
+        "cid long, cvec array<double>",
+    )
+    for _ in range(n_iter):
+        # update: element-wise mean per cluster, rebuilt into an array
+        # ordered by dimension; empty clusters drop out (their cid simply
+        # stops attracting points — Lloyd's standard degenerate case).
+        # The rounded per-(cid, pos) means are collected to the driver
+        # and re-embedded as a local relation: the centroid relation is
+        # O(k·dim) — the same driver-size class the gemm assignment path
+        # collects every iteration anyway — and a local relation feeds
+        # the next assignment pass with NO broadcast-build job and no
+        # checkpoint materialization (a lazy localCheckpoint of an AQE
+        # plan still force-runs every intermediate stage serially via
+        # toRdd: measured 7-9 scheduler round-trips per Lloyd iteration
+        # vs 2-3 for this one collect). Values are bit-identical: the
+        # distributed avg+round aggregate is unchanged, and the driver
+        # only reassembles its output rows into pos-ordered arrays —
+        # exactly what the former array_sort(collect_list(struct)) tail
+        # did (pos is unique per cid, so the orders coincide).
+        if assign_fn is kmeans_assign:
+            # the vector rides THROUGH the argmin aggregate (F.first over
+            # the k identical copies the broadcast nested-loop makes), so
+            # the update needs no join-back shuffle of the corpus — one
+            # exchange per iteration instead of two (guide §2.4). Ids are
+            # unique (the relation contract throughout this repo), so
+            # first(__v) is the row's own vector, not a choice.
+            ordk = F.struct(
+                (-F.col("__s")).alias("s"), F.col("cid").alias("c")
+            )
+            assigned = (
+                _assign_scored(vecs, cents, id_col, vec_col, round_digits)
+                .groupBy(id_col)
+                .agg(
+                    F.min_by(F.col("cid"), ordk).alias("cid"),
+                    F.first("__v").alias("__v"),
+                )
+            )
+            exploded = assigned.select(
+                "cid", F.posexplode("__v").alias("pos", "val")
+            )
+        else:
+            cur = assign_fn(vecs, cents, id_col, vec_col, round_digits)
+            exploded = vecs.join(cur, id_col).select(
+                "cid", F.posexplode(vec_col).alias("pos", "val")
+            )
+        mrows = (
+            exploded.groupBy("cid", "pos")
+            .agg(F.round(F.avg(F.col("val").cast("double")), round_digits).alias("m"))
+            .collect()
+        )
+        by_cid: dict[int, list[tuple[int, float | None]]] = {}
+        for r in mrows:
+            # m is NULL when every contributing element was NULL — the
+            # old collect_list tail kept it as a NULL array element
+            by_cid.setdefault(int(r[0]), []).append(
+                (int(r[1]), None if r[2] is None else float(r[2]))
+            )
+        cents = local_df(
+            spark,
+            [
+                (cid, [m for _, m in sorted(vals)])
+                for cid, vals in sorted(by_cid.items())
+            ],
+            "cid long, cvec array<double>",
+        )
+    return cents
 
 
 def _lloyd_local(
@@ -1005,8 +1142,9 @@ def _lloyd_local(
 def _norms(a: np.ndarray) -> np.ndarray:
     """Row norms: sqrt of the sequential fold of squares from +0.0."""
     acc = np.zeros(a.shape[0])
-    for j in range(a.shape[1]):
-        acc += a[:, j] * a[:, j]
+    with np.errstate(over="ignore", invalid="ignore"):
+        for j in range(a.shape[1]):
+            acc += a[:, j] * a[:, j]
     return np.sqrt(acc)
 
 

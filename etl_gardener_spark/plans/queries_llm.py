@@ -2079,8 +2079,8 @@ def _kmeans_oracle(k: int = 8, n_iter: int = 2) -> str:
 def emb_kmeans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Lloyd k-means (k=8, 2 iterations) over the embedding column — the
     clustering primitive behind cluster-balanced sampling and semantic
-    dedup of training corpora. The centroids train on the driver from
-    one bounded collect and the final assignment is distributed.
+    dedup of training corpora. At this size the centroids train on the
+    driver (kmeans_fit) and the final assignment is distributed.
     Deterministic seeding and rounding make the iterative algorithm
     bit-reproducible; the oracle unrolls both iterations as CTEs."""
     from etl_gardener_spark.operators.similarity import kmeans
@@ -2513,7 +2513,7 @@ def emb_ivf_probe_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     probe depth, and this instrument is where that claim is measured
     rather than assumed (r8 verdict item 4). Exact ground truth is
     computed ONCE (checkpoint shared by all eight arms); the trained
-    centroids are fitted ONCE (one driver-side kmeans_fit) and shared
+    centroids are fitted ONCE (one kmeans_fit) and shared
     by their four arms. Completes the eval-instrument family
     ([[emb_ann_recall_report]], [[emb_pq_recall_report]],
     [[emb_sq8_recall_report]], [[emb_matryoshka_recall_report]])."""

@@ -1,18 +1,20 @@
-"""``kmeans_fit`` trains on the driver (``similarity._lloyd_local``).
+"""``kmeans_fit`` trains a corpus within its bounds on the driver
+(``similarity._lloyd_local``) and a larger one with the distributed
+Lloyd loop (``similarity._lloyd_distributed``).
 
-The distributed Lloyd loop it replaced lives here as the bit-equality
-reference: per iteration a broadcast scoring pass, a min_by argmax that
-carries the vector through, a posexplode and a per-(cid, pos)
-ROUND(AVG) collected back into a local relation. Centroids compare as
-``float.hex`` (NULL as None), final assignments as row sets.
+The distributed loop is the bit-equality reference: with ``_FIT_ROWS``
+patched to 0 every corpus takes it. Centroids compare as ``float.hex``
+(NULL as None), final assignments as row sets.
 """
 
 from __future__ import annotations
 
+import uuid
+from unittest import mock
+
 import pytest
 from pyspark.sql import functions as F
 
-from etl_gardener_spark.functions.localrel import local_df
 from etl_gardener_spark.operators import similarity as SIM
 from etl_gardener_spark.orchestrator.metrics import spark_cost
 from etl_gardener_spark.sources.tables import load_table
@@ -20,86 +22,10 @@ from etl_gardener_spark.sources.tables import load_table
 SCHEMA = "vec_id long, embedding array<double>"
 
 
-def _reference_fit(df, id_col, vec_col, k, n_iter, round_digits=6,
-                   seed="id_lt_k"):
-    """The distributed Lloyd loop kmeans_fit ran before its fit moved to
-    the driver (fold assignment); returns (final, cents)."""
-    spark = df.sparkSession
-    if seed == "id_lt_k":
-        seeds = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .filter(F.col(id_col) < k)
-            .collect()
-        )
-        seed_rows = sorted(
-            (int(r[0]), [float(x) for x in r[1]]) for r in seeds
-        )
-    else:
-        seeds = (
-            df.select(F.col(id_col), F.col(vec_col))
-            .orderBy(id_col).limit(k).collect()
-        )
-        seed_rows = [
-            (i, [float(x) for x in r[1]])
-            for i, r in enumerate(sorted(seeds, key=lambda r: r[0]))
-        ]
-    cents = local_df(spark, seed_rows, "cid long, cvec array<double>")
-    vecs = df.select(F.col(id_col), F.col(vec_col))
-    kscale = F.lit(float(10**round_digits))
-    for _ in range(n_iter):
-        scored = (
-            vecs.select(
-                F.col(id_col),
-                F.col(vec_col).alias("__v"),
-                SIM._norm(F.col(vec_col)).alias("__nv"),
-            )
-            .join(F.broadcast(cents.select(
-                "cid", "cvec", SIM._norm(F.col("cvec")).alias("__nc")
-            )))
-            .select(
-                id_col,
-                "__v",
-                "cid",
-                F.floor(
-                    F.coalesce(
-                        F.try_divide(
-                            SIM._dot(F.col("__v"), F.col("cvec")),
-                            F.col("__nv") * F.col("__nc"),
-                        ),
-                        F.lit(-2.0),
-                    )
-                    * kscale
-                    + F.lit(0.5)
-                ).alias("__s"),
-            )
-        )
-        ordk = F.struct((-F.col("__s")).alias("s"), F.col("cid").alias("c"))
-        assigned = scored.groupBy(id_col).agg(
-            F.min_by(F.col("cid"), ordk).alias("cid"),
-            F.first("__v").alias("__v"),
-        )
-        mrows = (
-            assigned.select("cid", F.posexplode("__v").alias("pos", "val"))
-            .groupBy("cid", "pos")
-            .agg(F.round(F.avg(F.col("val").cast("double")), round_digits)
-                 .alias("m"))
-            .collect()
-        )
-        by_cid: dict[int, list] = {}
-        for r in mrows:
-            by_cid.setdefault(int(r[0]), []).append(
-                (int(r[1]), None if r[2] is None else float(r[2]))
-            )
-        cents = local_df(
-            spark,
-            [
-                (cid, [m for _, m in sorted(vals)])
-                for cid, vals in sorted(by_cid.items())
-            ],
-            "cid long, cvec array<double>",
-        )
-    final = SIM.kmeans_assign(vecs, cents, id_col, vec_col, round_digits)
-    return final.select(F.col(id_col), F.col("cid").alias("cluster_id")), cents
+def _reference_fit(df, id_col, vec_col, **kw):
+    """kmeans_fit forced onto the distributed loop."""
+    with mock.patch.object(SIM, "_FIT_ROWS", 0):
+        return SIM.kmeans_fit(df, id_col, vec_col, **kw)
 
 
 def _hex(cents):
@@ -192,6 +118,17 @@ EDGE_CASES = {
                   True),
     "null_vec_seed": ([(0, None), (1, [0.0, 1.0]), (5, [1.0, 1.0])], 2,
                       True),
+    # ids 2 and 3 tie cids 0 and 1 at score 0 (1e308 / inf = 0), so cid
+    # 0's pos-0 mean sums 1 + 1e308 + 1e308: fsum overflows and the
+    # sorted fallback, like every Spark summation order, gives inf
+    "overflow": ([(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1e308, 0.0]),
+                  (3, [1e308, 0.0])], 2, False),
+    # ids 2 and 3 score NaN -> 0 against both seeds, so they join cid 0
+    # and its pos-0 mean sums inf and -inf: fsum raises and the sorted
+    # fallback, like Spark, gives NaN
+    "opposite_infinities": ([(0, [1.0, 0.0]), (1, [0.0, 1.0]),
+                             (2, [float("inf"), 1.0]),
+                             (3, [float("-inf"), 1.0])], 2, False),
 }
 
 
@@ -233,26 +170,68 @@ def test_row_permutation_gives_identical_centroids(emb):
     assert _hex(a) == _hex(b)
 
 
-def test_fit_is_one_spark_job(spark, emb):
-    """The fit is one collect; the returned centroid relation is already
-    materialized, so reading it costs only its own one-slice scan (the
-    distributed loop ran 9 jobs before that scan)."""
+def test_fit_job_count(spark, emb):
+    """Within the bounds the fit is two jobs, the size probe and the
+    collect; the returned centroid relation is already materialized, so
+    reading it costs only its own one-slice scan (the distributed loop
+    runs 9 jobs before that scan)."""
     df = emb["sf0.1"]
     with spark_cost(spark) as fit:
         _final, cents = SIM.kmeans_fit(df, "vec_id", "embedding", k=16)
     with spark_cost(spark) as read:
         cents.collect()
-    assert (fit.jobs, read.jobs) == (1, 1)
+    assert (fit.jobs, read.jobs) == (2, 1)
 
 
-def test_sampled_fit_above_the_bound(spark, emb, monkeypatch):
-    monkeypatch.setattr(SIM, "_FIT_ROWS", 50)
-    df = emb["sf0.01"]
-    perm = df.orderBy(F.hash("vec_id", F.lit(7))).repartition(4)
-    for seed in ("id_lt_k", "first_k"):
-        fa, ca = SIM.kmeans_fit(df, "vec_id", "embedding", k=8, seed=seed)
-        _fb, cb = SIM.kmeans_fit(perm, "vec_id", "embedding", k=8, seed=seed)
-        assert _hex(ca) == _hex(cb)
-        assert len(_hex(ca)) > 0
-        assert fa.count() == df.count()
-        assert fa.filter(F.col("cluster_id").isNull()).count() == 0
+def _driver_bytes(spark, fn):
+    """(fn(), the largest result a job launched by fn sent to the
+    driver from its final stage, in bytes)."""
+    sc = spark.sparkContext
+    tag = f"fit-rows-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        out = fn()
+    finally:
+        sc.removeJobTag(tag)
+    jsc = sc._jsc.sc()
+    jsc.listenerBus().waitUntilEmpty()
+    store, jvm = jsc.statusStore(), sc._jvm
+    largest = 0
+    for job_id in jsc.statusTracker().getJobIdsForTag(tag):
+        ids = store.job(job_id).stageIds()
+        last = max(ids.apply(i) for i in range(ids.size()))
+        attempts = store.stageData(
+            last, False, jvm.java.util.ArrayList(), False,
+            sc._gateway.new_array(jvm.double, 0),
+        )
+        size = sum(attempts.apply(i).resultSize() for i in range(attempts.size()))
+        largest = max(largest, size)
+    return out, largest
+
+
+def test_fit_rows_bounds_what_the_driver_receives(spark, emb):
+    """Above either bound ``_fit_rows`` declines after a size probe, so
+    no vector reaches the driver. Above the row bound the probe ships one
+    small result however the corpus is partitioned: a limit collected
+    with ``collect`` would ship each of the 16 partitions' first 51 rows,
+    about 16 x 51 x 64 doubles. Above the value bound it ships the 2,000
+    sizes, not the 2,000 x 64 doubles (about 1 MB)."""
+    vecs = emb["sf0.1"].select("vec_id", "embedding").repartition(16).cache()
+
+    def probe():
+        return _driver_bytes(spark, lambda: SIM._fit_rows(vecs, "embedding"))
+
+    try:
+        assert vecs.count() == 2000
+        with mock.patch.object(SIM, "_FIT_ROWS", 50):
+            rows, largest = probe()
+        assert rows is None
+        assert largest < 16 * 1024, largest
+        with mock.patch.object(SIM, "_FIT_VALUES", 1000):
+            rows, largest = probe()
+        assert rows is None
+        assert largest < 128 * 1024, largest
+        rows, _largest = probe()
+        assert len(rows) == 2000
+    finally:
+        vecs.unpersist()
