@@ -880,8 +880,8 @@ def kmeans_fit(
     trains on the driver: one job reads the vector sizes (``_fit_rows``),
     one collects the corpus, and ``_lloyd_local`` iterates with the fold
     path's exact arithmetic. A larger corpus runs the distributed loop
-    (``_lloyd_distributed``), two jobs per iteration and nothing larger
-    than k x dim means on the driver. Both give the same centroids for
+    (``_lloyd_distributed``): Spark jobs every iteration, and nothing
+    larger than k x dim means on the driver. Both give the same centroids for
     ``assign='fold'``. The final assignment is one distributed pass over
     the whole corpus.
 

@@ -136,12 +136,17 @@ EDGE_CASES = {
 @pytest.mark.parametrize("seed", ["id_lt_k", "first_k"])
 def test_edge_fixture_matches_reference(spark, case, seed):
     rows, k, raises = EDGE_CASES[case]
-    df = spark.createDataFrame(rows, SCHEMA).repartition(3)
-    for n_iter in (1, 2, 3):
-        kw = dict(k=k, n_iter=n_iter, seed=seed)
-        ref = _outcome(_reference_fit, df, **kw)
-        assert isinstance(ref, str) == raises, ref
-        assert _outcome(SIM.kmeans_fit, df, **kw) == ref, (case, seed, n_iter)
+    # cached: every scan of a Python-list relation runs Python workers
+    df = spark.createDataFrame(rows, SCHEMA).repartition(3).cache()
+    try:
+        for n_iter in (1, 2, 3):
+            kw = dict(k=k, n_iter=n_iter, seed=seed)
+            ref = _outcome(_reference_fit, df, **kw)
+            assert isinstance(ref, str) == raises, ref
+            got = _outcome(SIM.kmeans_fit, df, **kw)
+            assert got == ref, (case, seed, n_iter)
+    finally:
+        df.unpersist()
 
 
 def test_midpoint_mean_rounds_half_up(spark):
@@ -154,12 +159,17 @@ def test_midpoint_mean_rounds_half_up(spark):
 def test_string_ids_first_k(spark):
     rows = [(f"d{i:02d}", v) for i, (_i, v) in enumerate(_edge_rows())
             if v and None not in v]
-    df = spark.createDataFrame(rows, "vec_id string, embedding array<double>")
-    for n_iter in (1, 2):
-        kw = dict(k=4, n_iter=n_iter, seed="first_k")
-        got = _outcome(SIM.kmeans_fit, df, **kw)
-        assert not isinstance(got, str), got
-        assert got == _outcome(_reference_fit, df, **kw)
+    df = spark.createDataFrame(
+        rows, "vec_id string, embedding array<double>"
+    ).cache()
+    try:
+        for n_iter in (1, 2):
+            kw = dict(k=4, n_iter=n_iter, seed="first_k")
+            got = _outcome(SIM.kmeans_fit, df, **kw)
+            assert not isinstance(got, str), got
+            assert got == _outcome(_reference_fit, df, **kw)
+    finally:
+        df.unpersist()
 
 
 def test_row_permutation_gives_identical_centroids(emb):
