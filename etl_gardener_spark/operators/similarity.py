@@ -936,8 +936,10 @@ def _fit_rows(vecs: DataFrame, vec_col: str) -> list | None:
     Through ``toArrow`` the limit runs on the executors (each partition
     keeps its first rows, one task takes the limit from them), so the
     driver receives at most that many integers however the corpus is
-    partitioned; ``collect`` on a limit would ship every partition's
-    first rows to the driver. Only a corpus within both bounds is then
+    partitioned. ``collect`` would take the limit on the driver: an
+    ordered limit ships every partition's top rows there, and a plain
+    one may run several jobs, each shipping up to the limit from every
+    partition it scans. Only a corpus within both bounds is then
     collected."""
     sizes = (
         vecs.select(F.size(vec_col)).limit(_FIT_ROWS + 1).toArrow().column(0)

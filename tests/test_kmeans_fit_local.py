@@ -222,9 +222,9 @@ def _driver_bytes(spark, fn):
 def test_fit_rows_bounds_what_the_driver_receives(spark, emb):
     """Above either bound ``_fit_rows`` declines after a size probe, so
     no vector reaches the driver. Above the row bound the probe ships one
-    small result however the corpus is partitioned: a limit collected
-    with ``collect`` would ship each of the 16 partitions' first 51 rows,
-    about 16 x 51 x 64 doubles. Above the value bound it ships the 2,000
+    small result however the corpus is partitioned: an ordered limit
+    collected with ``collect`` ships each of the 16 partitions' top 51
+    rows, about 16 x 51 x 64 doubles. Above the value bound it ships the 2,000
     sizes, not the 2,000 x 64 doubles (about 1 MB)."""
     vecs = emb["sf0.1"].select("vec_id", "embedding").repartition(16).cache()
 
