@@ -20,9 +20,13 @@ same short-circuit pattern as Join's no-join-dataset case
 (ops/actions.go:371-374). A failure in any stage classifies exactly like
 the parity stages (transient -> Retry with the monitor's backoff,
 permanent -> Failed), and every stage is a pure function of its input
-partition with a staged-overwrite write, so it is idempotent and
+partition that replaces the day through ``Warehouse.replace_partition``
+(one staged write, swapped into place), so it is idempotent and
 restart-safe (the reference's "no leases survive restart",
-ops/ops.go:33-40).
+ops/ops.go:33-40). A stage's input row count is observed on the read
+feeding that write and its output count on the write itself, so a stage
+costs its write job plus whatever its operator runs; a stage whose result
+is empty drops the day, and the later stages skip it.
 
 Stage semantics (all over the JOIN-tier day partition, the table the
 reference chain hands off as its final product):
@@ -57,7 +61,7 @@ MIGRATION.md §curation.
 100 TB shape: each stage is one day-partition scan + the operator's own
 bounded shuffles (the per-operator scale analysis lives with the
 operators; nothing here adds a shuffle), and the per-day staged
-overwrite is exactly the parity chain's write pattern. Stages run under
+replace is exactly the parity chain's write pattern. Stages run under
 the monitor's thread pool one claimed job at a time per (datatype, day),
 so a 1000-day backfill parallelizes across days, not within the chain.
 """
@@ -70,6 +74,7 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.sql.observation import Observation
 
 from etl_gardener_spark.functions.scrub import redact
 from etl_gardener_spark.functions.text import quality_score, token_count
@@ -216,28 +221,36 @@ class CurationActions:
         self.wh = warehouse
         self.spec_for = spec_for
 
-    # -- partition I/O (the parity chain's read/stage/overwrite shape) ----
+    # -- partition I/O (the parity chain's read / replace shape) ----------
 
     def _read(self, job: J.Job) -> DataFrame:
         return self.wh.read_partition(
             self.spark, "join", job.experiment, job.datatype, job.date
         )
 
-    def _rewrite(self, job: J.Job, df: DataFrame, n_rows: int) -> None:
-        # localCheckpoint before overwriting the partition being read —
-        # same discipline as TableOps.dedup (can't overwrite a path
-        # while scanning it). Dynamic partition-overwrite is a no-op for
-        # an EMPTY DataFrame (no date= directory present in df means no
-        # directory replaced), so a gate that rejects every row of the
-        # day must drop the stale partition explicitly — the same move
-        # operators/quality.py makes for its all-rejected case.
-        if n_rows == 0:
-            self.wh.delete_partition(
-                self.spark, "join", job.experiment, job.datatype, job.date
-            )
-            return
-        self.wh.overwrite_partitions(
-            df.localCheckpoint(eager=True), "join", job.experiment, job.datatype
+    @staticmethod
+    def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
+        """``df`` with its row count observed by the job that consumes it.
+        Use the returned frame once, on the side of the plan that feeds
+        the write; operator branches read the day unobserved."""
+        seen = Observation()
+        return df.observe(seen, F.count(F.lit(1)).alias("n")), seen
+
+    def _replace(self, job: J.Job, df: DataFrame) -> int:
+        return self.wh.replace_partition(
+            self.spark, df, "join", job.experiment, job.datatype, job.date, "curating"
+        )
+
+    def _filtered(
+        self, op: str, job: J.Job, t0: float, kept: DataFrame, seen: Observation
+    ) -> OpStats:
+        """Replace the day with ``kept`` and report the stage's counts."""
+        after = self._replace(job, kept)
+        return OpStats(
+            op=op,
+            rows_out=after,
+            rows_deleted=int(seen.get["n"]) - after,
+            elapsed_sec=time.monotonic() - t0,
         )
 
     @staticmethod
@@ -255,47 +268,35 @@ class CurationActions:
         staged = df.withColumn(
             "__was", F.col(spec.text_col)
         ).withColumn(spec.text_col, redact(spec.text_col))
-        staged = staged.withColumn(
-            "__hit", (F.col("__was") != F.col(spec.text_col)).cast("int")
-        ).localCheckpoint(eager=True)
-        n_rows, n_redacted = (
-            staged.agg(
-                F.count(F.lit(1)), F.coalesce(F.sum("__hit"), F.lit(0))
-            ).first()
-        )
-        out = staged.drop("__was", "__hit")
-        if n_redacted:
-            self._rewrite(job, out, int(n_rows))
+        hits = Observation()
+        out = staged.observe(
+            hits,
+            F.coalesce(
+                F.sum((F.col("__was") != F.col(spec.text_col)).cast("int")),
+                F.lit(0),
+            ).alias("n"),
+        ).drop("__was")
+        n_rows = self._replace(job, out)
         return OpStats(
             op="scrub",
-            rows_out=int(n_rows),
+            rows_out=n_rows,
             elapsed_sec=time.monotonic() - t0,
-            detail={"rows_redacted": int(n_redacted)},
+            detail={"rows_redacted": int(hits.get["n"])},
         )
 
     def _quality_gate(self, job: J.Job, spec: CurationSpec) -> OpStats:
         t0 = time.monotonic()
-        df = self._read(job)
-        before = df.count()
+        df, seen = self._counted(self._read(job))
         kept = df.filter(
             quality_score(spec.text_col) >= F.lit(spec.min_quality)
         )
-        after = kept.count()
-        if after != before:
-            self._rewrite(job, kept, after)
-        return OpStats(
-            op="quality_gate",
-            rows_out=after,
-            rows_deleted=before - after,
-            elapsed_sec=time.monotonic() - t0,
-        )
+        return self._filtered("quality_gate", job, t0, kept, seen)
 
     def _lm_outlier_gate(self, job: J.Job, spec: CurationSpec) -> OpStats:
         from etl_gardener_spark.operators.corpus import char_trigram_nll
 
         t0 = time.monotonic()
         df = self._read(job)
-        before = df.count()
         # self-trained LM: the partition is its own reference corpus;
         # a day's boilerplate/garbled outliers sit in the NLL tail.
         scores = char_trigram_nll(
@@ -318,25 +319,17 @@ class CurationActions:
         unscored = df.select(spec.id_col).join(
             scores.select(spec.id_col), spec.id_col, "left_anti"
         )
-        kept = df.join(
+        src, seen = self._counted(df)
+        kept = src.join(
             keep_ids.unionByName(unscored), spec.id_col, "left_semi"
         )
-        after = kept.count()
-        if after != before:
-            self._rewrite(job, kept, after)
-        return OpStats(
-            op="lm_outlier_gate",
-            rows_out=after,
-            rows_deleted=before - after,
-            elapsed_sec=time.monotonic() - t0,
-        )
+        return self._filtered("lm_outlier_gate", job, t0, kept, seen)
 
     def _decontam(self, job: J.Job, spec: CurationSpec) -> OpStats:
         from etl_gardener_spark.operators.corpus import decontaminate
 
         t0 = time.monotonic()
         df = self._read(job)
-        before = df.count()
         tier, exp, dt = spec.decontam_bench
         bench = self.wh.read(self.spark, tier, exp, dt)
         rep = decontaminate(
@@ -348,21 +341,13 @@ class CurationActions:
         # docs too short to shingle (< n tokens) emit no report row and
         # cannot be contaminated at the n-gram grain — kept, the same
         # unscorable-keep convention as lm_outlier_gate
-        kept = df.join(drops, spec.id_col, "left_anti")
-        after = kept.count()
-        if after != before:
-            self._rewrite(job, kept, after)
-        return OpStats(
-            op="decontam",
-            rows_out=after,
-            rows_deleted=before - after,
-            elapsed_sec=time.monotonic() - t0,
-        )
+        src, seen = self._counted(df)
+        kept = src.join(drops, spec.id_col, "left_anti")
+        return self._filtered("decontam", job, t0, kept, seen)
 
     def _exact_dedup(self, job: J.Job, spec: CurationSpec) -> OpStats:
         t0 = time.monotonic()
-        df = self._read(job)
-        before = df.count()
+        df, seen = self._counted(self._read(job))
         # normalized-text hash key; min-id survivor per key. Window
         # groups are duplicate sets (bounded), never the corpus.
         key = F.xxhash64(
@@ -374,20 +359,11 @@ class CurationActions:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        after = kept.count()
-        if after != before:
-            self._rewrite(job, kept, after)
-        return OpStats(
-            op="exact_dedup",
-            rows_out=after,
-            rows_deleted=before - after,
-            elapsed_sec=time.monotonic() - t0,
-        )
+        return self._filtered("exact_dedup", job, t0, kept, seen)
 
     def _near_dedup(self, job: J.Job, spec: CurationSpec) -> OpStats:
         t0 = time.monotonic()
         df = self._read(job)
-        before = df.count()
         num_hashes, bands = spec.banding()
         pairs = minhash_lsh_pairs(
             df,
@@ -401,23 +377,15 @@ class CurationActions:
         # (pairs are canonical id_a < id_b). Greedy, chain-safe: if
         # B~A and C~B~A, both B and C appear as id_b and A survives.
         drops = pairs.select(F.col("id_b").alias(spec.id_col)).distinct()
-        kept = df.join(drops, spec.id_col, "left_anti")
-        after = kept.count()
-        if after != before:
-            self._rewrite(job, kept, after)
-        return OpStats(
-            op="near_dedup",
-            rows_out=after,
-            rows_deleted=before - after,
-            elapsed_sec=time.monotonic() - t0,
-        )
+        src, seen = self._counted(df)
+        kept = src.join(drops, spec.id_col, "left_anti")
+        return self._filtered("near_dedup", job, t0, kept, seen)
 
     def _semantic_dedup(self, job: J.Job, spec: CurationSpec) -> OpStats:
         from etl_gardener_spark.operators import similarity as SIM
 
         t0 = time.monotonic()
         df = self._read(job)
-        before = df.count()
         vec = F.col(spec.semdedup_vec_col)
         # unscorable-keep convention: rows with no embedding cannot be
         # semantic duplicates at this grain (the text axes belong to
@@ -446,16 +414,9 @@ class CurationActions:
             threshold=spec.semdedup_threshold,
         )
         drops = rep.filter(~F.col("keep")).select(spec.id_col)
-        kept = df.join(drops, spec.id_col, "left_anti")
-        after = kept.count()
-        if after != before:
-            self._rewrite(job, kept, after)
-        return OpStats(
-            op="semantic_dedup",
-            rows_out=after,
-            rows_deleted=before - after,
-            elapsed_sec=time.monotonic() - t0,
-        )
+        src, seen = self._counted(df)
+        kept = src.join(drops, spec.id_col, "left_anti")
+        return self._filtered("semantic_dedup", job, t0, kept, seen)
 
     def _pack(self, job: J.Job, spec: CurationSpec) -> OpStats:
         t0 = time.monotonic()
@@ -474,23 +435,17 @@ class CurationActions:
             spec.pack_capacity,
             id_type="long" if id_type in ("bigint", "int", "long") else "string",
         )
-        out = packed.select(
-            spec.id_col,
-            "n_tokens",
-            "bin_id",
-            F.col("__stratum").cast("date").alias(DATE_COL),
-        ).localCheckpoint(eager=True)
-        if out.count() == 0:
-            # empty curated input: dynamic overwrite would leave any
-            # stale packed partition from a prior run — drop it instead
-            self.wh.delete_partition(
-                self.spark, PACKED_TIER, job.experiment, job.datatype, job.date
-            )
-            return OpStats(op="pack", rows_out=0, elapsed_sec=time.monotonic() - t0)
-        self.wh.overwrite_partitions(out, PACKED_TIER, job.experiment, job.datatype)
-        rows = self.wh.read_partition(
-            self.spark, PACKED_TIER, job.experiment, job.datatype, job.date
-        ).count()
+        out = packed.select(spec.id_col, "n_tokens", "bin_id")
+        # an empty result drops any stale packed day from a prior run
+        rows = self.wh.replace_partition(
+            self.spark,
+            out,
+            PACKED_TIER,
+            job.experiment,
+            job.datatype,
+            job.date,
+            "curating",
+        )
         return OpStats(op="pack", rows_out=rows, elapsed_sec=time.monotonic() - t0)
 
     _BODIES = {
@@ -516,8 +471,8 @@ class CurationActions:
             if not self.wh.partition_exists(
                 self.spark, "join", job.experiment, job.datatype, job.date
             ):
-                # an upstream gate rejected every row of the day (its
-                # _rewrite deleted the partition): nothing to curate.
+                # an upstream stage left no row of the day (replace_partition
+                # dropped the partition): nothing to curate.
                 # pack still clears any stale packed output from a prior
                 # run of the same day — the idempotence contract.
                 if stage == "pack":

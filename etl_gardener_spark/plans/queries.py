@@ -328,8 +328,9 @@ def _scratch(prefix: str) -> str:
 )
 def copy_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     """T3 CopyToRaw (cloud/bq/ops.go:158-176) exercised for real: write
-    events into a tmp-tier day-partitioned table, dynamic-overwrite the
-    2024-01-15 partition into raw, read the raw partition back."""
+    events into a tmp-tier day-partitioned table, replace the raw
+    2024-01-15 partition with the tmp one (staged write + swap, as
+    TableOps.copy_to_raw does), read the raw partition back."""
     from datetime import date as D
 
     day = D(2024, 1, 15)
@@ -337,7 +338,7 @@ def copy_partition(spark: SparkSession, sf_dir: str) -> DataFrame:
     events = load_table(spark, sf_dir, "events").withColumn("date", F.to_date("ts"))
     wh.append(events.filter(F.col("date") == day), "tmp", "exp", "events")
     tmp = wh.read_partition(spark, "tmp", "exp", "events", day)
-    wh.overwrite_partitions(tmp, "raw", "exp", "events")
+    wh.replace_partition(spark, tmp, "raw", "exp", "events", day, "copying")
     return wh.read_partition(spark, "raw", "exp", "events", day).select(*_EVENTS_COLS)
 
 

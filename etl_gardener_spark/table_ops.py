@@ -7,13 +7,21 @@ five stages are DataFrame programs against a :class:`~.warehouse.Warehouse`:
 
     T1 LoadToTmp   read JSONL day prefix -> append tmp partition
                    (cloud/bq/ops.go:130-155)
-    T2 Dedup       keep-best window over tmp partition -> overwrite it
+    T2 Dedup       keep-best window over tmp partition -> replace it
                    (cloud/bq/ops.go:105-127, template 184-218)
-    T3 CopyToRaw   tmp partition -> overwrite raw partition
+    T3 CopyToRaw   tmp partition -> replace raw partition
                    (cloud/bq/ops.go:158-176)
     T4 DeleteTmp   drop tmp partition (cloud/bq/ops.go:221-228)
-    T5 Join        raw ⟕ annotation window -> overwrite join partition
+    T5 Join        raw ⟕ annotation window -> replace join partition
                    (cloud/bq/ops.go:256-295, template 234-253)
+
+T2, T3 and T5 write through ``Warehouse.replace_partition``: one staged
+write of the day, swapped into place, with the output row count observed
+on that write job and the input row count (T2) observed on the same job's
+read. A day's reads take their schema from the parquet footer, so an op
+is its write job and nothing else: dedup 2 Spark jobs (the window's
+shuffle), copy 1, join 2 (the annotation side and the write; 1 with no
+annotation table).
 
 Every op takes ``dry_run`` (T8, cloud/bq/ops.go:105-127): instead of
 executing, it returns the formatted physical plan — the Spark analogue of
@@ -25,10 +33,12 @@ from BigQuery job statistics for metrics (ops/actions.go:150-170, 290-309:
 SlotMillis, NumDMLAffectedRows, input files/bytes, output rows).
 
 Idempotence & restartability: each stage is a pure function of its input
-partition and overwrites its output partition atomically (dynamic partition
-overwrite), so a stage can be re-run after a crash without double-applying —
-the property the reference gets from "no leases survive restart"
-(ops/ops.go:33-40) plus WriteTruncate.
+partition and replaces its output partition by a staged swap (repaired
+after a crash by ``warehouse.recover_staging``), so a stage can be re-run
+without double-applying — the property the reference gets from "no leases
+survive restart" (ops/ops.go:33-40) plus WriteTruncate. An empty result
+drops the output day, so a day that became empty leaves no stale
+partition behind.
 """
 
 from __future__ import annotations
@@ -41,6 +51,7 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.observation import Observation
 
 from etl_gardener_spark.operators.dedup import DedupSpec, active_spec, dedup_keep_best
 from etl_gardener_spark.operators.join import join_annotate
@@ -99,6 +110,17 @@ class TableOps:
                 )
         self.dedup_spec = dedup_spec
 
+    def _empty_day(self, src: str, dst: str) -> bool:
+        """True when the job's day has no ``src`` partition: an earlier op
+        dropped the day because it held no rows. The ``dst`` day is then
+        dropped too, so a re-run whose result became empty leaves no
+        stale output behind."""
+        j = self.job
+        if self.wh.partition_exists(self.spark, src, j.experiment, j.datatype, j.date):
+            return False
+        self.wh.delete_partition(self.spark, dst, j.experiment, j.datatype, j.date)
+        return True
+
     # -- T1 ---------------------------------------------------------------
 
     def load_to_tmp(
@@ -154,25 +176,28 @@ class TableOps:
         """Keep-best dedup of the tmp day partition, in place
         (cloud/bq/ops.go:105-127; template 184-218).
 
-        Parquet has no in-place DELETE, so survivors are computed and the
-        day partition is rewritten via staged overwrite. ``rows_deleted``
-        mirrors NumDMLAffectedRows (ops/actions.go:160-165).
+        Parquet has no in-place DELETE, so the survivors replace the day
+        (``replace_partition``). ``rows_deleted`` mirrors
+        NumDMLAffectedRows (ops/actions.go:160-165); both counts ride the
+        one write job.
         """
         j = self.job
+        if not dry_run and self._empty_day("tmp", "tmp"):
+            return OpStats(op="dedup")
         df = self.wh.read_partition(self.spark, "tmp", j.experiment, j.datatype, j.date)
-        kept = dedup_keep_best(df, self.dedup_spec)
         if dry_run:
-            return OpStats(op="dedup", dry_run_plan=explain_str(kept))
-        t0 = time.monotonic()
-        before = df.count()
-        # Stage survivors before overwriting the partition being read
-        # (can't overwrite a path while scanning it).
-        staged = kept.localCheckpoint(eager=True) if before else kept
-        after = staged.count()
-        if after != before:
-            self.wh.overwrite_partitions(
-                staged, "tmp", j.experiment, j.datatype
+            return OpStats(
+                op="dedup", dry_run_plan=explain_str(dedup_keep_best(df, self.dedup_spec))
             )
+        t0 = time.monotonic()
+        seen = Observation()
+        kept = dedup_keep_best(
+            df.observe(seen, F.count(F.lit(1)).alias("n")), self.dedup_spec
+        )
+        after = self.wh.replace_partition(
+            self.spark, kept, "tmp", j.experiment, j.datatype, j.date, "deduping"
+        )
+        before = int(seen.get["n"])
         return OpStats(
             op="dedup",
             rows_out=after,
@@ -184,16 +209,20 @@ class TableOps:
 
     def copy_to_raw(self, dry_run: bool = False) -> OpStats:
         """Replace the raw day partition with the tmp day partition
-        (cloud/bq/ops.go:158-176; WriteTruncate on ``raw$YYYYMMDD``)."""
+        (cloud/bq/ops.go:158-176; WriteTruncate on ``raw$YYYYMMDD``).
+
+        A copy, not a move: tmp stays intact until DeleteTmp, so a crash
+        between Copy and Delete loses nothing."""
         j = self.job
+        if not dry_run and self._empty_day("tmp", "raw"):
+            return OpStats(op="copy_to_raw")
         df = self.wh.read_partition(self.spark, "tmp", j.experiment, j.datatype, j.date)
         if dry_run:
             return OpStats(op="copy_to_raw", dry_run_plan=explain_str(df))
         t0 = time.monotonic()
-        self.wh.overwrite_partitions(df, "raw", j.experiment, j.datatype)
-        rows = self.wh.read_partition(
-            self.spark, "raw", j.experiment, j.datatype, j.date
-        ).count()
+        rows = self.wh.replace_partition(
+            self.spark, df, "raw", j.experiment, j.datatype, j.date, "copying"
+        )
         return OpStats(op="copy_to_raw", rows_out=rows, elapsed_sec=time.monotonic() - t0)
 
     # -- T4 ---------------------------------------------------------------
@@ -222,6 +251,8 @@ class TableOps:
         (ops/actions.go:371-374).
         """
         j = self.job
+        if not dry_run and self._empty_day("raw", "join"):
+            return OpStats(op="join")
         fact = self.wh.read_partition(self.spark, "raw", j.experiment, j.datatype, j.date)
         ann_path = self.wh.table_path("raw", j.experiment, j.annotation_datatype)
         if self.wh.path_exists(self.spark, ann_path):
@@ -244,8 +275,7 @@ class TableOps:
         if dry_run:
             return OpStats(op="join", dry_run_plan=explain_str(out))
         t0 = time.monotonic()
-        self.wh.overwrite_partitions(out, "join", j.experiment, j.datatype)
-        rows = self.wh.read_partition(
-            self.spark, "join", j.experiment, j.datatype, j.date
-        ).count()
+        rows = self.wh.replace_partition(
+            self.spark, out, "join", j.experiment, j.datatype, j.date, "joining"
+        )
         return OpStats(op="join", rows_out=rows, elapsed_sec=time.monotonic() - t0)

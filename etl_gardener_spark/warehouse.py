@@ -11,10 +11,19 @@ contract on Hive-partitioned Parquet:
 Partition-grain semantics on plain Parquet:
 
 * **Replace one day** (BigQuery WriteTruncate + partition decorator,
-  cloud/bq/ops.go:158-176) → ``INSERT OVERWRITE`` with
-  ``spark.sql.sources.partitionOverwriteMode=dynamic``: Spark stages the new
-  files and commits only the ``date=`` directories present in the incoming
-  DataFrame. Other days are untouched.
+  cloud/bq/ops.go:158-176) → :meth:`Warehouse.replace_partition`: the day
+  is written to a staging directory outside the table, its row count is
+  observed on that same write job, and the staged directory is swapped
+  into place (delete + one same-FS rename, repaired after a crash by
+  :func:`recover_staging`). Other days are untouched, and an empty result
+  drops the day. Every day rewrite of the pipeline chain (dedup, copy,
+  join, curation) goes through it.
+* **Replace the days present in a frame** → ``INSERT OVERWRITE`` with
+  ``partitionOverwriteMode=dynamic`` (:meth:`Warehouse.overwrite_partitions`),
+  for multi-day writes such as rollups and streaming sinks.
+* **Read one day** → the day directory directly, with the schema Spark
+  wrote into the first data file's parquet footer, so planning the read
+  launches no schema-inference job.
 * **Append a day** (BigQuery WriteAppend load, cloud/bq/ops.go:130-155) →
   ``mode("append")`` into the partitioned layout.
 * **Drop one day** (table-partition delete, cloud/bq/ops.go:221-228) →
@@ -32,11 +41,15 @@ backfill parallelizes across dates with zero write conflicts.
 
 from __future__ import annotations
 
+import json
+import re
 from dataclasses import dataclass
 from datetime import date as Date
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
+from pyspark.sql.observation import Observation
 
 from etl_gardener_spark.parallel import run_jobs
 
@@ -59,6 +72,13 @@ def _staged_path(partition_path: str, op: str) -> str:
     return f"{root}/_staging/{tierexp}/{datatype}/{date_part}.__{op}__"
 
 
+# Footer key under which Spark's parquet writer stores the row schema; a
+# mergeSchema=false read infers the schema from exactly this value.
+_SPARK_SCHEMA_KEY = "org.apache.spark.sql.parquet.row.metadata"
+
+# ``date=YYYY-MM-DD.__<op>__``: a staged day directory (see _staged_path)
+_STAGED_NAME = re.compile(r"^date=[^/]+\.__\w+__$")
+
 
 def _hadoop_path(spark: SparkSession, path: str):
     jvm = spark.sparkContext._jvm
@@ -68,6 +88,71 @@ def _hadoop_path(spark: SparkSession, path: str):
 def _hadoop_fs(spark: SparkSession, path: str):
     hconf = spark.sparkContext._jsc.hadoopConfiguration()
     return _hadoop_path(spark, path).getFileSystem(hconf)
+
+
+def _swap_into_place(spark: SparkSession, staged: str, target: str) -> None:
+    """Publish a committed staged directory as ``target``: make the
+    parent, delete the old target, rename the staged directory into its
+    place. A crash between the delete and the rename leaves the day's
+    only copy in staging, where :func:`recover_staging` completes the
+    swap. Hadoop's ``rename`` reports failure by returning False, so that
+    is raised here: the op must fail, and the staged copy stays put.
+    """
+    fs = _hadoop_fs(spark, target)
+    t = _hadoop_path(spark, target)
+    fs.mkdirs(t.getParent())
+    fs.delete(t, True)
+    if not fs.rename(_hadoop_path(spark, staged), t):
+        raise OSError(
+            f"rename {staged} -> {target} failed; the staged copy is kept "
+            "for recover_staging"
+        )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The row schema Spark wrote into the footer of the first data file
+    under ``path``, read on the driver (no Spark job). None when the
+    directory holds no data file or the footer lacks Spark's key."""
+    fs = _hadoop_fs(spark, path)
+    data = [
+        st
+        for st in fs.listStatus(_hadoop_path(spark, path))
+        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+    ]
+    if not data:
+        return None
+    sc = spark.sparkContext
+    parquet = sc._jvm.org.apache.parquet.hadoop
+    reader = parquet.ParquetFileReader.open(
+        parquet.util.HadoopInputFile.fromStatus(
+            data[0], sc._jsc.hadoopConfiguration()
+        )
+    )
+    try:
+        meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
+        js = meta.get(_SPARK_SCHEMA_KEY)
+    finally:
+        reader.close()
+    return T.StructType.fromJson(json.loads(js)) if js else None
+
+
+def _read_day(
+    spark: SparkSession, path: str, day: Date, merge_schema: bool = False
+) -> DataFrame:
+    """One existing day directory with its ``date`` column restored.
+    Without ``merge_schema`` the schema is the footer's
+    (:func:`_footer_schema`), so planning runs no inference job; plain
+    inference remains the fallback for files Spark did not write."""
+    reader = spark.read
+    if merge_schema:
+        reader = reader.option("mergeSchema", "true")
+    else:
+        schema = _footer_schema(spark, path)
+        if schema is not None:
+            reader = reader.schema(schema)
+    return reader.parquet(path).withColumn(
+        DATE_COL, F.lit(day.isoformat()).cast("date")
+    )
 
 
 @dataclass(frozen=True)
@@ -160,15 +245,7 @@ class Warehouse:
             return df.filter(
                 F.col(DATE_COL).between(start.isoformat(), end.isoformat())
             )
-        reader = spark.read
-        if merge_schema:
-            reader = reader.option("mergeSchema", "true")
-        parts = [
-            reader.parquet(path).withColumn(
-                DATE_COL, F.lit(d.isoformat()).cast("date")
-            )
-            for d, path in days
-        ]
+        parts = [_read_day(spark, path, d, merge_schema) for d, path in days]
         out = parts[0]
         for p in parts[1:]:
             out = out.unionByName(p, allowMissingColumns=merge_schema)
@@ -189,6 +266,9 @@ class Warehouse:
         listing and the read to this job's own date — sibling-date jobs
         can never interfere — and skips the full-table file listing a
         100k-partition table would otherwise pay per stage.
+
+        The schema comes from the day's parquet footer (``_read_day``), so
+        building the frame launches no Spark job.
         """
         path = self.partition_path(tier, experiment, datatype, day)
         if not self.path_exists(spark, path):
@@ -196,9 +276,7 @@ class Warehouse:
             # yields a correctly-typed empty frame when the table exists.
             df = self.read(spark, tier, experiment, datatype)
             return df.filter(F.col(DATE_COL) == F.lit(day.isoformat()).cast("date"))
-        return spark.read.parquet(path).withColumn(
-            DATE_COL, F.lit(day.isoformat()).cast("date")
-        )
+        return _read_day(spark, path, day)
 
     # -- writes -----------------------------------------------------------
 
@@ -254,6 +332,45 @@ class Warehouse:
             .partitionBy(DATE_COL)
             .parquet(self.table_path(tier, experiment, datatype))
         )
+
+    def replace_partition(
+        self,
+        spark: SparkSession,
+        df: DataFrame,
+        tier: str,
+        experiment: str,
+        datatype: str,
+        day: Date,
+        op: str,
+    ) -> int:
+        """Replace one day partition with the rows of ``df`` and return
+        how many there are (T2/T3/T5 and the curation stages).
+
+        ``df`` (its ``date`` column dropped: the directory carries it) is
+        written to ``_staged_path(partition, op)``, its rows counted by an
+        observation on that same write job, and the staged directory is
+        swapped into place (:func:`_swap_into_place`). ``df`` may read the
+        partition it replaces: the live files are untouched until the
+        write has committed, so no pinning copy is needed. A zero-row
+        result drops the day instead, so no stale or empty day is left
+        behind. Readers of other days never see the write; a crash is
+        repaired by :func:`recover_staging`, and re-running the op
+        redoes it from scratch.
+        """
+        path = self.partition_path(tier, experiment, datatype, day)
+        staged = _staged_path(path, op)
+        obs = Observation()
+        # mode overwrite clears any stale staged dir before the job runs
+        df.drop(DATE_COL).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
+            "overwrite"
+        ).parquet(staged)
+        n = int(obs.get["n"])
+        if n:
+            _swap_into_place(spark, staged, path)
+        else:
+            _hadoop_fs(spark, staged).delete(_hadoop_path(spark, staged), True)
+            self.delete_partition(spark, tier, experiment, datatype, day)
+        return n
 
     def delete_partition(
         self, spark: SparkSession, tier: str, experiment: str, datatype: str, day: Date
@@ -402,8 +519,7 @@ class Warehouse:
                     maxs.append(st.max)
             if mins:
                 ranges.append((min(mins), max(maxs)))
-        fs.delete(p, True)
-        fs.rename(_hadoop_path(spark, staged), p)
+        _swap_into_place(spark, staged, path)
         return {"files": len(out), "rows": int(rows), "ranges": sorted(ranges)}
 
     def compact_partition(
@@ -453,8 +569,7 @@ class Warehouse:
             for s in fs.listStatus(_hadoop_path(spark, staged))
             if s.isFile() and not s.getPath().getName().startswith("_")
         ]
-        fs.delete(p, True)
-        fs.rename(_hadoop_path(spark, staged), p)
+        _swap_into_place(spark, staged, path)
         return {
             "files_before": files_before,
             "files_after": len(out_files),
@@ -515,8 +630,7 @@ class Warehouse:
         rows_before = cur.count()
         n_updates = upd.count()
         rows_after = spark.read.parquet(staged).count()
-        fs.delete(p, True)
-        fs.rename(_hadoop_path(spark, staged), p)
+        _swap_into_place(spark, staged, path)
         matched = rows_before + n_updates - rows_after
         return {
             "rows_before": int(rows_before),
@@ -582,17 +696,14 @@ class Warehouse:
            without any target key are never rewritten — on a
            100k-partition table the deletion cost is O(partitions touched
            by the user), not O(table).
-        2. **Rewrite** — exactly those partitions are re-read
-           (partition-pruned ``isin`` on the partition column), LEFT
-           ANTI-joined to the keys, and dynamic-partition-overwritten.
-           A partition whose every row is forgotten produces NO rows for
-           its date — dynamic overwrite would silently leave the stale
-           directory, so those dates are explicitly deleted (the same
-           empty-result hazard promote_with_quarantine handles).
+        2. **Rewrite** — exactly those day directories are re-read,
+           LEFT ANTI-joined to the keys, and rewritten through
+           :meth:`replace_partition`. A partition whose every row is
+           forgotten is deleted outright, without a write job.
 
         Returns {"dates": [...], "rows_removed": N}. Idempotent: a rerun
         finds no affected dates. Deletion is physical (partition rewrite
-        via the staged-write + atomic-swap discipline shared with
+        via the staged-write + swap discipline shared with
         compact/upsert — readers never observe a partial partition, and
         there is no self-overwrite read/write conflict), matching this
         warehouse's plain-parquet posture — no tombstone layer to leak
@@ -619,22 +730,17 @@ class Warehouse:
             return {"dates": [], "rows_removed": 0}
         def _rewrite(day) -> None:
             total, hits = per_day[day]
-            path = self.partition_path(tier, experiment, datatype, day)
-            fs = _hadoop_fs(spark, path)
-            p = _hadoop_path(spark, path)
             if hits == total:
-                # every row forgotten: drop the partition outright (an
-                # empty staged write would leave a rowless directory)
-                fs.delete(p, True)
+                # every row forgotten: drop the partition outright, no
+                # write job needed
+                self.delete_partition(spark, tier, experiment, datatype, day)
                 return
-            kept = spark.read.parquet(path).join(
-                F.broadcast(key_df), key_col, "left_anti"
+            kept = self.read_partition(
+                spark, tier, experiment, datatype, day
+            ).join(F.broadcast(key_df), key_col, "left_anti")
+            self.replace_partition(
+                spark, kept, tier, experiment, datatype, day, "forgetting"
             )
-            staged = _staged_path(path, "forgetting")
-            fs.delete(_hadoop_path(spark, staged), True)
-            kept.write.mode("overwrite").parquet(staged)
-            fs.delete(p, True)
-            fs.rename(_hadoop_path(spark, staged), p)
 
         # Days are independent partitions; rewrite several concurrently
         # (Spark job submission is thread-safe — same discipline as the
@@ -690,10 +796,36 @@ def affected_dates(
     return sorted(dates)
 
 
+def _staged_dirs(spark: SparkSession, root: str):
+    """Yield ``(staged_status, target_path)`` for every staged day
+    directory ``<root>/_staging/<tier_exp>/<datatype>/date=….__<op>__``
+    (the layout of :func:`_staged_path`), whatever the op. Driver-side
+    listing only, O(staged directories)."""
+    fs = _hadoop_fs(spark, root)
+    staging_root = _hadoop_path(spark, f"{root}/_staging")
+    if not fs.exists(staging_root):
+        return
+    for tierexp in fs.listStatus(staging_root):
+        if not tierexp.isDirectory():
+            continue
+        for datatype in fs.listStatus(tierexp.getPath()):
+            if not datatype.isDirectory():
+                continue
+            for staged in fs.listStatus(datatype.getPath()):
+                name = staged.getPath().getName()
+                if not (staged.isDirectory() and _STAGED_NAME.match(name)):
+                    continue
+                date_part = name.split(".__", 1)[0]
+                yield staged, (
+                    f"{root}/{tierexp.getPath().getName()}/"
+                    f"{datatype.getPath().getName()}/{date_part}"
+                )
+
+
 def vacuum_staging(spark: SparkSession, root: str, min_age_sec: float = 3600.0) -> list[str]:
-    """Remove orphaned staging directories (``*.__clustering__``,
-    ``*.__compacting__``, ``*.__upserting__``, ``*.__forgetting__``) left
-    behind when a staged write crashed between write and atomic swap.
+    """Remove orphaned staging directories (``date=….__<op>__`` under
+    ``<root>/_staging``, for any op) left behind when a staged write
+    crashed between write and swap.
 
     Crash-safety of the staged-swap discipline means orphans are
     harmless — the live partition was never touched, and the next run of
@@ -710,18 +842,9 @@ def vacuum_staging(spark: SparkSession, root: str, min_age_sec: float = 3600.0) 
     """
     import time as _time
 
-    suffixes = (
-        ".__clustering__",
-        ".__compacting__",
-        ".__upserting__",
-        ".__forgetting__",
-    )
     removed: list[str] = []
     now_ms = _time.time() * 1000.0
     fs = _hadoop_fs(spark, root)
-    root_path = _hadoop_path(spark, root)
-    if not fs.exists(root_path):
-        return removed
 
     def _newest_mtime_ms(path) -> float:
         """Newest mtime anywhere in the staging tree: an in-flight write
@@ -739,23 +862,11 @@ def vacuum_staging(spark: SparkSession, root: str, min_age_sec: float = 3600.0) 
         except Exception:  # dir vanished (op just committed its swap)
             return float("inf")
 
-    def _sweep(path) -> None:
-        try:
-            entries = fs.listStatus(path)
-        except Exception:
-            return  # concurrently removed subtree
-        for st in entries:
-            if not st.isDirectory():
-                continue
-            p = st.getPath()
-            if p.getName().endswith(suffixes):
-                if now_ms - _newest_mtime_ms(p) >= min_age_sec * 1000.0:
-                    fs.delete(p, True)
-                    removed.append(p.toUri().getPath())
-            else:
-                _sweep(p)
-
-    _sweep(root_path)
+    for staged, _target in _staged_dirs(spark, root):
+        p = staged.getPath()
+        if now_ms - _newest_mtime_ms(p) >= min_age_sec * 1000.0:
+            fs.delete(p, True)
+            removed.append(p.toUri().getPath())
     return removed
 
 
@@ -764,11 +875,11 @@ def recover_staging(spark: SparkSession, root: str) -> dict:
     service startup, BEFORE serving reads or claiming jobs.
 
     The staged-swap protocol (stage under ``<root>/_staging``, then
-    ``delete(target); rename(staged, target)``) has one vulnerable
-    window: a crash between the delete and the rename leaves the
-    partition's ONLY copy in the staging dir — the table is missing a
-    day, and a naive job retry reads the table, sees no rows for the
-    day, and cannot restore it. This routine closes that window using
+    :func:`_swap_into_place`: ``delete(target); rename(staged, target)``)
+    has one vulnerable window: a crash between the delete and the rename
+    leaves the partition's ONLY copy in the staging dir — the table is
+    missing a day, and a naive job retry reads the table, sees no rows
+    for the day, and cannot restore it. This routine closes that window using
     the commit marker Spark's committer already writes:
 
     * staged dir has ``_SUCCESS`` and the target partition is MISSING —
@@ -797,40 +908,21 @@ def recover_staging(spark: SparkSession, root: str) -> dict:
     aborted: list[str] = []
     failed: list[str] = []
     fs = _hadoop_fs(spark, root)
-    staging_root = _hadoop_path(spark, f"{root}/_staging")
-    if not fs.exists(staging_root):
-        return {"completed": [], "aborted": [], "failed": []}
-    for tierexp in fs.listStatus(staging_root):
-        if not tierexp.isDirectory():
-            continue
-        for datatype in fs.listStatus(tierexp.getPath()):
-            if not datatype.isDirectory():
-                continue
-            for staged in fs.listStatus(datatype.getPath()):
-                name = staged.getPath().getName()
-                if ".__" not in name or not name.endswith("__"):
-                    continue
-                date_part = name.split(".__", 1)[0]
-                target = _hadoop_path(
-                    spark,
-                    f"{root}/{tierexp.getPath().getName()}/"
-                    f"{datatype.getPath().getName()}/{date_part}",
-                )
-                has_marker = fs.exists(
-                    _hadoop_path(
-                        spark, staged.getPath().toUri().getPath() + "/_SUCCESS"
-                    )
-                )
-                if has_marker and not fs.exists(target):
-                    if fs.rename(staged.getPath(), target):
-                        completed.append(target.toUri().getPath())
-                    else:
-                        # rename reported failure: the staged dir still
-                        # holds the day's only copy — keep it and report.
-                        failed.append(staged.getPath().toUri().getPath())
-                else:
-                    fs.delete(staged.getPath(), True)
-                    aborted.append(staged.getPath().toUri().getPath())
+    for staged, target_path in _staged_dirs(spark, root):
+        target = _hadoop_path(spark, target_path)
+        has_marker = fs.exists(
+            _hadoop_path(spark, staged.getPath().toUri().getPath() + "/_SUCCESS")
+        )
+        if has_marker and not fs.exists(target):
+            if fs.rename(staged.getPath(), target):
+                completed.append(target.toUri().getPath())
+            else:
+                # rename reported failure: the staged dir still
+                # holds the day's only copy — keep it and report.
+                failed.append(staged.getPath().toUri().getPath())
+        else:
+            fs.delete(staged.getPath(), True)
+            aborted.append(staged.getPath().toUri().getPath())
     return {"completed": completed, "aborted": aborted, "failed": failed}
 
 
@@ -896,8 +988,6 @@ def export_partition(
     a downstream consumer); leave False at scale so the export
     parallelizes like any other write.
     """
-    from pyspark.sql.observation import Observation
-
     from etl_gardener_spark.sources.jsonl import TIMESTAMP_FORMAT
 
     df = wh.read_partition(spark, tier, experiment, datatype, day).drop(DATE_COL)

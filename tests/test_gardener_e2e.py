@@ -473,6 +473,130 @@ def test_recover_staging_failed_rename_keeps_staged_copy(
     assert got == {("a", 1.0)}
 
 
+def _chain_day(spark, tmp_path, day):
+    """TableOps for one landed ndt7 day: a and b, with a duplicated."""
+    from etl_gardener_spark.table_ops import JobSpec, TableOps
+
+    job = J.Job(bucket="b", experiment="ndt", datatype="ndt7", date=day)
+    rows = [
+        {"id": "a", "parser": {"Time": f"{day}T01:00:00Z"}, "value": 1.0},
+        {"id": "a", "parser": {"Time": f"{day}T03:00:00Z"}, "value": 9.0},
+        {"id": "b", "parser": {"Time": f"{day}T02:00:00Z"}, "value": 3.0},
+    ]
+    _write_day(str(tmp_path / "landing"), job.prefix(), rows)
+    wh = Warehouse(str(tmp_path / "wh"))
+    ops = TableOps(spark, wh, JobSpec(experiment="ndt", datatype="ndt7", date=day))
+    ops.load_to_tmp(str(tmp_path / "landing" / job.prefix()), SCHEMA)
+    return wh, ops
+
+
+def _rows(spark, wh, tier, day):
+    return {
+        (r.id, r.value)
+        for r in wh.read_partition(spark, tier, "ndt", "ndt7", day).collect()
+    }
+
+
+class _FailOnce:
+    """FS proxy whose ``method`` raises once for a path matching
+    ``pred``, like a driver crash at that step of a staged swap."""
+
+    def __init__(self, fs, state, method, pred):
+        self._fs, self._state, self._method, self._pred = fs, state, method, pred
+
+    def __getattr__(self, name):
+        real = getattr(self._fs, name)
+        if name != self._method:
+            return real
+
+        def call(path, *args):
+            if self._state["armed"] and self._pred(path.toUri().getPath()):
+                self._state["armed"] = False
+                raise RuntimeError(f"injected crash at {name}")
+            return real(path, *args)
+
+        return call
+
+
+def _crash_once(monkeypatch, W, method, pred):
+    real_fs, state = W._hadoop_fs, {"armed": True}
+    monkeypatch.setattr(
+        W, "_hadoop_fs", lambda s, p: _FailOnce(real_fs(s, p), state, method, pred)
+    )
+
+
+def test_dedup_and_copy_swap_crash_recovered(spark, tmp_path, monkeypatch):
+    """Dedup and copy each crash after deleting their target and before
+    the rename: the day's only copy is staged. recover_staging completes
+    both swaps, and re-running each op gives the same rows."""
+    from etl_gardener_spark import warehouse as W
+
+    day = Date(2024, 3, 8)
+    wh, ops = _chain_day(spark, tmp_path, day)
+    best = {("a", 9.0), ("b", 3.0)}
+    for op, run, tier in (
+        ("deduping", ops.dedup, "tmp"),
+        ("copying", ops.copy_to_raw, "raw"),
+    ):
+        _crash_once(
+            monkeypatch, W, "rename", lambda p, op=op: p.endswith(f".__{op}__")
+        )
+        with pytest.raises(Exception, match="injected crash"):
+            run()
+        monkeypatch.undo()
+        assert not wh.partition_exists(spark, tier, "ndt", "ndt7", day)
+        assert W.recover_staging(spark, wh.root)["completed"] == [
+            wh.partition_path(tier, "ndt", "ndt7", day)
+        ]
+        assert _rows(spark, wh, tier, day) == best
+        assert run().rows_out == 2
+        assert _rows(spark, wh, tier, day) == best
+    assert _rows(spark, wh, "tmp", day) == best  # copy left tmp intact
+
+
+def test_dedup_crash_before_delete_is_aborted(spark, tmp_path, monkeypatch):
+    """A dedup that crashes after staging but before deleting its target
+    left the live day untouched: recovery aborts the staged copy, tmp
+    keeps its loaded rows, and the re-run dedups them."""
+    from etl_gardener_spark import warehouse as W
+
+    day = Date(2024, 3, 9)
+    wh, ops = _chain_day(spark, tmp_path, day)
+    target = wh.partition_path("tmp", "ndt", "ndt7", day)
+    _crash_once(monkeypatch, W, "delete", lambda p: p == target)
+    with pytest.raises(Exception, match="injected crash"):
+        ops.dedup()
+    monkeypatch.undo()
+    staged = W._staged_path(target, "deduping")
+    assert W.recover_staging(spark, wh.root) == {
+        "completed": [], "aborted": [staged], "failed": []
+    }
+    assert wh.read_partition(spark, "tmp", "ndt", "ndt7", day).count() == 3
+    st = ops.dedup()
+    assert (st.rows_out, st.rows_deleted) == (2, 1)
+    assert _rows(spark, wh, "tmp", day) == {("a", 9.0), ("b", 3.0)}
+
+
+def test_all_corrupt_day_completes_without_partitions(gardener):
+    """A landing day whose every line is corrupt loads no row. The chain
+    still reaches Complete, and no tmp, raw or join partition of the day
+    is left."""
+    g, landing, wh_root = gardener
+    job = g.config.sources[0].job_spec().with_date(Date(2024, 3, 3))
+    d = os.path.join(landing, job.prefix())
+    os.makedirs(d)
+    with open(os.path.join(d, "part0.jsonl"), "w") as f:
+        f.write('{"id": "x",,,\n{"id": broken\n')
+    g.tracker.add_job(job)
+    g.tracker.set_status(job.key(), J.PARSE_COMPLETE)
+    assert g.monitor.drain(timeout_sec=120.0)
+    st = g.tracker.get_status(job.key())
+    assert st.state == J.COMPLETE, [(si.state, si.detail) for si in st.history]
+    wh = Warehouse(wh_root)
+    for tier in ("tmp", "raw", "join"):
+        assert not wh.partition_exists(g.spark, tier, "ndt", "ndt7", job.date), tier
+
+
 def test_dedup_overwrite_executor_failure_leaves_table_intact(spark, tmp_path):
     """REAL executor-level failure inside the dedup rewrite's write job
     (a mapInPandas batch raises on the executor): the dynamic partition

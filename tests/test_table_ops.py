@@ -13,7 +13,7 @@ import pytest
 from pyspark.sql import types as T
 
 from etl_gardener_spark.table_ops import JobSpec, OpStats, TableOps
-from etl_gardener_spark.warehouse import Warehouse
+from etl_gardener_spark.warehouse import Warehouse, _staged_path
 
 NDT7_SCHEMA = T.StructType(
     [
@@ -444,12 +444,15 @@ def test_vacuum_staging_age_gated(spark, tmp_path):
     import os
     import time
 
+    from pathlib import Path
+
     from etl_gardener_spark.warehouse import vacuum_staging
 
     root = tmp_path / "wh"
-    stale = root / "tmp_exp" / "t" / "date=2024-01-01.__compacting__"
-    fresh = root / "tmp_exp" / "t" / "date=2024-01-02.__clustering__"
     live = root / "tmp_exp" / "t" / "date=2024-01-01"
+    # orphans where the staged ops put them: <root>/_staging/...
+    stale = Path(_staged_path(str(live), "compacting"))
+    fresh = Path(_staged_path(str(root / "tmp_exp" / "t" / "date=2024-01-02"), "clustering"))
     for d in (stale, fresh, live):
         d.mkdir(parents=True)
         (d / "part-0.parquet").write_bytes(b"x")
@@ -463,6 +466,183 @@ def test_vacuum_staging_age_gated(spark, tmp_path):
     assert removed == [str(stale)]
     assert not stale.exists()
     assert fresh.exists() and live.exists()  # young staging + live data kept
+
+
+def test_vacuum_staging_sweeps_every_op(spark, tmp_path):
+    """Staged dirs of any op are swept, not a fixed list of op names:
+    an aged ``__deduping__`` orphan goes, a young one stays."""
+    import time
+    from pathlib import Path
+
+    from etl_gardener_spark.warehouse import vacuum_staging
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    aged = Path(_staged_path(wh.partition_path("tmp", "ndt", "ndt7", date(2024, 3, 1)), "deduping"))
+    young = Path(_staged_path(wh.partition_path("tmp", "ndt", "ndt7", date(2024, 3, 2)), "deduping"))
+    for d in (aged, young):
+        d.mkdir(parents=True)
+        (d / "part-0.parquet").write_bytes(b"x")
+    old = time.time() - 7200
+    os.utime(aged / "part-0.parquet", (old, old))
+    os.utime(aged, (old, old))
+
+    assert vacuum_staging(spark, wh.root, min_age_sec=3600) == [str(aged)]
+    assert not aged.exists() and young.exists()
+
+
+def test_read_partition_takes_footer_schema(spark, tmp_path):
+    """A day read plans with the schema from the parquet footer: no
+    schema-inference job, and the same schema inference would give.
+    Files without Spark's footer key fall back to inference."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from etl_gardener_spark.orchestrator.metrics import spark_cost
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    day = date(2024, 3, 1)
+    df = spark.createDataFrame(
+        [("a", (None,), 1.0, [1, 2])],
+        "id string, parser struct<Time:timestamp>, v double, xs array<int>",
+    ).withColumn("date", F.lit("2024-03-01").cast("date"))
+    wh.append_day(df, "tmp", "ndt", "ndt7", day)
+    path = wh.partition_path("tmp", "ndt", "ndt7", day)
+
+    with spark_cost(spark) as cost:
+        got = wh.read_partition(spark, "tmp", "ndt", "ndt7", day)
+        days = wh.read_days(spark, "tmp", "ndt", "ndt7", day, day)
+    assert cost.jobs == 0
+    inferred = spark.read.parquet(path).schema
+    assert got.drop("date").schema == inferred
+    assert days.drop("date").schema == inferred
+    assert [tuple(r) for r in got.collect()] == [("a", (None,), 1.0, [1, 2], day)]
+
+    other = wh.partition_path("tmp", "ndt", "other", day)
+    os.makedirs(other)
+    pq.write_table(pa.table({"k": [1, 2]}), os.path.join(other, "part-0.parquet"))
+    foreign = wh.read_partition(spark, "tmp", "ndt", "other", day)
+    assert sorted(r.k for r in foreign.collect()) == [1, 2]
+
+
+def test_chain_op_job_counts(spark, tmp_path, landing):
+    """Each chain op is its write job. Reads take the footer schema (no
+    inference job); row counts ride the write (no count or read-back
+    jobs): dedup 2 (the window's shuffle map stage + the write), copy
+    1, join 2 (the annotation side's job + the write)."""
+    import pyspark.sql.functions as F
+
+    from etl_gardener_spark.orchestrator.metrics import spark_cost
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    job = JobSpec(experiment="ndt", datatype="ndt7", date=date(2024, 3, 1))
+    ops = TableOps(spark, wh, job)
+    ops.load_to_tmp(landing, NDT7_SCHEMA)
+    ann = spark.createDataFrame(
+        [{"id": "id0", "parser": {"Time": None}, "client": {"Geo": {"CountryCode": "US"}}}],
+        schema=ANN_SCHEMA,
+    ).withColumn("date", F.lit("2024-03-01").cast("date"))
+    wh.append(ann, "raw", "ndt", "annotation2")
+
+    with spark_cost(spark) as read:
+        wh.read_partition(spark, "tmp", "ndt", "ndt7", job.date)
+    assert read.jobs == 0
+    jobs = {}
+    for name, op in (("dedup", ops.dedup), ("copy", ops.copy_to_raw), ("join", ops.join)):
+        with spark_cost(spark) as cost:
+            st = op()
+        jobs[name] = (cost.jobs, st.rows_out, st.rows_deleted)
+    assert jobs == {"dedup": (2, 11, 8), "copy": (1, 11, 0), "join": (2, 11, 0)}
+
+
+def test_replace_partition_empty_result_drops_day(spark, tmp_path):
+    """An empty frame replaces the day by no day: the stale partition
+    goes (dynamic overwrite of an empty frame would keep it)."""
+    import pyspark.sql.functions as F
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    day = date(2024, 3, 1)
+    wh.append_day(spark.range(3).withColumn("date", F.lit(day)), "raw", "e", "t", day)
+    stale = wh.read_partition(spark, "raw", "e", "t", day)
+    assert wh.replace_partition(spark, stale.filter("id > 5"), "raw", "e", "t", day, "copying") == 0
+    assert not wh.partition_exists(spark, "raw", "e", "t", day)
+    assert not os.path.exists(_staged_path(wh.partition_path("raw", "e", "t", day), "copying"))
+
+
+def test_swap_into_unusable_parent_raises_and_keeps_staged(spark, tmp_path):
+    """The target's parent is a plain file, so the swap cannot land: the
+    op raises and the committed staged copy survives."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    day = date(2024, 3, 1)
+    table = wh.table_path("raw", "e", "t")
+    os.makedirs(os.path.dirname(table))
+    open(table, "w").close()
+    with pytest.raises(Exception):
+        wh.replace_partition(spark, spark.range(3), "raw", "e", "t", day, "copying")
+    staged = _staged_path(wh.partition_path("raw", "e", "t", day), "copying")
+    assert os.path.exists(os.path.join(staged, "_SUCCESS"))
+    assert spark.read.parquet(staged).count() == 3
+
+
+def test_swap_rename_false_raises_and_keeps_staged(spark, tmp_path, monkeypatch):
+    """Hadoop's rename reports failure by returning False. The swap
+    helper every staged op shares raises on it (here through
+    compact_partition), the staged copy survives, and recover_staging
+    finishes the swap once rename works."""
+    import pyspark.sql.functions as F
+
+    from etl_gardener_spark import warehouse as W
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    day = date(2024, 3, 1)
+    wh.append_day(
+        spark.range(4).repartition(2).withColumn("date", F.lit(day)), "raw", "e", "t", day
+    )
+    real_fs = W._hadoop_fs
+
+    class _RenameReturnsFalse:
+        def __init__(self, fs):
+            self._fs = fs
+
+        def rename(self, src, dst):
+            return False
+
+        def __getattr__(self, name):
+            return getattr(self._fs, name)
+
+    monkeypatch.setattr(W, "_hadoop_fs", lambda s, p: _RenameReturnsFalse(real_fs(s, p)))
+    with pytest.raises(OSError, match="rename"):
+        wh.compact_partition(spark, "raw", "e", "t", day)
+    monkeypatch.setattr(W, "_hadoop_fs", real_fs)
+    staged = _staged_path(wh.partition_path("raw", "e", "t", day), "compacting")
+    assert os.path.exists(os.path.join(staged, "_SUCCESS"))
+    assert W.recover_staging(spark, wh.root)["completed"] == [
+        wh.partition_path("raw", "e", "t", day)
+    ]
+    assert wh.read_partition(spark, "raw", "e", "t", day).count() == 4
+
+
+def test_rerun_of_day_that_became_empty_drops_stale_partitions(spark, tmp_path, landing):
+    """A day re-landed with nothing loadable: the re-run chain leaves no
+    tmp, raw or join partition of it behind."""
+    wh = Warehouse(str(tmp_path / "wh"))
+    job = JobSpec(experiment="ndt", datatype="ndt7", date=date(2024, 3, 1))
+
+    def chain():
+        ops = TableOps(spark, wh, job)
+        ops.load_to_tmp(landing, NDT7_SCHEMA)
+        return [ops.dedup(), ops.copy_to_raw(), ops.delete_tmp(), ops.join()]
+
+    chain()
+    assert wh.partition_exists(spark, "raw", "ndt", "ndt7", job.date)
+    assert wh.partition_exists(spark, "join", "ndt", "ndt7", job.date)
+    for name in os.listdir(landing):
+        with open(os.path.join(landing, name), "w") as f:
+            f.write('{"id": "bad",,,\n')
+    dedup, copy, _delete, join = chain()
+    assert (dedup.rows_out, copy.rows_out, join.rows_out) == (0, 0, 0)
+    for tier in ("tmp", "raw", "join"):
+        assert not wh.partition_exists(spark, tier, "ndt", "ndt7", job.date), tier
 
 
 def test_read_jsonl_observed_single_pass_counts(spark, tmp_path):

@@ -25,8 +25,10 @@ import json
 import os
 import sys
 import time
+from pathlib import Path
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT))
 
 from etl_gardener_spark.orchestrator.metrics import spark_cost
 from etl_gardener_spark.plans import queries as Q
@@ -37,7 +39,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("names", nargs="*")
     ap.add_argument("--top", type=int, default=0)
-    ap.add_argument("--bench", default="/root/repo/BENCH_FULL_r10.json")
+    ap.add_argument("--bench", default=str(ROOT / "BENCH_FULL_r10.json"))
     ap.add_argument("--runs", type=int, default=2)
     args = ap.parse_args()
 
