@@ -23,9 +23,9 @@ permanent -> Failed), and every stage is a pure function of its input
 partition that replaces the day through ``Warehouse.replace_partition``
 (one staged write, swapped into place), so it is idempotent and
 restart-safe (the reference's "no leases survive restart",
-ops/ops.go:33-40). A stage's input row count is observed on the read
-feeding that write and its output count on the write itself, so a stage
-costs its write job plus whatever its operator runs; a stage whose result
+ops/ops.go:33-40). A stage's input row count is summed from the day's
+parquet footers and its output count observed on the write itself, so a
+stage costs its write job plus whatever its operator runs; a stage whose result
 is empty drops the day, and the later stages skip it.
 
 Stage semantics (all over the JOIN-tier day partition, the table the
@@ -228,28 +228,23 @@ class CurationActions:
             self.spark, "join", job.experiment, job.datatype, job.date
         )
 
-    @staticmethod
-    def _counted(df: DataFrame) -> tuple[DataFrame, Observation]:
-        """``df`` with its row count observed by the job that consumes it.
-        Use the returned frame once, on the side of the plan that feeds
-        the write; operator branches read the day unobserved."""
-        seen = Observation()
-        return df.observe(seen, F.count(F.lit(1)).alias("n")), seen
-
     def _replace(self, job: J.Job, df: DataFrame) -> int:
         return self.wh.replace_partition(
             self.spark, df, "join", job.experiment, job.datatype, job.date, "curating"
         )
 
-    def _filtered(
-        self, op: str, job: J.Job, t0: float, kept: DataFrame, seen: Observation
-    ) -> OpStats:
-        """Replace the day with ``kept`` and report the stage's counts."""
+    def _filtered(self, op: str, job: J.Job, t0: float, kept: DataFrame) -> OpStats:
+        """Replace the day with ``kept`` and report the stage's counts:
+        the input count from the day's parquet footers, taken before the
+        swap, and the output count from the write."""
+        before = self.wh.partition_rows(
+            self.spark, "join", job.experiment, job.datatype, job.date
+        )
         after = self._replace(job, kept)
         return OpStats(
             op=op,
             rows_out=after,
-            rows_deleted=int(seen.get["n"]) - after,
+            rows_deleted=before - after,
             elapsed_sec=time.monotonic() - t0,
         )
 
@@ -286,11 +281,10 @@ class CurationActions:
 
     def _quality_gate(self, job: J.Job, spec: CurationSpec) -> OpStats:
         t0 = time.monotonic()
-        df, seen = self._counted(self._read(job))
-        kept = df.filter(
+        kept = self._read(job).filter(
             quality_score(spec.text_col) >= F.lit(spec.min_quality)
         )
-        return self._filtered("quality_gate", job, t0, kept, seen)
+        return self._filtered("quality_gate", job, t0, kept)
 
     def _lm_outlier_gate(self, job: J.Job, spec: CurationSpec) -> OpStats:
         from etl_gardener_spark.operators.corpus import char_trigram_nll
@@ -319,11 +313,8 @@ class CurationActions:
         unscored = df.select(spec.id_col).join(
             scores.select(spec.id_col), spec.id_col, "left_anti"
         )
-        src, seen = self._counted(df)
-        kept = src.join(
-            keep_ids.unionByName(unscored), spec.id_col, "left_semi"
-        )
-        return self._filtered("lm_outlier_gate", job, t0, kept, seen)
+        kept = df.join(keep_ids.unionByName(unscored), spec.id_col, "left_semi")
+        return self._filtered("lm_outlier_gate", job, t0, kept)
 
     def _decontam(self, job: J.Job, spec: CurationSpec) -> OpStats:
         from etl_gardener_spark.operators.corpus import decontaminate
@@ -341,13 +332,12 @@ class CurationActions:
         # docs too short to shingle (< n tokens) emit no report row and
         # cannot be contaminated at the n-gram grain — kept, the same
         # unscorable-keep convention as lm_outlier_gate
-        src, seen = self._counted(df)
-        kept = src.join(drops, spec.id_col, "left_anti")
-        return self._filtered("decontam", job, t0, kept, seen)
+        kept = df.join(drops, spec.id_col, "left_anti")
+        return self._filtered("decontam", job, t0, kept)
 
     def _exact_dedup(self, job: J.Job, spec: CurationSpec) -> OpStats:
         t0 = time.monotonic()
-        df, seen = self._counted(self._read(job))
+        df = self._read(job)
         # normalized-text hash key; min-id survivor per key. Window
         # groups are duplicate sets (bounded), never the corpus.
         key = F.xxhash64(
@@ -359,7 +349,7 @@ class CurationActions:
             .filter(F.col("__rn") == 1)
             .drop("__rn")
         )
-        return self._filtered("exact_dedup", job, t0, kept, seen)
+        return self._filtered("exact_dedup", job, t0, kept)
 
     def _near_dedup(self, job: J.Job, spec: CurationSpec) -> OpStats:
         t0 = time.monotonic()
@@ -377,9 +367,8 @@ class CurationActions:
         # (pairs are canonical id_a < id_b). Greedy, chain-safe: if
         # B~A and C~B~A, both B and C appear as id_b and A survives.
         drops = pairs.select(F.col("id_b").alias(spec.id_col)).distinct()
-        src, seen = self._counted(df)
-        kept = src.join(drops, spec.id_col, "left_anti")
-        return self._filtered("near_dedup", job, t0, kept, seen)
+        kept = df.join(drops, spec.id_col, "left_anti")
+        return self._filtered("near_dedup", job, t0, kept)
 
     def _semantic_dedup(self, job: J.Job, spec: CurationSpec) -> OpStats:
         from etl_gardener_spark.operators import similarity as SIM
@@ -414,9 +403,8 @@ class CurationActions:
             threshold=spec.semdedup_threshold,
         )
         drops = rep.filter(~F.col("keep")).select(spec.id_col)
-        src, seen = self._counted(df)
-        kept = src.join(drops, spec.id_col, "left_anti")
-        return self._filtered("semantic_dedup", job, t0, kept, seen)
+        kept = df.join(drops, spec.id_col, "left_anti")
+        return self._filtered("semantic_dedup", job, t0, kept)
 
     def _pack(self, job: J.Job, spec: CurationSpec) -> OpStats:
         t0 = time.monotonic()
@@ -468,11 +456,12 @@ class CurationActions:
             spec = self.spec_for(job)
             if spec is None or stage not in spec.stages:
                 return f"{stage} skipped: not configured"
-            if not self.wh.partition_exists(
+            if not self.wh.recover_partition(
                 self.spark, "join", job.experiment, job.datatype, job.date
             ):
                 # an upstream stage left no row of the day (replace_partition
-                # dropped the partition): nothing to curate.
+                # dropped the partition): nothing to curate. A day whose
+                # swap was cut after its delete was restored, not skipped.
                 # pack still clears any stale packed output from a prior
                 # run of the same day — the idempotence contract.
                 if stage == "pack":

@@ -17,9 +17,9 @@ five stages are DataFrame programs against a :class:`~.warehouse.Warehouse`:
 
 T2, T3 and T5 write through ``Warehouse.replace_partition``: one staged
 write of the day, swapped into place, with the output row count observed
-on that write job and the input row count (T2) observed on the same job's
-read. A day's reads take their schema from the parquet footer, so an op
-is its write job and nothing else: dedup 2 Spark jobs (the window's
+on that write job. T2's input row count is summed from the tmp day's
+parquet footers, and a day's reads take their schema from the first
+footer, so an op is its write job and nothing else: dedup 2 Spark jobs (the window's
 shuffle), copy 1, join 2 (the annotation side and the write; 1 with no
 annotation table).
 
@@ -51,7 +51,6 @@ from datetime import timedelta
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.observation import Observation
 
 from etl_gardener_spark.operators.dedup import DedupSpec, active_spec, dedup_keep_best
 from etl_gardener_spark.operators.join import join_annotate
@@ -114,9 +113,13 @@ class TableOps:
         """True when the job's day has no ``src`` partition: an earlier op
         dropped the day because it held no rows. The ``dst`` day is then
         dropped too, so a re-run whose result became empty leaves no
-        stale output behind."""
+        stale output behind. A ``src`` day whose swap was cut after its
+        delete is restored first (``Warehouse.recover_partition``): it is
+        not empty, and taking it for empty would drop ``dst``."""
         j = self.job
-        if self.wh.partition_exists(self.spark, src, j.experiment, j.datatype, j.date):
+        if self.wh.recover_partition(
+            self.spark, src, j.experiment, j.datatype, j.date
+        ):
             return False
         self.wh.delete_partition(self.spark, dst, j.experiment, j.datatype, j.date)
         return True
@@ -178,8 +181,9 @@ class TableOps:
 
         Parquet has no in-place DELETE, so the survivors replace the day
         (``replace_partition``). ``rows_deleted`` mirrors
-        NumDMLAffectedRows (ops/actions.go:160-165); both counts ride the
-        one write job.
+        NumDMLAffectedRows (ops/actions.go:160-165): the input count is
+        summed from the tmp day's parquet footers and the output count
+        rides the one write job.
         """
         j = self.job
         if not dry_run and self._empty_day("tmp", "tmp"):
@@ -190,14 +194,18 @@ class TableOps:
                 op="dedup", dry_run_plan=explain_str(dedup_keep_best(df, self.dedup_spec))
             )
         t0 = time.monotonic()
-        seen = Observation()
-        kept = dedup_keep_best(
-            df.observe(seen, F.count(F.lit(1)).alias("n")), self.dedup_spec
+        before = self.wh.partition_rows(
+            self.spark, "tmp", j.experiment, j.datatype, j.date
         )
         after = self.wh.replace_partition(
-            self.spark, kept, "tmp", j.experiment, j.datatype, j.date, "deduping"
+            self.spark,
+            dedup_keep_best(df, self.dedup_spec),
+            "tmp",
+            j.experiment,
+            j.datatype,
+            j.date,
+            "deduping",
         )
-        before = int(seen.get["n"])
         return OpStats(
             op="dedup",
             rows_out=after,

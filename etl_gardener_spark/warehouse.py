@@ -15,15 +15,18 @@ Partition-grain semantics on plain Parquet:
   is written to a staging directory outside the table, its row count is
   observed on that same write job, and the staged directory is swapped
   into place (delete + one same-FS rename, repaired after a crash by
-  :func:`recover_staging`). Other days are untouched, and an empty result
-  drops the day. Every day rewrite of the pipeline chain (dedup, copy,
-  join, curation) goes through it.
+  :func:`recover_staging` at start-up, and for one day by
+  :meth:`Warehouse.recover_partition` when a retried op finds its input
+  day missing). Other days are untouched, and an empty result drops the
+  day. Every day rewrite goes through it: the pipeline chain (dedup,
+  copy, join, curation) and upsert, compaction and clustering.
 * **Replace the days present in a frame** → ``INSERT OVERWRITE`` with
   ``partitionOverwriteMode=dynamic`` (:meth:`Warehouse.overwrite_partitions`),
   for multi-day writes such as rollups and streaming sinks.
 * **Read one day** → the day directory directly, with the schema Spark
   wrote into the first data file's parquet footer, so planning the read
-  launches no schema-inference job.
+  launches no schema-inference job. A day's row count is the sum of its
+  footers' (:meth:`Warehouse.partition_rows`), also without a job.
 * **Append a day** (BigQuery WriteAppend load, cloud/bq/ops.go:130-155) →
   ``mode("append")`` into the partitioned layout.
 * **Drop one day** (table-partition delete, cloud/bq/ops.go:221-228) →
@@ -90,6 +93,13 @@ def _hadoop_fs(spark: SparkSession, path: str):
     return _hadoop_path(spark, path).getFileSystem(hconf)
 
 
+def _committed(spark: SparkSession, fs, staged) -> bool:
+    """Whether the write into the staged directory (a Hadoop Path)
+    committed: Spark's committer writes ``_SUCCESS`` last."""
+    jvm = spark.sparkContext._jvm
+    return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(staged, "_SUCCESS")))
+
+
 def _swap_into_place(spark: SparkSession, staged: str, target: str) -> None:
     """Publish a committed staged directory as ``target``: make the
     parent, delete the old target, rename the staged directory into its
@@ -109,31 +119,68 @@ def _swap_into_place(spark: SparkSession, staged: str, target: str) -> None:
         )
 
 
-def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
-    """The row schema Spark wrote into the footer of the first data file
-    under ``path``, read on the driver (no Spark job). None when the
-    directory holds no data file or the footer lacks Spark's key."""
+def _data_files(spark: SparkSession, path: str) -> list:
+    """FileStatus of every data file directly under ``path``: Spark's
+    committer markers (``_SUCCESS``) and hidden files are not data."""
     fs = _hadoop_fs(spark, path)
-    data = [
+    return [
         st
         for st in fs.listStatus(_hadoop_path(spark, path))
         if st.isFile() and not st.getPath().getName().startswith(("_", "."))
     ]
-    if not data:
-        return None
+
+
+def _open_footer(spark: SparkSession, status):
+    """A ``ParquetFileReader`` over one data file; opening it reads the
+    footer and nothing else. The caller closes it."""
     sc = spark.sparkContext
     parquet = sc._jvm.org.apache.parquet.hadoop
-    reader = parquet.ParquetFileReader.open(
+    return parquet.ParquetFileReader.open(
         parquet.util.HadoopInputFile.fromStatus(
-            data[0], sc._jsc.hadoopConfiguration()
+            status, sc._jsc.hadoopConfiguration()
         )
     )
+
+
+def _footer_schema(spark: SparkSession, path: str) -> T.StructType | None:
+    """The row schema Spark wrote into the footer of the first data file
+    under ``path``, read on the driver (no Spark job). None when the
+    directory holds no data file or the footer lacks Spark's key."""
+    data = _data_files(spark, path)
+    if not data:
+        return None
+    reader = _open_footer(spark, data[0])
     try:
         meta = reader.getFooter().getFileMetaData().getKeyValueMetaData()
         js = meta.get(_SPARK_SCHEMA_KEY)
     finally:
         reader.close()
     return T.StructType.fromJson(json.loads(js)) if js else None
+
+
+def _footer_rows(spark: SparkSession, path: str) -> int:
+    """Rows under ``path``, summed from its data files' footers on the
+    driver (no Spark job; one footer read per file). Unlike an
+    observation on a job that reads the day, the sum cannot count a row
+    twice when Spark re-runs a shuffle-map stage after a lost executor."""
+    total = 0
+    for st in _data_files(spark, path):
+        reader = _open_footer(spark, st)
+        try:
+            total += int(reader.getRecordCount())
+        finally:
+            reader.close()
+    return total
+
+
+def _counting(df: DataFrame) -> tuple[DataFrame, Observation]:
+    """``df`` with its row count observed (``obs.get["n"]``) by the
+    action that consumes it. Only an observation at the top of the
+    action's plan, in its result stage, is exact: Spark applies a
+    result task's metrics once, but re-applies a shuffle-map task's when
+    it re-runs the stage."""
+    obs = Observation()
+    return df.observe(obs, F.count(F.lit(1)).alias("n")), obs
 
 
 def _read_day(
@@ -359,11 +406,9 @@ class Warehouse:
         """
         path = self.partition_path(tier, experiment, datatype, day)
         staged = _staged_path(path, op)
-        obs = Observation()
+        out, obs = _counting(df.drop(DATE_COL))
         # mode overwrite clears any stale staged dir before the job runs
-        df.drop(DATE_COL).observe(obs, F.count(F.lit(1)).alias("n")).write.mode(
-            "overwrite"
-        ).parquet(staged)
+        out.write.mode("overwrite").parquet(staged)
         n = int(obs.get["n"])
         if n:
             _swap_into_place(spark, staged, path)
@@ -433,18 +478,11 @@ class Warehouse:
         import pyarrow.parquet as pq
 
         path = self.partition_path(tier, experiment, datatype, day)
-        fs = _hadoop_fs(spark, path)
-        p = _hadoop_path(spark, path)
-        if not fs.exists(p):
+        if not self.path_exists(spark, path):
             return {"files": 0, "rows": 0, "ranges": []}
-        df = spark.read.parquet(path)
+        df = _read_day(spark, path, day).drop(DATE_COL)
         if n_files is None:
-            statuses = [
-                s
-                for s in fs.listStatus(p)
-                if s.isFile() and not s.getPath().getName().startswith("_")
-            ]
-            total = sum(s.getLen() for s in statuses)
+            total = sum(s.getLen() for s in _data_files(spark, path))
             n_files = max(1, -(-total // (128 * 1024 * 1024)))
         if zorder:
             bounds = df.agg(
@@ -486,8 +524,6 @@ class Warehouse:
             clustered = df.repartitionByRange(
                 int(n_files), *sort_cols
             ).sortWithinPartitions(*sort_cols)
-        staged = _staged_path(path, "clustering")
-        fs.delete(_hadoop_path(spark, staged), True)
         # Range boundaries come from reservoir sampling; the default 100
         # samples/partition leaves visible jitter in file bounding boxes.
         # 4x sampling costs microseconds per task and tightens boundaries.
@@ -495,15 +531,12 @@ class Warehouse:
         prev_sample = spark.conf.get(sample_conf, "100")
         spark.conf.set(sample_conf, "400")
         try:
-            clustered.write.mode("overwrite").parquet(staged)
+            rows = self.replace_partition(
+                spark, clustered, tier, experiment, datatype, day, "clustering"
+            )
         finally:
             spark.conf.set(sample_conf, prev_sample)
-        rows = spark.read.parquet(staged).count()
-        out = [
-            s.getPath()
-            for s in fs.listStatus(_hadoop_path(spark, staged))
-            if s.isFile() and not s.getPath().getName().startswith("_")
-        ]
+        out = [s.getPath() for s in _data_files(spark, path)] if rows else []
         lead = sort_cols[0]
         ranges = []
         for op in out:
@@ -519,7 +552,6 @@ class Warehouse:
                     maxs.append(st.max)
             if mins:
                 ranges.append((min(mins), max(maxs)))
-        _swap_into_place(spark, staged, path)
         return {"files": len(out), "rows": int(rows), "ranges": sorted(ranges)}
 
     def compact_partition(
@@ -546,33 +578,25 @@ class Warehouse:
         action can threshold on files_before (skip already-compact days).
         """
         path = self.partition_path(tier, experiment, datatype, day)
-        fs = _hadoop_fs(spark, path)
-        p = _hadoop_path(spark, path)
-        if not fs.exists(p):
+        if not self.path_exists(spark, path):
             return {"files_before": 0, "files_after": 0, "bytes": 0, "rows": 0}
-        statuses = [
-            s
-            for s in fs.listStatus(p)
-            if s.isFile() and not s.getPath().getName().startswith("_")
-        ]
+        statuses = _data_files(spark, path)
         files_before = len(statuses)
         total_bytes = sum(s.getLen() for s in statuses)
         n_out = max(1, -(-total_bytes // int(target_file_bytes)))
-        df = spark.read.parquet(path)
-        staged = _staged_path(path, "compacting")
-        fs.delete(_hadoop_path(spark, staged), True)
         # coalesce, not repartition: narrowing file count needs no shuffle
-        df.coalesce(int(n_out)).write.mode("overwrite").parquet(staged)
-        rows = spark.read.parquet(staged).count()
-        out_files = [
-            s
-            for s in fs.listStatus(_hadoop_path(spark, staged))
-            if s.isFile() and not s.getPath().getName().startswith("_")
-        ]
-        _swap_into_place(spark, staged, path)
+        rows = self.replace_partition(
+            spark,
+            _read_day(spark, path, day).coalesce(int(n_out)),
+            tier,
+            experiment,
+            datatype,
+            day,
+            "compacting",
+        )
         return {
             "files_before": files_before,
-            "files_after": len(out_files),
+            "files_after": len(_data_files(spark, path)) if rows else 0,
             "bytes": int(total_bytes),
             "rows": int(rows),
         }
@@ -605,32 +629,29 @@ class Warehouse:
         Returns {rows_before, n_updates, matched, inserted, rows_after}.
         """
         path = self.partition_path(tier, experiment, datatype, day)
-        fs = _hadoop_fs(spark, path)
-        p = _hadoop_path(spark, path)
-        upd = updates.drop(DATE_COL) if DATE_COL in updates.columns else updates
-        if not fs.exists(p):
-            n = upd.count()
-            upd.write.mode("overwrite").parquet(path)
+        upd = updates.drop(DATE_COL)
+        if not self.path_exists(spark, path):
+            n = self.replace_partition(
+                spark, upd, tier, experiment, datatype, day, "upserting"
+            )
             return {
                 "rows_before": 0,
-                "n_updates": int(n),
+                "n_updates": n,
                 "matched": 0,
-                "inserted": int(n),
-                "rows_after": int(n),
+                "inserted": n,
+                "rows_after": n,
             }
-        cur = spark.read.parquet(path)
+        cur = _read_day(spark, path, day).drop(DATE_COL)
+        rows_before = _footer_rows(spark, path)
         keys = F.broadcast(upd.select(*key_cols).distinct())
         survivors = cur.join(keys, key_cols, "left_anti")
         merged = survivors.select(*cur.columns).unionByName(
             upd.select(*cur.columns)
         )
-        staged = _staged_path(path, "upserting")
-        fs.delete(_hadoop_path(spark, staged), True)
-        merged.write.mode("overwrite").parquet(staged)
-        rows_before = cur.count()
         n_updates = upd.count()
-        rows_after = spark.read.parquet(staged).count()
-        _swap_into_place(spark, staged, path)
+        rows_after = self.replace_partition(
+            spark, merged, tier, experiment, datatype, day, "upserting"
+        )
         matched = rows_before + n_updates - rows_after
         return {
             "rows_before": int(rows_before),
@@ -762,6 +783,51 @@ class Warehouse:
         path = self.partition_path(tier, experiment, datatype, day)
         fs = _hadoop_fs(spark, path)
         return bool(fs.exists(_hadoop_path(spark, path)))
+
+    def partition_rows(
+        self, spark: SparkSession, tier: str, experiment: str, datatype: str, day: Date
+    ) -> int:
+        """Rows of one existing day, from its parquet footers
+        (:func:`_footer_rows`, no Spark job)."""
+        return _footer_rows(spark, self.partition_path(tier, experiment, datatype, day))
+
+    def recover_partition(
+        self, spark: SparkSession, tier: str, experiment: str, datatype: str, day: Date
+    ) -> bool:
+        """Whether one day exists, after finishing a swap of it that was
+        cut between deleting the day and renaming its committed staged
+        copy into place: :func:`recover_staging`'s completion rule, for
+        one day. An op whose input day is missing asks this, not
+        :meth:`partition_exists`. A swap that failed with a transient
+        error is retried in the same process, long before the next
+        start-up recovery, and reading the day as empty would drop every
+        downstream day. A failed rename raises ``OSError`` and keeps the
+        staged copy."""
+        path = self.partition_path(tier, experiment, datatype, day)
+        fs = _hadoop_fs(spark, path)
+        target = _hadoop_path(spark, path)
+        if fs.exists(target):
+            return True
+        staging = _hadoop_path(spark, _staged_path(path, "_")).getParent()
+        if not fs.exists(staging):
+            return False
+        prefix = path.rsplit("/", 1)[1] + ".__"
+        for st in fs.listStatus(staging):
+            name = st.getPath().getName()
+            if not (
+                st.isDirectory()
+                and name.startswith(prefix)
+                and _STAGED_NAME.match(name)
+                and _committed(spark, fs, st.getPath())
+            ):
+                continue
+            if not fs.rename(st.getPath(), target):
+                raise OSError(
+                    f"rename {st.getPath()} -> {path} failed; the staged "
+                    "copy is kept for recover_staging"
+                )
+            return True
+        return False
 
 
 def affected_dates(
@@ -910,10 +976,7 @@ def recover_staging(spark: SparkSession, root: str) -> dict:
     fs = _hadoop_fs(spark, root)
     for staged, target_path in _staged_dirs(spark, root):
         target = _hadoop_path(spark, target_path)
-        has_marker = fs.exists(
-            _hadoop_path(spark, staged.getPath().toUri().getPath() + "/_SUCCESS")
-        )
-        if has_marker and not fs.exists(target):
+        if _committed(spark, fs, staged.getPath()) and not fs.exists(target):
             if fs.rename(staged.getPath(), target):
                 completed.append(target.toUri().getPath())
             else:
@@ -990,9 +1053,9 @@ def export_partition(
     """
     from etl_gardener_spark.sources.jsonl import TIMESTAMP_FORMAT
 
-    df = wh.read_partition(spark, tier, experiment, datatype, day).drop(DATE_COL)
-    obs = Observation()
-    df = df.observe(obs, F.count(F.lit(1)).alias("n"))
+    df, obs = _counting(
+        wh.read_partition(spark, tier, experiment, datatype, day).drop(DATE_COL)
+    )
     if single_file:
         df = df.coalesce(1)
     writer = df.write.mode("overwrite")

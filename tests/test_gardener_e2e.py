@@ -501,8 +501,9 @@ class _FailOnce:
     """FS proxy whose ``method`` raises once for a path matching
     ``pred``, like a driver crash at that step of a staged swap."""
 
-    def __init__(self, fs, state, method, pred):
+    def __init__(self, fs, state, method, pred, msg):
         self._fs, self._state, self._method, self._pred = fs, state, method, pred
+        self._msg = msg
 
     def __getattr__(self, name):
         real = getattr(self._fs, name)
@@ -512,17 +513,20 @@ class _FailOnce:
         def call(path, *args):
             if self._state["armed"] and self._pred(path.toUri().getPath()):
                 self._state["armed"] = False
-                raise RuntimeError(f"injected crash at {name}")
+                raise RuntimeError(f"{self._msg} at {name}")
             return real(path, *args)
 
         return call
 
 
-def _crash_once(monkeypatch, W, method, pred):
+def _crash_once(monkeypatch, W, method, pred, msg="injected crash"):
     real_fs, state = W._hadoop_fs, {"armed": True}
     monkeypatch.setattr(
-        W, "_hadoop_fs", lambda s, p: _FailOnce(real_fs(s, p), state, method, pred)
+        W,
+        "_hadoop_fs",
+        lambda s, p: _FailOnce(real_fs(s, p), state, method, pred, msg),
     )
+    return state
 
 
 def test_dedup_and_copy_swap_crash_recovered(spark, tmp_path, monkeypatch):
@@ -575,6 +579,45 @@ def test_dedup_crash_before_delete_is_aborted(spark, tmp_path, monkeypatch):
     st = ops.dedup()
     assert (st.rows_out, st.rows_deleted) == (2, 1)
     assert _rows(spark, wh, "tmp", day) == {("a", 9.0), ("b", 3.0)}
+
+
+def test_transient_swap_failure_retry_keeps_downstream_days(gardener, monkeypatch):
+    """A re-run's dedup swap fails after deleting tmp with an error the
+    monitor classifies as transient ("Timeout"), so the day's only copy
+    waits committed in staging when the monitor retries dedup in the
+    same process. The retry restores it instead of reading the day as
+    empty: the job completes, and the raw and join days of the earlier
+    run are replaced by the same rows, not dropped."""
+    from etl_gardener_spark import warehouse as W
+
+    g, landing, wh_root = gardener
+    job = g.config.sources[0].job_spec().with_date(Date(2024, 3, 4))
+    rows = [
+        {"id": "a", "parser": {"Time": "2024-03-04T01:00:00Z"}, "value": 1.0},
+        {"id": "a", "parser": {"Time": "2024-03-04T02:00:00Z"}, "value": 2.0},
+        {"id": "b", "parser": {"Time": "2024-03-04T01:30:00Z"}, "value": 3.0},
+    ]
+    _write_day(landing, job.prefix(), rows)
+    wh = Warehouse(wh_root)
+    best = {("a", 2.0), ("b", 3.0)}
+    for rerun in (False, True):
+        if rerun:
+            state = _crash_once(
+                monkeypatch,
+                W,
+                "rename",
+                lambda p: p.endswith(".__deduping__"),
+                msg="Timeout waiting for the namenode",
+            )
+        g.tracker.add_job(job)
+        g.tracker.set_status(job.key(), J.PARSE_COMPLETE)
+        assert g.monitor.drain(timeout_sec=120.0)
+        st = g.tracker.get_status(job.key())
+        assert st.state == J.COMPLETE, [(si.state, si.detail) for si in st.history]
+        for tier in ("raw", "join"):
+            assert wh.partition_exists(g.spark, tier, "ndt", "ndt7", job.date), tier
+            assert _rows(g.spark, wh, tier, job.date) == best, (rerun, tier)
+    assert not state["armed"]  # the swap did fail once and was retried
 
 
 def test_all_corrupt_day_completes_without_partitions(gardener):

@@ -527,8 +527,8 @@ def test_read_partition_takes_footer_schema(spark, tmp_path):
 
 def test_chain_op_job_counts(spark, tmp_path, landing):
     """Each chain op is its write job. Reads take the footer schema (no
-    inference job); row counts ride the write (no count or read-back
-    jobs): dedup 2 (the window's shuffle map stage + the write), copy
+    inference job); output counts ride the write and dedup's input count
+    is summed from the footers (no count or read-back jobs): dedup 2 (the window's shuffle map stage + the write), copy
     1, join 2 (the annotation side's job + the write)."""
     import pyspark.sql.functions as F
 
@@ -553,6 +553,40 @@ def test_chain_op_job_counts(spark, tmp_path, landing):
             st = op()
         jobs[name] = (cost.jobs, st.rows_out, st.rows_deleted)
     assert jobs == {"dedup": (2, 11, 8), "copy": (1, 11, 0), "join": (2, 11, 0)}
+
+
+def test_maintenance_op_job_counts(spark, tmp_path):
+    """Upsert, compaction and clustering rewrite the day through
+    replace_partition: the output count rides the write and the input
+    count comes from the footers (partition_rows, no job), so no op
+    re-reads or counts the day. Upsert 5 (counting the updates, their
+    key set and the write), compact 1, cluster 3 (range sampling, the
+    shuffle and the write)."""
+    import pyspark.sql.functions as F
+
+    from etl_gardener_spark.orchestrator.metrics import spark_cost
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    day = date(2024, 3, 1)
+    base = spark.range(100).select(
+        F.col("id"), (F.col("id") * 10.0).alias("v"), F.lit(day).alias("date")
+    )
+    wh.append(base.repartition(4), "tmp", "exp", "t")
+    with spark_cost(spark) as cost:
+        assert wh.partition_rows(spark, "tmp", "exp", "t", day) == 100
+    assert cost.jobs == 0
+    upd = spark.createDataFrame([(i, -1.0) for i in range(95, 105)], ["id", "v"])
+    jobs = {}
+    for name, op in (
+        ("upsert", lambda: wh.upsert_partition(spark, "tmp", "exp", "t", day, upd, ["id"])),
+        ("compact", lambda: wh.compact_partition(spark, "tmp", "exp", "t", day)),
+        ("cluster", lambda: wh.cluster_partition(spark, "tmp", "exp", "t", day, ["id"], n_files=2)),
+    ):
+        with spark_cost(spark) as cost:
+            out = op()
+        jobs[name] = (cost.jobs, out.get("rows_after", out.get("rows")))
+    assert jobs == {"upsert": (5, 105), "compact": (1, 105), "cluster": (3, 105)}
+    assert wh.partition_rows(spark, "tmp", "exp", "t", day) == 105
 
 
 def test_replace_partition_empty_result_drops_day(spark, tmp_path):
