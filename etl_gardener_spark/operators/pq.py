@@ -9,10 +9,10 @@ k_sub <= 256), so a 100 TB float corpus becomes ~1.5 TB of codes that
 fit a far smaller cluster — and queries never touch raw corpus vectors:
 
 * **Encode** (one corpus pass, amortized): each vector's s-th sub-slice
-  is assigned to its nearest codebook entry — a narrow broadcast join
-  of |corpus| x k_sub rows folded by one map-side-combined min_by
-  aggregate per sub-space, exactly the IVF assignment shape
-  (similarity.cosine_topk_ivf). No shuffle of the raw vectors.
+  is assigned to its nearest codebook entry — the codebook is read to
+  the driver once and each Arrow batch of the corpus is encoded by one
+  exact numpy fold in a narrow ``mapInArrow`` pass. No join, no
+  aggregate, no shuffle of the raw vectors.
 * **Search** (per query batch): the query computes its m x k_sub
   distance TABLE (tiny — broadcast), which is equi-joined to the
   exploded code columns; the approximate distance is a SUM of m table
@@ -38,12 +38,32 @@ not (see ``emb_pq_codebook_recall_report``).
 
 from __future__ import annotations
 
+import math
+
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    ArrayType,
+    DoubleType,
+    IntegerType,
+    LongType,
+    StructField,
+    StructType,
+)
 
-from etl_gardener_spark.functions.localrel import local_df
-
-from etl_gardener_spark.operators.similarity import ivf_centroids
+from etl_gardener_spark.functions.localrel import (
+    TooManyRows,
+    collect_bounded,
+    local_df,
+)
+from etl_gardener_spark.operators.similarity import (
+    _arrow_vectors,
+    _floor_long,
+    _model_rows,
+    ivf_centroids,
+)
 
 
 def _sub_dist_e6(vec: Column, cvec: Column, start: int, width: int) -> Column:
@@ -85,17 +105,106 @@ def _check_dim(vec_col: str, m: int, sub_dim: int) -> Column:
     )
 
 
-def _codebook_df(
-    corpus: DataFrame, id_col: str, vec_col: str, k_sub: int
+def _pq_vectors(col, need: int) -> tuple:
+    """(x, valid, present) of a vector column for the PQ kernels, ``x``
+    and ``valid`` at least ``need`` columns wide. A non-NULL vector
+    shorter than ``need`` raises: its slices would pad with NULLs and
+    make the code assignment depend on NULL ordering."""
+    x, lens, valid, present = _arrow_vectors(col)
+    short = present & (lens < need)
+    if short.any():
+        raise ValueError(
+            f"pq: embedding shorter than m*sub_dim={need}: "
+            f"got {int(lens[short][0])}"
+        )
+    if x.shape[1] < need:
+        pad = need - x.shape[1]
+        x = np.pad(x, ((0, 0), (0, pad)))
+        valid = np.pad(valid, ((0, 0), (0, pad)))
+    return x, valid, present
+
+
+def _sub_dist(x, valid, present, cb: list[tuple], s: int, sub_dim: int):
+    """(de6, null) for sub-space ``s``: the (rows, len(cb)) integer-micro
+    squared-L2 between each row's s-th slice and each codebook entry's,
+    and where it is NULL — ``_sub_dist_e6`` exactly. The difference
+    squares are summed left to right from +0.0 in float64, then floored
+    half up to a long as Spark's FLOOR does (saturating; NaN -> 0). It is
+    NULL for a NULL row, a NULL element in either slice, or an entry
+    whose slice is short (the SQL zip pads it with NULLs)."""
+    lo, hi = s * sub_dim, (s + 1) * sub_dim
+    ents = [
+        j
+        for j, (_c, cv) in enumerate(cb)
+        if cv is not None
+        and len(cv[lo:hi]) == sub_dim
+        and None not in cv[lo:hi]
+    ]
+    de6 = np.zeros((len(x), len(cb)), dtype=np.int64)
+    ok = np.zeros(len(cb), dtype=bool)
+    if ents:
+        ok[ents] = True
+        cm = np.array([cb[j][1][lo:hi] for j in ents], dtype=np.float64)
+        cm = cm.reshape(len(ents), sub_dim)
+        acc = np.zeros((len(x), len(ents)))
+        with np.errstate(all="ignore"):
+            for t in range(sub_dim):
+                d = x[:, lo + t, None] - cm[None, :, t]
+                acc += d * d
+            de6[:, ents] = _floor_long(acc * 1e6 + 0.5)
+    rows_ok = present & valid[:, lo:hi].all(axis=1)
+    return de6, ~(rows_ok[:, None] & ok[None, :])
+
+
+def _encode(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    m: int,
+    sub_dim: int,
+    cb: list[tuple],
 ) -> DataFrame:
-    """Seeded codebook as a tiny broadcastable relation (cid, cvec).
-    Explicit schema: an empty corpus yields zero seeds and inference
-    cannot type an empty local relation (differential-fuzz, seed 0)."""
-    cents = ivf_centroids(corpus, id_col, vec_col, n_centroids=k_sub)
-    return local_df(
-        corpus.sparkSession,
-        [(cid, vec) for cid, vec in cents], "cid long, cvec array<double>"
+    """``pq_encode`` against the sorted (cid, cvec) codebook rows ``cb``:
+    one ``mapInArrow`` pass, ``_sub_dist`` per sub-space and batch."""
+    src = corpus.select(id_col, vec_col)
+    schema = StructType(
+        [src.schema[id_col]]
+        + [StructField(f"code_{s}", LongType()) for s in range(m)]
+        + [StructField("recon_err", DoubleType())]
     )
+    if not cb:
+        return local_df(corpus.sparkSession, [], schema)
+    ansi = corpus.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+    cids = pa.array([c for c, _v in cb], type=pa.int64())
+    need = m * sub_dim
+
+    def gen(batches):
+        for batch in batches:
+            x, valid, present = _pq_vectors(batch.column(1), need)
+            rows = np.arange(len(x))
+            codes = []
+            total = np.zeros(len(x), dtype=np.int64)
+            null = np.zeros(len(x), dtype=bool)
+            for s in range(m):
+                de6, dnull = _sub_dist(x, valid, present, cb, s, sub_dim)
+                # a NULL distance sorts first, then the smallest; argmin
+                # takes the first, so ties go to the smallest cid
+                win = np.where(dnull, np.iinfo(np.int64).min, de6).argmin(1)
+                codes.append(cids.take(pa.array(win)))
+                wd, wnull = de6[rows, win], dnull[rows, win]
+                # the SQL sum is a long: it wraps, or raises under ANSI
+                acc = total + wd
+                if ansi and (~null & ~wnull & (acc < total)).any():
+                    raise ArithmeticError(
+                        "pq: recon_err overflows a long [ARITHMETIC_OVERFLOW]"
+                    )
+                total, null = acc, null | wnull
+            err = pa.array(total.astype(np.float64) / 1e6, mask=null)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0), *codes, err], names=schema.names
+            )
+
+    return src.mapInArrow(gen, schema)
 
 
 def pq_encode(
@@ -110,40 +219,26 @@ def pq_encode(
     """Encode every corpus vector to ``m`` PQ codes plus its exact-integer
     reconstruction error.
 
-    Output: (id_col, code_0..code_{m-1} long, recon_err double) where
-    recon_err is the sum of the chosen sub-space micro-distances / 1e6.
-    One broadcast join (|corpus| x k_sub narrow rows) + one hash
-    aggregate with ``m`` min_by's — map-side combined, no sort, no raw
-    vector shuffle; the argmin tie-break is (distance_e6 ASC, cid ASC).
+    Output: (id_col, code_0..code_{m-1} long, recon_err double), one row
+    per corpus row (ids are a key: a duplicated id is encoded once per
+    copy). recon_err is the sum of the chosen sub-space micro-distances
+    / 1e6. The codebook is read to the driver once, then each Arrow batch
+    of the corpus is encoded by numpy in one narrow ``mapInArrow`` pass —
+    no join, no aggregate, no raw vector shuffle. The argmin sorts a NULL
+    distance first and breaks ties to the smallest cid; a NULL distance
+    makes recon_err NULL. tests/test_assign_encode_kernels.py keeps the
+    SQL min_by tree as the bit-equality reference. A non-NULL vector
+    shorter than m*sub_dim raises.
 
     ``codebook``: an explicit (cid, cvec) relation — the residual-PQ
     path passes a codebook seeded from residual vectors; None keeps the
     deterministic first-k_sub corpus seeding."""
     cb = (
-        codebook
-        if codebook is not None
-        else _codebook_df(corpus, id_col, vec_col, k_sub)
+        ivf_centroids(corpus, id_col, vec_col, n_centroids=k_sub)
+        if codebook is None
+        else _model_rows(codebook, "pq codebook")
     )
-    scored = corpus.select(
-        id_col, _check_dim(vec_col, m, sub_dim).alias(vec_col)
-    ).join(F.broadcast(cb))
-    for s in range(m):
-        scored = scored.withColumn(
-            f"__d{s}",
-            _sub_dist_e6(F.col(vec_col), F.col("cvec"), s * sub_dim + 1, sub_dim),
-        )
-    aggs = []
-    for s in range(m):
-        ordk = F.struct(F.col(f"__d{s}").alias("d"), F.col("cid").alias("c"))
-        val = F.struct(F.col("cid").alias("code"), F.col(f"__d{s}").alias("d"))
-        aggs.append(F.min_by(val, ordk).alias(f"__m{s}"))
-    out = scored.groupBy(id_col).agg(*aggs)
-    err = sum((F.col(f"__m{s}.d") for s in range(m)), F.lit(0).cast("long"))
-    return out.select(
-        id_col,
-        *[F.col(f"__m{s}.code").alias(f"code_{s}") for s in range(m)],
-        (err.cast("double") / F.lit(1e6)).alias("recon_err"),
-    )
+    return _encode(corpus, id_col, vec_col, m, sub_dim, cb)
 
 
 def exploded_codes(
@@ -153,53 +248,85 @@ def exploded_codes(
     """(neighbor_id, s, code): the encoded corpus melted to one row per
     sub-space — the relation ADC search actually reads (m small ints per
     vector; raw vectors never appear downstream of this)."""
-    return (
-        pq_encode(corpus, id_col, vec_col, m, sub_dim, k_sub, codebook)
-        .select(
-            F.col(id_col).alias("neighbor_id"),
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.col(f"code_{s}").alias("code"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("sc"),
-        )
-        .select("neighbor_id", "sc.s", "sc.code")
+    return _explode(
+        pq_encode(corpus, id_col, vec_col, m, sub_dim, k_sub, codebook),
+        id_col,
+        m,
     )
 
 
+def _explode(encoded: DataFrame, id_col: str, m: int) -> DataFrame:
+    """``exploded_codes`` of a ``pq_encode`` relation."""
+    return encoded.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(s).alias("s"),
+                        F.col(f"code_{s}").alias("code"),
+                    )
+                    for s in range(m)
+                ]
+            )
+        ).alias("sc"),
+    ).select("neighbor_id", "sc.s", "sc.code")
+
+
+def _dist_table(
+    df: DataFrame, keys: list[str], vec_col: str, cb: list[tuple], m: int,
+    sub_dim: int,
+) -> DataFrame:
+    """(*keys, code, s, de6): every row's m x len(cb) micro-distance
+    table, ``_sub_dist`` per sub-space melted in one ``mapInArrow`` pass.
+    A non-NULL vector shorter than m*sub_dim raises."""
+    src = df.select(*keys, vec_col)
+    schema = StructType(
+        [src.schema[k] for k in keys]
+        + [
+            StructField("code", LongType()),
+            StructField("s", IntegerType()),
+            StructField("de6", LongType()),
+        ]
+    )
+    if not cb:
+        return local_df(df.sparkSession, [], schema)
+    cids = pa.array([c for c, _v in cb], type=pa.int64())
+    need, k = m * sub_dim, len(cb)
+
+    def gen(batches):
+        for batch in batches:
+            x, valid, present = _pq_vectors(batch.column(len(keys)), need)
+            parts = [
+                _sub_dist(x, valid, present, cb, s, sub_dim) for s in range(m)
+            ]
+            # rows ordered (row, entry, s)
+            de6 = np.stack([d for d, _n in parts], axis=2).ravel()
+            null = np.stack([n for _d, n in parts], axis=2).ravel()
+            row = pa.array(np.repeat(np.arange(len(x)), k * m))
+            ent = pa.array(np.tile(np.repeat(np.arange(k), m), len(x)))
+            sub = np.tile(np.arange(m, dtype=np.int32), len(x) * k)
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(i).take(row) for i in range(len(keys))]
+                + [cids.take(ent), pa.array(sub), pa.array(de6, mask=null)],
+                names=schema.names,
+            )
+
+    return src.mapInArrow(gen, schema)
+
+
 def _query_dist_table(
-    queries: DataFrame, cb: DataFrame, id_col: str, vec_col: str, m: int,
+    queries: DataFrame, cb: list[tuple], id_col: str, vec_col: str, m: int,
     sub_dim: int,
 ) -> DataFrame:
     """(query_id, code, s, de6): each query's m x k_sub micro-distance
     table — tiny, broadcast into the code join."""
-    qd = queries.select(
-        F.col(id_col).alias("query_id"),
-        _check_dim(vec_col, m, sub_dim).alias("q_vec"),
-    ).join(F.broadcast(cb))
-    for s in range(m):
-        qd = qd.withColumn(
-            f"__d{s}",
-            _sub_dist_e6(F.col("q_vec"), F.col("cvec"), s * sub_dim + 1, sub_dim),
-        )
-    return qd.select(
-        "query_id",
-        F.col("cid").alias("code"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"__d{s}").alias("de6"))
-                    for s in range(m)
-                ]
-            )
-        ).alias("sd"),
-    ).select("query_id", "code", "sd.s", "sd.de6")
+    return _dist_table(
+        queries.select(
+            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
+        ),
+        ["query_id"], "q_vec", cb, m, sub_dim,
+    )
 
 
 def _rank_adc(cand: DataFrame, k: int) -> DataFrame:
@@ -238,10 +365,10 @@ def pq_topk(
     so the heavy join is codes ⨝ table on (sub, code) — no raw corpus
     vectors move, which is the entire point of PQ at 100 TB.
     """
-    cb = _codebook_df(corpus, id_col, vec_col, k_sub)
+    cb = ivf_centroids(corpus, id_col, vec_col, k_sub)
     if codes is None:
-        codes = exploded_codes(
-            corpus, id_col, vec_col, m, sub_dim, k_sub, codebook=cb
+        codes = _explode(
+            _encode(corpus, id_col, vec_col, m, sub_dim, cb), id_col, m
         )
     table = _query_dist_table(queries, cb, id_col, vec_col, m, sub_dim)
     cand = (
@@ -276,10 +403,12 @@ def pq_topk_ivf(
     and ADC ranks candidates without touching raw vectors at all.
 
     Build side (one corpus pass each, amortized across queries): cell
-    assignment by rounded-cosine argmax (similarity.kmeans_assign —
-    map-side-combined min_by, identical tie-break to the IVF-Flat
-    oracle) and the PQ code table. Query side: nprobe nearest cells +
-    the m x k_sub micro-distance table, both tiny broadcasts. Output:
+    assignment by rounded-cosine argmax (similarity.kmeans_assign — a
+    narrow numpy pass per Arrow batch, identical tie-break to the
+    IVF-Flat oracle) and the PQ code table (``pq_encode``'s pass). The
+    seeded codebook is collected once per call and feeds both the
+    encode and the query table. Query side: nprobe nearest cells + the
+    m x k_sub micro-distance table, both tiny broadcasts. Output:
     (query_id, neighbor_id, score, rank) — exact-integer ADC score,
     rank (score ASC, neighbor_id ASC).
     """
@@ -311,10 +440,10 @@ def pq_topk_ivf(
         # a persisted index's cell relation (index_store.load_ann_index,
         # or ivf_build_cells output) — extra columns like c_vec dropped
         cells = cells.select("neighbor_id", "cell")
-    cb = _codebook_df(corpus, id_col, vec_col, k_sub)
+    cb = ivf_centroids(corpus, id_col, vec_col, k_sub)
     if codes is None:
-        codes = exploded_codes(
-            corpus, id_col, vec_col, m, sub_dim, k_sub, codebook=cb
+        codes = _explode(
+            _encode(corpus, id_col, vec_col, m, sub_dim, cb), id_col, m
         )
     codes = codes.join(cells, "neighbor_id")
 
@@ -583,7 +712,7 @@ def pq_topk_ivf_residual(
     vs 0.26 trained in ``emb_pq_codebook_recall_report``).
 
     Scale shape: build = one corpus pass for cells + one for residual
-    codes (both map-side-combined broadcast joins, no raw-vector
+    codes (both narrow numpy passes per Arrow batch, no raw-vector
     shuffle); search reads codes for ~nprobe/C of the corpus via the
     cell equi-join, with an (nprobe x m x k_sub)-row per-query ADC
     table broadcast — per-cell tables are the only cost over the
@@ -600,30 +729,14 @@ def pq_topk_ivf_residual(
         corpus, queries, id_col, vec_col, m, sub_dim, n_centroids,
         nprobe, centroids,
     )
-    rcb = _codebook_df(res, "neighbor_id", "rvec", k_sub)
-    codes = exploded_codes(
-        res, "neighbor_id", "rvec", m, sub_dim, k_sub, codebook=rcb
+    rcb = ivf_centroids(res, "neighbor_id", "rvec", k_sub)
+    codes = _explode(
+        _encode(res, "neighbor_id", "rvec", m, sub_dim, rcb), "neighbor_id", m
     ).join(cells, "neighbor_id")
-    # per-(query, probed cell) ADC table: (query_id, cell, s, code, de6)
-    qd = probes.join(F.broadcast(rcb))
-    for s in range(m):
-        qd = qd.withColumn(
-            f"__d{s}",
-            _sub_dist_e6(F.col("q_rvec"), F.col("cvec"), s * sub_dim + 1, sub_dim),
-        )
-    qd = qd.select(
-        "query_id",
-        "cell",
-        F.col("cid").alias("code"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(F.lit(s).alias("s"), F.col(f"__d{s}").alias("de6"))
-                    for s in range(m)
-                ]
-            )
-        ).alias("sd"),
-    ).select("query_id", "cell", "code", "sd.s", "sd.de6")
+    # per-(query, probed cell) ADC table: (query_id, cell, code, s, de6)
+    qd = _dist_table(
+        probes, ["query_id", "cell"], "q_rvec", rcb, m, sub_dim
+    )
 
     cand = (
         probes.select("query_id", "cell")
@@ -997,8 +1110,6 @@ def pq_topk_ivf_residual_trained(
 def _with_vec_out(df: DataFrame, out: str):
     """Output schema of a per-row vector map: ``df``'s columns with
     ``out`` (array<double>) replacing a same-named column or appended."""
-    from pyspark.sql.types import ArrayType, DoubleType, StructField, StructType
-
     out_field = StructField(out, ArrayType(DoubleType()))
     fields = [out_field if f.name == out else f for f in df.schema.fields]
     if out not in df.columns:
@@ -1048,8 +1159,6 @@ def hadamard_rotate(
     round-trip both exactly."""
     if dim & (dim - 1):
         raise ValueError(f"dim={dim} must be a power of two")
-    import numpy as np
-
     scale = 1.0 / (dim ** 0.5)
     out = out_col or vec_col
     out_schema = _with_vec_out(df, out)
@@ -1057,8 +1166,6 @@ def hadamard_rotate(
     all_null = [None] * dim
 
     def gen(batches):
-        import pyarrow as pa
-
         ii = np.arange(dim, dtype=np.int64)
         parity = np.zeros((dim, dim), dtype=np.int64)
         anded = ii[:, None] & ii[None, :]
@@ -1130,16 +1237,12 @@ def _ns_polar_e6(scatter_sums, cnt: int, dim: int, ns_iter: int):
     same FLOOR(CAST(int AS DOUBLE)/div + 0.5) kernel the DuckDB mirror
     writes, so driver-numpy and oracle-SQL produce IDENTICAL matrices.
     A zero scatter (empty/degenerate sample) falls back to identity."""
-    import numpy as np
-
     if cnt <= 0:
         return _identity_e6(dim)
     s = np.asarray(scatter_sums, dtype=np.int64)
     mbar = np.floor(
         s.astype(np.float64) / (float(cnt) * 1e6) + 0.5
     ).astype(np.int64)
-    import math
-
     ss = int((mbar.astype(object) ** 2).sum())  # exact: entries ~1e6
     fro = int(np.floor(math.sqrt(float(ss)) + 0.5))  # IEEE sqrt == SQL SQRT
     if fro == 0:
@@ -1189,8 +1292,6 @@ def opq_rotate(
     that kernel's Catalyst expression-tree transliteration as the
     bit-equality reference (it runs interpreted: measured 514 s vs
     <1 s for 20k rows x dim 64)."""
-    import numpy as np
-
     r_mat = np.asarray(r_e6, dtype=np.int64)
     out = out_col or vec_col
     out_schema = _with_vec_out(df, out)
@@ -1221,8 +1322,6 @@ def opq_rotate(
 def _opq_rotate_mat(vecs, r_mat):
     """opq_rotate's exact integer-grid math on a (rows, dim) batch:
     quantize, int64 matmul, half-up re-quantize, back to double."""
-    import numpy as np
-
     xm = np.floor(np.array(vecs, dtype=np.float64) * 1e6 + 0.5).astype(
         np.int64
     )
@@ -1250,8 +1349,6 @@ def _svec_dist_e6_local(x, y) -> int:
     """Driver twin of _svec_dist_e6: identical left-to-right IEEE double
     fold of squared differences, identical floor half-up micro cast.
     Python floats ARE IEEE doubles, so each op is bit-identical."""
-    import math
-
     acc = 0.0
     for a, b in zip(x, y):
         d = float(a) - float(b)
@@ -1278,8 +1375,6 @@ def _pq_fit_local(
     tests/test_pq_rrf.py::test_pq_fit_local_matches_spark.
 
     Returns {s: [(cid, cvec), ...]} sorted by cid within each s."""
-    import math
-
     melted: list[tuple[int, int, list[float]]] = []
     for sid, vec in rows:
         if vec is None:
@@ -1381,8 +1476,6 @@ def _opq_rotate_rows(
     r_e6: list[list[int]],
 ) -> list[tuple[int, list[float]]]:
     """Driver twin of opq_rotate (the same _opq_rotate_mat math)."""
-    import numpy as np
-
     if not rows:
         return rows
     rot = _opq_rotate_mat(
@@ -1437,35 +1530,30 @@ def opq_fit(
         & (F.size(vec_col) == dim)
         & finite
     ).select(F.col(id_col).alias("sid"), F.col(vec_col).alias("vec"))
-    import numpy as np
-
-    # ONE job total: the former separate count() guard is fused into the
-    # collect via limit(max_sample_rows + 1) — if the limit row count
-    # comes back over the bound the collect is refused EXACTLY as the
-    # count guard refused it, and below the bound limit(n + 1) returns
-    # every sample row (content-identical; _pq_fit_local's
-    # distinct-by-min-id seeding is order-independent). The whole
-    # alternation — rotate sample, fit per-sub-space codebooks, encode,
-    # reconstruct — runs on the driver with the exact-twin kernels
+    # ONE job: a bounded read of the sample (collect_bounded takes the
+    # limit on the executors). The whole alternation — rotate sample, fit
+    # per-sub-space codebooks, encode, reconstruct — then runs on the
+    # driver with the exact-twin kernels
     # (_pq_fit_local/_pq_encode_local/_opq_rotate_rows): the sample is
     # O(sample_bound * dim) BY CONSTRUCTION, the same driver size class
     # as the scatter this function always collected, and the Spark
     # round-trips it replaces were ~15 scheduler jobs over <=256 rows
     # (guide §1.2/§5 — don't schedule a cluster for driver-sized work).
-    sample_rows = [
-        (r["sid"], list(r["vec"]))
-        for r in sample.limit(max_sample_rows + 1).collect()
-    ]
-    cnt = len(sample_rows)
-    if cnt == 0:
-        return _identity_e6(dim)
-    if cnt > max_sample_rows:
+    # _pq_fit_local's distinct-by-min-id seeding is order-independent.
+    try:
+        sample_rows = collect_bounded(
+            sample, max_sample_rows, "opq_fit sample"
+        )
+    except TooManyRows as exc:
         raise ValueError(
             f"opq_fit would collect over {max_sample_rows} sample rows to "
             "the driver (the max_sample_rows bound). Lower sample_bound "
             "(OPQ trains on a bounded sample by convention) or raise "
             "max_sample_rows explicitly."
-        )
+        ) from exc
+    cnt = len(sample_rows)
+    if cnt == 0:
+        return _identity_e6(dim)
     x_rows = {sid: vec for sid, vec in sample_rows}
     r_e6 = _identity_e6(dim)
     for t in range(n_opq_iter):

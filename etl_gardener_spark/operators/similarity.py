@@ -2,11 +2,13 @@
 baseline) and a sign-random-projection LSH-bucketed variant (the scale
 path), plus embedding near-duplicate pairs.
 
-Embeddings are ordinary ``array<float>`` columns. All math happens in
-Catalyst higher-order functions (``zip_with`` + ``aggregate`` fold) — JVM
-whole-stage codegen, no Python, no UDF. Arithmetic is done in float64 with
-a left-to-right fold so results are deterministic and reproducible on any
-engine (the DuckDB oracles compute the same sums in the same order).
+Embeddings are ordinary ``array<float>`` columns. Pairwise scores are
+Catalyst higher-order functions (``zip_with`` + ``aggregate`` fold); the
+k-means assignment, which scores every vector against every centroid,
+runs the same fold in numpy once per Arrow batch (``_nearest``). Either
+way arithmetic is done in float64 with a left-to-right fold so results
+are deterministic and reproducible on any engine (the DuckDB oracles
+compute the same sums in the same order).
 
 Scale design:
 * **Brute-force top-k**: queries are broadcast (a query set is small by
@@ -28,10 +30,16 @@ import math
 from decimal import ROUND_HALF_UP, Context, Decimal
 
 import numpy as np
+import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StructField, StructType
 
-from etl_gardener_spark.functions.localrel import local_df
+from etl_gardener_spark.functions.localrel import (
+    TooManyRows,
+    collect_bounded,
+    local_df,
+)
 
 
 def _dot(a: Column, b: Column) -> Column:
@@ -671,78 +679,79 @@ def kmeans_assign(
     round_digits: int = 6,
 ) -> DataFrame:
     """Nearest-centroid assignment by rounded cosine (ties -> smallest
-    cid): (id, cid). One broadcast nested-loop of |df| x k rows + ONE
-    hash aggregate — the Lloyd assignment step, no corpus shuffle and no
-    sort: argmax is min_by over the (-score, cid) struct, which picks the
-    identical (score DESC, cid ASC) winner as a window would but with a
-    map-side-combined aggregate instead of sorting every vector's k rows.
+    cid): (id, cid), one row per row of ``df``. Ids are a key: each row
+    is assigned on its own, so a duplicated id yields one row per copy.
 
-    Norms are staged on each join input (computed once per vector / per
-    centroid, not once per pair — the projections sit below the join, so
-    Catalyst cannot inline them into the per-pair score; bit-identical to
-    ``cosine()``, which divides the dot by the same norm product).
+    The centroids are read to the driver once (``_model_rows``: a bounded
+    collect, no Spark job for a local relation), and each Arrow batch of
+    ``df`` is scored by ``_nearest`` in one narrow ``mapInArrow`` pass —
+    no broadcast nested loop, no aggregate, no shuffle.
 
-    Rounding uses the portable floor kernel ``FLOOR(x*10^d + 0.5)``
-    (functions/exact.py), NOT Spark ROUND: the kernel is the same IEEE
-    expression tree in Catalyst, numpy, and DuckDB, so this fold path,
-    the GEMM path (``kmeans_assign_gemm``), and the SQL oracle pick
-    bit-identical argmax winners. Spark ROUND (shortest-repr HALF_UP)
-    vs numpy round (binary half-even) can flip the winner on a 6-dp
-    midpoint score — the repr-midpoint divergence class documented in
-    functions/exact.py; the ordering key stays the scaled integer (no
-    /10^d: injective for |cos| <= 2, one fewer op)."""
-    scored = _assign_scored(df, cents_df, id_col, vec_col, round_digits)
-    ordk = F.struct((-F.col("__s")).alias("s"), F.col("cid").alias("c"))
-    return scored.groupBy(id_col).agg(F.min_by(F.col("cid"), ordk).alias("cid"))
+    ``_nearest`` is the exact replica of the SQL fold: sequential float64
+    dot and norm folds from +0.0, the score FLOOR(COALESCE(cos, -2) *
+    10^d + 0.5) with Spark's saturating FLOOR, and the highest score
+    winning with ties to the smallest cid. Rounding uses the portable
+    floor kernel (functions/exact.py), NOT Spark ROUND: the kernel is the
+    same IEEE expression in numpy and DuckDB, so this path, the GEMM path
+    (``kmeans_assign_gemm``) and the SQL oracle pick bit-identical argmax
+    winners; the ordering key stays the scaled integer.
+    tests/test_assign_encode_kernels.py keeps the former Catalyst tree as
+    the bit-equality reference."""
+    cents = _model_rows(cents_df, "kmeans_assign centroids")
+    return _assign_pass(df, cents, id_col, vec_col, round_digits, False)
 
 
-def _assign_scored(
+# A centroid or codebook relation read to the driver holds at most this
+# many rows; collect_bounded refuses a larger one.
+_MODEL_ROWS = 1 << 16
+
+
+def _model_rows(model: DataFrame, what: str) -> list[tuple]:
+    """The (cid, cvec) rows of a centroid or codebook relation as Python
+    values (cvec as doubles), sorted by cid with a NULL cid first, which
+    is Spark's ascending order."""
+    rows = collect_bounded(
+        model.select(
+            F.col("cid").cast("long"), F.col("cvec").cast("array<double>")
+        ),
+        _MODEL_ROWS,
+        what,
+    )
+    return sorted(rows, key=lambda r: (r[0] is not None, r[0] or 0))
+
+
+def _assign_pass(
     df: DataFrame,
-    cents_df: DataFrame,
+    cents: list[tuple],
     id_col: str,
     vec_col: str,
-    round_digits: int = 6,
+    round_digits: int,
+    keep_vec: bool,
 ) -> DataFrame:
-    """The (id, __v, cid, __s) pair-score relation kmeans_assign
-    aggregates — factored out so the distributed Lloyd update can carry
-    the vector THROUGH the argmin aggregate (F.first over the k identical
-    copies the broadcast nested-loop replicates) instead of paying a
-    join-back shuffle of the corpus per iteration."""
-    kscale = F.lit(float(10**round_digits))
-    return (
-        df.select(
-            F.col(id_col),
-            F.col(vec_col).alias("__v"),
-            _norm(F.col(vec_col)).alias("__nv"),
-        )
-        .join(
-            F.broadcast(
-                cents_df.select(
-                    "cid", "cvec", _norm(F.col("cvec")).alias("__nc")
-                )
-            )
-        )
-        .select(
-            id_col,
-            "__v",
-            "cid",
-            # COALESCE(-2.0): a zero-norm vector or zero centroid scores
-            # NULL; -2 sits below any true cosine so the argmax is
-            # deterministic on both engines without relying on their
-            # (different) NULL-ordering defaults (differential-fuzz)
-            F.floor(
-                F.coalesce(
-                    F.try_divide(
-                        _dot(F.col("__v"), F.col("cvec")),
-                        F.col("__nv") * F.col("__nc"),
-                    ),
-                    F.lit(-2.0),
-                )
-                * kscale
-                + F.lit(0.5)
-            ).alias("__s"),
-        )
-    )
+    """(id, cid), plus the vector itself with ``keep_vec``, for every row
+    of ``df``: ``_nearest`` over the sorted (cid, cvec) rows ``cents``,
+    once per Arrow batch. No centroid: no row, as in the SQL cross join."""
+    src = df.select(id_col, vec_col)
+    fields = [src.schema[id_col], StructField("cid", LongType())]
+    if keep_vec:
+        fields.append(src.schema[vec_col])
+    schema = StructType(fields)
+    if not cents:
+        return local_df(df.sparkSession, [], schema)
+    cids = pa.array([c for c, _v in cents], type=pa.int64())
+
+    def gen(batches):
+        for batch in batches:
+            vecs = batch.column(1)
+            x, lens, valid, present = _arrow_vectors(vecs)
+            scorable = _scorable(lens, valid, present)
+            win = _nearest(x, lens, scorable, cents, round_digits)
+            cols = [batch.column(0), cids.take(pa.array(win))]
+            if keep_vec:
+                cols.append(vecs)
+            yield pa.RecordBatch.from_arrays(cols, names=schema.names)
+
+    return src.mapInArrow(gen, schema)
 
 
 def kmeans_assign_gemm(
@@ -756,9 +765,9 @@ def kmeans_assign_gemm(
     same (id, cid) contract, same rounded-cosine argmax with min-cid
     tie-break, same NULL/zero-norm → −2 sentinel.
 
-    Why it exists: the Catalyst assignment is a k-way broadcast
-    nested-loop whose per-pair score is an interpreted lambda fold —
-    O(n·k·d) lambda evaluations. That is fine at fixed small k, but the
+    Why it exists: the fold assignment (``kmeans_assign``) adds the
+    n·k·d products one dimension at a time, to stay bit-identical to the
+    sequential SQL fold. That is fine at fixed small k, but the
     SemDeDup k∝n contract makes k grow with the corpus, and the
     assignment becomes the quadratic term (r7 ladder: auto-k α=2.02
     through the fold path). Here the scores for a batch are one
@@ -886,12 +895,12 @@ def kmeans_fit(
     the whole corpus.
 
     ``assign``: 'fold' (default) scores each (vector, centroid) pair
-    with the sequential Catalyst fold — bit-identical to the SQL oracle,
-    the pinned-k replay path; 'gemm' runs ``kmeans_assign_gemm`` for the
-    final pass and, above the bounds, for every iteration — O(n·k·d)
-    BLAS instead of O(n·k·d) interpreted lambdas, the k∝n path (see its
-    float caveat). The driver-side iterations always use the fold's
-    arithmetic.
+    with the sequential fold (``kmeans_assign``) — bit-identical to the
+    SQL oracle, the pinned-k replay path; 'gemm' runs
+    ``kmeans_assign_gemm`` for the final pass and, above the bounds, for
+    every iteration — one BLAS call per batch instead of the sequential
+    fold, the k∝n path (see its float caveat). The driver-side
+    iterations always use the fold's arithmetic.
 
     ``seed``: 'id_lt_k' (default) seeds from rows with id < k — the
     original deterministic scheme, but under a filtered training corpus
@@ -941,11 +950,13 @@ def _fit_rows(vecs: DataFrame, vec_col: str) -> list | None:
     one may run several jobs, each shipping up to the limit from every
     partition it scans. Only a corpus within both bounds is then
     collected."""
-    sizes = (
-        vecs.select(F.size(vec_col)).limit(_FIT_ROWS + 1).toArrow().column(0)
-    ).to_pylist()
-    values = sum(s for s in sizes if s is not None and s > 0)
-    if len(sizes) > _FIT_ROWS or values > _FIT_VALUES:
+    try:
+        sizes = collect_bounded(
+            vecs.select(F.size(vec_col)), _FIT_ROWS, "kmeans_fit size probe"
+        )
+    except TooManyRows:
+        return None
+    if sum(s for (s,) in sizes if s is not None and s > 0) > _FIT_VALUES:
         return None
     return vecs.collect()
 
@@ -984,53 +995,28 @@ def _lloyd_distributed(
         if seed == "id_lt_k"
         else vecs.orderBy(id_col).limit(k)
     )
-    # explicit schema: empty corpus -> zero seed centroids (see
-    # cosine_topk_ivf note)
-    cents = local_df(
-        spark,
-        _seed_rows(seed_src.collect(), k, seed),
-        "cid long, cvec array<double>",
-    )
+    cents = _seed_rows(seed_src.collect(), k, seed)
     for _ in range(n_iter):
         # update: element-wise mean per cluster, rebuilt into an array
         # ordered by dimension; empty clusters drop out (their cid simply
         # stops attracting points — Lloyd's standard degenerate case).
-        # The rounded per-(cid, pos) means are collected to the driver
-        # and re-embedded as a local relation: the centroid relation is
-        # O(k·dim) — the same driver-size class the gemm assignment path
-        # collects every iteration anyway — and a local relation feeds
-        # the next assignment pass with NO broadcast-build job and no
-        # checkpoint materialization (a lazy localCheckpoint of an AQE
-        # plan still force-runs every intermediate stage serially via
-        # toRdd: measured 7-9 scheduler round-trips per Lloyd iteration
-        # vs 2-3 for this one collect). Values are bit-identical: the
-        # distributed avg+round aggregate is unchanged, and the driver
-        # only reassembles its output rows into pos-ordered arrays —
-        # exactly what the former array_sort(collect_list(struct)) tail
-        # did (pos is unique per cid, so the orders coincide).
+        # The rounded per-(cid, pos) means are collected to the driver:
+        # the centroids are O(k·dim), the same driver-size class the gemm
+        # assignment path collects every iteration anyway, and the next
+        # assignment pass takes them as Python rows (pos is unique per
+        # cid, so sorting by pos rebuilds each centroid exactly).
         if assign_fn is kmeans_assign:
-            # the vector rides THROUGH the argmin aggregate (F.first over
-            # the k identical copies the broadcast nested-loop makes), so
-            # the update needs no join-back shuffle of the corpus — one
-            # exchange per iteration instead of two (guide §2.4). Ids are
-            # unique (the relation contract throughout this repo), so
-            # first(__v) is the row's own vector, not a choice.
-            ordk = F.struct(
-                (-F.col("__s")).alias("s"), F.col("cid").alias("c")
-            )
-            assigned = (
-                _assign_scored(vecs, cents, id_col, vec_col, round_digits)
-                .groupBy(id_col)
-                .agg(
-                    F.min_by(F.col("cid"), ordk).alias("cid"),
-                    F.first("__v").alias("__v"),
-                )
-            )
-            exploded = assigned.select(
-                "cid", F.posexplode("__v").alias("pos", "val")
-            )
+            # the vector rides through the narrow assignment pass, so the
+            # update needs no join-back shuffle of the corpus — one
+            # exchange per iteration instead of two (guide §2.4)
+            exploded = _assign_pass(
+                vecs, cents, id_col, vec_col, round_digits, True
+            ).select("cid", F.posexplode(vec_col).alias("pos", "val"))
         else:
-            cur = assign_fn(vecs, cents, id_col, vec_col, round_digits)
+            cur = assign_fn(
+                vecs, local_df(spark, cents, "cid long, cvec array<double>"),
+                id_col, vec_col, round_digits,
+            )
             exploded = vecs.join(cur, id_col).select(
                 "cid", F.posexplode(vec_col).alias("pos", "val")
             )
@@ -1046,15 +1032,13 @@ def _lloyd_distributed(
             by_cid.setdefault(int(r[0]), []).append(
                 (int(r[1]), None if r[2] is None else float(r[2]))
             )
-        cents = local_df(
-            spark,
-            [
-                (cid, [m for _, m in sorted(vals)])
-                for cid, vals in sorted(by_cid.items())
-            ],
-            "cid long, cvec array<double>",
-        )
-    return cents
+        cents = [
+            (cid, [m for _, m in sorted(vals)])
+            for cid, vals in sorted(by_cid.items())
+        ]
+    # explicit schema: empty corpus -> zero centroids (see
+    # cosine_topk_ivf note)
+    return local_df(spark, cents, "cid long, cvec array<double>")
 
 
 def _lloyd_local(
@@ -1066,60 +1050,21 @@ def _lloyd_local(
     """``n_iter`` Lloyd iterations over collected vectors from the
     (cid, cvec) seeds, sorted by cid; returns the centroids likewise.
 
-    Assignment is ``kmeans_assign``'s arithmetic: dot and squared norm
-    are sequential float64 folds from +0.0 (bit-identical to the
-    Catalyst fold), the score is FLOOR(COALESCE(dot / (|v| |c|), -2) *
-    10^d + 0.5) where a zero divisor, a NULL vector or component, or a
-    length mismatch gives the -2 sentinel, and the floor converts to a
-    long as Spark's does (saturating; NaN -> 0). The winner is the
-    highest score, ties to the smallest cid. The update is Spark's
-    ROUND(AVG(val), d) per (cid, position) over the non-NULL elements:
-    NULL where a position has none, and a cid whose members have no
-    elements at all drops out. Sums are exact (``math.fsum``), so the
-    centroids do not depend on row order."""
+    Assignment is ``kmeans_assign``'s arithmetic (``_nearest``). The
+    update is Spark's ROUND(AVG(val), d) per (cid, position) over the
+    non-NULL elements: NULL where a position has none, and a cid whose
+    members have no elements at all drops out. Sums are exact
+    (``math.fsum``), so the centroids do not depend on row order."""
     n = len(vecs)
-    lens = np.array([0 if v is None else len(v) for v in vecs], dtype=np.int64)
-    width = int(lens.max(initial=0))
-    x = np.zeros((n, width))
-    valid = np.arange(width)[None, :] < lens[:, None]
-    scorable = np.array([v is not None for v in vecs], dtype=bool)
-    for i, v in enumerate(vecs):
-        if v:
-            x[i, : len(v)] = v  # a None component reads as NaN
-            if None in v:
-                scorable[i] = False
-                valid[i, [j for j, e in enumerate(v) if e is None]] = False
-    kscale = float(10**round_digits)
-    sentinel = math.floor(-2.0 * kscale + 0.5)
+    x, lens, valid, present = _arrow_vectors(
+        pa.array(vecs, type=pa.list_(pa.float64()))
+    )
+    scorable = _scorable(lens, valid, present)
     for _ in range(n_iter):
         if not cents or not n:
             return []
-        groups = []
-        for length in np.unique(lens[scorable]):
-            ci = [
-                j
-                for j, (_c, cv) in enumerate(cents)
-                if cv is not None and len(cv) == length and None not in cv
-            ]
-            if ci:
-                cm = np.array([cents[j][1] for j in ci])
-                cm = cm.reshape(len(ci), length)
-                groups.append((length, ci, cm, _norms(cm)))
         cids = np.array([c for c, _v in cents], dtype=np.int64)
-        win = np.empty(n, dtype=np.int64)
-        # row chunks keep each (rows, centroids) block near 8 MiB
-        step = max(1, (1 << 20) // len(cents))
-        for lo in range(0, n, step):
-            hi = min(n, lo + step)
-            score = np.full((hi - lo, len(cents)), sentinel, dtype=np.int64)
-            for length, ci, cm, nc in groups:
-                r = np.flatnonzero(scorable[lo:hi] & (lens[lo:hi] == length))
-                v = x[lo + r, :length]
-                den = _norms(v)[:, None] * nc[None, :]
-                with np.errstate(all="ignore"):
-                    cos = np.where(den == 0, -2.0, _dots(v, cm) / den)
-                    score[np.ix_(r, ci)] = _floor_long(cos * kscale + 0.5)
-            win[lo:hi] = cids[score.argmax(axis=1)]
+        win = cids[_nearest(x, lens, scorable, cents, round_digits)]
         order = np.argsort(win, kind="stable")
         bounds = np.flatnonzero(np.diff(win[order])) + 1
         new = []
@@ -1139,6 +1084,77 @@ def _lloyd_local(
             new.append((int(win[idx[0]]), cvec))
         cents = new
     return cents
+
+
+def _arrow_vectors(col) -> tuple:
+    """(x, lens, valid, present) of a list<float|double> Arrow column:
+    ``x`` is the (rows, longest) float64 matrix, 0 past a row's end and
+    NaN at a NULL element; ``valid`` marks the non-NULL elements within
+    each row's length, ``present`` the non-NULL rows."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    n = len(col)
+    present = ~col.is_null().to_numpy(zero_copy_only=False)
+    lens = col.value_lengths().fill_null(0).to_numpy(zero_copy_only=False)
+    lens = lens.astype(np.int64)
+    flat = col.flatten().cast(pa.float64())
+    vals = flat.to_numpy(zero_copy_only=False)
+    ok = ~flat.is_null().to_numpy(zero_copy_only=False)
+    rows = np.repeat(np.arange(n), lens)
+    pos = np.arange(len(vals)) - np.repeat(np.cumsum(lens) - lens, lens)
+    width = int(lens.max(initial=0))
+    x = np.zeros((n, width))
+    x[rows, pos] = vals
+    valid = np.zeros((n, width), dtype=bool)
+    valid[rows, pos] = ok
+    return x, lens, valid, present
+
+
+def _scorable(lens, valid, present) -> np.ndarray:
+    """Rows that are non-NULL and hold no NULL element."""
+    in_len = np.arange(valid.shape[1])[None, :] < lens[:, None]
+    return present & ~(in_len & ~valid).any(axis=1)
+
+
+def _nearest(x, lens, scorable, cents, round_digits) -> np.ndarray:
+    """Index into the sorted (cid, cvec) rows ``cents`` of each row's
+    nearest centroid: the exact replica of the SQL assignment fold.
+
+    Dot and squared norm are sequential float64 folds from +0.0 (the
+    Catalyst and DuckDB folds), the score is FLOOR(COALESCE(dot / (|v|
+    |c|), -2) * 10^d + 0.5) where a zero divisor, a NULL vector or
+    component, or a length mismatch gives the -2 sentinel, and the floor
+    converts to a long as Spark's does (saturating; NaN -> 0). The winner
+    is the highest score, ties to the first row of ``cents``."""
+    n = len(lens)
+    kscale = float(10**round_digits)
+    sentinel = math.floor(-2.0 * kscale + 0.5)
+    groups = []
+    for length in np.unique(lens[scorable]):
+        ci = [
+            j
+            for j, (_c, cv) in enumerate(cents)
+            if cv is not None and len(cv) == length and None not in cv
+        ]
+        if ci:
+            cm = np.array([cents[j][1] for j in ci], dtype=np.float64)
+            cm = cm.reshape(len(ci), length)
+            groups.append((length, ci, cm, _norms(cm)))
+    win = np.empty(n, dtype=np.int64)
+    # row chunks keep each (rows, centroids) block near 8 MiB
+    step = max(1, (1 << 20) // len(cents))
+    for lo in range(0, n, step):
+        hi = min(n, lo + step)
+        score = np.full((hi - lo, len(cents)), sentinel, dtype=np.int64)
+        for length, ci, cm, nc in groups:
+            r = np.flatnonzero(scorable[lo:hi] & (lens[lo:hi] == length))
+            v = x[lo + r, :length]
+            den = _norms(v)[:, None] * nc[None, :]
+            with np.errstate(all="ignore"):
+                cos = np.where(den == 0, -2.0, _dots(v, cm) / den)
+                score[np.ix_(r, ci)] = _floor_long(cos * kscale + 0.5)
+        win[lo:hi] = score.argmax(axis=1)
+    return win
 
 
 def _norms(a: np.ndarray) -> np.ndarray:
@@ -1323,8 +1339,8 @@ def semantic_dedup_with_centroids(
     comparable — the same reason ``incremental_semantic_dedup`` routes
     batches to the store's fitted centroids instead of re-training.
 
-    Scale shape: assignment is a broadcast nested-loop (centroids are
-    O(k) rows) + one map-side-combined argmax; the pairwise stage is
+    Scale shape: assignment is one narrow numpy pass per Arrow batch
+    (centroids are O(k) rows, read once to the driver); the pairwise stage is
     grouped by cluster — sum(|cluster|^2), never |corpus|^2."""
     assign = kmeans_assign(
         df, cents, id_col, vec_col, round_digits

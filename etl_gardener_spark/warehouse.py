@@ -54,6 +54,11 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.observation import Observation
 
+from etl_gardener_spark.functions.localrel import (
+    TooManyRows,
+    collect_bounded,
+    local_df,
+)
 from etl_gardener_spark.parallel import run_jobs
 
 DATE_COL = "date"
@@ -128,6 +133,16 @@ def _data_files(spark: SparkSession, path: str) -> list:
         for st in fs.listStatus(_hadoop_path(spark, path))
         if st.isFile() and not st.getPath().getName().startswith(("_", "."))
     ]
+
+
+def _has_data(spark: SparkSession, path: str) -> bool:
+    """Whether any data file lies under ``path``, at any depth (the
+    listing stops at the first one)."""
+    files = _hadoop_fs(spark, path).listFiles(_hadoop_path(spark, path), True)
+    while files.hasNext():
+        if not files.next().getPath().getName().startswith(("_", ".")):
+            return True
+    return False
 
 
 def _open_footer(spark: SparkSession, status):
@@ -321,6 +336,12 @@ class Warehouse:
         if not self.path_exists(spark, path):
             # Missing partition: fall back to the pruned root scan, which
             # yields a correctly-typed empty frame when the table exists.
+            # A table directory that holds no data file (its last day was
+            # deleted) has no schema to infer: that day is an empty frame
+            # of just the date column.
+            table = self.table_path(tier, experiment, datatype)
+            if self.path_exists(spark, table) and not _has_data(spark, table):
+                return local_df(spark, [], f"{DATE_COL} date")
             df = self.read(spark, tier, experiment, datatype)
             return df.filter(F.col(DATE_COL) == F.lit(day.isoformat()).cast("date"))
         return _read_day(spark, path, day)
@@ -845,21 +866,21 @@ def affected_dates(
     the downstream per-day rewrite into an unbounded driver loop, so the
     helper refuses above ``max_dates`` and tells the caller to use a
     full-table rebuild instead. The cap check collects at most
-    ``max_dates + 1`` date values (LocalLimit on the aggregated,
-    already-tiny distinct relation — never a row collect).
+    ``max_dates + 1`` date values (``collect_bounded``: the limit runs on
+    the executors, over the aggregated distinct relation).
     """
-    dates = [
-        r[0]
-        for r in df.select(date_col).distinct().limit(max_dates + 1).collect()
-    ]
-    if len(dates) > max_dates:
+    try:
+        rows = collect_bounded(
+            df.select(date_col).distinct(), max_dates, "affected dates"
+        )
+    except TooManyRows as exc:
         raise ValueError(
             f"batch touches more than {max_dates} distinct {date_col!r} "
             "partitions; per-day refresh would be an unbounded driver "
             "loop — rebuild the derived table with a full overwrite, or "
             "raise max_dates deliberately"
-        )
-    return sorted(dates)
+        ) from exc
+    return sorted(r[0] for r in rows)
 
 
 def _staged_dirs(spark: SparkSession, root: str):

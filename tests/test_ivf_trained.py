@@ -398,3 +398,26 @@ def test_opq_rotation_and_codebooks_roundtrip(spark, tmp_path):
     d4 = str(tmp_path / "nocb")
     save_ann_index(d4, anchor)
     assert load_ann_index(spark, d4)["codebooks"] is None
+
+
+def test_ivfpq_trained_job_count(spark):
+    """One ``emb_ann_topk_ivfpq_trained`` call at sf0.01, built and run:
+    the fit's size probe and collect, the seeded codebook collect, and 8
+    execution jobs. The centroids and codebook reach the encode, assign
+    and query-table kernels without a job (15 jobs when those kernels
+    were Catalyst lambda folds)."""
+    import os
+
+    from etl_gardener_spark.orchestrator.metrics import spark_cost
+    from etl_gardener_spark.plans import queries as Q
+    from etl_gardener_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    fn = Q.REGISTRY["emb_ann_topk_ivfpq_trained"].fn
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    load_table(spark, sf, "embeddings")  # caches the schema: not counted
+    with spark_cost(spark) as cost:
+        fn(spark, sf).write.format("noop").mode(
+            "overwrite"
+        ).save()
+    assert cost.jobs == 11, cost

@@ -182,15 +182,15 @@ def test_row_permutation_gives_identical_centroids(emb):
 
 def test_fit_job_count(spark, emb):
     """Within the bounds the fit is two jobs, the size probe and the
-    collect; the returned centroid relation is already materialized, so
-    reading it costs only its own one-slice scan (the distributed loop
-    runs 9 jobs before that scan)."""
+    collect; the returned centroid relation is a local relation, so
+    reading it runs no job (the distributed loop runs 9 jobs before
+    it)."""
     df = emb["sf0.1"]
     with spark_cost(spark) as fit:
         _final, cents = SIM.kmeans_fit(df, "vec_id", "embedding", k=16)
     with spark_cost(spark) as read:
         cents.collect()
-    assert (fit.jobs, read.jobs) == (2, 1)
+    assert (fit.jobs, read.jobs) == (2, 0)
 
 
 def _driver_bytes(spark, fn):

@@ -1,4 +1,4 @@
-"""Round-7 additions: single-slice local relations (functions/localrel),
+"""Round-7 additions: zero-job local relations (functions/localrel),
 SemDeDup auto-k (the executable k∝n contract), and LSH auto-tuning
 keyed on corpus size + threshold."""
 
@@ -14,6 +14,7 @@ from etl_gardener_spark.operators.neardup import (
     lsh_auto_params,
     minhash_lsh_pairs,
 )
+from etl_gardener_spark.orchestrator.metrics import spark_cost
 from etl_gardener_spark.operators.similarity import (
     semantic_dedup,
     semdedup_auto_k,
@@ -23,15 +24,53 @@ from etl_gardener_spark.sources.tables import load_table
 from tests.conftest import SF_DIR
 
 
-def test_local_df_single_slice_and_null_nan_semantics(spark):
-    rows = [("a", 1, None), ("b", 2, float("nan"))]
-    df = local_df(spark, rows, "k string, n long, x double")
-    # ONE slice — a scan of this relation is one task, not
-    # defaultParallelism Python-worker round-trips
-    assert df.rdd.getNumPartitions() == 1
-    got = {r["k"]: (r["n"], r["x"]) for r in df.collect()}
-    assert got["a"] == (1, None)  # None stays NULL
-    assert math.isnan(got["b"][1])  # NaN stays NaN (not folded to NULL)
+def test_local_df_zero_job_scans_and_null_nan_semantics(spark):
+    nan = float("nan")
+    rows = [
+        ("a", 1, None, [1.0, None], (None, 2.0)),
+        ("b", 2, nan, [nan, 3.0], (nan, None)),
+        ("c", 3, 4.0, None, None),
+    ]
+    df = local_df(
+        spark, rows,
+        "k string, n long, x double, v array<double>, "
+        "st struct<p: double, q: double>",
+    )
+    # a local relation: every scan plans a LocalTableScan and runs no job
+    for scan in (
+        df.collect,
+        lambda: df.select("n").collect(),
+        lambda: df.filter(F.col("n") > 1).limit(1).collect(),
+    ):
+        with spark_cost(spark) as cost:
+            scan()
+        assert cost.jobs == 0, scan
+    got = {r["k"]: r for r in df.collect()}
+    # None stays NULL and NaN stays NaN: a double, array elements and
+    # struct fields
+    assert got["a"]["x"] is None
+    assert math.isnan(got["b"]["x"])
+    assert got["a"]["v"][1] is None and math.isnan(got["b"]["v"][0])
+    assert got["c"]["v"] is None and got["c"]["st"] is None
+    assert got["a"]["st"]["p"] is None and got["a"]["st"]["q"] == 2.0
+    assert math.isnan(got["b"]["st"]["p"]) and got["b"]["st"]["q"] is None
+    # the same rows through Spark's own SQL see the same NULL/NaN split
+    flags = df.select(
+        "k",
+        F.isnull("x").alias("xn"),
+        F.isnan("x").alias("xnan"),
+        F.isnull(F.col("v")[0]).alias("v0n"),
+        F.isnan(F.col("v")[0]).alias("v0nan"),
+    ).collect()
+    assert {tuple(r) for r in flags} == {
+        ("a", True, False, False, False),
+        ("b", False, True, False, True),
+        ("c", False, False, True, False),
+    }
+    empty = local_df(spark, [], "k string, v array<double>")
+    with spark_cost(spark) as cost:
+        assert empty.collect() == []
+    assert cost.jobs == 0 and empty.columns == ["k", "v"]
 
 
 def test_local_df_empty_rows_with_explicit_schema(spark):

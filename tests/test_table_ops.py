@@ -525,6 +525,26 @@ def test_read_partition_takes_footer_schema(spark, tmp_path):
     assert sorted(r.k for r in foreign.collect()) == [1, 2]
 
 
+def test_read_partition_on_emptied_table(spark, tmp_path):
+    """Deleting a table's only day leaves its directory with no data
+    file. Reading any day of it is then an empty frame, not an
+    UNABLE_TO_INFER_SCHEMA error from the root-scan fallback."""
+    from pyspark.sql import functions as F
+
+    wh = Warehouse(str(tmp_path / "wh"))
+    day = date(2024, 3, 1)
+    df = spark.createDataFrame([("a", 1.0)], "id string, v double")
+    wh.append_day(
+        df.withColumn("date", F.lit("2024-03-01").cast("date")),
+        "tmp", "ndt", "ndt7", day,
+    )
+    assert wh.delete_partition(spark, "tmp", "ndt", "ndt7", day)
+    assert os.path.isdir(wh.table_path("tmp", "ndt", "ndt7"))
+    for d in (day, date(2024, 3, 2)):
+        got = wh.read_partition(spark, "tmp", "ndt", "ndt7", d)
+        assert got.collect() == [] and "date" in got.columns
+
+
 def test_chain_op_job_counts(spark, tmp_path, landing):
     """Each chain op is its write job. Reads take the footer schema (no
     inference job); output counts ride the write and dedup's input count
