@@ -61,7 +61,6 @@ from etl_gardener_spark.functions.localrel import (
 from etl_gardener_spark.operators.similarity import (
     _arrow_vectors,
     _floor_long,
-    _model_rows,
     ivf_centroids,
 )
 
@@ -214,7 +213,6 @@ def pq_encode(
     m: int = 4,
     sub_dim: int = 16,
     k_sub: int = 16,
-    codebook: DataFrame | None = None,
 ) -> DataFrame:
     """Encode every corpus vector to ``m`` PQ codes plus its exact-integer
     reconstruction error.
@@ -228,30 +226,21 @@ def pq_encode(
     distance first and breaks ties to the smallest cid; a NULL distance
     makes recon_err NULL. tests/test_assign_encode_kernels.py keeps the
     SQL min_by tree as the bit-equality reference. A non-NULL vector
-    shorter than m*sub_dim raises.
-
-    ``codebook``: an explicit (cid, cvec) relation — the residual-PQ
-    path passes a codebook seeded from residual vectors; None keeps the
-    deterministic first-k_sub corpus seeding."""
-    cb = (
-        ivf_centroids(corpus, id_col, vec_col, n_centroids=k_sub)
-        if codebook is None
-        else _model_rows(codebook, "pq codebook")
-    )
+    shorter than m*sub_dim raises. The codebook is the deterministic
+    first-k_sub corpus seeding (``ivf_centroids``)."""
+    cb = ivf_centroids(corpus, id_col, vec_col, n_centroids=k_sub)
     return _encode(corpus, id_col, vec_col, m, sub_dim, cb)
 
 
 def exploded_codes(
     corpus: DataFrame, id_col: str, vec_col: str, m: int, sub_dim: int,
-    k_sub: int, codebook: DataFrame | None = None,
+    k_sub: int,
 ) -> DataFrame:
     """(neighbor_id, s, code): the encoded corpus melted to one row per
     sub-space — the relation ADC search actually reads (m small ints per
     vector; raw vectors never appear downstream of this)."""
     return _explode(
-        pq_encode(corpus, id_col, vec_col, m, sub_dim, k_sub, codebook),
-        id_col,
-        m,
+        pq_encode(corpus, id_col, vec_col, m, sub_dim, k_sub), id_col, m
     )
 
 

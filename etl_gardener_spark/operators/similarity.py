@@ -683,7 +683,9 @@ def kmeans_assign(
     is assigned on its own, so a duplicated id yields one row per copy.
 
     The centroids are read to the driver once (``_model_rows``: a bounded
-    collect, no Spark job for a local relation), and each Arrow batch of
+    collect, no Spark job for a local relation; a relation of more than
+    ``_MODEL_ROWS`` = 65,536 centroids raises TooManyRows while the plan
+    is built, before any corpus pass), and each Arrow batch of
     ``df`` is scored by ``_nearest`` in one narrow ``mapInArrow`` pass —
     no broadcast nested loop, no aggregate, no shuffle.
 
@@ -900,7 +902,10 @@ def kmeans_fit(
     ``kmeans_assign_gemm`` for the final pass and, above the bounds, for
     every iteration — one BLAS call per batch instead of the sequential
     fold, the k∝n path (see its float caveat). The driver-side
-    iterations always use the fold's arithmetic.
+    iterations always use the fold's arithmetic. 'fold' reads the
+    centroids to the driver (``kmeans_assign``), so it takes at most
+    ``_MODEL_ROWS`` = 65,536 of them: a larger ``k`` raises ValueError
+    before any training.
 
     ``seed``: 'id_lt_k' (default) seeds from rows with id < k — the
     original deterministic scheme, but under a filtered training corpus
@@ -911,6 +916,11 @@ def kmeans_fit(
         raise ValueError(f"assign must be 'fold' or 'gemm', got {assign!r}")
     if seed not in ("id_lt_k", "first_k"):
         raise ValueError(f"seed must be 'id_lt_k' or 'first_k', got {seed!r}")
+    if assign == "fold" and k > _MODEL_ROWS:
+        raise ValueError(
+            f"kmeans_fit: assign='fold' takes at most {_MODEL_ROWS} "
+            f"centroids, got k={k}; use assign='gemm'"
+        )
     assign_fn = kmeans_assign if assign == "fold" else kmeans_assign_gemm
     vecs = df.select(F.col(id_col), F.col(vec_col))
     rows = _fit_rows(vecs, vec_col)
@@ -1340,8 +1350,10 @@ def semantic_dedup_with_centroids(
     batches to the store's fitted centroids instead of re-training.
 
     Scale shape: assignment is one narrow numpy pass per Arrow batch
-    (centroids are O(k) rows, read once to the driver); the pairwise stage is
-    grouped by cluster — sum(|cluster|^2), never |corpus|^2."""
+    (centroids are O(k) rows, read once to the driver: at most
+    ``_MODEL_ROWS`` = 65,536, a larger ``cents`` raises TooManyRows
+    before any pass); the pairwise stage is grouped by cluster —
+    sum(|cluster|^2), never |corpus|^2."""
     assign = kmeans_assign(
         df, cents, id_col, vec_col, round_digits
     ).withColumnRenamed("cid", "cluster_id")

@@ -2603,9 +2603,10 @@ def emb_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Product quantization encode (operators/pq.py): every vector
     compressed to 4 sub-space codebook codes (16 entries each — 2 bytes
     total vs 256 B of floats) plus its exact-integer reconstruction
-    error. The 100 TB memory-footprint path of similarity search: one
-    broadcast-join corpus pass, codes assigned by a map-side-combined
-    min_by per sub-space, every comparison in integer micros."""
+    error. The 100 TB memory-footprint path of similarity search: the
+    16-entry codebook read to the driver once, then one narrow
+    mapInArrow corpus pass encoding each Arrow batch in numpy (no join,
+    no shuffle), every comparison in integer micros."""
     from etl_gardener_spark.operators import pq as PQ
 
     e = load_table(spark, sf_dir, "embeddings")

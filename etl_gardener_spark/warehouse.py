@@ -131,17 +131,30 @@ def _data_files(spark: SparkSession, path: str) -> list:
     return [
         st
         for st in fs.listStatus(_hadoop_path(spark, path))
-        if st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        if st.isFile() and not _hidden(st.getPath().getName())
     ]
 
 
+def _hidden(name: str) -> bool:
+    """Whether Spark's file index skips a file or directory of this name:
+    hidden and underscore names (``_SUCCESS``, ``_temporary``,
+    ``.spark-staging-*``), but not an ``_key=value`` partition."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _has_data(spark: SparkSession, path: str) -> bool:
-    """Whether any data file lies under ``path``, at any depth (the
-    listing stops at the first one)."""
-    files = _hadoop_fs(spark, path).listFiles(_hadoop_path(spark, path), True)
-    while files.hasNext():
-        if not files.next().getPath().getName().startswith(("_", ".")):
-            return True
+    """Whether a table scan of ``path`` would find a data file: one at
+    any depth, below no hidden directory, so a crashed writer's leftover
+    staging files do not count. The walk stops at the first one."""
+    fs = _hadoop_fs(spark, path)
+    todo = [_hadoop_path(spark, path)]
+    while todo:
+        for st in fs.listStatus(todo.pop()):
+            if _hidden(st.getPath().getName()):
+                continue
+            if st.isFile():
+                return True
+            todo.append(st.getPath())
     return False
 
 

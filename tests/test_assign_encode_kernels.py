@@ -249,7 +249,9 @@ def _encode_pair(spark, rows, cb=None, schema=PQ_SCHEMA, id_col="vec_id"):
         got = PQ.pq_encode(df, id_col, "embedding", M, SUB, KSUB)
     else:
         cdf = local_df(spark, cb, CENT_SCHEMA)
-        got = PQ.pq_encode(df, id_col, "embedding", M, SUB, KSUB, codebook=cdf)
+        got = PQ._encode(
+            df, id_col, "embedding", M, SUB, SIM._model_rows(cdf, "cb")
+        )
     ref = ref_pq_encode(df, cdf, id_col, "embedding", M, SUB)
     return _canon(got.collect()), _canon(ref.collect())
 
@@ -296,7 +298,7 @@ def test_query_dist_table_matches_catalyst(spark):
     for cb in (SIM.ivf_centroids(queries, "vec_id", "embedding", KSUB),
                PQ_EDGE_CB):
         cdf = local_df(spark, cb, CENT_SCHEMA)
-        got = PQ._query_dist_table(queries, PQ._model_rows(cdf, "cb"),
+        got = PQ._query_dist_table(queries, SIM._model_rows(cdf, "cb"),
                                    "vec_id", "embedding", M, SUB)
         ref = ref_query_dist_table(queries, cdf, "vec_id", "embedding", M, SUB)
         g, r = _canon(got.collect()), _canon(ref.collect())
@@ -396,3 +398,15 @@ def test_collect_bounded_local_relation_is_free(spark):
     assert [r[0] for r in rows] == [c for c, _v in KM_CENTS]
     with pytest.raises(TooManyRows):
         collect_bounded(cents, 3, "cents")
+
+
+def test_kmeans_fit_refuses_fold_k_above_model_bound_before_training(spark):
+    """assign='fold' reads its centroids through ``_model_rows``, so a k
+    above that bound is refused up front, not after the Lloyd loop."""
+    from etl_gardener_spark.orchestrator.metrics import spark_cost
+
+    df = _rel(spark, KM_VECS, KM_SCHEMA)
+    with spark_cost(spark) as cost:
+        with pytest.raises(ValueError, match=f"at most {SIM._MODEL_ROWS}"):
+            SIM.kmeans_fit(df, k=SIM._MODEL_ROWS + 1)
+    assert cost.jobs == 0

@@ -528,7 +528,9 @@ def test_read_partition_takes_footer_schema(spark, tmp_path):
 def test_read_partition_on_emptied_table(spark, tmp_path):
     """Deleting a table's only day leaves its directory with no data
     file. Reading any day of it is then an empty frame, not an
-    UNABLE_TO_INFER_SCHEMA error from the root-scan fallback."""
+    UNABLE_TO_INFER_SCHEMA error from the root-scan fallback — also when
+    a crashed writer left part files in hidden staging directories,
+    which a table scan skips."""
     from pyspark.sql import functions as F
 
     wh = Warehouse(str(tmp_path / "wh"))
@@ -539,10 +541,16 @@ def test_read_partition_on_emptied_table(spark, tmp_path):
         "tmp", "ndt", "ndt7", day,
     )
     assert wh.delete_partition(spark, "tmp", "ndt", "ndt7", day)
-    assert os.path.isdir(wh.table_path("tmp", "ndt", "ndt7"))
+    table = wh.table_path("tmp", "ndt", "ndt7")
+    assert os.path.isdir(table)
     for d in (day, date(2024, 3, 2)):
         got = wh.read_partition(spark, "tmp", "ndt", "ndt7", d)
         assert got.collect() == [] and "date" in got.columns
+    for left in (".spark-staging-1/date=2024-03-01", "_temporary/0/task"):
+        os.makedirs(os.path.join(table, left))
+        df.write.parquet(os.path.join(table, left, "out"))
+    got = wh.read_partition(spark, "tmp", "ndt", "ndt7", day)
+    assert got.collect() == [] and "date" in got.columns
 
 
 def test_chain_op_job_counts(spark, tmp_path, landing):
