@@ -147,11 +147,13 @@ def save_ann_index(
 def load_ann_index(
     spark: SparkSession, index_dir: str
 ) -> dict[str, DataFrame | None]:
-    """Read the index back: {'cells', 'centroids', 'codes'} (parts not
-    written -> None). Cells come back with the partition column restored
-    to its long type; pass them straight to
+    """Read the index back: {'cells', 'centroids', 'codes',
+    'codebooks'} (parts not written -> None). Cells come back with the
+    partition column restored to its long type; pass them straight to
     ``cosine_topk_ivf(..., centroids=..., cells=...)``; ``codebooks``
-    is a persisted ``pq_fit`` relation for ``pq_topk_trained``.
+    is a persisted ``pq_fit`` relation (s, cid, cvec) for
+    ``pq_topk_trained(..., codebooks=...)``, which reads it to the
+    driver once per call (at most 65,536 rows, ``_MODEL_ROWS``).
 
     A part the save-time ``_PARTS`` marker promises but that cannot be
     read (corrupt parquet, permissions, transient FS error) RAISES —

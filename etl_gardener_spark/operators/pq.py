@@ -31,9 +31,13 @@ Codebooks come in two flavors: deterministic corpus seeds (the first
 replay default), and TRAINED per-sub-space k-means codebooks
 (``pq_fit`` / ``pq_topk_trained`` / ``pq_topk_ivf_residual_trained`` —
 FAISS ProductQuantizer::train, with the same integer-exact kernels so
-the trained results stay oracle-reproducible too). The plan shape,
-code layout, and search path are identical either way; the recall is
-not (see ``emb_pq_codebook_recall_report``).
+the trained results stay oracle-reproducible too). Either way the
+codebook is read to the driver once per call as one (cid, sub-vector)
+list per sub-space, and one numpy kernel (``_sub_dist``) computes every
+sub-distance: encoding, the ADC tables, the fit's assignment step and
+``opq_fit``'s driver-side training. The plan shape, code layout, and
+search path are identical either way; the recall is not (see
+``emb_pq_codebook_recall_report``).
 """
 
 from __future__ import annotations
@@ -44,6 +48,7 @@ import numpy as np
 import pyarrow as pa
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -59,6 +64,7 @@ from etl_gardener_spark.functions.localrel import (
     local_df,
 )
 from etl_gardener_spark.operators.similarity import (
+    _MODEL_ROWS,
     _arrow_vectors,
     _floor_long,
     ivf_centroids,
@@ -125,25 +131,24 @@ def _pq_vectors(col, need: int) -> tuple:
 
 def _sub_dist(x, valid, present, cb: list[tuple], s: int, sub_dim: int):
     """(de6, null) for sub-space ``s``: the (rows, len(cb)) integer-micro
-    squared-L2 between each row's s-th slice and each codebook entry's,
-    and where it is NULL — ``_sub_dist_e6`` exactly. The difference
-    squares are summed left to right from +0.0 in float64, then floored
-    half up to a long as Spark's FLOOR does (saturating; NaN -> 0). It is
-    NULL for a NULL row, a NULL element in either slice, or an entry
-    whose slice is short (the SQL zip pads it with NULLs)."""
-    lo, hi = s * sub_dim, (s + 1) * sub_dim
+    squared-L2 between each row's s-th slice and each of that sub-space's
+    (cid, sub-vector) entries ``cb``, and where it is NULL —
+    ``_sub_dist_e6`` exactly. The difference squares are summed left to
+    right from +0.0 in float64, then floored half up to a long as Spark's
+    FLOOR does (saturating; NaN -> 0). It is NULL for a NULL row, a NULL
+    element in either sub-vector, or an entry that is not ``sub_dim``
+    long (the SQL zip pads it with NULLs)."""
+    lo = s * sub_dim
     ents = [
         j
         for j, (_c, cv) in enumerate(cb)
-        if cv is not None
-        and len(cv[lo:hi]) == sub_dim
-        and None not in cv[lo:hi]
+        if cv is not None and len(cv) == sub_dim and None not in cv
     ]
     de6 = np.zeros((len(x), len(cb)), dtype=np.int64)
     ok = np.zeros(len(cb), dtype=bool)
     if ents:
         ok[ents] = True
-        cm = np.array([cb[j][1][lo:hi] for j in ents], dtype=np.float64)
+        cm = np.array([cb[j][1] for j in ents], dtype=np.float64)
         cm = cm.reshape(len(ents), sub_dim)
         acc = np.zeros((len(x), len(ents)))
         with np.errstate(all="ignore"):
@@ -151,8 +156,56 @@ def _sub_dist(x, valid, present, cb: list[tuple], s: int, sub_dim: int):
                 d = x[:, lo + t, None] - cm[None, :, t]
                 acc += d * d
             de6[:, ents] = _floor_long(acc * 1e6 + 0.5)
-    rows_ok = present & valid[:, lo:hi].all(axis=1)
+    rows_ok = present & valid[:, lo : lo + sub_dim].all(axis=1)
     return de6, ~(rows_ok[:, None] & ok[None, :])
+
+
+def _argmin(x, valid, present, cb: list[tuple], s: int, sub_dim: int):
+    """(win, de6, null): each row's nearest entry of sub-space ``s``'s
+    ``cb`` (an index into it), that distance, and whether it is NULL. A
+    NULL distance sorts first, then the smallest; argmin takes the first,
+    so ties go to the smallest cid (``cb`` is sorted by cid)."""
+    de6, null = _sub_dist(x, valid, present, cb, s, sub_dim)
+    win = np.where(null, np.iinfo(np.int64).min, de6).argmin(1)
+    rows = np.arange(len(x))
+    return win, de6[rows, win], null[rows, win]
+
+
+def _sub_codebooks(cb: list[tuple], m: int, sub_dim: int) -> list[list]:
+    """Full-width (cid, cvec) codebook rows, sorted by cid, as m
+    per-sub-space (cid, sub-vector) lists: each cvec is sliced once. A
+    NULL cvec gives NULL slices and a short one short slices, which
+    ``_sub_dist`` scores as NULL."""
+    return [
+        [
+            (c, None if cv is None else cv[s * sub_dim : (s + 1) * sub_dim])
+            for c, cv in cb
+        ]
+        for s in range(m)
+    ]
+
+
+def _trained_codebooks(codebooks: DataFrame, m: int) -> list[list]:
+    """A (s, cid, cvec) codebook relation (``pq_fit``'s, or one persisted
+    through index_store) read to the driver once, as m per-sub-space
+    (cid, cvec) lists sorted by cid with a NULL cid first (at most
+    ``_MODEL_ROWS`` rows; no Spark job for a local relation). Rows whose
+    s is outside 0..m-1 match no sub-vector and are left out."""
+    rows = collect_bounded(
+        codebooks.select(
+            F.col("s").cast("int"),
+            F.col("cid").cast("long"),
+            F.col("cvec").cast("array<double>"),
+        ),
+        _MODEL_ROWS,
+        "pq codebooks",
+    )
+    cbs: list[list] = [[] for _ in range(m)]
+    rows.sort(key=lambda r: (r[1] is not None, r[1] or 0))
+    for s, cid, cv in rows:
+        if s is not None and 0 <= s < m:
+            cbs[s].append((cid, cv))
+    return cbs
 
 
 def _encode(
@@ -161,46 +214,33 @@ def _encode(
     vec_col: str,
     m: int,
     sub_dim: int,
-    cb: list[tuple],
+    cbs: list[list],
 ) -> DataFrame:
-    """``pq_encode`` against the sorted (cid, cvec) codebook rows ``cb``:
-    one ``mapInArrow`` pass, ``_sub_dist`` per sub-space and batch."""
+    """(id_col, code_0..code_{m-1}, de6_0..de6_{m-1}): each row's nearest
+    entry per sub-space of the per-sub-space codebooks ``cbs`` and its
+    micro-distance (``_argmin``), one ``mapInArrow`` pass. A sub-space
+    without entries encodes nothing, so no row comes out."""
     src = corpus.select(id_col, vec_col)
     schema = StructType(
         [src.schema[id_col]]
         + [StructField(f"code_{s}", LongType()) for s in range(m)]
-        + [StructField("recon_err", DoubleType())]
+        + [StructField(f"de6_{s}", LongType()) for s in range(m)]
     )
-    if not cb:
+    if not all(cbs):
         return local_df(corpus.sparkSession, [], schema)
-    ansi = corpus.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
-    cids = pa.array([c for c, _v in cb], type=pa.int64())
+    cids = [pa.array([c for c, _v in cb], type=pa.int64()) for cb in cbs]
     need = m * sub_dim
 
     def gen(batches):
         for batch in batches:
             x, valid, present = _pq_vectors(batch.column(1), need)
-            rows = np.arange(len(x))
-            codes = []
-            total = np.zeros(len(x), dtype=np.int64)
-            null = np.zeros(len(x), dtype=bool)
-            for s in range(m):
-                de6, dnull = _sub_dist(x, valid, present, cb, s, sub_dim)
-                # a NULL distance sorts first, then the smallest; argmin
-                # takes the first, so ties go to the smallest cid
-                win = np.where(dnull, np.iinfo(np.int64).min, de6).argmin(1)
-                codes.append(cids.take(pa.array(win)))
-                wd, wnull = de6[rows, win], dnull[rows, win]
-                # the SQL sum is a long: it wraps, or raises under ANSI
-                acc = total + wd
-                if ansi and (~null & ~wnull & (acc < total)).any():
-                    raise ArithmeticError(
-                        "pq: recon_err overflows a long [ARITHMETIC_OVERFLOW]"
-                    )
-                total, null = acc, null | wnull
-            err = pa.array(total.astype(np.float64) / 1e6, mask=null)
+            codes, dists = [], []
+            for s, cb in enumerate(cbs):
+                win, d, null = _argmin(x, valid, present, cb, s, sub_dim)
+                codes.append(cids[s].take(pa.array(win)))
+                dists.append(pa.array(d, mask=null))
             yield pa.RecordBatch.from_arrays(
-                [batch.column(0), *codes, err], names=schema.names
+                [batch.column(0), *codes, *dists], names=schema.names
             )
 
     return src.mapInArrow(gen, schema)
@@ -219,17 +259,26 @@ def pq_encode(
 
     Output: (id_col, code_0..code_{m-1} long, recon_err double), one row
     per corpus row (ids are a key: a duplicated id is encoded once per
-    copy). recon_err is the sum of the chosen sub-space micro-distances
-    / 1e6. The codebook is read to the driver once, then each Arrow batch
-    of the corpus is encoded by numpy in one narrow ``mapInArrow`` pass —
-    no join, no aggregate, no raw vector shuffle. The argmin sorts a NULL
-    distance first and breaks ties to the smallest cid; a NULL distance
-    makes recon_err NULL. tests/test_assign_encode_kernels.py keeps the
-    SQL min_by tree as the bit-equality reference. A non-NULL vector
-    shorter than m*sub_dim raises. The codebook is the deterministic
-    first-k_sub corpus seeding (``ivf_centroids``)."""
+    copy). recon_err is the long sum of the chosen sub-space
+    micro-distances / 1e6 (NULL if one is NULL; under ANSI an overflowing
+    sum raises). The codebook is read to the driver once, then each Arrow
+    batch of the corpus is encoded by numpy in one narrow ``mapInArrow``
+    pass — no join, no aggregate, no raw vector shuffle. The argmin sorts
+    a NULL distance first and breaks ties to the smallest cid.
+    tests/test_assign_encode_kernels.py keeps the SQL min_by tree as the
+    bit-equality reference. A non-NULL vector shorter than m*sub_dim
+    raises. The codebook is the deterministic first-k_sub corpus seeding
+    (``ivf_centroids``)."""
     cb = ivf_centroids(corpus, id_col, vec_col, n_centroids=k_sub)
-    return _encode(corpus, id_col, vec_col, m, sub_dim, cb)
+    enc = _encode(
+        corpus, id_col, vec_col, m, sub_dim, _sub_codebooks(cb, m, sub_dim)
+    )
+    err = sum((F.col(f"de6_{s}") for s in range(m)), F.lit(0).cast("long"))
+    return enc.select(
+        id_col,
+        *[f"code_{s}" for s in range(m)],
+        (err.cast("double") / F.lit(1e6)).alias("recon_err"),
+    )
 
 
 def exploded_codes(
@@ -263,12 +312,13 @@ def _explode(encoded: DataFrame, id_col: str, m: int) -> DataFrame:
 
 
 def _dist_table(
-    df: DataFrame, keys: list[str], vec_col: str, cb: list[tuple], m: int,
+    df: DataFrame, keys: list[str], vec_col: str, cbs: list[list], m: int,
     sub_dim: int,
 ) -> DataFrame:
-    """(*keys, code, s, de6): every row's m x len(cb) micro-distance
-    table, ``_sub_dist`` per sub-space melted in one ``mapInArrow`` pass.
-    A non-NULL vector shorter than m*sub_dim raises."""
+    """(*keys, code, s, de6): every row's micro-distance to every entry of
+    the per-sub-space codebooks ``cbs``, ``_sub_dist`` per sub-space
+    melted in one ``mapInArrow`` pass. A non-NULL vector shorter than
+    m*sub_dim raises."""
     src = df.select(*keys, vec_col)
     schema = StructType(
         [src.schema[k] for k in keys]
@@ -278,34 +328,35 @@ def _dist_table(
             StructField("de6", LongType()),
         ]
     )
-    if not cb:
+    if not all(cbs):
         return local_df(df.sparkSession, [], schema)
-    cids = pa.array([c for c, _v in cb], type=pa.int64())
-    need, k = m * sub_dim, len(cb)
+    cids = [pa.array([c for c, _v in cb], type=pa.int64()) for cb in cbs]
+    need = m * sub_dim
 
     def gen(batches):
         for batch in batches:
             x, valid, present = _pq_vectors(batch.column(len(keys)), need)
-            parts = [
-                _sub_dist(x, valid, present, cb, s, sub_dim) for s in range(m)
-            ]
-            # rows ordered (row, entry, s)
-            de6 = np.stack([d for d, _n in parts], axis=2).ravel()
-            null = np.stack([n for _d, n in parts], axis=2).ravel()
-            row = pa.array(np.repeat(np.arange(len(x)), k * m))
-            ent = pa.array(np.tile(np.repeat(np.arange(k), m), len(x)))
-            sub = np.tile(np.arange(m, dtype=np.int32), len(x) * k)
-            yield pa.RecordBatch.from_arrays(
-                [batch.column(i).take(row) for i in range(len(keys))]
-                + [cids.take(ent), pa.array(sub), pa.array(de6, mask=null)],
-                names=schema.names,
-            )
+            n = len(x)
+            for s, cb in enumerate(cbs):
+                de6, null = _sub_dist(x, valid, present, cb, s, sub_dim)
+                # rows ordered (row, entry)
+                row = pa.array(np.repeat(np.arange(n), len(cb)))
+                ent = pa.array(np.tile(np.arange(len(cb)), n))
+                yield pa.RecordBatch.from_arrays(
+                    [batch.column(i).take(row) for i in range(len(keys))]
+                    + [
+                        cids[s].take(ent),
+                        pa.array(np.full(n * len(cb), s, dtype=np.int32)),
+                        pa.array(de6.ravel(), mask=null.ravel()),
+                    ],
+                    names=schema.names,
+                )
 
     return src.mapInArrow(gen, schema)
 
 
 def _query_dist_table(
-    queries: DataFrame, cb: list[tuple], id_col: str, vec_col: str, m: int,
+    queries: DataFrame, cbs: list[list], id_col: str, vec_col: str, m: int,
     sub_dim: int,
 ) -> DataFrame:
     """(query_id, code, s, de6): each query's m x k_sub micro-distance
@@ -314,7 +365,7 @@ def _query_dist_table(
         queries.select(
             F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
         ),
-        ["query_id"], "q_vec", cb, m, sub_dim,
+        ["query_id"], "q_vec", cbs, m, sub_dim,
     )
 
 
@@ -354,12 +405,23 @@ def pq_topk(
     so the heavy join is codes ⨝ table on (sub, code) — no raw corpus
     vectors move, which is the entire point of PQ at 100 TB.
     """
-    cb = ivf_centroids(corpus, id_col, vec_col, k_sub)
+    cb = _sub_codebooks(
+        ivf_centroids(corpus, id_col, vec_col, k_sub), m, sub_dim
+    )
     if codes is None:
         codes = _explode(
             _encode(corpus, id_col, vec_col, m, sub_dim, cb), id_col, m
         )
-    table = _query_dist_table(queries, cb, id_col, vec_col, m, sub_dim)
+    return _adc_topk(
+        codes, _query_dist_table(queries, cb, id_col, vec_col, m, sub_dim), k
+    )
+
+
+def _adc_topk(codes: DataFrame, table: DataFrame, k: int) -> DataFrame:
+    """Top-k ADC over an exploded code relation (neighbor_id, s, code)
+    and a query distance table (query_id, code, s, de6): the codes join
+    the broadcast table on (s, code), a query never matches itself, and
+    each pair's score is its exact long sum of micro-distances / 1e6."""
     cand = (
         codes.join(F.broadcast(table), ["s", "code"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -429,7 +491,9 @@ def pq_topk_ivf(
         # a persisted index's cell relation (index_store.load_ann_index,
         # or ivf_build_cells output) — extra columns like c_vec dropped
         cells = cells.select("neighbor_id", "cell")
-    cb = ivf_centroids(corpus, id_col, vec_col, k_sub)
+    cb = _sub_codebooks(
+        ivf_centroids(corpus, id_col, vec_col, k_sub), m, sub_dim
+    )
     if codes is None:
         codes = _explode(
             _encode(corpus, id_col, vec_col, m, sub_dim, cb), id_col, m
@@ -718,15 +782,33 @@ def pq_topk_ivf_residual(
         corpus, queries, id_col, vec_col, m, sub_dim, n_centroids,
         nprobe, centroids,
     )
-    rcb = ivf_centroids(res, "neighbor_id", "rvec", k_sub)
+    rcb = _sub_codebooks(
+        ivf_centroids(res, "neighbor_id", "rvec", k_sub), m, sub_dim
+    )
+    return _residual_adc(res, cells, probes, rcb, k, m, sub_dim)
+
+
+def _residual_adc(
+    res: DataFrame,
+    cells: DataFrame,
+    probes: DataFrame,
+    cbs: list[list],
+    k: int,
+    m: int,
+    sub_dim: int,
+) -> DataFrame:
+    """The search half of the residual IVF-PQ variants over
+    ``_residual_parts``' triple and a per-sub-space residual codebook:
+    residual codes joined to their cells, one ADC table per (query,
+    probed cell) from the query residuals, candidates from the probed
+    cells only, top-k by (score ASC, neighbor_id ASC)."""
     codes = _explode(
-        _encode(res, "neighbor_id", "rvec", m, sub_dim, rcb), "neighbor_id", m
+        _encode(res, "neighbor_id", "rvec", m, sub_dim, cbs), "neighbor_id", m
     ).join(cells, "neighbor_id")
     # per-(query, probed cell) ADC table: (query_id, cell, code, s, de6)
     qd = _dist_table(
-        probes, ["query_id", "cell"], "q_rvec", rcb, m, sub_dim
+        probes, ["query_id", "cell"], "q_rvec", cbs, m, sub_dim
     )
-
     cand = (
         probes.select("query_id", "cell")
         .join(codes, "cell")
@@ -737,13 +819,7 @@ def pq_topk_ivf_residual(
         .groupBy("query_id", "neighbor_id")
         .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("score").asc(), F.col("neighbor_id").asc()
-    )
-    return (
-        adc.withColumn("rank", F.row_number().over(w).cast("long"))
-        .filter(F.col("rank") <= k)
-    )
+    return _rank_adc(adc, k)
 
 
 # -- trained sub-quantizer codebooks (r9 verdict item 2) ------------------
@@ -755,52 +831,189 @@ def pq_topk_ivf_residual(
 # vs 0.18 plain on a corpus where the residual-seeded first-k codebook
 # has no reason to cover the residual distribution. The functions below
 # supply the trained path with the SAME determinism discipline: seeds are
-# the first k_sub sub-slices by id, assignment argmin is on the
-# integer-micro grid with the (de6 ASC, cid ASC) tie-break, and the Lloyd
-# update is the element-wise mean ROUND(·, 6) — the kmeans_fit kernel —
+# the first k_sub distinct sub-slices by min id, the assignment is
+# ``_argmin`` on the integer-micro grid with the (de6 ASC, cid ASC)
+# tie-break, and the Lloyd update is an exact int64 integer-micro mean,
 # so a DuckDB CTE chain reproduces every codebook entry bit-exactly.
+# Every step merges exactly over any split of the rows, so the same
+# functions train per Arrow batch (``pq_fit``) or on one driver-held
+# sample (``opq_fit``).
 
 
-def melt_subvectors(
-    df: DataFrame, id_col: str, vec_col: str, m: int, sub_dim: int
-) -> DataFrame:
-    """(id_col, s, svec): each vector melted to its m sub-slices — the
-    relation per-sub-space training and encoding both scan. One narrow
-    projection; m rows of sub_dim doubles per vector."""
-    return df.select(
-        id_col, _check_dim(vec_col, m, sub_dim).alias("__v")
-    ).select(
-        id_col,
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.slice(F.col("__v"), s * sub_dim + 1, sub_dim).alias(
-                            "svec"
-                        ),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("ss"),
-    ).select(id_col, "ss.s", "ss.svec")
-
-
-def _svec_dist_e6(a: Column, b: Column) -> Column:
-    """Integer-micro squared-L2 over two whole sub-vectors (the
-    _sub_dist_e6 kernel at slice offset 0)."""
-    d = F.aggregate(
-        F.zip_with(
-            a,
-            b,
-            lambda x, y: (x.cast("double") - y.cast("double"))
-            * (x.cast("double") - y.cast("double")),
-        ),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
+def _first_distinct(ids: list, x, valid, present, k: int) -> list[int]:
+    """Indices of the rows holding the first ``k`` distinct vectors of
+    ``x`` by smallest id, each the smallest-id row of its group, in that
+    order. Equality is Spark's for grouping keys: -0.0 equals 0.0, all
+    NaNs are equal, NULL elements at the same positions are equal, and
+    the NULL rows form one group. A NULL id does not count toward a
+    group's smallest id; a group with only NULL ids sorts first, as a
+    NULL does in an ascending sort."""
+    if not ids:
+        return []
+    order = sorted(
+        range(len(ids)),
+        key=lambda i: (ids[i] is None, ids[i] if ids[i] is not None else 0),
     )
-    return F.floor(d * F.lit(1e6) + F.lit(0.5)).cast("long")
+    vals = np.where(valid, x + 0.0, 0.0)  # + 0.0 turns -0.0 into 0.0
+    vals[np.isnan(vals)] = np.nan
+    key = np.concatenate([vals.view(np.int64), valid, present[:, None]], 1)
+    _u, first = np.unique(key[order], axis=0, return_index=True)
+    n_ids = sum(i is not None for i in ids)
+    first = sorted(first, key=lambda p: (p < n_ids, p))
+    return [order[p] for p in first[:k]]
+
+
+def _seed_rows(ids: list, x, valid, present, m, sub_dim, k_sub) -> list:
+    """(s, mid, svec) of each sub-space's first ``k_sub`` distinct
+    sub-vectors by min id (``_first_distinct``), in that order, with the
+    grouping key's values: 0.0 for -0.0, None for a NULL element, and
+    None for a NULL row's slice. Exact over any split of the rows: a
+    globally first sub-vector is among the first k_sub of any part that
+    holds its min id, so the parts' rows merge by ``_merge_seeds``."""
+    out = []
+    for s in range(m):
+        sl = slice(s * sub_dim, (s + 1) * sub_dim)
+        for i in _first_distinct(ids, x[:, sl], valid[:, sl], present, k_sub):
+            sv = None
+            if present[i]:
+                sv = [
+                    float(v) + 0.0 if ok else None
+                    for v, ok in zip(x[i, sl], valid[i, sl])
+                ]
+            out.append((s, ids[i], sv))
+    return out
+
+
+def _merge_seeds(rows: list, m: int, sub_dim: int, k_sub: int) -> list:
+    """``_seed_rows`` of the (s, mid, svec) rows of several parts: each
+    sub-space's candidates are seeded again as one-sub-space rows."""
+    out = []
+    for s in range(m):
+        mine = [r for r in rows if r[0] == s]
+        col = pa.array([r[2] for r in mine], type=pa.list_(pa.float64()))
+        x, valid, present = _pq_vectors(col, sub_dim)
+        out += [
+            (s, mid, sv)
+            for _z, mid, sv in _seed_rows(
+                [r[1] for r in mine], x, valid, present, 1, sub_dim, k_sub
+            )
+        ]
+    return out
+
+
+def _seed_codebooks(rows: list, m: int) -> list[list]:
+    """Per-sub-space codebooks from merged seed rows: cid 0..k_sub-1 in
+    min-id order."""
+    cbs: list[list] = [[] for _ in range(m)]
+    for s, _mid, sv in rows:
+        cbs[s].append((len(cbs[s]), sv))
+    return cbs
+
+
+def _step_rows(x, valid, present, cbs: list[list], sub_dim: int) -> list:
+    """One Lloyd step's partials over a batch: (s, cid, n, se6) for each
+    codeword that won a non-NULL row by ``_argmin``, where n counts those
+    rows and se6[pos] is the exact sum of their FLOOR(v * 1e6 + 0.5)
+    (NaN -> 0) at pos, None where every value there is NULL. Sums are
+    int64 while the magnitudes allow no overflow, Python ints beyond."""
+    out = []
+    for s, cb in enumerate(cbs):
+        if not cb:
+            continue
+        win, _d, _null = _argmin(x, valid, present, cb, s, sub_dim)
+        sl = slice(s * sub_dim, (s + 1) * sub_dim)
+        ok = valid[:, sl] & present[:, None]
+        with np.errstate(all="ignore"):
+            e6 = np.where(ok, _floor_long(x[:, sl] * 1e6 + 0.5), 0)
+        big = float(np.abs(e6.astype(np.float64)).sum()) >= 2.0**62
+        se6 = np.zeros((len(cb), sub_dim), dtype=object if big else np.int64)
+        np.add.at(se6, win[present], e6[present].astype(se6.dtype))
+        seen = np.zeros((len(cb), sub_dim), dtype=np.int64)
+        np.add.at(seen, win[present], ok[present])
+        n = np.bincount(win[present], minlength=len(cb))
+        out += [
+            (
+                s,
+                cb[j][0],
+                int(n[j]),
+                [int(t) if c else None for t, c in zip(se6[j], seen[j])],
+            )
+            for j in np.flatnonzero(n)
+        ]
+    return out
+
+
+def _sum_steps(rows: list, ansi: bool) -> list:
+    """``_step_rows`` partials summed per (s, cid), sorted by (s, cid).
+    Each total is kept as Spark's long SUM keeps it: wrapped to 64 bits,
+    or under ANSI an ARITHMETIC_OVERFLOW error."""
+    acc: dict = {}
+    for s, cid, n, se6 in rows:
+        cur = acc.setdefault((s, cid), [0, [None] * len(se6)])
+        cur[0] += n
+        cur[1] = [
+            a if b is None else b if a is None else a + b
+            for a, b in zip(cur[1], se6)
+        ]
+    out = []
+    for (s, cid), (n, se6) in sorted(acc.items()):
+        wrapped = [
+            None if t is None else (t + 2**63) % 2**64 - 2**63 for t in se6
+        ]
+        if ansi and wrapped != se6:
+            raise ArithmeticError(
+                "pq: codeword sum overflows a long [ARITHMETIC_OVERFLOW]"
+            )
+        out.append((s, cid, n, wrapped))
+    return out
+
+
+def _means(rows: list, m: int) -> list[list]:
+    """The next per-sub-space codebooks from summed step rows: each
+    component the half-up integer-micro mean FLOOR(se6 / n + 0.5) / 1e6,
+    NULL where se6 is. A codeword that won no row drops out."""
+    cbs: list[list] = [[] for _ in range(m)]
+    for s, cid, n, se6 in rows:
+        cbs[s].append(
+            (
+                cid,
+                [
+                    None if t is None else math.floor(float(t) / n + 0.5) / 1e6
+                    for t in se6
+                ],
+            )
+        )
+    return cbs
+
+
+def _fit_batch(
+    ids: list, x, valid, present, m, sub_dim, k_sub, n_iter, ansi: bool
+) -> list[list]:
+    """``pq_fit``'s per-sub-space codebooks for rows held on the driver
+    as one batch (``opq_fit``'s sample): the same seed, step and merge
+    functions as the distributed passes."""
+    cbs = _seed_codebooks(
+        _seed_rows(ids, x, valid, present, m, sub_dim, k_sub), m
+    )
+    for _ in range(n_iter):
+        steps = _step_rows(x, valid, present, cbs, sub_dim)
+        cbs = _means(_sum_steps(steps, ansi), m)
+    return cbs
+
+
+def _reconstruct(x, valid, present, cbs: list[list], sub_dim: int):
+    """Each row's chosen codewords (``_argmin``) concatenated in
+    sub-space order: the PQ reconstruction of the rows of ``x``. Every
+    sub-space needs a codeword and the chosen ones must be non-NULL."""
+    return np.concatenate(
+        [
+            np.array([cv for _c, cv in cb], dtype=np.float64)[
+                _argmin(x, valid, present, cb, s, sub_dim)[0]
+            ]
+            for s, cb in enumerate(cbs)
+        ],
+        axis=1,
+    )
 
 
 def pq_fit(
@@ -814,9 +1027,8 @@ def pq_fit(
 ) -> DataFrame:
     """Train per-sub-space PQ codebooks (FAISS ProductQuantizer::train):
     k_sub-means over each sub-space's slice distribution, all m
-    sub-spaces trained in ONE Spark program per Lloyd iteration (the
-    sub-space id is just another group key — no per-sub-space driver
-    loop). Returns the codebook relation (s, cid, cvec<sub_dim>).
+    sub-spaces trained in the same passes. Returns the codebook relation
+    (s int, cid long, cvec array<double>), a zero-job local relation.
 
     Seeds: per sub-space, the first k_sub DISTINCT sub-vectors by
     min-id, renumbered cid = 0..k_sub-1 in that order. Distinctness is
@@ -825,155 +1037,83 @@ def pq_fit(
     the ZERO vector — id-based seeding hands Lloyd k_sub identical
     codewords and the tie-break collapses every assignment to cid 0
     (one codeword, constant ADC scores — the degenerate codebook behind
-    the r9 instrument's 0.04 residual recall). Assignment:
-    integer-micro argmin, (de6 ASC, cid ASC) tie-break. Update:
-    element-wise INTEGER-MICRO mean — components quantized to the
-    1e-6 grid with the floor kernel, summed as exact int64 (an
+    the r9 instrument's 0.04 residual recall). Distinct is Spark's
+    grouping-key equality (-0.0 = 0.0, NaN = NaN). Assignment:
+    integer-micro argmin, a NULL distance first, then (de6 ASC, cid
+    ASC). Update: element-wise INTEGER-MICRO mean — components quantized
+    to the 1e-6 grid with the floor kernel, summed as exact int64 (an
     order-independent fold, unlike a double AVG whose fold order can
     flip ROUND's last digit between engines — residual corpora hit
     exactly that at sf0.01), then one deterministic half-up division.
     Empty codewords drop out (Lloyd's standard degenerate case).
 
-    Scale: each iteration is one melted-corpus scan (m rows/vector)
-    broadcast-joined to the m*k_sub codebook rows and folded by a
-    map-side-combined min_by, then one positional-mean aggregate —
-    O(n*m*k_sub) work, no raw-vector shuffle; k-means on PQ sub-spaces
-    is conventionally run on a bounded SAMPLE of the corpus (FAISS
-    defaults to ~256 vectors/centroid) — pass such a sample as
-    ``corpus`` for the 100 TB fit."""
-    subs = melt_subvectors(corpus, id_col, vec_col, m, sub_dim)
-    # min-id per distinct sub-vector: ids partition across groups, so
-    # the mids are unique within a sub-space — the rank is deterministic
-    ws = Window.partitionBy("s").orderBy("mid")
-    cb = (
-        subs.groupBy("s", "svec")
-        .agg(F.min(id_col).alias("mid"))
-        .withColumn("__rk", F.row_number().over(ws))
-        .filter(F.col("__rk") <= k_sub)
-        .select(
-            "s",
-            (F.col("__rk") - 1).cast("long").alias("cid"),
-            F.col("svec").alias("cvec"),
-        )
+    Scale: one narrow ``mapInArrow`` pass over the corpus for the seeds
+    and one per Lloyd iteration, one Spark job each, no shuffle and no
+    pin. Each task reduces its Arrow batches to at most m*k_sub rows —
+    seed candidates, or per-codeword (count, int64 sums) — and the
+    driver merges the tasks' rows, read through ``collect_bounded`` at
+    ``_MODEL_ROWS``: more rows than that are refused (TooManyRows),
+    which a corpus in over _MODEL_ROWS / (m*k_sub) partitions can
+    reach. The sums are long SUMs (they wrap, or raise under ANSI on
+    overflow) and every merge is exact, so the codebook does not depend
+    on partitioning or batch size. k-means on PQ sub-spaces is
+    conventionally run on a bounded SAMPLE of the corpus (FAISS defaults
+    to ~256 vectors/centroid) — pass such a sample as ``corpus`` for the
+    100 TB fit."""
+    src = corpus.select(id_col, vec_col)
+    ansi = corpus.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+    need = m * sub_dim
+
+    def run(part, merge, fields, what):
+        schema = StructType([StructField("s", IntegerType()), *fields])
+        arrow = to_arrow_schema(schema)
+
+        def gen(batches):
+            rows = []
+            for batch in batches:
+                x, valid, present = _pq_vectors(batch.column(1), need)
+                rows += part(batch.column(0), x, valid, present)
+            cols = list(zip(*merge(rows))) or [[] for _ in arrow]
+            yield pa.RecordBatch.from_arrays(
+                [pa.array(list(c), type=f.type) for c, f in zip(cols, arrow)],
+                names=schema.names,
+            )
+
+        rows = collect_bounded(src.mapInArrow(gen, schema), _MODEL_ROWS, what)
+        return merge(rows)
+
+    seeds = run(
+        lambda ids, x, valid, present: _seed_rows(
+            ids.to_pylist(), x, valid, present, m, sub_dim, k_sub
+        ),
+        lambda rows: _merge_seeds(rows, m, sub_dim, k_sub),
+        [
+            StructField("mid", src.schema[id_col].dataType),
+            StructField("svec", ArrayType(DoubleType())),
+        ],
+        "pq_fit seeds",
     )
-    if n_iter > 0:
-        # training scans subs repeatedly — pin it once
-        subs = subs.localCheckpoint(eager=True)
+    cbs = _seed_codebooks(seeds, m)
     for _ in range(n_iter):
-        scored = subs.join(F.broadcast(cb), "s").withColumn(
-            "__d", _svec_dist_e6(F.col("svec"), F.col("cvec"))
+        cbs = _means(
+            run(
+                lambda _ids, x, valid, present, cbs=cbs: _step_rows(
+                    x, valid, present, cbs, sub_dim
+                ),
+                lambda rows: _sum_steps(rows, ansi),
+                [
+                    StructField("cid", LongType()),
+                    StructField("n", LongType()),
+                    StructField("se6", ArrayType(LongType())),
+                ],
+                "pq_fit step",
+            ),
+            m,
         )
-        # the sub-vector rides THROUGH the argmin aggregate (F.first over
-        # the k_sub identical copies the broadcast join replicates), so
-        # the update below needs no join-back shuffle of the melted
-        # corpus — one exchange per Lloyd iteration instead of two
-        # (guide §2.4); (id, s) is unique in subs,
-        # so first(svec) is the row's own slice, not a choice.
-        assigned = scored.groupBy(id_col, "s").agg(
-            F.min_by(
-                F.col("cid"),
-                F.struct(F.col("__d").alias("d"), F.col("cid").alias("c")),
-            ).alias("cid"),
-            F.first("svec").alias("svec"),
-        )
-        exploded = assigned.select(
-            "s", "cid", F.posexplode("svec").alias("pos", "val")
-        )
-        # the updated codebook is O(m·k_sub·sub_dim) values — collect the
-        # per-(s, cid, pos) integer-micro means and re-embed them as a
-        # local relation: a lazy localCheckpoint
-        # of an AQE plan still force-runs every intermediate stage
-        # serially via toRdd, and each later consumer pays a
-        # broadcast-build job, while a LocalTableScan broadcasts without
-        # scheduling anything. Values are bit-identical — the distributed
-        # aggregate is unchanged and the driver only reassembles its rows
-        # into pos-ordered arrays, exactly what the former
-        # array_sort(collect_list(struct)) tail did (pos is unique per
-        # (s, cid), so the orders coincide).
-        mrows = (
-            exploded.groupBy("s", "cid", "pos")
-            .agg(
-                F.sum(
-                    F.floor(
-                        F.col("val").cast("double") * F.lit(1e6) + F.lit(0.5)
-                    ).cast("long")
-                ).alias("se6"),
-                F.count(F.lit(1)).alias("n"),
-            )
-            .select(
-                "s",
-                "cid",
-                "pos",
-                (
-                    F.floor(
-                        F.col("se6").cast("double") / F.col("n") + F.lit(0.5)
-                    ).cast("long").cast("double")
-                    / F.lit(1e6)
-                ).alias("mv"),
-            )
-            .collect()
-        )
-        by_key: dict[tuple[int, int], list[tuple[int, float | None]]] = {}
-        for r in mrows:
-            by_key.setdefault((int(r[0]), int(r[1])), []).append(
-                (int(r[2]), None if r[3] is None else float(r[3]))
-            )
-        cb = local_df(
-            corpus.sparkSession,
-            [
-                (s, cid, [mv for _, mv in sorted(vals)])
-                for (s, cid), vals in sorted(by_key.items())
-            ],
-            # s stays INT (the seed's F.lit(s) type), cid long, mv double
-            # — the exact schema the former aggregate tail produced
-            "s int, cid long, cvec array<double>",
-        )
-    return cb
-
-
-def exploded_codes_sub(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    sub_dim: int,
-    codebooks: DataFrame,
-) -> DataFrame:
-    """(neighbor_id, s, code, de6): encode against per-sub-space
-    codebooks (pq_fit's relation) — the trained twin of exploded_codes.
-    One melted scan, broadcast codebook join, map-side-combined min_by;
-    de6 is the chosen sub-distance (reconstruction-error term)."""
-    scored = melt_subvectors(corpus, id_col, vec_col, m, sub_dim).join(
-        F.broadcast(codebooks), "s"
-    ).withColumn("__d", _svec_dist_e6(F.col("svec"), F.col("cvec")))
-    return scored.groupBy(F.col(id_col).alias("neighbor_id"), F.col("s")).agg(
-        F.min_by(
-            F.struct(F.col("cid").alias("code"), F.col("__d").alias("de6")),
-            F.struct(F.col("__d").alias("d"), F.col("cid").alias("c")),
-        ).alias("mc")
-    ).select("neighbor_id", "s", "mc.code", "mc.de6")
-
-
-def _query_dist_table_sub(
-    queries: DataFrame,
-    codebooks: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    sub_dim: int,
-) -> DataFrame:
-    """(query_id, s, code, de6): the per-query ADC table against trained
-    codebooks — m x k_sub rows per query, tiny, broadcast downstream."""
-    return (
-        melt_subvectors(queries, id_col, vec_col, m, sub_dim)
-        .select(F.col(id_col).alias("query_id"), "s", "svec")
-        .join(F.broadcast(codebooks), "s")
-        .select(
-            "query_id",
-            "s",
-            F.col("cid").alias("code"),
-            _svec_dist_e6(F.col("svec"), F.col("cvec")).alias("de6"),
-        )
+    return local_df(
+        corpus.sparkSession,
+        [(s, cid, cv) for s, cb in enumerate(cbs) for cid, cv in cb],
+        "s int, cid long, cvec array<double>",
     )
 
 
@@ -990,25 +1130,20 @@ def pq_topk_trained(
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
     """ADC top-k over TRAINED codebooks: pq_topk's exact search body
-    (codes ⨝ broadcast table on (s, code), integer-micro ADC sum, rank
-    by (score ASC, neighbor_id ASC)) with pq_fit's per-sub-space
-    codebooks in place of the seeded ones. ``codebooks`` accepts a
-    persisted pq_fit relation — fit once, search many."""
-    cb = (
-        codebooks
-        if codebooks is not None
-        else pq_fit(corpus, id_col, vec_col, m, sub_dim, k_sub, n_iter)
+    (``_encode`` codes ⨝ broadcast ``_query_dist_table`` on (s, code),
+    integer-micro ADC sum, rank by (score ASC, neighbor_id ASC)) with
+    pq_fit's per-sub-space codebooks in place of the seeded ones, read to
+    the driver once per call. ``codebooks`` accepts a persisted pq_fit
+    relation — fit once, search many."""
+    if codebooks is None:
+        codebooks = pq_fit(corpus, id_col, vec_col, m, sub_dim, k_sub, n_iter)
+    cbs = _trained_codebooks(codebooks, m)
+    codes = _explode(
+        _encode(corpus, id_col, vec_col, m, sub_dim, cbs), id_col, m
     )
-    codes = exploded_codes_sub(corpus, id_col, vec_col, m, sub_dim, cb)
-    table = _query_dist_table_sub(queries, cb, id_col, vec_col, m, sub_dim)
-    cand = (
-        codes.select("neighbor_id", "s", "code")
-        .join(F.broadcast(table), ["s", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
+    return _adc_topk(
+        codes, _query_dist_table(queries, cbs, id_col, vec_col, m, sub_dim), k
     )
-    return _rank_adc(cand, k)
 
 
 def pq_topk_ivf_residual_trained(
@@ -1029,12 +1164,12 @@ def pq_topk_ivf_residual_trained(
     """Residual IVF-PQ with a TRAINED sub-quantizer codebook — the full
     FAISS-faithful IndexIVFPQ composition (by_residual=true AND
     ProductQuantizer::train): pq_topk_ivf_residual's exact front half
-    (_residual_parts — cells, residuals, per-probe query residuals),
-    with pq_fit's per-sub-space k-means codebook trained ON the
-    residual distribution replacing the residual-seeded first-k one.
-    The r9 recall instrument attributed residual PQ's 0.04-vs-0.18
-    recall loss to that seeded codebook; this is the trained fix it
-    called for.
+    (_residual_parts — cells, residuals, per-probe query residuals) and
+    search half (``_residual_adc``), with pq_fit's per-sub-space k-means
+    codebook trained ON the residual distribution replacing the
+    residual-seeded first-k one. The r9 recall instrument attributed
+    residual PQ's 0.04-vs-0.18 recall loss to that seeded codebook; this
+    is the trained fix it called for.
 
     ``codebooks``: a persisted pq_fit relation over the residuals —
     fit once, search many (pair with operators/index_store).
@@ -1044,56 +1179,12 @@ def pq_topk_ivf_residual_trained(
         corpus, queries, id_col, vec_col, m, sub_dim, n_centroids,
         nprobe, centroids,
     )
-    rcb = (
-        codebooks
-        if codebooks is not None
-        else pq_fit(res, "neighbor_id", "rvec", m, sub_dim, k_sub, n_iter)
-    )
-    codes = exploded_codes_sub(
-        res, "neighbor_id", "rvec", m, sub_dim, rcb
-    ).join(cells, "neighbor_id")
-
-    # per-(query, probed cell) ADC table from the query residuals
-    qd = (
-        probes.select(
-            "query_id",
-            "cell",
-            F.explode(
-                F.array(
-                    *[
-                        F.struct(
-                            F.lit(s).alias("s"),
-                            F.slice(
-                                F.col("q_rvec"), s * sub_dim + 1, sub_dim
-                            ).alias("svec"),
-                        )
-                        for s in range(m)
-                    ]
-                )
-            ).alias("ss"),
+    if codebooks is None:
+        codebooks = pq_fit(
+            res, "neighbor_id", "rvec", m, sub_dim, k_sub, n_iter
         )
-        .select("query_id", "cell", "ss.s", "ss.svec")
-        .join(F.broadcast(rcb), "s")
-        .select(
-            "query_id",
-            "cell",
-            "s",
-            F.col("cid").alias("code"),
-            _svec_dist_e6(F.col("svec"), F.col("cvec")).alias("de6"),
-        )
-    )
-
-    cand = (
-        probes.select("query_id", "cell")
-        .join(codes.select("neighbor_id", "cell", "s", "code"), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    adc = (
-        cand.join(F.broadcast(qd), ["query_id", "cell", "s", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
-    )
-    return _rank_adc(adc, k)
+    rcb = _trained_codebooks(codebooks, m)
+    return _residual_adc(res, cells, probes, rcb, k, m, sub_dim)
 
 
 def _with_vec_out(df: DataFrame, out: str):
@@ -1320,159 +1411,6 @@ def _opq_rotate_mat(vecs, r_mat):
     return ym.astype(np.float64) / 1e6
 
 
-def _pq_group_key(svec) -> tuple:
-    """Grouping key with Spark's aggregate-key float semantics: -0.0
-    groups with 0.0 and all NaNs group together (Catalyst normalizes
-    both before hashing group keys)."""
-    out = []
-    for v in svec:
-        f = float(v)
-        if f != f:
-            out.append("nan")
-        else:
-            out.append(0.0 if f == 0.0 else f)
-    return tuple(out)
-
-
-def _svec_dist_e6_local(x, y) -> int:
-    """Driver twin of _svec_dist_e6: identical left-to-right IEEE double
-    fold of squared differences, identical floor half-up micro cast.
-    Python floats ARE IEEE doubles, so each op is bit-identical."""
-    acc = 0.0
-    for a, b in zip(x, y):
-        d = float(a) - float(b)
-        acc = acc + d * d
-    return int(math.floor(acc * 1e6 + 0.5))
-
-
-def _pq_fit_local(
-    rows: list[tuple[int, list[float]]],
-    m: int,
-    sub_dim: int,
-    k_sub: int,
-    n_iter: int,
-) -> dict[int, list[tuple[int, list[float]]]]:
-    """Driver-side exact replica of :func:`pq_fit` for an ALREADY
-    COLLECTED, bounded sample (the opq_fit alternation trains on the
-    id-bounded sample per FAISS convention, and opq_fit collects that
-    sample anyway for the scatter) — same seeding (first k_sub distinct
-    sub-vectors by min id), same integer-micro argmin with (d, cid)
-    tie-break, same exact-int64-sum half-up-mean update, same empty-
-    codeword dropout. Running it on the driver replaces ~4 scheduler
-    round-trips per Lloyd iteration with zero; bit-equality with the
-    distributed kernel is pinned by
-    tests/test_pq_rrf.py::test_pq_fit_local_matches_spark.
-
-    Returns {s: [(cid, cvec), ...]} sorted by cid within each s."""
-    melted: list[tuple[int, int, list[float]]] = []
-    for sid, vec in rows:
-        if vec is None:
-            continue
-        if len(vec) < m * sub_dim:
-            raise ValueError(
-                f"pq: embedding shorter than m*sub_dim={m * sub_dim}: "
-                f"got {len(vec)}"
-            )
-        for s in range(m):
-            raw = vec[s * sub_dim : (s + 1) * sub_dim]
-            if any(v is None for v in raw):
-                raise ValueError("pq: NULL vector component in fit sample")
-            melted.append((sid, s, [float(v) for v in raw]))
-    # seed: per sub-space, min id per DISTINCT sub-vector, first k_sub
-    # by that min id, renumbered 0..k_sub-1 (pq_fit's window rank)
-    distinct: dict[tuple, tuple[int, list[float]]] = {}
-    for sid, s, sv in melted:
-        key = (s, _pq_group_key(sv))
-        cur = distinct.get(key)
-        if cur is None or sid < cur[0]:
-            distinct[key] = (sid, sv)
-    per_s: dict[int, list[tuple[int, list[float]]]] = {}
-    for (s, _k), (mid, sv) in distinct.items():
-        per_s.setdefault(s, []).append((mid, sv))
-    cb: dict[int, list[tuple[int, list[float]]]] = {}
-    for s, lst in per_s.items():
-        lst.sort(key=lambda t: t[0])
-        cb[s] = [(cid, sv) for cid, (_mid, sv) in enumerate(lst[:k_sub])]
-    for _ in range(n_iter):
-        # assignment: integer-micro argmin, (de6 ASC, cid ASC) tie-break
-        sums: dict[tuple[int, int, int], list[int]] = {}
-        for sid, s, sv in melted:
-            best = None
-            for cid, cvec in cb.get(s, []):
-                key = (_svec_dist_e6_local(sv, cvec), cid)
-                if best is None or key < best:
-                    best = key
-            if best is None:
-                continue
-            cid = best[1]
-            for pos, val in enumerate(sv):
-                e6 = int(math.floor(val * 1e6 + 0.5))
-                acc = sums.get((s, cid, pos))
-                if acc is None:
-                    sums[(s, cid, pos)] = [e6, 1]
-                else:
-                    acc[0] += e6
-                    acc[1] += 1
-        by_key: dict[tuple[int, int], list[tuple[int, float]]] = {}
-        for (s, cid, pos), (se6, n) in sums.items():
-            mv = float(int(math.floor(float(se6) / n + 0.5))) / 1e6
-            by_key.setdefault((s, cid), []).append((pos, mv))
-        cb = {}
-        for (s, cid), vals in sorted(by_key.items()):
-            cb.setdefault(s, []).append(
-                (cid, [mv for _pos, mv in sorted(vals)])
-            )
-    return cb
-
-
-def _pq_encode_local(
-    rows: list[tuple[int, list[float]]],
-    cb: dict[int, list[tuple[int, list[float]]]],
-    m: int,
-    sub_dim: int,
-) -> dict[int, list[float]]:
-    """Driver twin of exploded_codes_sub + the opq_fit reconstruction
-    tail: per (id, sub-space) integer-micro argmin against the trained
-    codebook, yhat = the chosen codewords concatenated in sub-space
-    order. Returns {sid: yhat}."""
-    out: dict[int, list[float]] = {}
-    for sid, vec in rows:
-        if vec is None:
-            continue
-        yhat: list[float] = []
-        for s in range(m):
-            sv = [float(v) for v in vec[s * sub_dim : (s + 1) * sub_dim]]
-            best = None
-            best_cvec = None
-            for cid, cvec in cb.get(s, []):
-                key = (_svec_dist_e6_local(sv, cvec), cid)
-                if best is None or key < best:
-                    best = key
-                    best_cvec = cvec
-            if best_cvec is None:
-                # empty sub-space codebook: the distributed join drops
-                # this sub-space's rows but keeps the id (unreachable
-                # for non-empty samples; mirrored for exactness)
-                continue
-            yhat.extend(best_cvec)
-        if yhat:
-            out[sid] = yhat
-    return out
-
-
-def _opq_rotate_rows(
-    rows: list[tuple[int, list[float]]],
-    r_e6: list[list[int]],
-) -> list[tuple[int, list[float]]]:
-    """Driver twin of opq_rotate (the same _opq_rotate_mat math)."""
-    if not rows:
-        return rows
-    rot = _opq_rotate_mat(
-        [v for _s, v in rows], np.asarray(r_e6, dtype=np.int64)
-    )
-    return [(sid, rot[i].tolist()) for i, (sid, _v) in enumerate(rows)]
-
-
 def opq_fit(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -1503,12 +1441,9 @@ def opq_fit(
     and REFUSED above ``max_sample_rows`` (the broadcast-guard
     discipline, similarity.py). Returns R as a row-major int64 micro
     matrix for opq_rotate."""
-    # Non-finite vectors are excluded from the training sample: the local
-    # fit kernels floor distances through int(math.floor(...)), which
-    # raises on NaN where the distributed pq_fit this replaced yielded a
-    # null distance (r11 advisor). Skipping them is the deliberate,
-    # documented behavior — a NaN embedding carries no geometry to train
-    # on, and FAISS likewise requires finite training vectors.
+    # Non-finite vectors are excluded from the training sample: a NaN
+    # embedding carries no geometry to train on, and FAISS likewise
+    # requires finite training vectors.
     finite = ~F.exists(
         F.col(vec_col),
         lambda v: F.isnan(v) | v.isNull() | (F.abs(v) == F.lit(float("inf"))),
@@ -1522,13 +1457,12 @@ def opq_fit(
     # ONE job: a bounded read of the sample (collect_bounded takes the
     # limit on the executors). The whole alternation — rotate sample, fit
     # per-sub-space codebooks, encode, reconstruct — then runs on the
-    # driver with the exact-twin kernels
-    # (_pq_fit_local/_pq_encode_local/_opq_rotate_rows): the sample is
-    # O(sample_bound * dim) BY CONSTRUCTION, the same driver size class
-    # as the scatter this function always collected, and the Spark
-    # round-trips it replaces were ~15 scheduler jobs over <=256 rows
-    # (guide §1.2/§5 — don't schedule a cluster for driver-sized work).
-    # _pq_fit_local's distinct-by-min-id seeding is order-independent.
+    # driver, the sample treated as one batch of pq_fit's seed, step and
+    # encode kernels: the sample is O(sample_bound * dim) BY
+    # CONSTRUCTION, the same driver size class as the scatter this
+    # function always collected, and the Spark round-trips it replaces
+    # were ~15 scheduler jobs over <=256 rows (guide §1.2/§5 — don't
+    # schedule a cluster for driver-sized work).
     try:
         sample_rows = collect_bounded(
             sample, max_sample_rows, "opq_fit sample"
@@ -1543,29 +1477,19 @@ def opq_fit(
     cnt = len(sample_rows)
     if cnt == 0:
         return _identity_e6(dim)
-    x_rows = {sid: vec for sid, vec in sample_rows}
+    ansi = corpus.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+    ids = [sid for sid, _v in sample_rows]
+    vecs = pa.array([v for _s, v in sample_rows], pa.list_(pa.float64()))
+    x, valid, present = _pq_vectors(vecs, m * sub_dim)
+    xm = np.floor(x * 1e6 + 0.5).astype(np.int64)
     r_e6 = _identity_e6(dim)
     for t in range(n_opq_iter):
-        src_rows = (
-            sample_rows
-            if t == 0
-            else _opq_rotate_rows(sample_rows, r_e6)
+        src = x if t == 0 else _opq_rotate_mat(x, np.asarray(r_e6, np.int64))
+        cbs = _fit_batch(
+            ids, src, valid, present, m, sub_dim, k_sub, n_iter, ansi
         )
-        cb = _pq_fit_local(src_rows, m, sub_dim, k_sub, n_iter)
-        y_rows = _pq_encode_local(src_rows, cb, m, sub_dim)
-        sids = [sid for sid in x_rows if sid in y_rows]
-        if not sids:
-            return _identity_e6(dim)
-        xm = np.floor(
-            np.array(
-                [x_rows[sid] for sid in sids], dtype=np.float64
-            ) * 1e6 + 0.5
-        ).astype(np.int64)
-        ym = np.floor(
-            np.array(
-                [y_rows[sid] for sid in sids], dtype=np.float64
-            ) * 1e6 + 0.5
-        ).astype(np.int64)
+        yhat = _reconstruct(src, valid, present, cbs, sub_dim)
+        ym = np.floor(yhat * 1e6 + 0.5).astype(np.int64)
         assert int(np.abs(xm).max(initial=0)) < (1 << 26)
         assert int(np.abs(ym).max(initial=0)) < (1 << 26)
         scatter = xm.T @ ym  # exact int64: |terms| < 2^52, n <= 2^20

@@ -481,18 +481,31 @@ def ivf_centroids(
     vec_col: str = "embedding",
     n_centroids: int = 16,
 ) -> list[tuple[int, list[float]]]:
-    """Deterministic coarse-quantizer seeds: the first ``n_centroids``
-    corpus vectors by id (collected driver-side — C rows, like broadcast
-    join build sides). A production IVF trains k-means here; seeded
-    centroids keep the build deterministic and oracle-reproducible while
-    exercising the identical plan shape (assignment scan + probed search).
+    """Deterministic coarse-quantizer seeds: the (id, vector) rows with
+    id < ``n_centroids``, sorted by id, the vectors as doubles (read
+    driver-side through ``collect_bounded`` at ``_MODEL_ROWS`` — C rows,
+    like broadcast join build sides). A NULL vector or component stays
+    None; the assignment and encode kernels score it as the sentinel or
+    as NULL. A production IVF trains k-means here; seeded centroids keep
+    the build deterministic and oracle-reproducible while exercising the
+    identical plan shape (assignment scan + probed search).
     """
-    rows = (
-        corpus.select(F.col(id_col), F.col(vec_col))
-        .filter(F.col(id_col) < n_centroids)
-        .collect()
+    rows = collect_bounded(
+        corpus.select(
+            F.col(id_col), F.col(vec_col).cast("array<double>")
+        ).filter(F.col(id_col) < n_centroids),
+        _MODEL_ROWS,
+        "ivf_centroids seeds",
     )
-    return sorted((int(r[0]), [float(x) for x in r[1]]) for r in rows)
+    # a duplicated id keeps a deterministic order: by vector, NULLs first
+    return sorted(
+        rows,
+        key=lambda r: (
+            r[0],
+            r[1] is not None,
+            [(v is not None, v or 0.0) for v in r[1] or []],
+        ),
+    )
 
 
 def _resolve_cents(

@@ -6841,8 +6841,9 @@ def emb_pq_residual_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame
 
 def _pq_svec_dist_sql(a: str, b: str, w: int = _PQ_SUB) -> str:
     """Integer-micro squared-L2 over two whole sub-vectors — the SQL
-    mirror of operators/pq._svec_dist_e6 (same fold, same floor
-    kernel)."""
+    mirror of operators/pq._sub_dist and of the Catalyst sub-vector
+    distance reference in tests/test_pq_fit_kernels.py (same fold, same
+    floor kernel)."""
     diff = f"(CAST({a}[i] AS DOUBLE) - CAST({b}[i] AS DOUBLE))"
     return (
         f"CAST(FLOOR(list_reduce(list_transform(range(1, {w + 1}),"
@@ -6945,8 +6946,8 @@ def emb_ann_topk_pq_trainedcb(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PQ ADC top-5 over TRAINED sub-quantizer codebooks
     (operators/pq.pq_fit + pq_topk_trained — FAISS
     ProductQuantizer::train, r9 verdict item 2): per-sub-space k-means
-    (k_sub=16, 2 Lloyd iterations, all 4 sub-spaces trained in one
-    Spark program per iteration) replaces the seeded codebook of
+    (k_sub=16, 2 Lloyd iterations, all 4 sub-spaces trained together in
+    one narrow numpy pass per iteration) replaces the seeded codebook of
     [[emb_ann_topk_pq]]; the ADC search body (codes ⨝ broadcast query
     table on (s, code), integer-micro sum) is unchanged. Training is a
     build-side job amortized across every future query; at 100 TB the
@@ -8080,8 +8081,9 @@ def emb_pq_opq_mse_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     where the fixed Hadamard rotation does not (0.739 -> 0.716 vs
     0.743), matching the FAISS expectation that learned beats fixed
     rotation on anisotropic reconstruction error. Fit relations are the
-    certified pq_fit / _pq_fit_ctes pair; each arm's error is the sum
-    of chosen argmin sub-distances (exploded_codes_sub's de6)."""
+    certified pq_fit / _pq_fit_ctes pair; each arm's error is the exact
+    long sum of the chosen argmin sub-distances (the de6 columns of the
+    trained encode, ``pq._encode``)."""
     import math
 
     from etl_gardener_spark.operators import pq as PQ
@@ -8097,12 +8099,14 @@ def emb_pq_opq_mse_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _arm(method, src):
         cb = PQ.pq_fit(src, "vec_id", "embedding", _PQ_M, _PQ_SUB,
                        _PQ_KSUB, 2)
-        codes = PQ.exploded_codes_sub(
-            src, "vec_id", "embedding", _PQ_M, _PQ_SUB, cb
+        enc = PQ._encode(
+            src, "vec_id", "embedding", _PQ_M, _PQ_SUB,
+            PQ._trained_codebooks(cb, _PQ_M),
         )
-        agg = codes.agg(
+        de6 = F.explode(F.array(*[f"de6_{s}" for s in range(_PQ_M)]))
+        agg = enc.select("vec_id", de6.alias("de6")).agg(
             F.sum("de6").alias("tot"),
-            F.count_distinct("neighbor_id").alias("nv"),
+            F.count_distinct("vec_id").alias("nv"),
         ).collect()[0]
         nv = agg["nv"] or 0
         # the repo's floor-half-up kernel, NOT Python round (banker's):

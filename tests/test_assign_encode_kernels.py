@@ -249,8 +249,16 @@ def _encode_pair(spark, rows, cb=None, schema=PQ_SCHEMA, id_col="vec_id"):
         got = PQ.pq_encode(df, id_col, "embedding", M, SUB, KSUB)
     else:
         cdf = local_df(spark, cb, CENT_SCHEMA)
-        got = PQ._encode(
-            df, id_col, "embedding", M, SUB, SIM._model_rows(cdf, "cb")
+        enc = PQ._encode(
+            df, id_col, "embedding", M, SUB,
+            PQ._sub_codebooks(SIM._model_rows(cdf, "cb"), M, SUB),
+        )
+        # pq_encode's recon_err: the long sum of the chosen de6 / 1e6
+        err = sum((F.col(f"de6_{s}") for s in range(M)), F.lit(0).cast("long"))
+        got = enc.select(
+            id_col,
+            *[f"code_{s}" for s in range(M)],
+            (err.cast("double") / F.lit(1e6)).alias("recon_err"),
         )
     ref = ref_pq_encode(df, cdf, id_col, "embedding", M, SUB)
     return _canon(got.collect()), _canon(ref.collect())
@@ -273,6 +281,31 @@ def test_pq_encode_string_ids_float_input(spark):
         "doc string, embedding array<float>", "doc",
     )
     assert got == ref and len(got) == len(rows)
+
+
+# seeds (ids < KSUB) with a NULL component and a NULL vector
+NULL_SEED_VECS = [
+    (0, [1.0, 0.0, 0.0, 1.0]),
+    (1, [0.0, None, 1.0, 0.0]),
+    (2, None),
+    (3, [2.0, 2.0, None, 0.0]),
+] + PQ_VECS[4:]
+
+
+def test_null_component_seeds_match_catalyst(spark):
+    """The seeded codebook and coarse quantizer keep a NULL seed vector
+    and a NULL seed component as NULL: the encode scores their slices
+    NULL and the assignment gives them the sentinel, as the SQL trees
+    do."""
+    got, ref = _encode_pair(spark, NULL_SEED_VECS)
+    assert got == ref and len(got) == len(NULL_SEED_VECS)
+    df = _rel(spark, NULL_SEED_VECS, PQ_SCHEMA)
+    cdf = SIM._resolve_cents(df, "vec_id", "embedding", KSUB, None)
+    cvecs = [r.cvec for r in cdf.collect()]
+    assert cvecs[1:3] == [[0.0, None, 1.0, 0.0], None]
+    got = SIM.kmeans_assign(df, cdf, "vec_id", "embedding").collect()
+    ref = ref_kmeans_assign(df, cdf, "vec_id", "embedding").collect()
+    assert _canon(got) == _canon(ref) and len(got) == len(NULL_SEED_VECS)
 
 
 def test_pq_encode_empty(spark):
@@ -298,8 +331,9 @@ def test_query_dist_table_matches_catalyst(spark):
     for cb in (SIM.ivf_centroids(queries, "vec_id", "embedding", KSUB),
                PQ_EDGE_CB):
         cdf = local_df(spark, cb, CENT_SCHEMA)
-        got = PQ._query_dist_table(queries, SIM._model_rows(cdf, "cb"),
-                                   "vec_id", "embedding", M, SUB)
+        cbs = PQ._sub_codebooks(SIM._model_rows(cdf, "cb"), M, SUB)
+        got = PQ._query_dist_table(queries, cbs, "vec_id", "embedding", M,
+                                   SUB)
         ref = ref_query_dist_table(queries, cdf, "vec_id", "embedding", M, SUB)
         g, r = _canon(got.collect()), _canon(ref.collect())
         assert g == r and len(g) == len(PQ_VECS) * len(cb) * M
@@ -313,8 +347,9 @@ def test_short_vector_guard_raises(spark):
     with pytest.raises(Exception, match=msg):
         PQ.pq_encode(df, "vec_id", "embedding", M, SUB, KSUB).collect()
     cb = SIM.ivf_centroids(df, "vec_id", "embedding", KSUB)
+    cbs = PQ._sub_codebooks(cb, M, SUB)
     with pytest.raises(Exception, match=msg):
-        PQ._query_dist_table(df, cb, "vec_id", "embedding", M, SUB).collect()
+        PQ._query_dist_table(df, cbs, "vec_id", "embedding", M, SUB).collect()
     cdf = local_df(spark, cb, CENT_SCHEMA)
     with pytest.raises(Exception, match=msg):
         ref_pq_encode(df, cdf, "vec_id", "embedding", M, SUB).collect()

@@ -3,10 +3,16 @@ reciprocal-rank fusion (operators/search.rrf_fuse)."""
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from etl_gardener_spark.operators import pq as PQ
 from etl_gardener_spark.operators.search import rrf_fuse
+from tests.test_pq_fit_kernels import (
+    _codes as _trained_codes,
+    ref_exploded_codes_sub,
+    ref_pq_fit,
+)
 
 M, SUB, KSUB, DIM = 4, 4, 4, 16
 
@@ -223,7 +229,7 @@ def test_pq_fit_distinct_seeding_survives_duplicate_vectors(spark):
     assert set(per_s) == set(range(M))
     for s, n in per_s.items():
         assert n > 1, f"sub-space {s} collapsed to {n} codeword(s)"
-    codes = PQ.exploded_codes_sub(df, "vec_id", "embedding", M, SUB, cb)
+    codes = _trained_codes(df, "vec_id", M, SUB, cb)
     n_used = codes.select("s", "code").distinct().count()
     assert n_used > M, "all vectors encoded to a single codeword per s"
 
@@ -479,6 +485,8 @@ def test_opq_fit_rotation_and_method_parity(spark):
     rotation lowers the PQ quantization objective vs no rotation on a
     correlated corpus, and the degenerate cases (empty corpus, NULL
     vectors, over-bound samples) behave."""
+    import hashlib
+
     import numpy as np
     import pytest
 
@@ -501,6 +509,10 @@ def test_opq_fit_rotation_and_method_parity(spark):
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
     r_e6 = PQ.opq_fit(df, dim=dim, ns_iter=40)
+    # pinned: the fit kernels must keep learning exactly this rotation
+    assert hashlib.sha256(repr(r_e6).encode()).hexdigest() == (
+        "47a932c3ab5783538d78b112270ad8e7b59704397a44db30f6bf18337d1de554"
+    )
     rm = np.array(r_e6, dtype=np.float64) / 1e6
     assert float(np.abs(rm.T @ rm - np.eye(dim)).max()) < 1e-3
 
@@ -516,7 +528,7 @@ def test_opq_fit_rotation_and_method_parity(spark):
 
     def mse(src):
         cb = PQ.pq_fit(src, "vec_id", "embedding", 4, 16, 16, 2)
-        codes = PQ.exploded_codes_sub(src, "vec_id", "embedding", 4, 16, cb)
+        codes = _trained_codes(src, "vec_id", 4, 16, cb)
         return codes.agg(F.sum("de6")).collect()[0][0] / 1e6 / n
 
     rot = PQ.opq_rotate(df, "embedding", r_e6, dim).localCheckpoint()
@@ -569,59 +581,69 @@ def test_opq_rotate_rejects_length_mismatch(spark):
 
 
 def test_pq_fit_local_matches_spark(spark):
-    """The driver-side fit replica opq_fit now trains its sample on
-    (_pq_fit_local) is BIT-IDENTICAL to the distributed pq_fit on the
-    same relation — same distinct-by-min-id seeding, integer-micro
-    argmin tie-break, exact-int64-sum half-up means, and empty-codeword
+    """The driver-side fit opq_fit trains its sample with (_fit_batch:
+    the rows as one batch through pq_fit's seed, step and merge
+    functions) is BIT-IDENTICAL to the former Catalyst pq_fit on the same
+    relation — same distinct-by-min-id seeding, integer-micro argmin
+    tie-break, exact-int64-sum half-up means, and empty-codeword
     dropout — across n_iter 0/1/2 and duplicate-heavy float32 input."""
+    from etl_gardener_spark.operators.similarity import _arrow_vectors
+
     dup = [(i, [0.0] * DIM) for i in range(3)]
     rows = [(i, v) for i, (_, v) in enumerate(dup + _vecs(50, seed=5))]
     # float32 coverage comes from the array<float> schema arm below: Spark
-    # casts the ingested doubles to float32, and the collect reads them
-    # back as float32-representable doubles — the quantized values
-    # _pq_fit_local then trains on (r11 advisor: an explicit f32 row list
-    # here was built and never used).
-    for schema, data in (
-        ("vec_id long, embedding array<double>", rows),
-        ("vec_id long, embedding array<float>", rows),
+    # casts the ingested doubles to float32, and the Arrow read gives
+    # back the float32-representable doubles the fit then trains on.
+    for schema in (
+        "vec_id long, embedding array<double>",
+        "vec_id long, embedding array<float>",
     ):
-        df = spark.createDataFrame(data, schema)
-        collected = [
-            (r["vec_id"], list(r["embedding"])) for r in df.collect()
-        ]
+        df = spark.createDataFrame(rows, schema)
+        table = df.toArrow()
+        x, _lens, valid, present = _arrow_vectors(table.column(1))
+        ids = table.column(0).to_pylist()
         for n_iter in (0, 1, 2):
-            got = PQ._pq_fit_local(collected, M, SUB, KSUB, n_iter)
-            exp: dict = {}
-            for r in PQ.pq_fit(
-                df, m=M, sub_dim=SUB, k_sub=KSUB, n_iter=n_iter
-            ).collect():
-                exp.setdefault(r["s"], []).append(
-                    (r["cid"], list(r["cvec"]))
-                )
-            for s in exp:
-                exp[s].sort()
+            cbs = PQ._fit_batch(
+                ids, x, valid, present, M, SUB, KSUB, n_iter, True
+            )
+            got = [
+                (s, cid, [float(v).hex() for v in cv])
+                for s, cb in enumerate(cbs)
+                for cid, cv in cb
+            ]
+            exp = sorted(
+                (r["s"], r["cid"], [float(v).hex() for v in r["cvec"]])
+                for r in ref_pq_fit(
+                    df, "vec_id", "embedding", M, SUB, KSUB, n_iter
+                ).collect()
+            )
             assert got == exp, (schema, n_iter)
 
 
 def test_pq_encode_local_matches_spark_recon(spark):
-    """_pq_encode_local (the driver twin of exploded_codes_sub + the
-    opq reconstruction tail) produces the identical yhat per id as the
-    distributed join/flatten pipeline it replaced."""
+    """The driver-side reconstruction opq_fit scatters against
+    (_reconstruct: each row's chosen codewords by _argmin) equals the
+    former Catalyst encode + join/flatten pipeline per id."""
+    import numpy as np
+
     from etl_gardener_spark.functions.localrel import local_df
 
     rows = [(i, v) for i, v in _vecs(40, seed=9)]
     df = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    cb_local = PQ._pq_fit_local(rows, M, SUB, KSUB, 2)
+    x = np.array([v for _i, v in rows])
+    valid, present = np.ones(x.shape, dtype=bool), np.ones(len(rows), bool)
+    cbs = PQ._fit_batch(
+        [i for i, _v in rows], x, valid, present, M, SUB, KSUB, 2, True
+    )
     cb_rows = [
-        (s, cid, cvec) for s, lst in sorted(cb_local.items())
-        for cid, cvec in lst
+        (s, cid, cvec) for s, lst in enumerate(cbs) for cid, cvec in lst
     ]
     cb = local_df(spark, cb_rows, "s int, cid long, cvec array<double>")
     cbj = cb.select(
         F.col("s").alias("__cs"), F.col("cid").alias("__cc"), "cvec"
     )
     recon = (
-        PQ.exploded_codes_sub(df, "vec_id", "embedding", M, SUB, cb)
+        ref_exploded_codes_sub(df, "vec_id", "embedding", M, SUB, cb)
         .join(
             F.broadcast(cbj),
             (F.col("s") == F.col("__cs")) & (F.col("code") == F.col("__cc")),
@@ -638,5 +660,49 @@ def test_pq_encode_local_matches_spark_recon(spark):
         )
     )
     exp = {r["sid"]: list(r["yhat"]) for r in recon.collect()}
-    got = PQ._pq_encode_local(rows, cb_local, M, SUB)
+    yhat = PQ._reconstruct(x, valid, present, cbs, SUB)
+    got = {i: yhat[j].tolist() for j, (i, _v) in enumerate(rows)}
     assert got == exp
+
+
+def test_emb_ann_topk_pq_trainedcb_job_count(spark):
+    """One ``emb_ann_topk_pq_trainedcb`` call at sf0.01, built and run:
+    pq_fit's seed pass and two Lloyd passes (one narrow job each), and
+    the execution jobs of the encode + ADC search. The fitted codebook
+    reaches the encode and query-table kernels without a job (17 jobs
+    when pq_fit and the trained encode were Catalyst trees)."""
+    import os
+
+    from etl_gardener_spark.orchestrator.metrics import spark_cost
+    from etl_gardener_spark.plans import queries as Q
+    from etl_gardener_spark.sources.tables import load_table
+    from tests.conftest import SF_DIR
+
+    fn = Q.REGISTRY["emb_ann_topk_pq_trainedcb"].fn
+    sf = os.path.join(os.path.dirname(SF_DIR), "sf0.01")
+    load_table(spark, sf, "embeddings")  # caches the schema: not counted
+    with spark_cost(spark) as cost:
+        fn(spark, sf).write.format("noop").mode("overwrite").save()
+    assert cost.jobs == 7, cost
+
+
+@pytest.mark.parametrize(
+    "name",
+    [
+        "emb_ann_topk_pq_trainedcb",
+        "emb_ann_topk_ivfpq_residual_trainedcb",
+        "emb_pq_codebook_recall_report",
+        "emb_pq_opq_mse_report",
+        "emb_ann_topk_pq_opq",
+        "emb_ann_topk_ivfpq_opq",
+        "emb_ann_topk_pq_opq_persisted",
+    ],
+)
+def test_trained_codebook_queries_match_oracle(spark, duck, name):
+    """The registry queries that train PQ codebooks (pq_fit, opq_fit)
+    against their DuckDB oracles."""
+    from etl_gardener_spark.plans import queries as Q
+    from tests.conftest import SF_DIR, assert_matches_oracle
+
+    spec = Q.REGISTRY[name]
+    assert_matches_oracle(spec.fn(spark, SF_DIR), duck, spec.oracle)
