@@ -15,7 +15,8 @@ Spark jobs the run launched, read by ``orchestrator.metrics.spark_cost``
 — the local-mode analogue of BigQuery slot-seconds, the reference's only
 published cost unit). Task-time includes per-task wait (I/O, scheduling —
 dominant for tiny partitions at small SF); cpu-time is the pure compute
-that scales with data volume. Task-time is scheduler-noise-robust:
+that scales with data volume. ``queries_jobs`` / ``queries_stages``
+give the Spark jobs and stages of each query's fastest run. Task-time is scheduler-noise-robust:
 wall-clock on a shared box swings ±15% with CPU contention while
 task-time tracks the actual work, so cross-round comparisons
 (tools/bench_trend.py) should prefer ``queries_task_sec`` and treat
@@ -81,6 +82,8 @@ def main() -> None:
     timings: dict[str, float] = {}
     task_secs: dict[str, float] = {}
     cpu_secs: dict[str, float] = {}
+    jobs: dict[str, int] = {}
+    stages: dict[str, int] = {}
     for name, qd in Q.REGISTRY.items():
         best = None
         best_task = None
@@ -91,7 +94,9 @@ def main() -> None:
                 df = qd.fn(spark, sf_dir)
                 df.write.mode("overwrite").format("noop").save()
                 dt = time.monotonic() - t0
-            best = dt if best is None else min(best, dt)
+            if best is None or dt < best:
+                best = dt
+                jobs[name], stages[name] = cost.jobs, cost.stages
             best_task = cost.task_s if best_task is None else min(best_task, cost.task_s)
             best_cpu = cost.cpu_s if best_cpu is None else min(best_cpu, cost.cpu_s)
         timings[name] = round(best, 3)
@@ -105,6 +110,8 @@ def main() -> None:
         "queries": timings,
         "queries_task_sec": task_secs,
         "queries_cpu_sec": cpu_secs,
+        "queries_jobs": jobs,
+        "queries_stages": stages,
         "task_sec_total": round(sum(task_secs.values()), 3),
         "cpu_sec_total": round(sum(cpu_secs.values()), 3),
         "canary_query": CANARY,

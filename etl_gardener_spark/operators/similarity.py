@@ -713,7 +713,7 @@ def kmeans_assign(
     tests/test_assign_encode_kernels.py keeps the former Catalyst tree as
     the bit-equality reference."""
     cents = _model_rows(cents_df, "kmeans_assign centroids")
-    return _assign_pass(df, cents, id_col, vec_col, round_digits, False)
+    return _assign_pass(df, cents, id_col, vec_col, round_digits, False, _dots)
 
 
 # A centroid or codebook relation read to the driver holds at most this
@@ -742,10 +742,12 @@ def _assign_pass(
     vec_col: str,
     round_digits: int,
     keep_vec: bool,
+    dots,
 ) -> DataFrame:
     """(id, cid), plus the vector itself with ``keep_vec``, for every row
     of ``df``: ``_nearest`` over the sorted (cid, cvec) rows ``cents``,
-    once per Arrow batch. No centroid: no row, as in the SQL cross join."""
+    once per Arrow batch, with the ``dots`` kernel (``_dots`` or
+    ``_gemm_dots``). No centroid: no row, as in the SQL cross join."""
     src = df.select(id_col, vec_col)
     fields = [src.schema[id_col], StructField("cid", LongType())]
     if keep_vec:
@@ -760,7 +762,7 @@ def _assign_pass(
             vecs = batch.column(1)
             x, lens, valid, present = _arrow_vectors(vecs)
             scorable = _scorable(lens, valid, present)
-            win = _nearest(x, lens, scorable, cents, round_digits)
+            win = _nearest(x, lens, scorable, cents, round_digits, dots)
             cols = [batch.column(0), cids.take(pa.array(win))]
             if keep_vec:
                 cols.append(vecs)
@@ -776,78 +778,33 @@ def kmeans_assign_gemm(
     vec_col: str,
     round_digits: int = 6,
 ) -> DataFrame:
-    """``kmeans_assign`` computed as one numpy GEMM per Arrow batch:
-    same (id, cid) contract, same rounded-cosine argmax with min-cid
-    tie-break, same NULL/zero-norm → −2 sentinel.
+    """``kmeans_assign`` with each batch's dot products as one GEMM:
+    same (id, cid) contract, same centroid read (``_model_rows``), same
+    ``mapInArrow`` pass and the same ``_nearest`` scoring (NULL vector or
+    component, zero norm or length mismatch -> the -2 sentinel; NaN
+    through Spark's FLOOR), with ``v @ C.T`` in place of the sequential
+    fold.
 
-    Why it exists: the fold assignment (``kmeans_assign``) adds the
-    n·k·d products one dimension at a time, to stay bit-identical to the
-    sequential SQL fold. That is fine at fixed small k, but the
-    SemDeDup k∝n contract makes k grow with the corpus, and the
-    assignment becomes the quadratic term (r7 ladder: auto-k α=2.02
-    through the fold path). Here the scores for a batch are one
-    ``M @ C.T`` BLAS call (centroids broadcast as a k×d ndarray; k is
-    O(n/target) rows of d doubles — the same driver-size class as any
-    broadcast build side).
+    Why it exists: the fold adds the n·k·d products one dimension at a
+    time, to stay bit-identical to the sequential SQL fold. That is fine
+    at fixed small k, but the SemDeDup k∝n contract makes k grow with
+    the corpus, and the assignment becomes the quadratic term (r7
+    ladder: auto-k α=2.02 through the fold path); here it is one BLAS
+    call per batch and vector length.
 
-    Float caveats, stated rather than hidden. (1) Summation order:
-    numpy's matmul uses pairwise summation while the Catalyst/oracle
-    fold is sequential, so a dot product can differ in the last ulp
-    BEFORE the 6-dp quantization. Identical-at-6dp holds on every
-    corpus this repo certifies (the within-cluster GEMM in
-    ``semantic_dedup`` has always taken the same risk and
-    strict-passes); the pinned-k oracle-replay path keeps the fold.
-    (2) Rounding mode — CLOSED: both paths now quantize with the same
-    portable floor kernel ``FLOOR(x*10^d + 0.5)`` (see the inline
-    comment), so given equal dot products the argmax winners are
-    bit-identical; previously this path used np.round (binary
-    half-even) against the fold's Spark ROUND (shortest-repr half-up),
-    which could flip the winner on a 6-dp midpoint score.
+    Float caveat, stated rather than hidden: numpy's matmul uses
+    pairwise summation while the Catalyst/oracle fold is sequential, so a
+    dot product can differ in the last ulp BEFORE the 6-dp quantization.
+    Identical-at-6dp holds on every corpus this repo certifies (the
+    within-cluster GEMM in ``semantic_dedup`` has always taken the same
+    risk and strict-passes); the pinned-k oracle-replay path keeps the
+    fold. Given equal dot products the winners are bit-identical: both
+    paths quantize with the same floor kernel.
     tests/test_localrel_autotune.py asserts auto(=GEMM) ==
     pinned(=fold) end-to-end."""
-
-    kscale = float(10**round_digits)
-
-    rows = sorted(
-        (int(r[0]), [float(x) for x in r[1]]) for r in cents_df.collect()
-    )
-    if not rows:
-        return df.select(
-            F.col(id_col), F.lit(0).cast("long").alias("cid")
-        ).filter(F.lit(False))
-    cids = np.array([c for c, _ in rows], dtype=np.int64)
-    cmat = np.array([v for _, v in rows], dtype=np.float64)
-    cnorm = np.sqrt((cmat * cmat).sum(axis=1))
-
-    def _assign(batches):
-        import pandas as pd
-
-        for pdf in batches:
-            if not len(pdf):
-                continue
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            vecs = [
-                v if v is not None else [0.0] * cmat.shape[1]
-                for v in pdf[vec_col]
-            ]
-            mat = np.array(vecs, dtype=np.float64)
-            vnorm = np.sqrt((mat * mat).sum(axis=1))
-            with np.errstate(divide="ignore", invalid="ignore"):
-                scores = (mat @ cmat.T) / np.outer(vnorm, cnorm)
-            scores = np.where(np.isfinite(scores), scores, -2.0)
-            # same floor kernel as the fold path: np.floor(x*10^d + 0.5)
-            # is the identical IEEE expression tree as Catalyst's
-            # FLOOR(x*10^d + 0.5), so fold and GEMM argmax bit-agree;
-            # np.round (binary half-even) vs Spark ROUND (shortest-repr
-            # half-up) could flip the winner on a 6-dp midpoint
-            np.floor(scores * kscale + 0.5, out=scores)
-            # cids is ascending and argmax returns the FIRST max, so
-            # ties break to the smallest cid — the min_by(ordk) winner
-            best = scores.argmax(axis=1)
-            yield pd.DataFrame({id_col: ids, "cid": cids[best]})
-
-    return df.select(id_col, vec_col).mapInPandas(
-        _assign, schema=f"{id_col} long, cid long"
+    cents = _model_rows(cents_df, "kmeans_assign_gemm centroids")
+    return _assign_pass(
+        df, cents, id_col, vec_col, round_digits, False, _gemm_dots
     )
 
 
@@ -915,8 +872,8 @@ def kmeans_fit(
     ``kmeans_assign_gemm`` for the final pass and, above the bounds, for
     every iteration — one BLAS call per batch instead of the sequential
     fold, the k∝n path (see its float caveat). The driver-side
-    iterations always use the fold's arithmetic. 'fold' reads the
-    centroids to the driver (``kmeans_assign``), so it takes at most
+    iterations always use the fold's arithmetic. Both read the centroids
+    to the driver (``_model_rows``), so they take at most
     ``_MODEL_ROWS`` = 65,536 of them: a larger ``k`` raises ValueError
     before any training.
 
@@ -929,17 +886,17 @@ def kmeans_fit(
         raise ValueError(f"assign must be 'fold' or 'gemm', got {assign!r}")
     if seed not in ("id_lt_k", "first_k"):
         raise ValueError(f"seed must be 'id_lt_k' or 'first_k', got {seed!r}")
-    if assign == "fold" and k > _MODEL_ROWS:
+    if k > _MODEL_ROWS:
         raise ValueError(
-            f"kmeans_fit: assign='fold' takes at most {_MODEL_ROWS} "
-            f"centroids, got k={k}; use assign='gemm'"
+            f"kmeans_fit takes at most {_MODEL_ROWS} centroids, got k={k}"
         )
     assign_fn = kmeans_assign if assign == "fold" else kmeans_assign_gemm
+    dots = _dots if assign == "fold" else _gemm_dots
     vecs = df.select(F.col(id_col), F.col(vec_col))
     rows = _fit_rows(vecs, vec_col)
     if rows is None:
         cents = _lloyd_distributed(
-            vecs, id_col, vec_col, k, n_iter, round_digits, assign_fn, seed
+            vecs, id_col, vec_col, k, n_iter, round_digits, dots, seed
         )
     else:
         # explicit schema: empty corpus -> zero centroids (see
@@ -1005,7 +962,7 @@ def _lloyd_distributed(
     k: int,
     n_iter: int,
     round_digits: int,
-    assign_fn,
+    dots,
     seed: str,
 ) -> DataFrame:
     """``n_iter`` Lloyd iterations as Spark jobs over the (id, vec)
@@ -1024,25 +981,15 @@ def _lloyd_distributed(
         # ordered by dimension; empty clusters drop out (their cid simply
         # stops attracting points — Lloyd's standard degenerate case).
         # The rounded per-(cid, pos) means are collected to the driver:
-        # the centroids are O(k·dim), the same driver-size class the gemm
-        # assignment path collects every iteration anyway, and the next
-        # assignment pass takes them as Python rows (pos is unique per
-        # cid, so sorting by pos rebuilds each centroid exactly).
-        if assign_fn is kmeans_assign:
-            # the vector rides through the narrow assignment pass, so the
-            # update needs no join-back shuffle of the corpus — one
-            # exchange per iteration instead of two (guide §2.4)
-            exploded = _assign_pass(
-                vecs, cents, id_col, vec_col, round_digits, True
-            ).select("cid", F.posexplode(vec_col).alias("pos", "val"))
-        else:
-            cur = assign_fn(
-                vecs, local_df(spark, cents, "cid long, cvec array<double>"),
-                id_col, vec_col, round_digits,
-            )
-            exploded = vecs.join(cur, id_col).select(
-                "cid", F.posexplode(vec_col).alias("pos", "val")
-            )
+        # the centroids are O(k·dim), bounded by _MODEL_ROWS rows, and
+        # the next assignment pass takes them as Python rows (pos is
+        # unique per cid, so sorting by pos rebuilds each centroid
+        # exactly). The vector rides through the narrow assignment pass,
+        # so the update needs no join-back shuffle of the corpus — one
+        # exchange per iteration instead of two (guide §2.4).
+        exploded = _assign_pass(
+            vecs, cents, id_col, vec_col, round_digits, True, dots
+        ).select("cid", F.posexplode(vec_col).alias("pos", "val"))
         mrows = (
             exploded.groupBy("cid", "pos")
             .agg(F.round(F.avg(F.col("val").cast("double")), round_digits).alias("m"))
@@ -1087,7 +1034,7 @@ def _lloyd_local(
         if not cents or not n:
             return []
         cids = np.array([c for c, _v in cents], dtype=np.int64)
-        win = cids[_nearest(x, lens, scorable, cents, round_digits)]
+        win = cids[_nearest(x, lens, scorable, cents, round_digits, _dots)]
         order = np.argsort(win, kind="stable")
         bounds = np.flatnonzero(np.diff(win[order])) + 1
         new = []
@@ -1139,7 +1086,7 @@ def _scorable(lens, valid, present) -> np.ndarray:
     return present & ~(in_len & ~valid).any(axis=1)
 
 
-def _nearest(x, lens, scorable, cents, round_digits) -> np.ndarray:
+def _nearest(x, lens, scorable, cents, round_digits, dots) -> np.ndarray:
     """Index into the sorted (cid, cvec) rows ``cents`` of each row's
     nearest centroid: the exact replica of the SQL assignment fold.
 
@@ -1148,7 +1095,8 @@ def _nearest(x, lens, scorable, cents, round_digits) -> np.ndarray:
     |c|), -2) * 10^d + 0.5) where a zero divisor, a NULL vector or
     component, or a length mismatch gives the -2 sentinel, and the floor
     converts to a long as Spark's does (saturating; NaN -> 0). The winner
-    is the highest score, ties to the first row of ``cents``."""
+    is the highest score, ties to the first row of ``cents``. ``dots`` is
+    the dot-product kernel: ``_dots`` (the fold) or ``_gemm_dots``."""
     n = len(lens)
     kscale = float(10**round_digits)
     sentinel = math.floor(-2.0 * kscale + 0.5)
@@ -1174,7 +1122,7 @@ def _nearest(x, lens, scorable, cents, round_digits) -> np.ndarray:
             v = x[lo + r, :length]
             den = _norms(v)[:, None] * nc[None, :]
             with np.errstate(all="ignore"):
-                cos = np.where(den == 0, -2.0, _dots(v, cm) / den)
+                cos = np.where(den == 0, -2.0, dots(v, cm) / den)
                 score[np.ix_(r, ci)] = _floor_long(cos * kscale + 0.5)
         win[lo:hi] = score.argmax(axis=1)
     return win
@@ -1196,6 +1144,12 @@ def _dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
     for j in range(a.shape[1]):
         acc += a[:, j : j + 1] * b[None, :, j]
     return acc
+
+
+def _gemm_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
+    """``_dots`` as one BLAS call (pairwise summation; see
+    ``kmeans_assign_gemm``)."""
+    return a @ b.T
 
 
 def _floor_long(a: np.ndarray) -> np.ndarray:

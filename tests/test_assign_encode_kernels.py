@@ -214,6 +214,58 @@ def test_kmeans_assign_ranks_round_digits(spark):
     assert _canon(got) == _canon(ref)
 
 
+# -- the GEMM assignment (kmeans_assign_gemm) against the fold -------------
+
+# every dot product of KM_VECS with KM_CENTS is exact in binary, so the
+# GEMM's summation order cannot move a score; here a NaN component scores
+# FLOOR(NaN) = 0, which beats the true cosine -1 of cid 1 (a kernel that
+# maps NaN to the -2 sentinel gives id 0 to cid 1)
+KM_NAN_CENTS = [(0, [NAN, 0.0, 0.0]), (1, [-1.0, 0.0, 0.0])]
+GEMM_CASES = {
+    "specials": (KM_VECS, KM_CENTS, KM_SCHEMA, "vec_id"),
+    "nan": ([(0, [1.0, 0.0, 0.0]), (1, [NAN, 1.0, 0.0])], KM_NAN_CENTS,
+            KM_SCHEMA, "vec_id"),
+    "string_ids": ([(f"d{i}", v) for i, v in KM_VECS], KM_CENTS,
+                   "doc string, embedding array<float>", "doc"),
+    "no_centroids": (KM_VECS, [], KM_SCHEMA, "vec_id"),
+}
+
+
+@pytest.mark.parametrize("case", sorted(GEMM_CASES))
+def test_kmeans_assign_gemm_matches_fold(spark, case):
+    rows, cents, schema, id_col = GEMM_CASES[case]
+    df = _rel(spark, rows, schema)
+    cdf = local_df(spark, cents, CENT_SCHEMA)
+    got = SIM.kmeans_assign_gemm(df, cdf, id_col, "embedding")
+    ref = SIM.kmeans_assign(df, cdf, id_col, "embedding")
+    assert got.schema == ref.schema
+    got, ref = _canon(got.collect()), _canon(ref.collect())
+    assert got == ref and len(got) == (len(rows) if cents else 0)
+    if case == "nan":
+        assert got == [(0, 0), (1, 0)]
+
+
+def test_kmeans_fit_gemm_matches_fold_distributed(spark):
+    """The distributed Lloyd loop with either kernel: seeds ids 0 and 1,
+    one iteration whose cluster means ([2, 0.75] and [0.5, 2.25]) stay
+    exact in binary, and a NULL vector riding through."""
+    from unittest import mock
+
+    rows = [
+        (0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [4.0, 1.0]), (3, [2.0, 1.0]),
+        (4, [1.0, 1.0]), (5, [1.0, 2.0]), (6, [1.0, 4.0]), (7, [0.0, 2.0]),
+        (8, None),
+    ]
+    df = _rel(spark, rows, KM_SCHEMA)
+    out = {}
+    with mock.patch.object(SIM, "_FIT_ROWS", 0):
+        for assign in ("fold", "gemm"):
+            final, cents = SIM.kmeans_fit(df, k=2, n_iter=1, assign=assign)
+            out[assign] = (_canon(cents.collect()), _canon(final.collect()))
+    assert out["gemm"] == out["fold"]
+    assert out["fold"][0] == _canon([(0, [2.0, 0.75]), (1, [0.5, 2.25])])
+
+
 # PQ: m=2 sub-spaces of 2; the seeded codebook is the first 4 ids
 PQ_VECS = [
     (0, [1.0, 0.0, 0.0, 1.0]),
@@ -436,12 +488,13 @@ def test_collect_bounded_local_relation_is_free(spark):
 
 
 def test_kmeans_fit_refuses_fold_k_above_model_bound_before_training(spark):
-    """assign='fold' reads its centroids through ``_model_rows``, so a k
+    """Both kernels read their centroids through ``_model_rows``, so a k
     above that bound is refused up front, not after the Lloyd loop."""
     from etl_gardener_spark.orchestrator.metrics import spark_cost
 
     df = _rel(spark, KM_VECS, KM_SCHEMA)
     with spark_cost(spark) as cost:
-        with pytest.raises(ValueError, match=f"at most {SIM._MODEL_ROWS}"):
-            SIM.kmeans_fit(df, k=SIM._MODEL_ROWS + 1)
+        for assign in ("fold", "gemm"):
+            with pytest.raises(ValueError, match=f"at most {SIM._MODEL_ROWS}"):
+                SIM.kmeans_fit(df, k=SIM._MODEL_ROWS + 1, assign=assign)
     assert cost.jobs == 0
