@@ -16,7 +16,9 @@ Spark jobs the run launched, read by ``orchestrator.metrics.spark_cost``
 published cost unit). Task-time includes per-task wait (I/O, scheduling —
 dominant for tiny partitions at small SF); cpu-time is the pure compute
 that scales with data volume. ``queries_jobs`` / ``queries_stages``
-give the Spark jobs and stages of each query's fastest run. Task-time is scheduler-noise-robust:
+give the Spark jobs and stages of each query's LAST run: steady-state
+counts, since a query's first call in a session can run a different
+number of jobs than its later calls. Task-time is scheduler-noise-robust:
 wall-clock on a shared box swings ±15% with CPU contention while
 task-time tracks the actual work, so cross-round comparisons
 (tools/bench_trend.py) should prefer ``queries_task_sec`` and treat
@@ -94,11 +96,10 @@ def main() -> None:
                 df = qd.fn(spark, sf_dir)
                 df.write.mode("overwrite").format("noop").save()
                 dt = time.monotonic() - t0
-            if best is None or dt < best:
-                best = dt
-                jobs[name], stages[name] = cost.jobs, cost.stages
+            best = dt if best is None else min(best, dt)
             best_task = cost.task_s if best_task is None else min(best_task, cost.task_s)
             best_cpu = cost.cpu_s if best_cpu is None else min(best_cpu, cost.cpu_s)
+        jobs[name], stages[name] = cost.jobs, cost.stages
         timings[name] = round(best, 3)
         task_secs[name] = round(best_task, 3)
         cpu_secs[name] = round(best_cpu, 3)

@@ -66,7 +66,10 @@ from etl_gardener_spark.functions.localrel import (
 from etl_gardener_spark.operators.similarity import (
     _MODEL_ROWS,
     _arrow_vectors,
+    _assign_pass,
     _floor_long,
+    _model_rows,
+    _resolve_cents,
     ivf_centroids,
 )
 
@@ -454,37 +457,26 @@ def pq_topk_ivf(
     and ADC ranks candidates without touching raw vectors at all.
 
     Build side (one corpus pass each, amortized across queries): cell
-    assignment by rounded-cosine argmax (similarity.kmeans_assign — a
-    narrow numpy pass per Arrow batch, identical tie-break to the
-    IVF-Flat oracle) and the PQ code table (``pq_encode``'s pass). The
-    seeded codebook is collected once per call and feeds both the
-    encode and the query table. Query side: nprobe nearest cells + the
-    m x k_sub micro-distance table, both tiny broadcasts. Output:
+    assignment by rounded-cosine argmax and the PQ code table
+    (``pq_encode``'s pass). Cells and query probes are both ranked by
+    ``similarity._nearest`` (FLOOR(cos·1e6 + 0.5) DESC, ties to the
+    smallest cid), the kernel behind kmeans_assign and the IVF-Flat
+    cells, in narrow numpy passes per Arrow batch over the centroids
+    read to the driver once. The seeded codebook is collected once per
+    call and feeds both the encode and the query table. Query side:
+    nprobe nearest cells + the m x k_sub micro-distance table, both
+    tiny broadcasts. Output:
     (query_id, neighbor_id, score, rank) — exact-integer ADC score,
     rank (score ASC, neighbor_id ASC).
     """
-    from etl_gardener_spark.operators.similarity import (
-        cosine,
-        ivf_centroids,
-        kmeans_assign,
+    # a trained coarse quantizer (kmeans_fit's fitted relation) swaps in
+    # as in similarity.cosine_topk_ivf
+    cents = _model_rows(
+        _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids),
+        "pq_topk_ivf centroids",
     )
-
-    spark = corpus.sparkSession
-    if centroids is not None:
-        # trained coarse quantizer (kmeans_fit's fitted relation) — the
-        # same swap as similarity.cosine_topk_ivf's centroids param
-        cents_df = centroids.select(
-            F.col("cid").cast("long"), F.col("cvec").cast("array<double>")
-        )
-    else:
-        cents = ivf_centroids(corpus, id_col, vec_col, n_centroids)
-        cents_df = local_df(
-            spark,
-            [(cid, vec) for cid, vec in cents],
-            "cid long, cvec array<double>",
-        )
     if cells is None:
-        cells = kmeans_assign(corpus, cents_df, id_col, vec_col).select(
+        cells = _assign_pass(corpus, cents, id_col, vec_col, 6).select(
             F.col(id_col).alias("neighbor_id"), F.col("cid").alias("cell")
         )
     else:
@@ -499,30 +491,9 @@ def pq_topk_ivf(
             _encode(corpus, id_col, vec_col, m, sub_dim, cb), id_col, m
         )
     codes = codes.join(cells, "neighbor_id")
-
-    qscored = (
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        )
-        .join(F.broadcast(cents_df))
-        .select(
-            "query_id",
-            "q_vec",
-            F.col("cid").alias("cell"),
-            F.round(
-                F.coalesce(cosine(F.col("q_vec"), F.col("cvec")), F.lit(-2.0)),
-                6,
-            ).alias("__s"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__s").desc(), F.col("cell").asc()
-    )
-    probes = (
-        qscored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
-        .select("query_id", "cell")
-    )
+    probes = _assign_pass(
+        queries, cents, id_col, vec_col, 6, keep=nprobe
+    ).select(F.col(id_col).alias("query_id"), F.col("cid").alias("cell"))
 
     table = _query_dist_table(queries, cb, id_col, vec_col, m, sub_dim)
     cand = (
@@ -660,17 +631,14 @@ def _residual_parts(
     """Shared build of the residual IVF-PQ variants: (res, cells,
     probes) — the residual corpus relation (neighbor_id, cell, rvec),
     the cell assignment, and the per-query probe set carrying the query
-    residual against each probed centroid. Lifted verbatim from the
-    certified pq_topk_ivf_residual body so the seeded- and
-    trained-codebook variants share one bit-identical front half."""
-    from etl_gardener_spark.operators.similarity import (
-        _resolve_cents,
-        cosine,
-        kmeans_assign,
-    )
-
+    residual against each probed centroid, so the seeded- and
+    trained-codebook variants share one bit-identical front half. Cells
+    and the nprobe probes per query are ``similarity._nearest``'s, over
+    the centroids read to the driver once; each probe joins the
+    broadcast centroid relation back by cell for its residual."""
     cents_df = _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids)
-    cells = kmeans_assign(corpus, cents_df, id_col, vec_col).select(
+    cents = _model_rows(cents_df, "ivf centroids")
+    cells = _assign_pass(corpus, cents, id_col, vec_col, 6).select(
         F.col(id_col).alias("neighbor_id"), F.col("cid").alias("cell")
     )
     res = (
@@ -694,34 +662,20 @@ def _residual_parts(
         # one materialization, two consumers (codebook seed + encode)
         .localCheckpoint(eager=True)
     )
-    qscored = (
-        queries.select(
-            F.col(id_col).alias("query_id"),
-            _check_dim(vec_col, m, sub_dim).alias("q_vec"),
-        )
-        .join(F.broadcast(cents_df))
-        .select(
-            "query_id",
-            "q_vec",
-            F.col("cid").alias("cell"),
-            "cvec",
-            F.round(
-                F.coalesce(cosine(F.col("q_vec"), F.col("cvec")), F.lit(-2.0)),
-                6,
-            ).alias("__s"),
-        )
-    )
-    wq = Window.partitionBy("query_id").orderBy(
-        F.col("__s").desc(), F.col("cell").asc()
+    checked = queries.select(
+        F.col(id_col), _check_dim(vec_col, m, sub_dim).alias(vec_col)
     )
     probes = (
-        qscored.withColumn("__rn", F.row_number().over(wq))
-        .filter(F.col("__rn") <= nprobe)
+        _assign_pass(
+            checked, cents, id_col, vec_col, 6, keep_vec=True, keep=nprobe
+        )
+        .withColumnRenamed("cid", "cell")
+        .join(F.broadcast(cents_df.withColumnRenamed("cid", "cell")), "cell")
         .select(
-            "query_id",
+            F.col(id_col).alias("query_id"),
             "cell",
             F.zip_with(
-                F.col("q_vec"), F.col("cvec"), lambda x, y: x.cast("double") - y
+                F.col(vec_col), F.col("cvec"), lambda x, y: x.cast("double") - y
             ).alias("q_rvec"),
         )
     )

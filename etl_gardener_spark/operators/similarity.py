@@ -2,13 +2,15 @@
 baseline) and a sign-random-projection LSH-bucketed variant (the scale
 path), plus embedding near-duplicate pairs.
 
-Embeddings are ordinary ``array<float>`` columns. Pairwise scores are
-Catalyst higher-order functions (``zip_with`` + ``aggregate`` fold); the
-k-means assignment, which scores every vector against every centroid,
-runs the same fold in numpy once per Arrow batch (``_nearest``). Either
-way arithmetic is done in float64 with a left-to-right fold so results
-are deterministic and reproducible on any engine (the DuckDB oracles
-compute the same sums in the same order).
+Embeddings are ordinary ``array<float>`` columns. Vector-to-vector
+scores are Catalyst higher-order functions (``zip_with`` + ``aggregate``
+fold). Every ranking of centroids, the k-means assignment, the IVF
+cells and the query probes, goes through one kernel, ``_nearest``: a
+numpy pass per Arrow batch that takes each block's dot products from one
+GEMM and re-folds only the scores the GEMM's error bound cannot decide.
+Either way the scores are those of a float64 left-to-right fold, so
+results are deterministic and reproducible on any engine (the DuckDB
+oracles compute the same sums in the same order).
 
 Scale design:
 * **Brute-force top-k**: queries are broadcast (a query set is small by
@@ -532,66 +534,6 @@ def _resolve_cents(
     )
 
 
-def _ivf_ranked_cells(
-    df: DataFrame,
-    cents_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    out_id: str,
-    out_vec: str,
-    keep: int,
-    round_digits: int = 6,
-):
-    """Score every vector against the C broadcast centroids and keep
-    the top ``keep`` cells per vector (rounded cosine DESC, cid ASC).
-    The per-pair cosine is the same fold the oracle computes, so cell
-    assignment is bit-reproducible. One narrow broadcast join of
-    |df| x C rows + one aggregate/window — the plan stays ~constant-size
-    (a centroid relation, not C x dim inlined literal expressions,
-    which cost seconds of optimizer time per action)."""
-    scored = (
-        df.select(F.col(id_col).alias(out_id), F.col(vec_col).alias(out_vec))
-        .join(F.broadcast(cents_df))
-        .select(
-            out_id,
-            out_vec,
-            "cid",
-            # COALESCE(-2.0): see kmeans_assign — a NULL cell score
-            # would sort FIRST in the min_by struct and send every
-            # vector into a zero-centroid cell
-            F.round(
-                F.coalesce(cosine(F.col(out_vec), F.col("cvec")), F.lit(-2.0)),
-                round_digits,
-            ).alias("__s"),
-        )
-    )
-    if keep == 1:
-        # argmax as ONE hash aggregate (map-side combined) instead of
-        # a sort window: min_by over the (-score, cid) struct picks
-        # the identical (score DESC, cid ASC) winner without sorting
-        # every vector's C rows — the corpus-side assignment is the
-        # big input, so this is the path that matters at scale.
-        ordk = F.struct((-F.col("__s")).alias("s"), F.col("cid").alias("c"))
-        val = F.struct(F.col("cid"), F.col(out_vec))
-        return (
-            scored.groupBy(out_id)
-            .agg(F.min_by(val, ordk).alias("__m"))
-            .select(
-                out_id,
-                F.col(f"__m.{out_vec}").alias(out_vec),
-                F.col("__m.cid").alias("cell"),
-            )
-        )
-    w = Window.partitionBy(out_id).orderBy(
-        F.col("__s").desc(), F.col("cid").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= keep)
-        .select(out_id, out_vec, F.col("cid").alias("cell"))
-    )
-
-
 def ivf_build_cells(
     corpus: DataFrame,
     id_col: str = "vec_id",
@@ -604,12 +546,29 @@ def ivf_build_cells(
     (neighbor_id, c_vec, cell) — the expensive, amortizable half of
     ``cosine_topk_ivf``. Build once, pass to any number of searches via
     its ``cells`` parameter (the probe sweep's per-arm pattern; a real
-    deployment persists this relation next to the centroids)."""
-    cents_df = _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids)
-    return _ivf_ranked_cells(
-        corpus, cents_df, id_col, vec_col, "neighbor_id", "c_vec", 1,
-        round_digits,
+    deployment persists this relation next to the centroids). The cell
+    is each vector's nearest centroid (``_nearest``, ties to the
+    smallest cid), one narrow numpy pass per Arrow batch; the centroids
+    are read to the driver once (``_model_rows``)."""
+    cents = _model_rows(
+        _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids),
+        "ivf centroids",
+    )
+    return _ivf_cells(
+        corpus, cents, id_col, vec_col, round_digits, 1, "neighbor_id", "c_vec"
     ).localCheckpoint(eager=True)
+
+
+def _ivf_cells(df, cents, id_col, vec_col, round_digits, keep, out_id, out_vec):
+    """(out_id, out_vec, cell) rows: each vector of ``df`` with each of
+    its ``keep`` nearest centroids of the sorted rows ``cents``."""
+    return _assign_pass(
+        df, cents, id_col, vec_col, round_digits, keep_vec=True, keep=keep
+    ).select(
+        F.col(id_col).alias(out_id),
+        F.col(vec_col).alias(out_vec),
+        F.col("cid").alias("cell"),
+    )
 
 
 def cosine_topk_ivf(
@@ -632,6 +591,9 @@ def cosine_topk_ivf(
     across all future queries in a real deployment), and each query then
     touches ~nprobe/C of the corpus via an equi-join on cell — recall is
     tunable with nprobe, precision is exact (true cosine on candidates).
+    Cells and probes both come from ``_nearest`` (FLOOR(cos·10^d + 0.5)
+    DESC, ties to the smallest cid), one narrow numpy pass per Arrow
+    batch over the centroids read to the driver once.
 
     ``centroids``: an explicit coarse-quantizer relation (cid, cvec) —
     pass ``kmeans_fit``'s fitted centroids for a TRAINED quantizer (the
@@ -647,26 +609,21 @@ def cosine_topk_ivf(
     nprobe arms; any real deployment) must build it once and pass it
     here instead of paying a corpus scan per call.
     """
-    cents_df = _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids)
-    if cells is None:
-        c = _ivf_ranked_cells(
-            corpus, cents_df, id_col, vec_col, "neighbor_id", "c_vec", 1,
-            round_digits,
-        ).localCheckpoint(eager=True)
-    else:
-        c = cells
-    qc = _ivf_ranked_cells(
-        queries, cents_df, id_col, vec_col, "query_id", "q_vec", nprobe,
-        round_digits,
+    cents = _model_rows(
+        _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids),
+        "ivf centroids",
     )
-    # Materialize the index and the probe list before the join. An IVF
-    # index IS a materialized artifact (built once, queried many times);
-    # here it also truncates the plan so the optimizer never re-walks the
-    # C x dim assignment expressions inside the self-join (measured: 10s
-    # of pure driver planning time without this, sub-second with it).
-    qc = qc.localCheckpoint(eager=True)
+    if cells is None:
+        cells = _ivf_cells(
+            corpus, cents, id_col, vec_col, round_digits, 1, "neighbor_id",
+            "c_vec",
+        )
+    qc = _ivf_cells(
+        queries, cents, id_col, vec_col, round_digits, nprobe, "query_id",
+        "q_vec",
+    )
     scored = (
-        c.join(F.broadcast(qc), "cell")
+        cells.join(F.broadcast(qc), "cell")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select(
             "query_id",
@@ -707,13 +664,12 @@ def kmeans_assign(
     10^d + 0.5) with Spark's saturating FLOOR, and the highest score
     winning with ties to the smallest cid. Rounding uses the portable
     floor kernel (functions/exact.py), NOT Spark ROUND: the kernel is the
-    same IEEE expression in numpy and DuckDB, so this path, the GEMM path
-    (``kmeans_assign_gemm``) and the SQL oracle pick bit-identical argmax
-    winners; the ordering key stays the scaled integer.
-    tests/test_assign_encode_kernels.py keeps the former Catalyst tree as
-    the bit-equality reference."""
+    same IEEE expression in numpy and DuckDB, so this pass and the SQL
+    oracle pick bit-identical winners; the ordering key stays the scaled
+    integer. tests/test_assign_encode_kernels.py keeps the former
+    Catalyst tree as the bit-equality reference."""
     cents = _model_rows(cents_df, "kmeans_assign centroids")
-    return _assign_pass(df, cents, id_col, vec_col, round_digits, False, _dots)
+    return _assign_pass(df, cents, id_col, vec_col, round_digits)
 
 
 # A centroid or codebook relation read to the driver holds at most this
@@ -741,13 +697,14 @@ def _assign_pass(
     id_col: str,
     vec_col: str,
     round_digits: int,
-    keep_vec: bool,
-    dots,
+    keep_vec: bool = False,
+    keep: int = 1,
 ) -> DataFrame:
-    """(id, cid), plus the vector itself with ``keep_vec``, for every row
-    of ``df``: ``_nearest`` over the sorted (cid, cvec) rows ``cents``,
-    once per Arrow batch, with the ``dots`` kernel (``_dots`` or
-    ``_gemm_dots``). No centroid: no row, as in the SQL cross join."""
+    """(id, cid), plus the vector itself with ``keep_vec``, for each of
+    the ``keep`` nearest centroids of every row of ``df`` (one output
+    row each, every centroid when there are fewer than ``keep``):
+    ``_nearest`` over the sorted (cid, cvec) rows ``cents``, once per
+    Arrow batch. No centroid: no row, as in the SQL cross join."""
     src = df.select(id_col, vec_col)
     fields = [src.schema[id_col], StructField("cid", LongType())]
     if keep_vec:
@@ -762,50 +719,14 @@ def _assign_pass(
             vecs = batch.column(1)
             x, lens, valid, present = _arrow_vectors(vecs)
             scorable = _scorable(lens, valid, present)
-            win = _nearest(x, lens, scorable, cents, round_digits, dots)
-            cols = [batch.column(0), cids.take(pa.array(win))]
+            top = _nearest(x, lens, scorable, cents, round_digits, keep)
+            rows = pa.array(np.repeat(np.arange(len(top)), top.shape[1]))
+            cols = [batch.column(0).take(rows), cids.take(pa.array(top.ravel()))]
             if keep_vec:
-                cols.append(vecs)
+                cols.append(vecs.take(rows))
             yield pa.RecordBatch.from_arrays(cols, names=schema.names)
 
     return src.mapInArrow(gen, schema)
-
-
-def kmeans_assign_gemm(
-    df: DataFrame,
-    cents_df: DataFrame,
-    id_col: str,
-    vec_col: str,
-    round_digits: int = 6,
-) -> DataFrame:
-    """``kmeans_assign`` with each batch's dot products as one GEMM:
-    same (id, cid) contract, same centroid read (``_model_rows``), same
-    ``mapInArrow`` pass and the same ``_nearest`` scoring (NULL vector or
-    component, zero norm or length mismatch -> the -2 sentinel; NaN
-    through Spark's FLOOR), with ``v @ C.T`` in place of the sequential
-    fold.
-
-    Why it exists: the fold adds the n·k·d products one dimension at a
-    time, to stay bit-identical to the sequential SQL fold. That is fine
-    at fixed small k, but the SemDeDup k∝n contract makes k grow with
-    the corpus, and the assignment becomes the quadratic term (r7
-    ladder: auto-k α=2.02 through the fold path); here it is one BLAS
-    call per batch and vector length.
-
-    Float caveat, stated rather than hidden: numpy's matmul uses
-    pairwise summation while the Catalyst/oracle fold is sequential, so a
-    dot product can differ in the last ulp BEFORE the 6-dp quantization.
-    Identical-at-6dp holds on every corpus this repo certifies (the
-    within-cluster GEMM in ``semantic_dedup`` has always taken the same
-    risk and strict-passes); the pinned-k oracle-replay path keeps the
-    fold. Given equal dot products the winners are bit-identical: both
-    paths quantize with the same floor kernel.
-    tests/test_localrel_autotune.py asserts auto(=GEMM) ==
-    pinned(=fold) end-to-end."""
-    cents = _model_rows(cents_df, "kmeans_assign_gemm centroids")
-    return _assign_pass(
-        df, cents, id_col, vec_col, round_digits, False, _gemm_dots
-    )
 
 
 def kmeans(
@@ -815,21 +736,19 @@ def kmeans(
     k: int = 8,
     n_iter: int = 2,
     round_digits: int = 6,
-    assign: str = "fold",
 ) -> DataFrame:
     """Lloyd k-means over an embedding column: (id, cluster).
 
     Deterministic by construction: seeds are the first ``k`` vectors by id
     (no RNG — same policy as the IVF coarse quantizer), assignment is
-    rounded-cosine argmax with min-cid tie-break, and each update rounds
-    the element-wise mean so a rerun (or the SQL oracle) reproduces the
-    exact assignment. A corpus within ``kmeans_fit``'s bounds trains on
+    rounded-cosine argmax with min-cid tie-break (``_nearest``: the
+    sequential fold's scores from one GEMM per batch), and each update
+    rounds the element-wise mean so a rerun (or the SQL oracle)
+    reproduces the exact assignment. A corpus within ``kmeans_fit``'s bounds trains on
     the driver from one collect; a larger one runs the distributed loop.
     The final assignment is always a distributed pass over the corpus.
     """
-    out, _cents = kmeans_fit(
-        df, id_col, vec_col, k, n_iter, round_digits, assign=assign
-    )
+    out, _cents = kmeans_fit(df, id_col, vec_col, k, n_iter, round_digits)
     return out
 
 
@@ -848,7 +767,6 @@ def kmeans_fit(
     k: int = 8,
     n_iter: int = 2,
     round_digits: int = 6,
-    assign: str = "fold",
     seed: str = "id_lt_k",
 ) -> tuple[DataFrame, DataFrame]:
     """Lloyd k-means returning BOTH the final assignment (id, cluster_id)
@@ -859,44 +777,33 @@ def kmeans_fit(
 
     A corpus within ``_FIT_ROWS`` rows and ``_FIT_VALUES`` components
     trains on the driver: one job reads the vector sizes (``_fit_rows``),
-    one collects the corpus, and ``_lloyd_local`` iterates with the fold
-    path's exact arithmetic. A larger corpus runs the distributed loop
+    one collects the corpus, and ``_lloyd_local`` iterates on it. A
+    larger corpus runs the distributed loop
     (``_lloyd_distributed``): Spark jobs every iteration, and nothing
-    larger than k x dim means on the driver. Both give the same centroids for
-    ``assign='fold'``. The final assignment is one distributed pass over
-    the whole corpus.
-
-    ``assign``: 'fold' (default) scores each (vector, centroid) pair
-    with the sequential fold (``kmeans_assign``) — bit-identical to the
-    SQL oracle, the pinned-k replay path; 'gemm' runs
-    ``kmeans_assign_gemm`` for the final pass and, above the bounds, for
-    every iteration — one BLAS call per batch instead of the sequential
-    fold, the k∝n path (see its float caveat). The driver-side
-    iterations always use the fold's arithmetic. Both read the centroids
-    to the driver (``_model_rows``), so they take at most
-    ``_MODEL_ROWS`` = 65,536 of them: a larger ``k`` raises ValueError
-    before any training.
+    larger than k x dim means on the driver. Both give the same
+    centroids. Every assignment, on the driver and in the distributed
+    iterations and the final pass over the whole corpus, is
+    ``_nearest``: the sequential fold's scores, bit-identical to the SQL
+    oracle, from one GEMM per batch. The centroids are read to the
+    driver (``_model_rows``), so at most ``_MODEL_ROWS`` = 65,536 of
+    them: a larger ``k`` raises ValueError before any training.
 
     ``seed``: 'id_lt_k' (default) seeds from rows with id < k — the
     original deterministic scheme, but under a filtered training corpus
     (e.g. even ids only) it yields FEWER than k centroids; 'first_k'
     seeds from the k smallest-id training rows (cid = 0..k-1 by id
     rank), guaranteeing k centroids whenever the corpus has >= k rows."""
-    if assign not in ("fold", "gemm"):
-        raise ValueError(f"assign must be 'fold' or 'gemm', got {assign!r}")
     if seed not in ("id_lt_k", "first_k"):
         raise ValueError(f"seed must be 'id_lt_k' or 'first_k', got {seed!r}")
     if k > _MODEL_ROWS:
         raise ValueError(
             f"kmeans_fit takes at most {_MODEL_ROWS} centroids, got k={k}"
         )
-    assign_fn = kmeans_assign if assign == "fold" else kmeans_assign_gemm
-    dots = _dots if assign == "fold" else _gemm_dots
     vecs = df.select(F.col(id_col), F.col(vec_col))
     rows = _fit_rows(vecs, vec_col)
     if rows is None:
         cents = _lloyd_distributed(
-            vecs, id_col, vec_col, k, n_iter, round_digits, dots, seed
+            vecs, id_col, vec_col, k, n_iter, round_digits, seed
         )
     else:
         # explicit schema: empty corpus -> zero centroids (see
@@ -911,7 +818,7 @@ def kmeans_fit(
             ),
             "cid long, cvec array<double>",
         )
-    final = assign_fn(vecs, cents, id_col, vec_col, round_digits).select(
+    final = kmeans_assign(vecs, cents, id_col, vec_col, round_digits).select(
         F.col(id_col), F.col("cid").alias("cluster_id")
     )
     return final, cents
@@ -962,7 +869,6 @@ def _lloyd_distributed(
     k: int,
     n_iter: int,
     round_digits: int,
-    dots,
     seed: str,
 ) -> DataFrame:
     """``n_iter`` Lloyd iterations as Spark jobs over the (id, vec)
@@ -988,7 +894,7 @@ def _lloyd_distributed(
         # so the update needs no join-back shuffle of the corpus — one
         # exchange per iteration instead of two (guide §2.4).
         exploded = _assign_pass(
-            vecs, cents, id_col, vec_col, round_digits, True, dots
+            vecs, cents, id_col, vec_col, round_digits, keep_vec=True
         ).select("cid", F.posexplode(vec_col).alias("pos", "val"))
         mrows = (
             exploded.groupBy("cid", "pos")
@@ -1034,7 +940,7 @@ def _lloyd_local(
         if not cents or not n:
             return []
         cids = np.array([c for c, _v in cents], dtype=np.int64)
-        win = cids[_nearest(x, lens, scorable, cents, round_digits, _dots)]
+        win = cids[_nearest(x, lens, scorable, cents, round_digits)[:, 0]]
         order = np.argsort(win, kind="stable")
         bounds = np.flatnonzero(np.diff(win[order])) + 1
         new = []
@@ -1086,17 +992,19 @@ def _scorable(lens, valid, present) -> np.ndarray:
     return present & ~(in_len & ~valid).any(axis=1)
 
 
-def _nearest(x, lens, scorable, cents, round_digits, dots) -> np.ndarray:
-    """Index into the sorted (cid, cvec) rows ``cents`` of each row's
-    nearest centroid: the exact replica of the SQL assignment fold.
+def _nearest(x, lens, scorable, cents, round_digits, keep=1) -> np.ndarray:
+    """Indexes into the sorted (cid, cvec) rows ``cents`` of each row's
+    ``keep`` nearest centroids, best first: an (n, min(keep, C)) array
+    ordered by score DESC, then index ASC, so ties go to the first row
+    of ``cents``. This is the one kernel that ranks centroids by cosine.
 
-    Dot and squared norm are sequential float64 folds from +0.0 (the
-    Catalyst and DuckDB folds), the score is FLOOR(COALESCE(dot / (|v|
-    |c|), -2) * 10^d + 0.5) where a zero divisor, a NULL vector or
-    component, or a length mismatch gives the -2 sentinel, and the floor
-    converts to a long as Spark's does (saturating; NaN -> 0). The winner
-    is the highest score, ties to the first row of ``cents``. ``dots`` is
-    the dot-product kernel: ``_dots`` (the fold) or ``_gemm_dots``."""
+    The score is the SQL assignment fold's, exactly: dot and squared
+    norm are sequential float64 folds from +0.0 (the Catalyst and DuckDB
+    folds), the score is FLOOR(COALESCE(dot / (|v| |c|), -2) * 10^d +
+    0.5) where a zero divisor, a NULL vector or component, or a length
+    mismatch gives the -2 sentinel, and the floor converts to a long as
+    Spark's does (saturating; NaN -> 0). ``_scores`` gets the fold's
+    dot products at GEMM speed."""
     n = len(lens)
     kscale = float(10**round_digits)
     sentinel = math.floor(-2.0 * kscale + 0.5)
@@ -1111,21 +1019,75 @@ def _nearest(x, lens, scorable, cents, round_digits, dots) -> np.ndarray:
             cm = np.array([cents[j][1] for j in ci], dtype=np.float64)
             cm = cm.reshape(len(ci), length)
             groups.append((length, ci, cm, _norms(cm)))
-    win = np.empty(n, dtype=np.int64)
-    # row chunks keep each (rows, centroids) block near 8 MiB
-    step = max(1, (1 << 20) // len(cents))
+    top = np.empty((n, min(keep, len(cents))), dtype=np.int64)
+    # row chunks keep each (rows, centroids) block near 2 MiB
+    step = max(1, (1 << 18) // len(cents))
     for lo in range(0, n, step):
         hi = min(n, lo + step)
         score = np.full((hi - lo, len(cents)), sentinel, dtype=np.int64)
         for length, ci, cm, nc in groups:
             r = np.flatnonzero(scorable[lo:hi] & (lens[lo:hi] == length))
-            v = x[lo + r, :length]
-            den = _norms(v)[:, None] * nc[None, :]
-            with np.errstate(all="ignore"):
-                cos = np.where(den == 0, -2.0, dots(v, cm) / den)
-                score[np.ix_(r, ci)] = _floor_long(cos * kscale + 0.5)
-        win[lo:hi] = score.argmax(axis=1)
-    return win
+            score[np.ix_(r, ci)] = _scores(x[lo + r, :length], cm, nc, kscale)
+        if top.shape[1] == 1:
+            top[lo:hi, 0] = score.argmax(axis=1)
+        else:
+            # ~s reverses the order without overflowing at the long minimum
+            top[lo:hi] = np.argsort(~score, axis=1, kind="stable")[
+                :, : top.shape[1]
+            ]
+    return top
+
+
+def _scores(v, cm, nc, kscale) -> np.ndarray:
+    """The quantized score of every (row of ``v``, row of ``cm``) pair,
+    FLOOR(q(dot)) with q(t) = (t / den, or -2 where den = 0) * kscale +
+    0.5, den = |v|·``nc`` and dot the sequential fold, computed from one
+    GEMM ``v @ cm.T`` and re-folding only the pairs it cannot decide.
+
+    Why the GEMM score is the fold's wherever it is kept: both sums add
+    the same d products, so each lies within γ_d·A of the exact dot
+    product, A = Σ|vᵢcᵢ|, γ_d = d·u / (1 - d·u), u = 2⁻⁵³, whatever the
+    summation order, FMA included (Higham, Accuracy and Stability of
+    Numerical Algorithms, §3.1), as long as nothing overflows;
+    underflowing products add at most 2⁻¹⁰⁷⁵ each. So |g - fold| ≤
+    2γ_d·A + d·2⁻¹⁰⁷⁴ for the GEMM's g. ``err`` is 8γ_d times the
+    computed ``|v| @ |cm|.T`` (itself within γ_d·A of A) plus d·2⁻¹⁰⁷²:
+    that covers the bound and the rounding of g ± err (at most u·(|g| +
+    err), |g| ≤ (1 + γ_d)·A), so lo = fl(g - err) ≤ fold ≤ fl(g + err)
+    = hi. Every step of q, the division by the same ``den``, the product
+    with ``kscale`` and the +0.5, and the floor, is monotone
+    non-decreasing under round-to-nearest; so where FLOOR(q(lo)) equals
+    FLOOR(q(hi)) the fold's score is that value. Pairs where they
+    differ (NaN included), or where g or 2·A is not finite (NaN or
+    infinite components, overflow; below half the double range no
+    partial sum of either order overflows), are re-folded one dimension
+    at a time, as the SQL fold adds them."""
+    d = v.shape[1]
+    gamma = d * 2.0**-53 / (1.0 - d * 2.0**-53)
+    with np.errstate(all="ignore"):
+        den = _norms(v)[:, None] * nc[None, :]
+        g = v @ cm.T
+        mag = np.abs(v) @ np.abs(cm).T
+        err = 8.0 * gamma * mag + d * 2.0**-1072
+        lo = np.floor(_scaled(g - err, den, kscale))
+        sure = lo == np.floor(_scaled(g + err, den, kscale))
+        sure &= np.isfinite(g) & np.isfinite(2.0 * mag)
+    s = _floor_long(lo)
+    ri, cj = np.nonzero(~sure)
+    if len(ri):
+        acc = np.zeros(len(ri))
+        with np.errstate(all="ignore"):
+            for j in range(d):
+                acc += v[ri, j] * cm[cj, j]
+        s[ri, cj] = _floor_long(_scaled(acc, den[ri, cj], kscale))
+    return s
+
+
+def _scaled(dot, den, kscale) -> np.ndarray:
+    """COALESCE(dot / den, -2) * kscale + 0.5, where a zero ``den`` is
+    the SQL x / 0 = NULL."""
+    with np.errstate(all="ignore"):
+        return np.where(den == 0, -2.0, dot / den) * kscale + 0.5
 
 
 def _norms(a: np.ndarray) -> np.ndarray:
@@ -1137,30 +1099,20 @@ def _norms(a: np.ndarray) -> np.ndarray:
     return np.sqrt(acc)
 
 
-def _dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """(rows of a) x (rows of b) dot products, each the sequential fold
-    from +0.0 in dimension order."""
-    acc = np.zeros((a.shape[0], b.shape[0]))
-    for j in range(a.shape[1]):
-        acc += a[:, j : j + 1] * b[None, :, j]
-    return acc
-
-
-def _gemm_dots(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """``_dots`` as one BLAS call (pairwise summation; see
-    ``kmeans_assign_gemm``)."""
-    return a @ b.T
-
-
 def _floor_long(a: np.ndarray) -> np.ndarray:
     """Spark FLOOR(double): Java's (long) cast of Math.floor, which
     saturates at the long range and maps NaN to 0."""
     f = np.floor(a)
-    out = np.zeros(f.shape, dtype=np.int64)
-    fit = (f >= -(2.0**63)) & (f < 2.0**63)
-    out[fit] = f[fit].astype(np.int64)
-    out[f >= 2.0**63] = np.iinfo(np.int64).max
-    out[f < -(2.0**63)] = np.iinfo(np.int64).min
+    with np.errstate(invalid="ignore"):
+        out = f.astype(np.int64)
+        big = ~(np.abs(f) < 2.0**63)
+    if big.any():
+        fb = f[big]
+        out[big] = np.where(
+            fb > 0,
+            np.iinfo(np.int64).max,
+            np.where(fb < 0, np.iinfo(np.int64).min, 0),
+        )
     return out
 
 
@@ -1228,19 +1180,16 @@ def semantic_dedup(
     ``k=None`` (the default) applies the k∝n contract via
     ``semdedup_auto_k`` — one count job, then k = max(8, n/target).
     Pass an explicit k only when reproducing a fixed clustering (the
-    registry oracle pins k=8 for bit-exact replay).
+    registry oracle pins k=8). Either way the clustering is
+    ``kmeans``'s: with k∝n its assignment is O(n·k·d), which
+    ``_nearest`` runs as one GEMM per batch with the fold's exact
+    scores, so an auto k gets the same bits as the same k pinned.
     """
-    # auto-k routes the assignment through the GEMM path: with k∝n the
-    # Catalyst per-pair fold becomes the quadratic term (O(n·k·d)
-    # interpreted lambdas — r7 ladder measured α=2.02); pinned k keeps
-    # the fold for bit-exact oracle replay
-    method = "fold"
     if k is None:
         k = semdedup_auto_k(df.count(), target_cluster_size)
-        method = "gemm"
-    assign = kmeans(
-        df, id_col, vec_col, k, n_iter, round_digits, assign=method
-    ).localCheckpoint(eager=False)
+    assign = kmeans(df, id_col, vec_col, k, n_iter, round_digits).localCheckpoint(
+        eager=False
+    )
     v = df.select(F.col(id_col), F.col(vec_col)).join(assign, id_col)
 
     dup_ids = _cluster_dup_ids(v, id_col, vec_col, threshold, round_digits)

@@ -1898,6 +1898,21 @@ def _cosine_sql(a: str, b: str) -> str:
     )
 
 
+def _cell_score_sql(cos: str) -> str:
+    """The centroid-ranking score of similarity._nearest (k-means
+    assignment, IVF cells and query probes): FLOOR(COALESCE(cos, -2) *
+    1e6 + 0.5), the same IEEE expression tree in numpy and DuckDB
+    (functions/exact.py: not ROUND, which rounds half-up on the shortest
+    decimal in Spark and on the binary value in DuckDB). NaN scores 0,
+    as Spark's FLOOR-to-long gives; DuckDB's FLOOR keeps NaN, which
+    sorts first under DESC. DuckDB compares NaN equal to NaN, so NULLIF
+    maps it to NULL without evaluating the cosine twice."""
+    return (
+        f"COALESCE(NULLIF(FLOOR(COALESCE({cos}, -2.0) * 1e6 + 0.5),"
+        f" 'NaN'::DOUBLE), 0)"
+    )
+
+
 @query(
     "doc_emb_dup_agreement",
     f"""
@@ -2030,16 +2045,12 @@ def _kmeans_ctes(
     centroids."""
 
     def assign(name: str, cents: str, where: str = "TRUE") -> str:
-        # FLOOR(x*1e6 + 0.5), not ROUND: mirrors kmeans_assign /
-        # kmeans_assign_gemm, the same IEEE expression tree in all
-        # three engines (functions/exact.py hazard class)
+        # the score of similarity._nearest, which kmeans_assign runs
+        score = _cell_score_sql(_cosine_sql("e.embedding", "c.cvec"))
         return f"""{name} AS (SELECT vec_id, cid FROM (
           SELECT e.vec_id, c.cid,
                  ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                   ORDER BY FLOOR(COALESCE(
-                     {_cosine_sql("e.embedding", "c.cvec")}, -2.0)
-                     * 1e6 + 0.5)
-                     DESC, c.cid) AS rn
+                   ORDER BY {score} DESC, c.cid) AS rn
           FROM embeddings e, {cents} c WHERE {where}) WHERE rn = 1)"""
 
     def update(name: str, assigned: str) -> str:
@@ -2346,13 +2357,13 @@ def _ivf_oracle(
     asg AS (SELECT vec_id, embedding, cid AS cell FROM (
         SELECT e.vec_id, e.embedding, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY ROUND(COALESCE({cos_ec}, -2.0), 6)
+                 ORDER BY {_cell_score_sql(cos_ec)}
                    DESC, c.cid ASC) AS rn
         FROM embeddings e CROSS JOIN {cents_rel} c) t WHERE rn = 1),
     qprobe AS (SELECT vec_id AS query_id, embedding AS q_vec, cid AS cell FROM (
         SELECT e.vec_id, e.embedding, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY ROUND(COALESCE({cos_ec}, -2.0), 6)
+                 ORDER BY {_cell_score_sql(cos_ec)}
                    DESC, c.cid ASC) AS rn
         FROM embeddings e CROSS JOIN {cents_rel} c WHERE e.vec_id < 10) t
         WHERE rn <= {nprobe}),
@@ -2669,11 +2680,9 @@ def _ivfpq_oracle(
     cents_ctes: str | None = None,
     cents_rel: str = "cents",
 ) -> str:
-    """IVF-PQ: corpus cells (asg) mirror similarity.kmeans_assign —
-    the portable FLOOR(x*1e6 + 0.5) kernel — while the query probes
-    (qprobe) mirror pq.py's own F.round nprobe ranking (ROUND, same
-    COALESCE(-2.0) tie-break), composed with the certified PQ code
-    CTEs; candidates come from the probed cells, the score from the
+    """IVF-PQ: corpus cells (asg) and query probes (qprobe) both rank
+    centroids by similarity._nearest's score (``_cell_score_sql``),
+    composed with the certified PQ code CTEs; candidates come from the probed cells, the score from the
     integer ADC lookup. ``cents_ctes``/``cents_rel`` swap in an
     external coarse-quantizer chain (trained variant), as in
     _ivf_oracle."""
@@ -2695,13 +2704,13 @@ def _ivfpq_oracle(
     asg AS (SELECT vec_id, cid AS cell FROM (
         SELECT e.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY FLOOR(COALESCE({cos_ec}, -2.0) * 1e6 + 0.5)
+                 ORDER BY {_cell_score_sql(cos_ec)}
                    DESC, c.cid ASC) AS rn
         FROM embeddings e CROSS JOIN {cents_rel} c) t WHERE rn = 1),
     qprobe AS (SELECT vec_id AS query_id, cid AS cell FROM (
         SELECT e.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY ROUND(COALESCE({cos_ec}, -2.0), 6)
+                 ORDER BY {_cell_score_sql(cos_ec)}
                    DESC, c.cid ASC) AS rn
         FROM embeddings e CROSS JOIN {cents_rel} c WHERE e.vec_id < 10) t
         WHERE rn <= {nprobe}),
@@ -6675,7 +6684,7 @@ def _ivfpq_residual_oracle(
     asg AS (SELECT vec_id, cid AS cell FROM (
         SELECT e.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY FLOOR(COALESCE({cos_ec}, -2.0) * 1e6 + 0.5)
+                 ORDER BY {_cell_score_sql(cos_ec)}
                    DESC, c.cid ASC) AS rn
         FROM embeddings e CROSS JOIN cents c) t WHERE rn = 1),
     res AS (SELECT a.vec_id AS nid, a.cell,
@@ -6692,7 +6701,7 @@ def _ivfpq_residual_oracle(
     qprobe AS (SELECT vec_id AS query_id, cid AS cell FROM (
         SELECT e.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY ROUND(COALESCE({cos_ec}, -2.0), 6)
+                 ORDER BY {_cell_score_sql(cos_ec)}
                    DESC, c.cid ASC) AS rn
         FROM embeddings e CROSS JOIN cents c WHERE e.vec_id < 10) t
         WHERE rn <= {nprobe}),
@@ -6990,7 +6999,7 @@ def _ivfpq_residual_trainedcb_oracle(
     asg AS (SELECT vec_id, cid AS cell FROM (
         SELECT e.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY FLOOR(COALESCE({cos_ec}, -2.0) * 1e6 + 0.5)
+                 ORDER BY {_cell_score_sql(cos_ec)}
                    DESC, c.cid ASC) AS rn
         FROM {src} e CROSS JOIN cents c) t WHERE rn = 1),
     res AS (SELECT a.vec_id AS nid, a.cell,
@@ -7006,7 +7015,7 @@ def _ivfpq_residual_trainedcb_oracle(
     qprobe AS (SELECT vec_id AS query_id, cid AS cell FROM (
         SELECT e.vec_id, c.cid,
                ROW_NUMBER() OVER (PARTITION BY e.vec_id
-                 ORDER BY ROUND(COALESCE({cos_ec}, -2.0), 6)
+                 ORDER BY {_cell_score_sql(cos_ec)}
                    DESC, c.cid ASC) AS rn
         FROM {src} e CROSS JOIN cents c WHERE e.vec_id < 10) t
         WHERE rn <= {nprobe}),

@@ -2,18 +2,25 @@
 replaced.
 
 ``kmeans_assign``, ``pq_encode`` and the ADC distance table run one numpy
-fold per Arrow batch. The expression trees below are the former
+pass per Arrow batch. The expression trees below are the former
 production kernels (a broadcast nested loop of interpreted
-``aggregate``/``zip_with`` folds and a ``min_by`` aggregate); they are
-the bit-equality references. Every comparison runs on 3 partitions with
-2-row Arrow batches, so batch edges fall inside every fixture.
+``aggregate``/``zip_with`` folds, then a ``row_number`` window or a
+``min_by`` aggregate); they are the bit-equality references. Every
+comparison runs on 3 partitions with 2-row Arrow batches, so batch
+edges fall inside every fixture. ``_nearest``, the centroid-ranking
+kernel, is also checked at the numpy level against the full-matrix
+sequential fold, and the oracles' cell score (``_cell_score_sql``)
+against it in DuckDB.
 """
 
 from __future__ import annotations
 
 import math
 
+import numpy as np
+import pyarrow as pa
 import pytest
+from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from etl_gardener_spark.functions.localrel import (
@@ -55,7 +62,9 @@ def _canon(rows):
 # -- references: the former Catalyst kernels --------------------------------
 
 
-def ref_kmeans_assign(df, cents_df, id_col, vec_col, round_digits=6):
+def ref_kmeans_assign(df, cents_df, id_col, vec_col, round_digits=6, keep=1):
+    """(id, cid) for each row's ``keep`` best centroids by (score DESC,
+    cid ASC NULLS FIRST)."""
     kscale = F.lit(float(10**round_digits))
     scored = (
         df.select(
@@ -86,8 +95,14 @@ def ref_kmeans_assign(df, cents_df, id_col, vec_col, round_digits=6):
             ).alias("__s"),
         )
     )
-    ordk = F.struct((-F.col("__s")).alias("s"), F.col("cid").alias("c"))
-    return scored.groupBy(id_col).agg(F.min_by(F.col("cid"), ordk).alias("cid"))
+    w = Window.partitionBy(id_col).orderBy(
+        F.col("__s").desc(), F.col("cid").asc()
+    )
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= keep)
+        .select(id_col, "cid")
+    )
 
 
 def ref_pq_encode(corpus, cb, id_col, vec_col, m, sub_dim):
@@ -214,14 +229,11 @@ def test_kmeans_assign_ranks_round_digits(spark):
     assert _canon(got) == _canon(ref)
 
 
-# -- the GEMM assignment (kmeans_assign_gemm) against the fold -------------
-
-# every dot product of KM_VECS with KM_CENTS is exact in binary, so the
-# GEMM's summation order cannot move a score; here a NaN component scores
-# FLOOR(NaN) = 0, which beats the true cosine -1 of cid 1 (a kernel that
-# maps NaN to the -2 sentinel gives id 0 to cid 1)
+# every dot product of KM_VECS with KM_CENTS is exact in binary; here a
+# NaN component scores FLOOR(NaN) = 0, which beats the true cosine -1 of
+# cid 1 (a kernel that maps NaN to the -2 sentinel gives id 0 to cid 1)
 KM_NAN_CENTS = [(0, [NAN, 0.0, 0.0]), (1, [-1.0, 0.0, 0.0])]
-GEMM_CASES = {
+ASSIGN_CASES = {
     "specials": (KM_VECS, KM_CENTS, KM_SCHEMA, "vec_id"),
     "nan": ([(0, [1.0, 0.0, 0.0]), (1, [NAN, 1.0, 0.0])], KM_NAN_CENTS,
             KM_SCHEMA, "vec_id"),
@@ -231,13 +243,13 @@ GEMM_CASES = {
 }
 
 
-@pytest.mark.parametrize("case", sorted(GEMM_CASES))
-def test_kmeans_assign_gemm_matches_fold(spark, case):
-    rows, cents, schema, id_col = GEMM_CASES[case]
+@pytest.mark.parametrize("case", sorted(ASSIGN_CASES))
+def test_kmeans_assign_cases(spark, case):
+    rows, cents, schema, id_col = ASSIGN_CASES[case]
     df = _rel(spark, rows, schema)
     cdf = local_df(spark, cents, CENT_SCHEMA)
-    got = SIM.kmeans_assign_gemm(df, cdf, id_col, "embedding")
-    ref = SIM.kmeans_assign(df, cdf, id_col, "embedding")
+    got = SIM.kmeans_assign(df, cdf, id_col, "embedding")
+    ref = ref_kmeans_assign(df, cdf, id_col, "embedding")
     assert got.schema == ref.schema
     got, ref = _canon(got.collect()), _canon(ref.collect())
     assert got == ref and len(got) == (len(rows) if cents else 0)
@@ -245,10 +257,39 @@ def test_kmeans_assign_gemm_matches_fold(spark, case):
         assert got == [(0, 0), (1, 0)]
 
 
-def test_kmeans_fit_gemm_matches_fold_distributed(spark):
-    """The distributed Lloyd loop with either kernel: seeds ids 0 and 1,
-    one iteration whose cluster means ([2, 0.75] and [0.5, 2.25]) stay
-    exact in binary, and a NULL vector riding through."""
+# centroids for the top-keep ranking: a NULL cid, a cid on two rows
+# with different vectors, and an exact tie
+TOPK_CENTS = [
+    (None, [0.0, 1.0, 0.0]),
+    (0, [1.0, 0.0, 0.0]),
+    (1, [0.0, 1.0, 0.0]),
+    (1, [1.0, 1.0, 0.0]),
+    (2, [0.0, 0.0, 1.0]),
+    (3, None),
+    (4, [0.0, 0.0, 1.0]),
+]
+
+
+@pytest.mark.parametrize("keep", [1, 2, 3, 10])
+def test_assign_top_keep_matches_row_number(spark, keep):
+    """``_assign_pass(keep=n)`` gives each row its n best centroids as
+    the Catalyst row_number ranking does, with a NULL cid first among
+    ties, both rows of a duplicated cid, and every centroid once n
+    exceeds their number."""
+    df = _rel(spark, KM_VECS, KM_SCHEMA)
+    cdf = local_df(spark, TOPK_CENTS, CENT_SCHEMA)
+    cents = SIM._model_rows(cdf, "cents")
+    got = SIM._assign_pass(df, cents, "vec_id", "embedding", 6, keep=keep)
+    ref = ref_kmeans_assign(df, cdf, "vec_id", "embedding", keep=keep)
+    g, r = _canon(got.collect()), _canon(ref.collect())
+    assert g == r
+    assert len(g) == len(KM_VECS) * min(keep, len(TOPK_CENTS))
+
+
+def test_kmeans_fit_distributed_matches_driver(spark):
+    """The distributed Lloyd loop and the driver-side one: seeds ids 0
+    and 1, one iteration whose cluster means ([2, 0.75] and [0.5, 2.25])
+    stay exact in binary, and a NULL vector riding through."""
     from unittest import mock
 
     rows = [
@@ -258,12 +299,179 @@ def test_kmeans_fit_gemm_matches_fold_distributed(spark):
     ]
     df = _rel(spark, rows, KM_SCHEMA)
     out = {}
-    with mock.patch.object(SIM, "_FIT_ROWS", 0):
-        for assign in ("fold", "gemm"):
-            final, cents = SIM.kmeans_fit(df, k=2, n_iter=1, assign=assign)
-            out[assign] = (_canon(cents.collect()), _canon(final.collect()))
-    assert out["gemm"] == out["fold"]
-    assert out["fold"][0] == _canon([(0, [2.0, 0.75]), (1, [0.5, 2.25])])
+    for where, bound in (("driver", SIM._FIT_ROWS), ("distributed", 0)):
+        with mock.patch.object(SIM, "_FIT_ROWS", bound):
+            final, cents = SIM.kmeans_fit(df, k=2, n_iter=1)
+            out[where] = (_canon(cents.collect()), _canon(final.collect()))
+    assert out["distributed"] == out["driver"]
+    assert out["driver"][0] == _canon([(0, [2.0, 0.75]), (1, [0.5, 2.25])])
+
+
+# -- _nearest at the numpy level against the full sequential fold ----------
+
+
+def _fold_dots(a, b):
+    """(rows of a) x (rows of b) dot products, each the sequential fold
+    from +0.0 in dimension order, as the SQL fold adds them."""
+    acc = np.zeros((a.shape[0], b.shape[0]))
+    for j in range(a.shape[1]):
+        acc += a[:, j : j + 1] * b[None, :, j]
+    return acc
+
+
+def _gemm_dots(a, b):
+    return a @ b.T
+
+
+def ref_nearest(vecs, cents, round_digits, keep, dots=_fold_dots):
+    """``_nearest`` scoring every (vector, centroid) pair with ``dots``
+    over the full matrix, ranked by (score DESC, position ASC)."""
+    x, lens, valid, present = SIM._arrow_vectors(
+        pa.array(vecs, type=pa.list_(pa.float64()))
+    )
+    scorable = SIM._scorable(lens, valid, present)
+    kscale = float(10**round_digits)
+    score = np.full(
+        (len(vecs), len(cents)), math.floor(-2.0 * kscale + 0.5), np.int64
+    )
+    for j, (_c, cv) in enumerate(cents):
+        if cv is None or None in cv:
+            continue
+        r = np.flatnonzero(scorable & (lens == len(cv)))
+        v = x[r, : len(cv)]
+        cm = np.array([cv], dtype=np.float64).reshape(1, len(cv))
+        with np.errstate(all="ignore"):
+            den = SIM._norms(v)[:, None] * SIM._norms(cm)[None, :]
+            cos = np.where(den == 0, -2.0, dots(v, cm) / den)
+            score[r, j] = SIM._floor_long(cos * kscale + 0.5)[:, 0]
+    order = np.argsort(~score, axis=1, kind="stable")
+    return order[:, : min(keep, len(cents))]
+
+
+def _kernel(vecs, cents, round_digits, keep):
+    x, lens, valid, present = SIM._arrow_vectors(
+        pa.array(vecs, type=pa.list_(pa.float64()))
+    )
+    scorable = SIM._scorable(lens, valid, present)
+    return SIM._nearest(x, lens, scorable, cents, round_digits, keep)
+
+
+def _matrix_case(name):
+    rng = np.random.default_rng(7)
+    if name == "random":
+        vecs = rng.standard_normal((300, 16))
+        cents = rng.standard_normal((40, 16))
+    else:
+        # near-duplicates: every score agrees to about 9 digits, so at
+        # round_digits 15 the last bits of each dot product decide
+        base = rng.standard_normal(64)
+        vecs = base + rng.standard_normal((300, 64)) * 1e-9
+        cents = base + rng.standard_normal((30, 64)) * 1e-9
+    return (
+        [list(v) for v in vecs],
+        [(i, list(c)) for i, c in enumerate(cents)],
+    )
+
+
+def _special_case():
+    """Vectors and centroids of special values, some rows sharing a
+    direction so that scores tie or nearly tie."""
+    vals = [0.0, 1.0, -1.0, 0.1, NAN, INF, -INF, 1e300, -1e300, 5e-324,
+            1e-310, 3.0]
+    rng = np.random.default_rng(11)
+    vecs = [list(rng.choice(vals, 4)) for _ in range(200)]
+    vecs += [[0.0] * 4, [5e-324] * 4, [1e300] * 4, None, [1.0, None, 0, 0],
+             [1.0, 2.0, 3.0]]
+    cents = [(i, list(rng.choice(vals, 4))) for i in range(12)]
+    cents += [(12, [0.0] * 4), (13, [1.0, 1.0, 1.0, 1.0]),
+              (14, [1.0, 1.0, 1.0, 1.0]), (15, None), (16, [1e-310] * 4)]
+    return vecs, cents
+
+
+@pytest.mark.parametrize(
+    "case, round_digits",
+    [("random", 6), ("random", 1), ("random", 15), ("neardup", 15),
+     ("special", 1), ("special", 6), ("special", 15)],
+)
+@pytest.mark.parametrize("keep", [1, 3])
+def test_nearest_equals_sequential_fold(case, round_digits, keep):
+    vecs, cents = (
+        _special_case() if case == "special" else _matrix_case(case)
+    )
+    got = _kernel(vecs, cents, round_digits, keep)
+    ref = ref_nearest(vecs, cents, round_digits, keep)
+    assert got.shape == ref.shape and (got == ref).all()
+
+
+def test_nearest_refolds_where_plain_gemm_differs():
+    """On near-duplicates at round_digits 15 a bare ``a @ b.T`` picks
+    other winners than the sequential fold; the kernel does not, so its
+    re-fold ran."""
+    vecs, cents = _matrix_case("neardup")
+    fold = ref_nearest(vecs, cents, 15, 1)
+    gemm = ref_nearest(vecs, cents, 15, 1, _gemm_dots)
+    assert (gemm != fold).any()
+    assert (_kernel(vecs, cents, 15, 1) == fold).all()
+
+
+def test_cell_score_sql_orders_like_nearest():
+    """The oracles' centroid ranking (``_cell_score_sql`` over the
+    oracle cosine, ROW_NUMBER by score DESC, cid ASC) in DuckDB keeps
+    the same cells as ``_nearest`` at keep 1 and 3, over NaN
+    components, a NULL vector and a NULL component, a zero vector, a
+    length mismatch and tied scores. DuckDB's bare FLOOR keeps NaN,
+    which sorts first under DESC, so without the NaN rule the centroid
+    with a NaN component outranks a vector's true best cell."""
+    import duckdb
+
+    from etl_gardener_spark.plans import queries_llm as QL
+
+    dim = QL._DIM
+
+    def unit(i, scale=1.0):
+        v = [0.0] * dim
+        v[i] = scale
+        return v
+
+    nan_vec = unit(0)
+    nan_vec[5] = NAN
+    vecs = [
+        unit(0), unit(1), [1.0, 1.0] + [0.0] * (dim - 2),  # tie: cids 1, 5
+        nan_vec, None, [None] + [1.0] * (dim - 1), [0.0] * dim,
+        [1.0] * (dim - 1),  # one shorter than the centroids
+        [-1.0] + [0.0] * (dim - 1), unit(2),
+    ]
+    cents = [(0, nan_vec), (1, unit(1)), (2, unit(0, -1.0)),
+             (3, unit(2)), (4, unit(2)), (5, unit(0))]
+    con = duckdb.connect()
+    con.register("e", pa.table({
+        "vec_id": pa.array(range(len(vecs)), pa.int64()),
+        "embedding": pa.array(vecs, pa.list_(pa.float64())),
+    }))
+    con.register("c", pa.table({
+        "cid": pa.array([c for c, _v in cents], pa.int64()),
+        "cvec": pa.array([v for _c, v in cents], pa.list_(pa.float64())),
+    }))
+    cos = QL._cosine_sql("e.embedding", "c.cvec")
+
+    def duck(score, keep):
+        rows = con.execute(f"""
+            SELECT vec_id, cid FROM (
+              SELECT e.vec_id, c.cid, ROW_NUMBER() OVER (
+                PARTITION BY e.vec_id ORDER BY {score} DESC, c.cid) AS rn
+              FROM e CROSS JOIN c) WHERE rn <= {keep}
+            ORDER BY vec_id, rn""").fetchall()
+        out = {}
+        for vid, cid in rows:
+            out.setdefault(vid, []).append(cid)
+        return out
+
+    for keep in (1, 3):
+        top = _kernel(vecs, cents, 6, keep)
+        want = {i: [cents[j][0] for j in row] for i, row in enumerate(top)}
+        assert duck(QL._cell_score_sql(cos), keep) == want
+        bare = duck(f"FLOOR(COALESCE({cos}, -2.0) * 1e6 + 0.5)", keep)
+        assert bare[1] != want[1]
 
 
 # PQ: m=2 sub-spaces of 2; the seeded codebook is the first 4 ids
@@ -488,13 +696,12 @@ def test_collect_bounded_local_relation_is_free(spark):
 
 
 def test_kmeans_fit_refuses_fold_k_above_model_bound_before_training(spark):
-    """Both kernels read their centroids through ``_model_rows``, so a k
-    above that bound is refused up front, not after the Lloyd loop."""
+    """The assignment reads its centroids through ``_model_rows``, so a
+    k above that bound is refused up front, not after the Lloyd loop."""
     from etl_gardener_spark.orchestrator.metrics import spark_cost
 
     df = _rel(spark, KM_VECS, KM_SCHEMA)
     with spark_cost(spark) as cost:
-        for assign in ("fold", "gemm"):
-            with pytest.raises(ValueError, match=f"at most {SIM._MODEL_ROWS}"):
-                SIM.kmeans_fit(df, k=SIM._MODEL_ROWS + 1, assign=assign)
+        with pytest.raises(ValueError, match=f"at most {SIM._MODEL_ROWS}"):
+            SIM.kmeans_fit(df, k=SIM._MODEL_ROWS + 1)
     assert cost.jobs == 0

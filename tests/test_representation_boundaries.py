@@ -470,8 +470,8 @@ def test_micro_display_sign_correct_half_up(spark):
 def test_floor_kernel_identical_across_catalyst_numpy_duckdb(spark):
     """The r8 kmeans-assignment fix rests on FLOOR(x*1e6 + 0.5) being
     the same IEEE expression tree in Catalyst, numpy, and DuckDB — so
-    the fold and GEMM assign paths (and the SQL oracle) pick identical
-    argmax winners even on 6-dp midpoints, where Spark ROUND
+    the assignment kernel (``_nearest``) and the SQL oracle pick
+    identical argmax winners even on 6-dp midpoints, where Spark ROUND
     (shortest-repr half-up) vs np.round (binary half-even) diverge.
     Probe the adversarial set: exact dyadic midpoints (0.0078125 * 1e6
     = 7812.5), both signs, the -2.0 NULL sentinel, values an ulp off a
