@@ -1,16 +1,18 @@
 """Persisted ANN index lifecycle — the build-once / search-many story
 made concrete: the IVF corpus cells (similarity.ivf_build_cells), the
 coarse-quantizer centroids (seeded or kmeans_fit-trained), and the PQ
-code table (pq.exploded_codes) saved as parquet relations and loaded
-back for search, so index construction is an AMORTIZED artifact (FAISS
-writes an index file; a Spark warehouse writes index tables).
+code table (pq.pq_encode's (id, code_0..code_{m-1}) relation) saved as
+parquet relations and loaded back for search, so index construction is
+an AMORTIZED artifact (FAISS writes an index file; a Spark warehouse
+writes index tables).
 
 At 100 TB: the cells relation is (id, vector, cell) — same order as the
 corpus, written partitioned on ``cell`` so a search's probed cells prune
 to exactly nprobe/C of the files (partition pruning does the candidate
-bounding that the cell equi-join does in-memory); centroids are C rows;
-PQ codes are m small ints per vector. Rebuilds happen on corpus change,
-searches read only their probed partitions.
+bounding that the probe test does in-memory); centroids are C rows;
+PQ codes are m small ints per vector, joined to the cells by id once per
+search. Rebuilds happen on corpus change, searches read only their
+probed partitions.
 
 Failure discipline (ADVICE r9): absence and failure are distinguishable.
 ``save_ann_index`` writes a ``_PARTS`` marker naming the parts it wrote;

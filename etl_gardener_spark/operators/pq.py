@@ -13,10 +13,15 @@ fit a far smaller cluster — and queries never touch raw corpus vectors:
   the driver once and each Arrow batch of the corpus is encoded by one
   exact numpy fold in a narrow ``mapInArrow`` pass. No join, no
   aggregate, no shuffle of the raw vectors.
-* **Search** (per query batch): the query computes its m x k_sub
-  distance TABLE (tiny — broadcast), which is equi-joined to the
-  exploded code columns; the approximate distance is a SUM of m table
-  lookups. Corpus-side I/O is the code table only.
+* **Search** (per query batch): the queries are read to the driver once
+  (at most ``_MODEL_ROWS``) and each computes its m x k_sub distance
+  TABLE there — one per probed cell in the residual variants. One narrow
+  ``mapInArrow`` pass (``_adc_pass``) then encodes each Arrow batch of
+  the corpus (or reads its persisted codes) and scores every query's
+  candidates in numpy: the approximate distance is a SUM of m table
+  lookups. Each batch keeps, per query, the rows no worse than its k-th
+  best, and one window ranks them — the only shuffle. No raw corpus
+  vector leaves its batch.
 
 Determinism discipline (the repo-wide exact-kernel rule): sub-space
 squared-L2 distances are doubles from an identical left-to-right
@@ -35,7 +40,8 @@ the trained results stay oracle-reproducible too). Either way the
 codebook is read to the driver once per call as one (cid, sub-vector)
 list per sub-space, and one numpy kernel (``_sub_dist``) computes every
 sub-distance: encoding, the ADC tables, the fit's assignment step and
-``opq_fit``'s driver-side training. The plan shape, code layout, and
+``opq_fit``'s driver-side training; ``_adc_pass`` computes every ADC
+score. The plan shape, code layout, and
 search path are identical either way; the recall is not (see
 ``emb_pq_codebook_recall_report``).
 """
@@ -46,9 +52,10 @@ import math
 
 import numpy as np
 import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
-from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.pandas.types import to_arrow_schema, to_arrow_type
 from pyspark.sql.types import (
     ArrayType,
     DoubleType,
@@ -69,7 +76,9 @@ from etl_gardener_spark.operators.similarity import (
     _assign_pass,
     _floor_long,
     _model_rows,
+    _nearest,
     _resolve_cents,
+    _scorable,
     ivf_centroids,
 )
 
@@ -92,44 +101,25 @@ def _sub_dist_e6(vec: Column, cvec: Column, start: int, width: int) -> Column:
     return F.floor(d * F.lit(1e6) + F.lit(0.5)).cast("long")
 
 
-def _check_dim(vec_col: str, m: int, sub_dim: int) -> Column:
-    """Fail-fast dimension guard (round-6 advisor fix): a vector shorter
-    than ``m * sub_dim`` would make F.slice/zip_with pad with NULLs,
-    feeding a NULL micro-distance into the min_by ordering — a silent,
-    NULL-ordering-dependent code assignment. Executor-side assert_true
-    turns the mis-sized input into an immediate, named failure instead
-    (NULL vectors are left to the caller's null handling)."""
-    need = m * sub_dim
-    ok = F.col(vec_col).isNull() | (F.size(vec_col) >= need)
-    return F.when(
-        F.assert_true(
-            ok,
-            F.concat(
-                F.lit(f"pq: embedding shorter than m*sub_dim={need}: got "),
-                F.size(vec_col).cast("string"),
-            ),
-        ).isNull(),
-        F.col(vec_col),
-    )
-
-
-def _pq_vectors(col, need: int) -> tuple:
-    """(x, valid, present) of a vector column for the PQ kernels, ``x``
-    and ``valid`` at least ``need`` columns wide. A non-NULL vector
-    shorter than ``need`` raises: its slices would pad with NULLs and
-    make the code assignment depend on NULL ordering."""
-    x, lens, valid, present = _arrow_vectors(col)
+def _pq_pad(x, lens, valid, present, need: int) -> tuple:
+    """(x, valid) of ``_arrow_vectors`` padded to at least ``need``
+    columns. A non-NULL vector shorter than ``need`` raises: its slices
+    would pad with NULLs and make the code assignment depend on NULL
+    ordering."""
     short = present & (lens < need)
     if short.any():
         raise ValueError(
             f"pq: embedding shorter than m*sub_dim={need}: "
             f"got {int(lens[short][0])}"
         )
-    if x.shape[1] < need:
-        pad = need - x.shape[1]
-        x = np.pad(x, ((0, 0), (0, pad)))
-        valid = np.pad(valid, ((0, 0), (0, pad)))
-    return x, valid, present
+    return _widen(x, need), _widen(valid, need)
+
+
+def _pq_vectors(col, need: int) -> tuple:
+    """(x, valid, present) of a vector column for the PQ kernels, ``x``
+    and ``valid`` at least ``need`` columns wide (``_pq_pad``)."""
+    x, lens, valid, present = _arrow_vectors(col)
+    return (*_pq_pad(x, lens, valid, present, need), present)
 
 
 def _sub_dist(x, valid, present, cb: list[tuple], s: int, sub_dim: int):
@@ -284,94 +274,6 @@ def pq_encode(
     )
 
 
-def exploded_codes(
-    corpus: DataFrame, id_col: str, vec_col: str, m: int, sub_dim: int,
-    k_sub: int,
-) -> DataFrame:
-    """(neighbor_id, s, code): the encoded corpus melted to one row per
-    sub-space — the relation ADC search actually reads (m small ints per
-    vector; raw vectors never appear downstream of this)."""
-    return _explode(
-        pq_encode(corpus, id_col, vec_col, m, sub_dim, k_sub), id_col, m
-    )
-
-
-def _explode(encoded: DataFrame, id_col: str, m: int) -> DataFrame:
-    """``exploded_codes`` of a ``pq_encode`` relation."""
-    return encoded.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(s).alias("s"),
-                        F.col(f"code_{s}").alias("code"),
-                    )
-                    for s in range(m)
-                ]
-            )
-        ).alias("sc"),
-    ).select("neighbor_id", "sc.s", "sc.code")
-
-
-def _dist_table(
-    df: DataFrame, keys: list[str], vec_col: str, cbs: list[list], m: int,
-    sub_dim: int,
-) -> DataFrame:
-    """(*keys, code, s, de6): every row's micro-distance to every entry of
-    the per-sub-space codebooks ``cbs``, ``_sub_dist`` per sub-space
-    melted in one ``mapInArrow`` pass. A non-NULL vector shorter than
-    m*sub_dim raises."""
-    src = df.select(*keys, vec_col)
-    schema = StructType(
-        [src.schema[k] for k in keys]
-        + [
-            StructField("code", LongType()),
-            StructField("s", IntegerType()),
-            StructField("de6", LongType()),
-        ]
-    )
-    if not all(cbs):
-        return local_df(df.sparkSession, [], schema)
-    cids = [pa.array([c for c, _v in cb], type=pa.int64()) for cb in cbs]
-    need = m * sub_dim
-
-    def gen(batches):
-        for batch in batches:
-            x, valid, present = _pq_vectors(batch.column(len(keys)), need)
-            n = len(x)
-            for s, cb in enumerate(cbs):
-                de6, null = _sub_dist(x, valid, present, cb, s, sub_dim)
-                # rows ordered (row, entry)
-                row = pa.array(np.repeat(np.arange(n), len(cb)))
-                ent = pa.array(np.tile(np.arange(len(cb)), n))
-                yield pa.RecordBatch.from_arrays(
-                    [batch.column(i).take(row) for i in range(len(keys))]
-                    + [
-                        cids[s].take(ent),
-                        pa.array(np.full(n * len(cb), s, dtype=np.int32)),
-                        pa.array(de6.ravel(), mask=null.ravel()),
-                    ],
-                    names=schema.names,
-                )
-
-    return src.mapInArrow(gen, schema)
-
-
-def _query_dist_table(
-    queries: DataFrame, cbs: list[list], id_col: str, vec_col: str, m: int,
-    sub_dim: int,
-) -> DataFrame:
-    """(query_id, code, s, de6): each query's m x k_sub micro-distance
-    table — tiny, broadcast into the code join."""
-    return _dist_table(
-        queries.select(
-            F.col(id_col).alias("query_id"), F.col(vec_col).alias("q_vec")
-        ),
-        ["query_id"], "q_vec", cbs, m, sub_dim,
-    )
-
-
 def _rank_adc(cand: DataFrame, k: int) -> DataFrame:
     """Top-k per query by (ADC score ASC, neighbor_id ASC)."""
     w = Window.partitionBy("query_id").orderBy(
@@ -381,6 +283,430 @@ def _rank_adc(cand: DataFrame, k: int) -> DataFrame:
         cand.withColumn("rank", F.row_number().over(w).cast("long"))
         .filter(F.col("rank") <= k)
     )
+
+
+# -- ADC search: one numpy pass over the corpus ---------------------------
+#
+# Every PQ search scores its candidates in one narrow ``mapInArrow`` pass.
+# The query side is built on the driver from one bounded read of the
+# queries: for each query (each (query, probe) in the residual variants)
+# one integer-micro lookup table per sub-space, and a map from a corpus
+# row's key (its cell; 0 in a flat search) to the table that scores it.
+# Each Arrow batch of the corpus takes every row's key and codes, scores
+# each query's candidates by table lookups and keeps, per query, the
+# rows no worse than the batch's k-th best; ``_rank_adc`` (one window,
+# the only shuffle) merges the batches and breaks ties by id.
+
+_BLOCK = 1 << 18  # (query, row) pairs scored at once
+
+
+def _code_spaces(cbs: list[list]) -> list[tuple]:
+    """Per (cid, vector) list of ``cbs``, (u, ent): its sorted distinct
+    non-NULL cids and each entry's index into ``u`` — len(u) for a NULL
+    cid, which no code or cell equals."""
+    out = []
+    for cb in cbs:
+        ok = np.array([c is not None for c, _v in cb], dtype=bool)
+        cid = np.array([c or 0 for c, _v in cb], dtype=np.int64)
+        u = np.unique(cid[ok])
+        out.append((u, np.where(ok, np.searchsorted(u, cid), len(u))))
+    return out
+
+
+def _index_of(u, col) -> np.ndarray:
+    """Each value of the long Arrow column ``col`` as an index into the
+    sorted cids ``u``; len(u) for a NULL or a value not in ``u``."""
+    if isinstance(col, pa.ChunkedArray):
+        col = col.combine_chunks()
+    v = col.fill_null(0).to_numpy(zero_copy_only=False).astype(np.int64)
+    i = np.searchsorted(u, v)
+    hit = col.is_valid().to_numpy(zero_copy_only=False) & (i < len(u))
+    hit[hit] = u[i[hit]] == v[hit]
+    return np.where(hit, i, len(u))
+
+
+def _codes(x, valid, present, cbs, spaces, sub_dim: int) -> list:
+    """Each row's code per sub-space (``_argmin``, as ``_encode`` picks
+    it) as an index into that sub-space's distinct cids."""
+    return [
+        ent[_argmin(x, valid, present, cb, s, sub_dim)[0]]
+        for s, (cb, (_u, ent)) in enumerate(zip(cbs, spaces))
+    ]
+
+
+def _tables(x, valid, present, cbs, spaces, sub_dim: int) -> list[tuple]:
+    """Per sub-space (tsum, tnn, tovf), each (rows, len(u) + 1): for each
+    row of ``x`` and each distinct cid, the long sum of the non-NULL
+    micro-distances (``_sub_dist``) of every entry with that cid, wrapped
+    to 64 bits; whether one of them is non-NULL; and whether the sum
+    overflowed. The last column (no entry) holds 0 and False."""
+    out = []
+    for s, (cb, (u, ent)) in enumerate(zip(cbs, spaces)):
+        de6, null = _sub_dist(x, valid, present, cb, s, sub_dim)
+        val = np.where(null, 0, de6)
+        tsum = np.zeros((len(x), len(u) + 1), dtype=np.int64)
+        tnn = np.zeros(tsum.shape, dtype=bool)
+        tovf = np.zeros(tsum.shape, dtype=bool)
+        # entries sharing a cid are added one level at a time; every
+        # micro-distance is >= 0, so a sum overflowed iff it decreased
+        order = np.argsort(ent, kind="stable")
+        order = order[ent[order] < len(u)]
+        first = np.ones(len(order), dtype=bool)
+        first[1:] = ent[order][1:] != ent[order][:-1]
+        pos = np.arange(len(order))
+        level = pos - np.maximum.accumulate(np.where(first, pos, 0))
+        for lv in range(int(level.max(initial=-1)) + 1):
+            e = order[level == lv]
+            c = ent[e]
+            new = tsum[:, c] + val[:, e]
+            tovf[:, c] |= new < tsum[:, c]
+            tsum[:, c] = new
+            tnn[:, c] |= ~null[:, e]
+        out.append((tsum, tnn, tovf))
+    return out
+
+
+def _widen(a, width: int):
+    """``a`` with zero (False) columns appended up to ``width``."""
+    return np.pad(a, ((0, 0), (0, max(0, width - a.shape[1]))))
+
+
+def _residual(v: tuple, c: tuple, pos) -> tuple:
+    """``zip_with(vector, centroid, x - y)`` for each row of ``v`` against
+    centroid ``pos[r]`` of ``c``, both (x, lens, valid, present) of
+    ``_arrow_vectors``, as the same four: a residual is NULL where either
+    vector is, an element NULL where either is NULL or past its end, and
+    the length is the longer one's."""
+    x, lens, valid, present = v
+    cx, clens, cvalid, cpresent = c
+    w = max(x.shape[1], cx.shape[1])
+    cx, cvalid = _widen(cx, w)[pos], _widen(cvalid, w)[pos]
+    with np.errstate(all="ignore"):
+        rx = _widen(x, w) - cx
+    rp = present & cpresent[pos]
+    rlens = np.where(rp, np.maximum(lens, clens[pos]), 0)
+    return rx, rlens, _widen(valid, w) & cvalid, rp
+
+
+def _cent_vectors(cents: list[tuple]) -> tuple:
+    """``_arrow_vectors`` of the centroid rows ``cents``."""
+    return _arrow_vectors(
+        pa.array([cv for _c, cv in cents], type=pa.list_(pa.float64()))
+    )
+
+
+def _residuals(
+    corpus: DataFrame,
+    cents: list[tuple],
+    id_col: str,
+    vec_col: str,
+    need: int,
+) -> DataFrame:
+    """(neighbor_id, rvec): each corpus vector minus its nearest centroid
+    of the sorted rows ``cents`` (``_nearest``, as ``_assign_pass`` picks
+    the cell), ``_residual``'s rule, one narrow ``mapInArrow`` pass. A
+    row with a NULL id or a NULL cell cid has no residual, as in the
+    corpus ⨝ cells join; a non-NULL vector shorter than ``need``
+    raises."""
+    src = corpus.select(id_col, vec_col)
+    schema = StructType(
+        [
+            StructField("neighbor_id", src.schema[id_col].dataType),
+            StructField("rvec", ArrayType(DoubleType())),
+        ]
+    )
+    if not cents:
+        return local_df(corpus.sparkSession, [], schema)
+    cv = _cent_vectors(cents)
+    has_cid = np.array([c is not None for c, _v in cents])
+
+    def gen(batches):
+        for batch in batches:
+            v = _arrow_vectors(batch.column(1))
+            _pq_pad(*v, need)
+            top = _nearest(v[0], v[1], _scorable(*v[1:]), cents, 6)[:, 0]
+            rows = batch.column(0).is_valid().to_numpy(zero_copy_only=False)
+            rows = np.flatnonzero(rows & has_cid[top])
+            v = tuple(a[rows] for a in v)
+            rx, rlens, rvalid, rp = _residual(v, cv, top[rows])
+            keep = np.arange(rx.shape[1])[None, :] < rlens[:, None]
+            rvec = pa.ListArray.from_arrays(
+                pa.array(np.r_[0, np.cumsum(rlens)].astype(np.int32)),
+                pa.array(rx[keep], mask=~rvalid[keep]),
+                mask=pa.array(~rp),
+            )
+            yield pa.RecordBatch.from_arrays(
+                [batch.column(0).take(pa.array(rows)), rvec],
+                names=schema.names,
+            )
+
+    return src.mapInArrow(gen, schema)
+
+
+def _query_side(
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    m: int,
+    sub_dim: int,
+    cbs: list[list],
+    cents: list[tuple] | None,
+    nprobe: int,
+    residual: bool,
+) -> tuple:
+    """(field, qids, kt, tables): the queries read to the driver once
+    (``collect_bounded`` at ``_MODEL_ROWS``; a larger relation raises
+    TooManyRows while the plan is built), their id field and ids, the
+    (queries, keys) map ``kt`` from a corpus row's key to the table that
+    scores it for that query (-1: not a candidate) and ``_tables`` of
+    every query — of every (query, probe) in a residual search, from the
+    query residual against the probed centroid.
+
+    Keys: 0 in a flat search (``cents`` None), the index of a row's cell
+    among the distinct centroid cids in an IVF search, and the position
+    of its centroid in ``cents`` in a residual one. The ``nprobe``
+    probes are ``_nearest``'s; a probe with a NULL cid, a query with a
+    NULL id, and every query when a sub-space has no entry, score
+    nothing. A non-NULL query vector shorter than m*sub_dim raises."""
+    src = queries.select(id_col, vec_col)
+    field = StructField("query_id", src.schema[id_col].dataType)
+    rows = collect_bounded(src, _MODEL_ROWS, "pq queries")
+    qids = pa.array([r[0] for r in rows], type=to_arrow_type(field.dataType))
+    v = _arrow_vectors(
+        pa.array([r[1] for r in rows], type=pa.list_(pa.float64()))
+    )
+    x, lens, valid, present = v
+    need = m * sub_dim
+    x, valid = _pq_pad(x, lens, valid, present, need)
+    qok = qids.is_valid().to_numpy(zero_copy_only=False) & all(cbs)
+    n = len(qids)
+    spaces = _code_spaces(cbs)
+    if cents is None:
+        kt = np.where(qok, np.arange(n), -1)[:, None]
+        return field, qids, kt, _tables(x, valid, present, cbs, spaces, sub_dim)
+    top = (
+        _nearest(x, lens, _scorable(lens, valid, present), cents, 6, nprobe)
+        if cents
+        else np.zeros((n, 0), dtype=np.int64)
+    )
+    q = np.repeat(np.arange(n), top.shape[1])
+    u, cell_of = _code_spaces([cents])[0]
+    if residual:
+        key = top.ravel()
+        ok = qok[q] & (cell_of[key] < len(u))
+        kt = np.full((n, len(cents)), -1, dtype=np.int64)
+        kt[q[ok], key[ok]] = np.flatnonzero(ok)
+        rx, rlens, rvalid, rp = _residual(
+            (x[q], lens[q], valid[q], present[q]), _cent_vectors(cents), key
+        )
+        rx, rvalid = _pq_pad(rx, rlens, rvalid, rp, need)
+        return field, qids, kt, _tables(rx, rvalid, rp, cbs, spaces, sub_dim)
+    key = cell_of[top.ravel()]
+    ok = qok[q] & (key < len(u))
+    kt = np.full((n, len(u)), -1, dtype=np.int64)
+    kt[q[ok], key[ok]] = q[ok]
+    return field, qids, kt, _tables(x, valid, present, cbs, spaces, sub_dim)
+
+
+def _corpus_rows(
+    need: int,
+    sub_dim: int,
+    cbs: list[list],
+    cents: list[tuple] | None,
+    residual: bool,
+):
+    """The row side of a search over corpus vectors: a function from an
+    Arrow batch (id, vector) to each row's key (``_query_side``'s) and
+    its code index per sub-space — encoded from the vector, or in a
+    residual search from its residual against its cell's centroid. A
+    non-NULL vector shorter than ``need`` raises."""
+    spaces = _code_spaces(cbs)
+    if cents:
+        cell_of = _code_spaces([cents])[0][1]
+        cv = _cent_vectors(cents)
+
+    def rows(batch):
+        x, lens, valid, present = _arrow_vectors(batch.column(1))
+        x, valid = _pq_pad(x, lens, valid, present, need)
+        key = np.zeros(len(x), dtype=np.int64)
+        if cents:
+            key = _nearest(x, lens, _scorable(lens, valid, present), cents, 6)
+            key = key[:, 0]
+            if residual:
+                x, lens, valid, present = _residual(
+                    (x, lens, valid, present), cv, key
+                )
+                x, valid = _pq_pad(x, lens, valid, present, need)
+            else:
+                key = cell_of[key]
+        return key, _codes(x, valid, present, cbs, spaces, sub_dim)
+
+    return rows
+
+
+def _coded_rows(cbs: list[list], cells):
+    """The row side of a search over persisted codes: a function from an
+    Arrow batch (id, [cell,] code_0..code_{m-1}) to each row's key — 0,
+    or the index of its cell among the sorted centroid cids ``cells`` —
+    and its code index per sub-space."""
+    spaces = _code_spaces(cbs)
+    at = 1 if cells is None else 2
+
+    def rows(batch):
+        key = (
+            np.zeros(batch.num_rows, dtype=np.int64)
+            if cells is None
+            else _index_of(cells, batch.column(1))
+        )
+        return key, [
+            _index_of(u, batch.column(at + s))
+            for s, (u, _e) in enumerate(spaces)
+        ]
+
+    return rows
+
+
+def _code_cols(codes: DataFrame, id_col: str, m: int) -> DataFrame:
+    """(neighbor_id, code_0..code_{m-1}) of ``pq_encode``'s relation."""
+    want = [id_col] + [f"code_{s}" for s in range(m)]
+    missing = [c for c in want if c not in codes.columns]
+    if missing:
+        raise ValueError(
+            f"codes= takes pq_encode's relation ({id_col}, code_0.."
+            f"code_{m - 1}); missing {missing} in {codes.columns}"
+        )
+    return codes.select(
+        F.col(id_col).alias("neighbor_id"),
+        *[F.col(c).cast("long").alias(c) for c in want[1:]],
+    )
+
+
+def _adc_pass(src: DataFrame, rows, qside: tuple, k: int) -> DataFrame:
+    """(query_id, neighbor_id, score) candidates: ``rows`` gives each row
+    of an Arrow batch of ``src`` (id first) its key and codes, and for
+    each query (in blocks of at most ``_BLOCK`` pairs) a row is a
+    candidate when ``kt`` maps its key to a table, its id is not NULL
+    and differs from the query's, and one of its codes is a cid of its
+    sub-space. The score is the long sum of the matched non-NULL
+    micro-distances / 1e6, NULL when every one is NULL; under ANSI an
+    overflowing sum raises ARITHMETIC_OVERFLOW, otherwise it wraps. Per
+    query and batch every candidate no worse than the k-th best (NULL
+    first) is kept, ties included, so the top k by (score, id) of the
+    whole corpus is among the rows kept."""
+    field, qids, kt, tables = qside
+    schema = StructType(
+        [
+            field,
+            StructField("neighbor_id", src.schema.fields[0].dataType),
+            StructField("score", DoubleType()),
+        ]
+    )
+    if k < 1 or not (kt >= 0).any():
+        return local_df(src.sparkSession, [], schema)
+    ansi = src.sparkSession.conf.get("spark.sql.ansi.enabled") == "true"
+    kt = np.concatenate([kt, np.full((len(kt), 1), -1, dtype=np.int64)], 1)
+    uq = pc.unique(qids.drop_null())
+    grp = pc.index_in(qids, value_set=uq).fill_null(-2)
+    grp = grp.to_numpy(zero_copy_only=False).astype(np.int64)
+    n_u = [t[0].shape[1] - 1 for t in tables]
+
+    def gen(batches):
+        for batch in batches:
+            ids = batch.column(0)
+            key, codes = rows(batch)
+            n = len(key)
+            rid = pc.index_in(ids, value_set=uq.cast(ids.type)).fill_null(-1)
+            rid = rid.to_numpy(zero_copy_only=False)
+            ok = ids.is_valid().to_numpy(zero_copy_only=False) & np.any(
+                [c < u for c, u in zip(codes, n_u)], axis=0
+            )
+            step = max(1, _BLOCK // max(n, 1))
+            for lo in range(0, len(kt), step):
+                t = kt[lo : lo + step][:, key]
+                cand = (t >= 0) & ok & (grp[lo : lo + step, None] != rid)
+                if not cand.any():
+                    continue
+                acc = np.zeros(t.shape, dtype=np.int64)
+                nn = np.zeros(t.shape, dtype=bool)
+                ovf = np.zeros(t.shape, dtype=bool)
+                for c, (tsum, tnn, tovf) in zip(codes, tables):
+                    new = acc + tsum[t, c]
+                    ovf |= (new < acc) | tovf[t, c]
+                    nn |= tnn[t, c]
+                    acc = new
+                if ansi and (ovf & cand).any():
+                    raise ArithmeticError(
+                        "pq: ADC score overflows a long [ARITHMETIC_OVERFLOW]"
+                    )
+                score = acc.astype(np.float64) / 1e6
+                if n > k:
+                    rank = np.where(cand, np.where(nn, score, -np.inf), np.inf)
+                    kth = np.partition(rank, k - 1, axis=1)[:, k - 1 : k]
+                    cand &= rank <= kth
+                qi, ri = np.nonzero(cand)
+                yield pa.RecordBatch.from_arrays(
+                    [
+                        qids.take(pa.array(qi + lo)),
+                        ids.take(pa.array(ri)),
+                        pa.array(score[qi, ri], mask=~nn[qi, ri]),
+                    ],
+                    names=schema.names,
+                )
+
+    return src.mapInArrow(gen, schema)
+
+
+def _ivf_cents(corpus, id_col, vec_col, n_centroids, centroids) -> list:
+    """The coarse quantizer's sorted (cid, cvec) rows, read once."""
+    return _model_rows(
+        _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids),
+        "ivf centroids",
+    )
+
+
+def _search(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str,
+    vec_col: str,
+    k: int,
+    m: int,
+    sub_dim: int,
+    cbs: list[list],
+    cents: list[tuple] | None = None,
+    nprobe: int = 0,
+    residual: bool = False,
+    codes: DataFrame | None = None,
+    cells: DataFrame | None = None,
+) -> DataFrame:
+    """Top-k ADC search of ``queries`` over ``corpus`` with the
+    per-sub-space codebooks ``cbs``: flat when ``cents`` is None, IVF
+    over the sorted centroid rows ``cents`` otherwise (``residual``:
+    codes and tables of residuals). The corpus side is one
+    ``_adc_pass`` over the vectors, or over the persisted ``codes``
+    (``pq_encode``'s relation) joined once by id to the cells (given,
+    or assigned by ``_assign_pass``)."""
+    qside = _query_side(
+        queries, id_col, vec_col, m, sub_dim, cbs, cents, nprobe, residual
+    )
+    if codes is None and cells is None:
+        src = corpus.select(F.col(id_col).alias("neighbor_id"), vec_col)
+        rows = _corpus_rows(m * sub_dim, sub_dim, cbs, cents, residual)
+        return _rank_adc(_adc_pass(src, rows, qside, k), k)
+    if codes is None:
+        codes = _encode(corpus, id_col, vec_col, m, sub_dim, cbs)
+    src = _code_cols(codes, id_col, m)
+    if cents is not None:
+        if cells is None:
+            cells = _assign_pass(corpus, cents, id_col, vec_col, 6).select(
+                F.col(id_col).alias("neighbor_id"), F.col("cid").alias("cell")
+            )
+        src = src.join(
+            cells.select("neighbor_id", F.col("cell").cast("long")),
+            "neighbor_id",
+        ).select("neighbor_id", "cell", *src.columns[1:])
+    ucells = None if cents is None else _code_spaces([cents])[0][0]
+    return _rank_adc(_adc_pass(src, _coded_rows(cbs, ucells), qside, k), k)
 
 
 def pq_topk(
@@ -397,41 +723,28 @@ def pq_topk(
     """ADC top-k: rank corpus vectors by approximate (quantized) squared
     L2 distance to each query, touching only the corpus CODES.
 
-    ``codes`` accepts a precomputed/persisted `exploded_codes` relation —
-    a PQ index IS a materialized artifact, encoded once and searched
-    many times; passing it skips the encode pass entirely.
+    ``codes`` accepts a precomputed/persisted ``pq_encode`` relation
+    (id_col, code_0..code_{m-1}) — a PQ index IS a materialized
+    artifact, encoded once and searched many times; passing it skips
+    the encode. A relation without those columns raises ValueError.
 
     Output: (query_id, neighbor_id, score, rank) — score is the exact
-    integer-micro ADC distance / 1e6, rank by (score ASC, neighbor_id
-    ASC). The per-query m x k_sub distance table is a tiny broadcast;
-    the corpus side is the exploded code relation (m rows per vector),
-    so the heavy join is codes ⨝ table on (sub, code) — no raw corpus
-    vectors move, which is the entire point of PQ at 100 TB.
+    integer-micro ADC distance / 1e6 (the long sum of m table lookups),
+    rank by (score ASC, neighbor_id ASC); a query never matches its own
+    id. The queries (at most ``_MODEL_ROWS``, else TooManyRows while the
+    plan is built) are read to the driver once and their m x k_sub
+    tables built there; the corpus is encoded and scored per Arrow batch
+    in one narrow numpy pass (``_adc_pass``) that keeps each query's
+    best rows, and one window ranks them. Ids are a key: each corpus and
+    query row is scored on its own. No raw corpus vector leaves its
+    batch, which is the entire point of PQ at 100 TB.
     """
     cb = _sub_codebooks(
         ivf_centroids(corpus, id_col, vec_col, k_sub), m, sub_dim
     )
-    if codes is None:
-        codes = _explode(
-            _encode(corpus, id_col, vec_col, m, sub_dim, cb), id_col, m
-        )
-    return _adc_topk(
-        codes, _query_dist_table(queries, cb, id_col, vec_col, m, sub_dim), k
+    return _search(
+        corpus, queries, id_col, vec_col, k, m, sub_dim, cb, codes=codes
     )
-
-
-def _adc_topk(codes: DataFrame, table: DataFrame, k: int) -> DataFrame:
-    """Top-k ADC over an exploded code relation (neighbor_id, s, code)
-    and a query distance table (query_id, code, s, de6): the codes join
-    the broadcast table on (s, code), a query never matches itself, and
-    each pair's score is its exact long sum of micro-distances / 1e6."""
-    cand = (
-        codes.join(F.broadcast(table), ["s", "code"])
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .groupBy("query_id", "neighbor_id")
-        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
-    )
-    return _rank_adc(cand, k)
 
 
 def pq_topk_ivf(
@@ -452,58 +765,36 @@ def pq_topk_ivf(
     """IVF-PQ ANN (the FAISS IndexIVFPQ layout, ``by_residual=false``
     variant — codes encode raw vectors, not cell residuals, keeping
     every code oracle-reproducible): coarse cosine cells bound WHICH
-    codes a query reads (~nprobe/C of the corpus via the cell
-    equi-join), PQ codes bound HOW MUCH is read per vector (m bytes),
-    and ADC ranks candidates without touching raw vectors at all.
+    codes a query scores (the rows in its nprobe cells), PQ codes bound
+    HOW MUCH is read per vector (m bytes), and ADC ranks candidates
+    without touching raw vectors at all.
 
-    Build side (one corpus pass each, amortized across queries): cell
-    assignment by rounded-cosine argmax and the PQ code table
-    (``pq_encode``'s pass). Cells and query probes are both ranked by
-    ``similarity._nearest`` (FLOOR(cos·1e6 + 0.5) DESC, ties to the
-    smallest cid), the kernel behind kmeans_assign and the IVF-Flat
-    cells, in narrow numpy passes per Arrow batch over the centroids
-    read to the driver once. The seeded codebook is collected once per
-    call and feeds both the encode and the query table. Query side:
-    nprobe nearest cells + the m x k_sub micro-distance table, both
-    tiny broadcasts. Output:
-    (query_id, neighbor_id, score, rank) — exact-integer ADC score,
-    rank (score ASC, neighbor_id ASC).
+    Cells and query probes are both ranked by ``similarity._nearest``
+    (FLOOR(cos·1e6 + 0.5) DESC, ties to the smallest cid) over the
+    centroids read to the driver once. The queries (at most
+    ``_MODEL_ROWS``, else TooManyRows while the plan is built) are read
+    once: their probes and m x k_sub tables are built on the driver.
+    The corpus side is one narrow numpy pass per Arrow batch that
+    assigns each row its cell, encodes it and scores it for every query
+    probing that cell (``_adc_pass``); one window ranks. A row is a
+    candidate once for each query that probes its cell cid, however
+    many centroids share that cid. ``codes`` (``pq_encode``'s relation)
+    and ``cells`` (``ivf_build_cells``' or a persisted index's
+    (neighbor_id, cell) relation) replace the inline encode or
+    assignment; the two then join once by id. Output: (query_id,
+    neighbor_id, score, rank) — exact-integer ADC score, rank (score
+    ASC, neighbor_id ASC).
     """
     # a trained coarse quantizer (kmeans_fit's fitted relation) swaps in
     # as in similarity.cosine_topk_ivf
-    cents = _model_rows(
-        _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids),
-        "pq_topk_ivf centroids",
-    )
-    if cells is None:
-        cells = _assign_pass(corpus, cents, id_col, vec_col, 6).select(
-            F.col(id_col).alias("neighbor_id"), F.col("cid").alias("cell")
-        )
-    else:
-        # a persisted index's cell relation (index_store.load_ann_index,
-        # or ivf_build_cells output) — extra columns like c_vec dropped
-        cells = cells.select("neighbor_id", "cell")
+    cents = _ivf_cents(corpus, id_col, vec_col, n_centroids, centroids)
     cb = _sub_codebooks(
         ivf_centroids(corpus, id_col, vec_col, k_sub), m, sub_dim
     )
-    if codes is None:
-        codes = _explode(
-            _encode(corpus, id_col, vec_col, m, sub_dim, cb), id_col, m
-        )
-    codes = codes.join(cells, "neighbor_id")
-    probes = _assign_pass(
-        queries, cents, id_col, vec_col, 6, keep=nprobe
-    ).select(F.col(id_col).alias("query_id"), F.col("cid").alias("cell"))
-
-    table = _query_dist_table(queries, cb, id_col, vec_col, m, sub_dim)
-    cand = (
-        codes.join(F.broadcast(probes), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-        .join(F.broadcast(table), ["query_id", "s", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
+    return _search(
+        corpus, queries, id_col, vec_col, k, m, sub_dim, cb, cents, nprobe,
+        codes=codes, cells=cells,
     )
-    return _rank_adc(cand, k)
 
 
 def pq_topk_ivf_refined(
@@ -617,71 +908,6 @@ def exact_l2_topk(
     return _rank_adc(cand, k)
 
 
-def _residual_parts(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str,
-    vec_col: str,
-    m: int,
-    sub_dim: int,
-    n_centroids: int,
-    nprobe: int,
-    centroids: DataFrame | None,
-):
-    """Shared build of the residual IVF-PQ variants: (res, cells,
-    probes) — the residual corpus relation (neighbor_id, cell, rvec),
-    the cell assignment, and the per-query probe set carrying the query
-    residual against each probed centroid, so the seeded- and
-    trained-codebook variants share one bit-identical front half. Cells
-    and the nprobe probes per query are ``similarity._nearest``'s, over
-    the centroids read to the driver once; each probe joins the
-    broadcast centroid relation back by cell for its residual."""
-    cents_df = _resolve_cents(corpus, id_col, vec_col, n_centroids, centroids)
-    cents = _model_rows(cents_df, "ivf centroids")
-    cells = _assign_pass(corpus, cents, id_col, vec_col, 6).select(
-        F.col(id_col).alias("neighbor_id"), F.col("cid").alias("cell")
-    )
-    res = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            _check_dim(vec_col, m, sub_dim).alias("__v"),
-        )
-        .join(cells, "neighbor_id")
-        .join(
-            F.broadcast(cents_df.withColumnRenamed("cid", "cell")), "cell"
-        )
-        .select(
-            "neighbor_id",
-            "cell",
-            F.zip_with(
-                F.col("__v"),
-                F.col("cvec"),
-                lambda x, y: x.cast("double") - y,
-            ).alias("rvec"),
-        )
-        # one materialization, two consumers (codebook seed + encode)
-        .localCheckpoint(eager=True)
-    )
-    checked = queries.select(
-        F.col(id_col), _check_dim(vec_col, m, sub_dim).alias(vec_col)
-    )
-    probes = (
-        _assign_pass(
-            checked, cents, id_col, vec_col, 6, keep_vec=True, keep=nprobe
-        )
-        .withColumnRenamed("cid", "cell")
-        .join(F.broadcast(cents_df.withColumnRenamed("cid", "cell")), "cell")
-        .select(
-            F.col(id_col).alias("query_id"),
-            "cell",
-            F.zip_with(
-                F.col(vec_col), F.col("cvec"), lambda x, y: x.cast("double") - y
-            ).alias("q_rvec"),
-        )
-    )
-    return res, cells, probes
-
-
 def pq_topk_ivf_residual(
     corpus: DataFrame,
     queries: DataFrame,
@@ -718,62 +944,31 @@ def pq_topk_ivf_residual(
     effective codeword, constant ADC scores (the measured 0.04 recall
     vs 0.26 trained in ``emb_pq_codebook_recall_report``).
 
-    Scale shape: build = one corpus pass for cells + one for residual
-    codes (both narrow numpy passes per Arrow batch, no raw-vector
-    shuffle); search reads codes for ~nprobe/C of the corpus via the
-    cell equi-join, with an (nprobe x m x k_sub)-row per-query ADC
-    table broadcast — per-cell tables are the only cost over the
-    non-residual variant. Output: (query_id, neighbor_id, score, rank)
-    — integer-exact ADC score, rank (score ASC, neighbor_id ASC).
+    Scale shape: the queries (at most ``_MODEL_ROWS``, else TooManyRows
+    while the plan is built) are read once; their nprobe probes and one
+    table per (query, probe), from q - c(probe), are built on the
+    driver. The codebook seeds are the residuals of the corpus rows with
+    id < k_sub, and the search is one narrow numpy pass per Arrow batch
+    that assigns each row its cell, subtracts the centroid, encodes the
+    residual and scores it with the table of the query's probe of that
+    centroid (``_adc_pass``) — no join, no raw-vector shuffle, no pin.
+    At a centroid cid held by several centroids, a row is scored only
+    by the probe of the centroid it was assigned to. Output:
+    (query_id, neighbor_id, score, rank) — integer-exact ADC score,
+    rank (score ASC, neighbor_id ASC).
     """
-    # Each caller builds its own _residual_parts triple: the r11 A/B
-    # measured that sharing one triple across the codebook report's two
-    # residual arms SERIALIZES the front half ahead of the arm fan-out
-    # and loses (task 8.62→10.96 s) — duplicate front halves that
-    # overlap on idle cores are free in wall terms (guide §2.6), so the
-    # former ``parts=`` sharing hook was dropped (r11 advisor: no caller).
-    res, cells, probes = _residual_parts(
-        corpus, queries, id_col, vec_col, m, sub_dim, n_centroids,
-        nprobe, centroids,
+    cents = _ivf_cents(corpus, id_col, vec_col, n_centroids, centroids)
+    seeds = _residuals(
+        corpus.filter(F.col(id_col) < k_sub), cents, id_col, vec_col,
+        m * sub_dim,
     )
     rcb = _sub_codebooks(
-        ivf_centroids(res, "neighbor_id", "rvec", k_sub), m, sub_dim
+        ivf_centroids(seeds, "neighbor_id", "rvec", k_sub), m, sub_dim
     )
-    return _residual_adc(res, cells, probes, rcb, k, m, sub_dim)
-
-
-def _residual_adc(
-    res: DataFrame,
-    cells: DataFrame,
-    probes: DataFrame,
-    cbs: list[list],
-    k: int,
-    m: int,
-    sub_dim: int,
-) -> DataFrame:
-    """The search half of the residual IVF-PQ variants over
-    ``_residual_parts``' triple and a per-sub-space residual codebook:
-    residual codes joined to their cells, one ADC table per (query,
-    probed cell) from the query residuals, candidates from the probed
-    cells only, top-k by (score ASC, neighbor_id ASC)."""
-    codes = _explode(
-        _encode(res, "neighbor_id", "rvec", m, sub_dim, cbs), "neighbor_id", m
-    ).join(cells, "neighbor_id")
-    # per-(query, probed cell) ADC table: (query_id, cell, code, s, de6)
-    qd = _dist_table(
-        probes, ["query_id", "cell"], "q_rvec", cbs, m, sub_dim
+    return _search(
+        corpus, queries, id_col, vec_col, k, m, sub_dim, rcb, cents, nprobe,
+        residual=True,
     )
-    cand = (
-        probes.select("query_id", "cell")
-        .join(codes, "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    adc = (
-        cand.join(F.broadcast(qd), ["query_id", "cell", "s", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
-    )
-    return _rank_adc(adc, k)
 
 
 # -- trained sub-quantizer codebooks (r9 verdict item 2) ------------------
@@ -1083,20 +1278,17 @@ def pq_topk_trained(
     n_iter: int = 2,
     codebooks: DataFrame | None = None,
 ) -> DataFrame:
-    """ADC top-k over TRAINED codebooks: pq_topk's exact search body
-    (``_encode`` codes ⨝ broadcast ``_query_dist_table`` on (s, code),
-    integer-micro ADC sum, rank by (score ASC, neighbor_id ASC)) with
-    pq_fit's per-sub-space codebooks in place of the seeded ones, read to
-    the driver once per call. ``codebooks`` accepts a persisted pq_fit
-    relation — fit once, search many."""
+    """ADC top-k over TRAINED codebooks: pq_topk's exact search (the
+    queries read to the driver once, at most ``_MODEL_ROWS``; one numpy
+    encode-and-score pass over the corpus; rank by (score ASC,
+    neighbor_id ASC)) with pq_fit's per-sub-space codebooks in place of
+    the seeded ones, read to the driver once per call. ``codebooks``
+    accepts a persisted pq_fit relation — fit once, search many."""
     if codebooks is None:
         codebooks = pq_fit(corpus, id_col, vec_col, m, sub_dim, k_sub, n_iter)
-    cbs = _trained_codebooks(codebooks, m)
-    codes = _explode(
-        _encode(corpus, id_col, vec_col, m, sub_dim, cbs), id_col, m
-    )
-    return _adc_topk(
-        codes, _query_dist_table(queries, cbs, id_col, vec_col, m, sub_dim), k
+    return _search(
+        corpus, queries, id_col, vec_col, k, m, sub_dim,
+        _trained_codebooks(codebooks, m),
     )
 
 
@@ -1117,10 +1309,11 @@ def pq_topk_ivf_residual_trained(
 ) -> DataFrame:
     """Residual IVF-PQ with a TRAINED sub-quantizer codebook — the full
     FAISS-faithful IndexIVFPQ composition (by_residual=true AND
-    ProductQuantizer::train): pq_topk_ivf_residual's exact front half
-    (_residual_parts — cells, residuals, per-probe query residuals) and
-    search half (``_residual_adc``), with pq_fit's per-sub-space k-means
-    codebook trained ON the residual distribution replacing the
+    ProductQuantizer::train): pq_topk_ivf_residual's exact search (the
+    queries' probes and per-probe residual tables on the driver, one
+    numpy pass over the corpus), with pq_fit's per-sub-space k-means
+    codebook trained ON the residual distribution (``_residuals``, one
+    narrow pass recomputed by each fit pass) replacing the
     residual-seeded first-k one. The r9 recall instrument attributed
     residual PQ's 0.04-vs-0.18 recall loss to that seeded codebook; this
     is the trained fix it called for.
@@ -1129,16 +1322,16 @@ def pq_topk_ivf_residual_trained(
     fit once, search many (pair with operators/index_store).
     Output: (query_id, neighbor_id, score, rank), integer-exact ADC.
     """
-    res, cells, probes = _residual_parts(
-        corpus, queries, id_col, vec_col, m, sub_dim, n_centroids,
-        nprobe, centroids,
-    )
+    cents = _ivf_cents(corpus, id_col, vec_col, n_centroids, centroids)
     if codebooks is None:
+        res = _residuals(corpus, cents, id_col, vec_col, m * sub_dim)
         codebooks = pq_fit(
             res, "neighbor_id", "rvec", m, sub_dim, k_sub, n_iter
         )
-    rcb = _trained_codebooks(codebooks, m)
-    return _residual_adc(res, cells, probes, rcb, k, m, sub_dim)
+    return _search(
+        corpus, queries, id_col, vec_col, k, m, sub_dim,
+        _trained_codebooks(codebooks, m), cents, nprobe, residual=True,
+    )
 
 
 def _with_vec_out(df: DataFrame, out: str):

@@ -2659,11 +2659,12 @@ def _pq_topk_oracle(k: int = 5) -> str:
     tags=("llm", "ann", "pq"),
 )
 def emb_ann_topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """PQ asymmetric-distance top-5 (operators/pq.py): each query builds
-    its 4 x 16 micro-distance table (tiny broadcast) and corpus vectors
-    are ranked by the SUM of 4 integer table lookups over their CODES —
-    raw corpus vectors are never read at search time. Rank by (ADC
-    distance ASC, neighbor_id ASC); score is exact integers / 1e6."""
+    """PQ asymmetric-distance top-5 (operators/pq.py): each query's
+    4 x 16 micro-distance table is built on the driver and corpus
+    vectors are ranked by the SUM of 4 integer table lookups over their
+    CODES, scored per Arrow batch in one numpy pass — no raw corpus
+    vector leaves its batch. Rank by (ADC distance ASC, neighbor_id
+    ASC); score is exact integers / 1e6."""
     from etl_gardener_spark.operators import pq as PQ
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -2740,8 +2741,8 @@ def _ivfpq_oracle(
 def emb_ann_topk_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN (operators/pq.pq_topk_ivf — the FAISS IndexIVFPQ
     layout, by_residual=false variant): coarse cosine cells bound WHICH
-    codes each query reads (~nprobe/C of the corpus via the cell
-    equi-join), PQ bounds the bytes per candidate (m codes, raw vectors
+    codes each query scores (the rows of its nprobe cells, ~nprobe/C of
+    the corpus), PQ bounds the bytes per candidate (m codes, raw vectors
     untouched at search time), ADC ranks by exact-integer distance.
     The composite of the two certified index halves — cells identical
     to emb_ann_topk_ivf's assignment, codes identical to emb_pq_codes."""
@@ -3003,7 +3004,7 @@ def emb_pq_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # encode ONCE and search both paths off the materialized index —
     # the deployment shape (a PQ index is built once, queried many
     # times); without the checkpoint each search re-runs the encode
-    codes = PQ.exploded_codes(e, "vec_id", "embedding", **kw).localCheckpoint(
+    codes = PQ.pq_encode(e, "vec_id", "embedding", **kw).localCheckpoint(
         eager=False
     )
     flat = PQ.pq_topk(e, probes, k=5, codes=codes, **kw).select(
@@ -6740,8 +6741,8 @@ def emb_ann_topk_ivfpq_residual(spark: SparkSession, sf_dir: str) -> DataFrame:
     builds a per-probed-cell ADC table from its own residual —
     residuals concentrate near zero, so the same codebook budget buys
     finer resolution. The extra cost over the plain variant is exactly
-    the (nprobe x m x k_sub)-row per-query tables; corpus-side I/O is
-    still codes only."""
+    the nprobe tables of m x k_sub entries per query, built on the
+    driver; the corpus side is still one narrow scoring pass."""
     from etl_gardener_spark.operators import pq as PQ
 
     e = load_table(spark, sf_dir, "embeddings")
@@ -6957,8 +6958,9 @@ def emb_ann_topk_pq_trainedcb(spark: SparkSession, sf_dir: str) -> DataFrame:
     ProductQuantizer::train, r9 verdict item 2): per-sub-space k-means
     (k_sub=16, 2 Lloyd iterations, all 4 sub-spaces trained together in
     one narrow numpy pass per iteration) replaces the seeded codebook of
-    [[emb_ann_topk_pq]]; the ADC search body (codes ⨝ broadcast query
-    table on (s, code), integer-micro sum) is unchanged. Training is a
+    [[emb_ann_topk_pq]]; the ADC search body (driver-built query tables,
+    one numpy scoring pass over the codes, integer-micro sum) is
+    unchanged. Training is a
     build-side job amortized across every future query; at 100 TB the
     fit runs on a bounded corpus sample (FAISS's own convention)."""
     from etl_gardener_spark.operators import pq as PQ
@@ -7351,7 +7353,7 @@ def emb_pq_refine_recall_report(
         .select("query_id", "neighbor_id")
         .localCheckpoint(eager=False)
     )
-    codes = PQ.exploded_codes(e, "vec_id", "embedding", **kw).localCheckpoint(
+    codes = PQ.pq_encode(e, "vec_id", "embedding", **kw).localCheckpoint(
         eager=False
     )
     ivfpq = PQ.pq_topk_ivf(
@@ -7509,7 +7511,7 @@ def emb_ann_topk_ivfpq_persisted(
     kw = dict(m=_PQ_M, sub_dim=_PQ_SUB, k_sub=_PQ_KSUB)
     _final, cents = SIM.kmeans_fit(e, "vec_id", "embedding", k=16, n_iter=2)
     cells = SIM.ivf_build_cells(e, n_centroids=16, centroids=cents)
-    codes = PQ.exploded_codes(e, "vec_id", "embedding", **kw)
+    codes = PQ.pq_encode(e, "vec_id", "embedding", **kw)
     d = _scratch("pqidx")
     save_ann_index(d, cells, centroids=cents, codes=codes)
     idx = load_ann_index(spark, d)

@@ -1,11 +1,12 @@
 """The numpy assignment and encode kernels against the Catalyst trees they
 replaced.
 
-``kmeans_assign``, ``pq_encode`` and the ADC distance table run one numpy
-pass per Arrow batch. The expression trees below are the former
-production kernels (a broadcast nested loop of interpreted
-``aggregate``/``zip_with`` folds, then a ``row_number`` window or a
-``min_by`` aggregate); they are the bit-equality references. Every
+``kmeans_assign`` and ``pq_encode`` run one numpy pass per Arrow batch,
+and the ADC query tables are built on the driver. The expression trees
+below are the former production kernels (a broadcast nested loop of
+interpreted ``aggregate``/``zip_with`` folds, then a ``row_number``
+window or a ``min_by`` aggregate); they are the bit-equality
+references. Every
 comparison runs on 3 partitions with 2-row Arrow batches, so batch
 edges fall inside every fixture. ``_nearest``, the centroid-ranking
 kernel, is also checked at the numpy level against the full-matrix
@@ -62,6 +63,24 @@ def _canon(rows):
 # -- references: the former Catalyst kernels --------------------------------
 
 
+def check_dim(vec_col, m, sub_dim):
+    """The former executor-side dimension guard of the Catalyst PQ
+    trees: a non-NULL vector shorter than ``m * sub_dim`` fails with a
+    named error (NULL vectors pass)."""
+    need = m * sub_dim
+    ok = F.col(vec_col).isNull() | (F.size(vec_col) >= need)
+    return F.when(
+        F.assert_true(
+            ok,
+            F.concat(
+                F.lit(f"pq: embedding shorter than m*sub_dim={need}: got "),
+                F.size(vec_col).cast("string"),
+            ),
+        ).isNull(),
+        F.col(vec_col),
+    )
+
+
 def ref_kmeans_assign(df, cents_df, id_col, vec_col, round_digits=6, keep=1):
     """(id, cid) for each row's ``keep`` best centroids by (score DESC,
     cid ASC NULLS FIRST)."""
@@ -107,7 +126,7 @@ def ref_kmeans_assign(df, cents_df, id_col, vec_col, round_digits=6, keep=1):
 
 def ref_pq_encode(corpus, cb, id_col, vec_col, m, sub_dim):
     scored = corpus.select(
-        id_col, PQ._check_dim(vec_col, m, sub_dim).alias(vec_col)
+        id_col, check_dim(vec_col, m, sub_dim).alias(vec_col)
     ).join(F.broadcast(cb))
     for s in range(m):
         scored = scored.withColumn(
@@ -133,7 +152,7 @@ def ref_pq_encode(corpus, cb, id_col, vec_col, m, sub_dim):
 def ref_query_dist_table(queries, cb, id_col, vec_col, m, sub_dim):
     qd = queries.select(
         F.col(id_col).alias("query_id"),
-        PQ._check_dim(vec_col, m, sub_dim).alias("q_vec"),
+        check_dim(vec_col, m, sub_dim).alias("q_vec"),
     ).join(F.broadcast(cb))
     for s in range(m):
         qd = qd.withColumn(
@@ -586,31 +605,100 @@ def test_pq_recon_err_overflow_raises_like_ansi_sql(spark):
         PQ.pq_encode(df, "vec_id", "embedding", M, SUB, KSUB).collect()
 
 
+def ref_melt_codes(encoded, id_col, m):
+    """(neighbor_id, s, code): an encode relation melted to one row per
+    sub-space, the layout the former ADC join read."""
+    return encoded.select(
+        F.col(id_col).alias("neighbor_id"),
+        F.explode(
+            F.array(
+                *[
+                    F.struct(
+                        F.lit(s).alias("s"), F.col(f"code_{s}").alias("code")
+                    )
+                    for s in range(m)
+                ]
+            )
+        ).alias("sc"),
+    ).select("neighbor_id", "sc.s", "sc.code")
+
+
+def query_tables(qside, cbs):
+    """``PQ._query_side``'s lookup tables as (query_id, s, code, sum)
+    rows: per query and distinct cid the long sum of the non-NULL
+    micro-distances, None where every one is NULL."""
+    _field, qids, _kt, tables = qside
+    out = []
+    for s, ((u, _e), (tsum, tnn, _tovf)) in enumerate(
+        zip(PQ._code_spaces(cbs), tables)
+    ):
+        for i, qid in enumerate(qids.to_pylist()):
+            for j, cid in enumerate(u.tolist()):
+                out.append(
+                    (qid, s, cid, int(tsum[i, j]) if tnn[i, j] else None)
+                )
+    return out
+
+
+# PQ_EDGE_CB with a NULL cid and a second entry at cid 1
+PQ_DUP_CB = PQ_EDGE_CB + [
+    (None, [0.0, 0.0, 0.0, 0.0]),
+    (1, [2.0, 2.0, 1.0, 1.0]),
+]
+
+
 def test_query_dist_table_matches_catalyst(spark):
-    queries = _rel(spark, PQ_VECS, PQ_SCHEMA)
-    for cb in (SIM.ivf_centroids(queries, "vec_id", "embedding", KSUB),
-               PQ_EDGE_CB):
+    """The driver-side query tables equal the Catalyst per-entry table
+    summed per (query, sub-space, cid) — entries sharing a cid add up,
+    as the former code join added them, and a NULL cid is no entry."""
+    for cb, rows in (
+        (None, PQ_VECS),
+        (PQ_EDGE_CB, PQ_VECS),
+        # +-inf rows would overflow the two cid-1 sums in the reference
+        (PQ_DUP_CB, [r for r in PQ_VECS if r[0] not in (7, 8)]),
+    ):
+        queries = _rel(spark, rows, PQ_SCHEMA)
+        if cb is None:
+            cb = SIM.ivf_centroids(queries, "vec_id", "embedding", KSUB)
         cdf = local_df(spark, cb, CENT_SCHEMA)
         cbs = PQ._sub_codebooks(SIM._model_rows(cdf, "cb"), M, SUB)
-        got = PQ._query_dist_table(queries, cbs, "vec_id", "embedding", M,
-                                   SUB)
-        ref = ref_query_dist_table(queries, cdf, "vec_id", "embedding", M, SUB)
-        g, r = _canon(got.collect()), _canon(ref.collect())
-        assert g == r and len(g) == len(PQ_VECS) * len(cb) * M
-        assert got.schema.simpleString() == ref.schema.simpleString()
+        qside = PQ._query_side(
+            queries, "vec_id", "embedding", M, SUB, cbs, None, 0, False
+        )
+        ref = (
+            ref_query_dist_table(queries, cdf, "vec_id", "embedding", M, SUB)
+            .filter(F.col("code").isNotNull())
+            .groupBy("query_id", "s", "code")
+            .agg(F.sum("de6"))
+        )
+        g, r = _canon(query_tables(qside, cbs)), _canon(ref.collect())
+        n_cids = len({c for c, _v in cb if c is not None})
+        assert g == r and len(g) == len(rows) * M * n_cids
 
 
 def test_short_vector_guard_raises(spark):
+    """A short corpus vector fails the encode and search passes; a short
+    query vector is refused while the search plan is built."""
     rows = PQ_VECS[:4] + [(30, [1.0, 2.0, 3.0])]
     df = _rel(spark, rows, PQ_SCHEMA)
+    ok = _rel(spark, PQ_VECS[:4], PQ_SCHEMA)
     msg = "pq: embedding shorter than m\\*sub_dim=4: got 3"
+    kw = dict(k=2, m=M, sub_dim=SUB, k_sub=KSUB)
+    ivf = dict(kw, n_centroids=2, nprobe=1)
     with pytest.raises(Exception, match=msg):
         PQ.pq_encode(df, "vec_id", "embedding", M, SUB, KSUB).collect()
-    cb = SIM.ivf_centroids(df, "vec_id", "embedding", KSUB)
-    cbs = PQ._sub_codebooks(cb, M, SUB)
-    with pytest.raises(Exception, match=msg):
-        PQ._query_dist_table(df, cbs, "vec_id", "embedding", M, SUB).collect()
-    cdf = local_df(spark, cb, CENT_SCHEMA)
+    for search, args in (
+        (PQ.pq_topk, kw),
+        (PQ.pq_topk_ivf, ivf),
+        (PQ.pq_topk_ivf_residual, ivf),
+    ):
+        with pytest.raises(Exception, match=msg):
+            search(df, ok, **args).collect()
+        # no action: the query side is built with the plan
+        with pytest.raises(ValueError, match=msg):
+            search(ok, df, **args)
+    cdf = local_df(spark, SIM.ivf_centroids(df, "vec_id", "embedding", KSUB),
+                   CENT_SCHEMA)
     with pytest.raises(Exception, match=msg):
         ref_pq_encode(df, cdf, "vec_id", "embedding", M, SUB).collect()
 
@@ -626,7 +714,7 @@ def test_pq_topk_searches_match_catalyst_tables(spark):
     queries = df.filter(F.col("vec_id") < 4)
     cdf = local_df(spark, SIM.ivf_centroids(df, "vec_id", "embedding", KSUB),
                    CENT_SCHEMA)
-    codes = PQ._explode(
+    codes = ref_melt_codes(
         ref_pq_encode(df, cdf, "vec_id", "embedding", M, SUB), "vec_id", M
     )
     table = ref_query_dist_table(queries, cdf, "vec_id", "embedding", M, SUB)

@@ -92,7 +92,7 @@ def test_ann_index_save_load_roundtrip(vecs, tmp_path):
     queries = vecs.filter(F.col("vec_id") < 5)
     _f, trained = SIM.kmeans_fit(vecs, "vec_id", "embedding", k=8, n_iter=1)
     cells = SIM.ivf_build_cells(vecs, n_centroids=8, centroids=trained)
-    codes = PQ.exploded_codes(vecs, "vec_id", "embedding", 2, 4, 8)
+    codes = PQ.pq_encode(vecs, "vec_id", "embedding", 2, 4, 8)
     d = str(tmp_path / "annidx")
     save_ann_index(d, cells, centroids=trained, codes=codes)
 
@@ -273,7 +273,7 @@ def test_empty_index_roundtrip(spark, tmp_path):
         spark, [(c, v) for c, v in cents], "cid long, cvec array<double>"
     )
     cells = SIM.ivf_build_cells(empty, n_centroids=4, centroids=cents_df)
-    codes = PQ.exploded_codes(empty, "vec_id", "embedding", 2, 4, 4)
+    codes = PQ.pq_encode(empty, "vec_id", "embedding", 2, 4, 4)
     d = str(tmp_path / "emptyidx")
     save_ann_index(d, cells, centroids=cents_df, codes=codes)
     idx = load_ann_index(spark, d)
@@ -402,11 +402,14 @@ def test_opq_rotation_and_codebooks_roundtrip(spark, tmp_path):
 
 def test_ivfpq_trained_job_count(spark):
     """One ``emb_ann_topk_ivfpq_trained`` call at sf0.01, built and run:
-    the fit's size probe and collect, the seeded codebook collect, and 6
-    execution jobs. The centroids and codebook reach the encode, assign,
-    probe and query-table kernels without a job (15 jobs when those
-    kernels were Catalyst lambda folds, 11 while the query probes were a
-    Catalyst window over a broadcast cross join)."""
+    the fit's size probe and collect, the seeded codebook collect, the
+    bounded query read, and the 2 jobs of the search (the numpy scoring
+    pass and the ranking window). The centroids and codebook reach the
+    kernels without a job, and the probes and query tables are built on
+    the driver (15 jobs when the kernels were Catalyst lambda folds, 11
+    while the query probes were a Catalyst window over a broadcast cross
+    join, 9 while the search joined exploded codes to broadcast probes
+    and tables)."""
     import os
 
     from etl_gardener_spark.orchestrator.metrics import spark_cost
@@ -421,4 +424,4 @@ def test_ivfpq_trained_job_count(spark):
         fn(spark, sf).write.format("noop").mode(
             "overwrite"
         ).save()
-    assert cost.jobs == 9, cost
+    assert cost.jobs == 6, cost

@@ -6,8 +6,11 @@ Lloyd-step partials merged on the driver), and trained codebooks encode
 and search through ``pq._sub_dist``. The expression trees below are the
 former production kernels: a melted sub-vector relation, a broadcast
 codebook join scored by interpreted ``aggregate``/``zip_with`` folds, a
-``min_by`` argmin and a positional integer-micro mean. They are the
-bit-equality references. Every comparison runs on 3 partitions with
+``min_by`` argmin and a positional integer-micro mean, and the former
+ADC search trees (melted codes joined to the cells, the probes and a
+broadcast query table, then a ``groupBy`` sum) that
+``tests/test_adc_search.py`` compares ``pq._adc_pass`` against. They are
+the bit-equality references. Every comparison runs on 3 partitions with
 2-row Arrow batches, so partition and batch edges fall inside every
 fixture.
 """
@@ -22,6 +25,8 @@ from pyspark.sql import functions as F
 
 from etl_gardener_spark.functions.localrel import local_df
 from etl_gardener_spark.operators import pq as PQ
+from etl_gardener_spark.operators import similarity as SIM
+from tests.test_assign_encode_kernels import check_dim, query_tables
 
 NAN, INF = float("nan"), float("inf")
 M, SUB, KSUB = 2, 2, 4
@@ -42,7 +47,7 @@ def small_batches(spark):
 def melt_subvectors(df, id_col, vec_col, m, sub_dim):
     """(id_col, s, svec): each vector melted to its m sub-slices."""
     return df.select(
-        id_col, PQ._check_dim(vec_col, m, sub_dim).alias("__v")
+        id_col, check_dim(vec_col, m, sub_dim).alias("__v")
     ).select(
         id_col,
         F.explode(
@@ -211,6 +216,106 @@ def ref_probe_dist_table(probes, codebooks, m, sub_dim):
     )
 
 
+def ref_adc_topk(codes, table, k):
+    """The former ``pq._adc_topk``: the melted codes (neighbor_id, s,
+    code) join the query table (query_id, s, code, de6) on (s, code), a
+    query never matches itself, and each pair's score is the long sum of
+    its micro-distances / 1e6."""
+    cand = (
+        codes.join(F.broadcast(table), ["s", "code"])
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .groupBy("query_id", "neighbor_id")
+        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
+    )
+    return PQ._rank_adc(cand, k)
+
+
+def ref_ivf_adc(codes, cells, probes, table, k):
+    """The former ``pq.pq_topk_ivf`` search: the melted codes join their
+    cells by id, the query probes (query_id, cell) by cell, and the query
+    table on (query_id, s, code)."""
+    cand = (
+        codes.join(cells, "neighbor_id")
+        .join(F.broadcast(probes), "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+        .join(F.broadcast(table), ["query_id", "s", "code"])
+        .groupBy("query_id", "neighbor_id")
+        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
+    )
+    return PQ._rank_adc(cand, k)
+
+
+def ref_residual_parts(corpus, queries, id_col, vec_col, m, sub_dim,
+                       cents_df, nprobe):
+    """The former ``pq._residual_parts``: (res, cells, probes) — the
+    residuals (neighbor_id, cell, rvec) from the corpus joined to its
+    cells and the broadcast centroids, the cells, and each query's
+    probes (query_id, cell, q_rvec) joined back to the centroids."""
+    cents = SIM._model_rows(cents_df, "ivf centroids")
+    by_cell = F.broadcast(cents_df.withColumnRenamed("cid", "cell"))
+    cells = SIM._assign_pass(corpus, cents, id_col, vec_col, 6).select(
+        F.col(id_col).alias("neighbor_id"), F.col("cid").alias("cell")
+    )
+    res = (
+        corpus.select(
+            F.col(id_col).alias("neighbor_id"),
+            check_dim(vec_col, m, sub_dim).alias("__v"),
+        )
+        .join(cells, "neighbor_id")
+        .join(by_cell, "cell")
+        .select(
+            "neighbor_id",
+            "cell",
+            F.zip_with(
+                F.col("__v"), F.col("cvec"), lambda x, y: x.cast("double") - y
+            ).alias("rvec"),
+        )
+    )
+    checked = queries.select(
+        F.col(id_col), check_dim(vec_col, m, sub_dim).alias(vec_col)
+    )
+    probes = (
+        SIM._assign_pass(
+            checked, cents, id_col, vec_col, 6, keep_vec=True, keep=nprobe
+        )
+        .withColumnRenamed("cid", "cell")
+        .join(by_cell, "cell")
+        .select(
+            F.col(id_col).alias("query_id"),
+            "cell",
+            F.zip_with(
+                F.col(vec_col), F.col("cvec"), lambda x, y: x.cast("double") - y
+            ).alias("q_rvec"),
+        )
+    )
+    return res, cells, probes
+
+
+def ref_residual_adc(res, cells, probes, codebooks, k, m, sub_dim):
+    """The former ``pq._residual_adc`` over a (s, cid, cvec) codebook
+    relation: residual codes joined to their cells, one table per
+    (query, probed cell) from the query residuals, candidates from the
+    probed cells only."""
+    codes = (
+        ref_exploded_codes_sub(res, "neighbor_id", "rvec", m, sub_dim,
+                               codebooks)
+        .select("neighbor_id", "s", "code")
+        .join(cells, "neighbor_id")
+    )
+    qd = ref_probe_dist_table(probes, codebooks, m, sub_dim)
+    cand = (
+        probes.select("query_id", "cell")
+        .join(codes, "cell")
+        .filter(F.col("neighbor_id") != F.col("query_id"))
+    )
+    adc = (
+        cand.join(F.broadcast(qd), ["query_id", "cell", "s", "code"])
+        .groupBy("query_id", "neighbor_id")
+        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score"))
+    )
+    return PQ._rank_adc(adc, k)
+
+
 # -- helpers ----------------------------------------------------------------
 
 
@@ -338,14 +443,17 @@ def test_pq_fit_and_trained_kernels_match_catalyst(spark, case):
         ref = ref_exploded_codes_sub(df, id_col, "embedding", M, SUB, cb)
         assert _canon(got) == _canon(ref.collect()), n_iter
         assert len(got) == M * len(rows)
-        got = PQ._query_dist_table(
-            queries, PQ._trained_codebooks(cb, M), id_col, "embedding", M,
-            SUB,
-        ).select("query_id", "s", "code", "de6")
-        ref = ref_query_dist_table_sub(
-            queries, cb, id_col, "embedding", M, SUB
+        cbs = PQ._trained_codebooks(cb, M)
+        qside = PQ._query_side(
+            queries, id_col, "embedding", M, SUB, cbs, None, 0, False
         )
-        assert _canon(got.collect()) == _canon(ref.collect()), n_iter
+        ref = (
+            ref_query_dist_table_sub(queries, cb, id_col, "embedding", M, SUB)
+            .groupBy("query_id", "s", "code")
+            .agg(F.sum("de6"))
+        )
+        got = query_tables(qside, cbs)
+        assert _canon(got) == _canon(ref.collect()), n_iter
 
 
 def test_trained_encode_edge_codebook_relation(spark):
@@ -386,7 +494,7 @@ def test_trained_searches_match_catalyst_tables(spark):
     table = ref_query_dist_table_sub(
         queries, cb, "vec_id", "embedding", M, SUB
     )
-    ref = PQ._adc_topk(codes.select("neighbor_id", "s", "code"), table, 3)
+    ref = ref_adc_topk(codes.select("neighbor_id", "s", "code"), table, 3)
     got = PQ.pq_topk_trained(
         df, queries, k=3, m=M, sub_dim=SUB, k_sub=KSUB, codebooks=cb
     )
@@ -397,25 +505,12 @@ def test_trained_searches_match_catalyst_tables(spark):
         ).collect()
     )
 
-    res, cells, probes = PQ._residual_parts(
-        df, queries, "vec_id", "embedding", M, SUB, 4, 2, None
+    cents = SIM._resolve_cents(df, "vec_id", "embedding", 4, None)
+    res, cells, probes = ref_residual_parts(
+        df, queries, "vec_id", "embedding", M, SUB, cents, 2
     )
     rcb = ref_pq_fit(res, "neighbor_id", "rvec", M, SUB, KSUB, 2)
-    rcodes = ref_exploded_codes_sub(
-        res, "neighbor_id", "rvec", M, SUB, rcb
-    ).join(cells, "neighbor_id")
-    qd = ref_probe_dist_table(probes, rcb, M, SUB)
-    cand = (
-        probes.select("query_id", "cell")
-        .join(rcodes.select("neighbor_id", "cell", "s", "code"), "cell")
-        .filter(F.col("neighbor_id") != F.col("query_id"))
-    )
-    ref = PQ._rank_adc(
-        cand.join(qd, ["query_id", "cell", "s", "code"])
-        .groupBy("query_id", "neighbor_id")
-        .agg((F.sum("de6").cast("double") / F.lit(1e6)).alias("score")),
-        3,
-    )
+    ref = ref_residual_adc(res, cells, probes, rcb, 3, M, SUB)
     got = PQ.pq_topk_ivf_residual_trained(
         df, queries, k=3, n_centroids=4, nprobe=2, m=M, sub_dim=SUB,
         k_sub=KSUB,
